@@ -40,11 +40,14 @@ object Graft {
       throw new IllegalArgumentException(
         s"unknown operator '$name'; known: ${operators.mkString(", ")}"))(spark, dir)
 
-  /** Return this session's operator-pinned storage (memoized pair
-    * streams, scored frames, shingle caches) to baseline — call between
-    * report batches in a long-lived session. Frames returned by earlier
-    * `run` calls must not be reused afterwards; re-running the operator
-    * rebuilds them. */
+  /** Return this session's operator-pinned storage to baseline — call
+    * between report batches in a long-lived session. It frees the three
+    * kinds of storage operators pin: the shared cross-operator frames
+    * (pair streams, signatures, scored frames), the registered
+    * checkpoints (including their RDD blocks, which `clearCache` cannot
+    * see), and every per-query `.cache()` frame. Frames returned by
+    * earlier `run` calls must not be reused afterwards; re-running the
+    * operator rebuilds them. */
   def release(spark: SparkSession): Unit =
-    graft.operators.Lifecycle.release(spark)
+    graft.operators.Memo.release(spark)
 }

@@ -83,9 +83,9 @@ object Engine {
       // default 260.3 s — better on 106 queries (−29 s, the broad
       // fast tail), worse on 35 (+9 s; the heavy map-side-combined
       // pair aggregations d49 +1.2 s, d48 +0.7 s lose combine
-      // batching to the extra tasks). Net +20 s → kept. Scale-neutral:
-      // on a real corpus bytes/parallelism exceeds both floors and the
-      // setting is a no-op.
+      // batching to the extra tasks). Net −20.8 s total (faster) →
+      // kept. Scale-neutral: on a real corpus bytes/parallelism exceeds
+      // both floors and the setting is a no-op.
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       // AQE partition coalescing stays on its defaults (parallelismFirst
       // =true): an r8-optimization experiment with parallelismFirst=false

@@ -8,8 +8,19 @@ import org.apache.spark.sql.functions._
   * All loaders are plain `spark.read.parquet` scans so Catalyst keeps
   * full pushdown/pruning freedom — callers `.select`/`.filter` and the
   * parquet source sees `PushedFilters`/`ReadSchema` accordingly.
+  *
+  * INPUT INVARIANT: a warehouse directory is immutable for the life of
+  * a session. Per-session state derived from its files — the scan-width
+  * probe below, and the operators' shared frames (`Memo.shared`, keyed
+  * by dir) — is computed once and never re-validated against the
+  * files. To load a rewritten or grown dataset, write it to a new
+  * directory or use a fresh session; rewriting files in place under a
+  * live session yields decisions and results derived from the old
+  * files.
   */
 object Tables {
+  /** Every loader's entry point; `dir` must obey the input invariant
+    * in the object doc. */
   private def load(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
@@ -28,9 +39,10 @@ object Tables {
   /** Scan partition count per (session, input file), computed once: the
     * `.rdd.getNumPartitions` probe triggers file listing + physical
     * planning, and the loaders run on every operator build — dozens of
-    * times per query. The width of an immutable input file never
-    * changes within a session, so cache the probe (stopped sessions are
-    * evicted so the map cannot pin SparkContexts across runs). */
+    * times per query. By the input invariant (object doc) the width of
+    * an input file never changes within a session, so cache the probe
+    * (stopped sessions are evicted so the map cannot pin SparkContexts
+    * across runs). */
   private val scanWidth =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Int]
   private def scanParts(spark: SparkSession, df: => DataFrame, key: String): Int = {

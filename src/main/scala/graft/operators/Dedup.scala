@@ -115,7 +115,7 @@ object Dedup {
     * equals the exact all-pairs oracle on any realistic dataset.
     */
   def d02(spark: SparkSession, dir: String): DataFrame = {
-    val sh = Memo.tracked(spark, shingled(spark, dir).cache())
+    val sh = shingled(spark, dir).cache()
     d02Verify(sh, d02Candidates(spark, dir))
   }
 
@@ -174,14 +174,12 @@ object Dedup {
   /** The 128-perm signature frame, aggregated ONCE per (session, dir)
     * and shared by every signature consumer (d02/d29/d39 through the
     * band table, d52's band sweep, d53's estimator audit) — the same
-    * materialize-once posture as [[sharedPairs]]. localCheckpoint-backed
-    * so Bench's clearCache() between queries doesn't evict it. */
-  private val sigMemo = Memo.table()
+    * materialize-once posture as [[sharedPairs]]. Checkpoint-backed so
+    * Bench's clearCache() between queries doesn't evict it. */
   private def sharedSig(spark: SparkSession, dir: String): DataFrame =
-    Memo.memoized(sigMemo, spark, dir, requirePersisted = false)(
-      minhashSig(Memo.tracked(spark, shingled(spark, dir).cache()))
-        .transform(d => Tables.smallFrameParts(spark, dir).fold(d)(d.coalesce))
-        .localCheckpoint())
+    Memo.shared(spark, dir, Memo.Key.Sig)(Memo.checkpoint(spark,
+      minhashSig(shingled(spark, dir).cache())
+        .transform(d => Tables.smallFrameParts(spark, dir).fold(d)(d.coalesce))))
 
   /** Exact J ≥ 0.8 verification of a candidate pair stream. */
   private def d02Verify(sh: DataFrame, candidates: DataFrame): DataFrame = {
@@ -202,7 +200,7 @@ object Dedup {
   def d03(spark: SparkSession, dir: String): DataFrame =
     // cache: the shingle frame feeds both posting sides and both size
     // joins — without it the doc scan + n-gram kernel runs 4x
-    jaccardPairs(Memo.tracked(spark, shingled(spark, dir).cache()), 1, 2)
+    jaccardPairs(shingled(spark, dir).cache(), 1, 2)
   val d03Sql: String = jaccardPairsSql(1, 2) // J >= 0.5
 
   /** The J ≥ 0.5 pair stream, materialized ONCE per (session, dir) and
@@ -210,17 +208,15 @@ object Dedup {
     * d20, d22, d24, d25, p11) — the common-subexpression reuse a
     * production curation run gets by construction (compute the pair
     * evidence once, fan the reports out). d03 itself stays direct: it IS
-    * the benchmarked pair pipeline. The memo holds one persisted frame
+    * the benchmarked pair pipeline. The map holds one persisted frame
     * per dataset path; on a cluster the persist level spills to disk. */
-  private val pairMemo = Memo.table()
-
   // Built UNSORTED: every sharedPairs consumer re-aggregates or joins, so
   // d03's output orderBy would be a wasted range-exchange + sort in the
   // materialized frame (guide §2.4 — an orderBy used only for output
   // determinism does not belong in a shared intermediate).
   private[operators] def sharedPairs(spark: SparkSession, dir: String): DataFrame =
-    Memo.memoized(pairMemo, spark, dir, requirePersisted = true)(
-      jaccardPairCounts(Memo.tracked(spark, shingled(spark, dir).cache()), 1, 2)
+    Memo.shared(spark, dir, Memo.Key.Pairs)(
+      jaccardPairCounts(shingled(spark, dir).cache(), 1, 2)
         .select(col("doc_a"), col("doc_b"),
           (dbl(col("inter")) / dbl(col("un"))).as("jaccard"))
         // narrow input → tiny pair stream: persist it at a few partitions
@@ -240,7 +236,7 @@ object Dedup {
     * (rows-only check — d03 remains the exact baseline). */
   def d06(spark: SparkSession, dir: String): DataFrame = {
     val maxDf = 50
-    val sh = Memo.tracked(spark, shingled(spark, dir).cache())
+    val sh = shingled(spark, dir).cache()
     val posting = postingWithSize(sh)
     val rare = posting.groupBy("g").agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDf)
@@ -473,7 +469,7 @@ object Dedup {
     val exactSurvivors = delta.withColumn("h", md5(col("text")))
       .join(corpusHashes, Seq("h"), "left_anti")
 
-    val sh = Memo.tracked(spark, shingled(spark, dir).cache())
+    val sh = shingled(spark, dir).cache()
     val shD = sh.filter(isDelta)
     val shC = sh.filter(!isDelta)
     val pd = shD.select(col("doc_id").as("d_id"), explode(col("grams")).as("g"))
@@ -530,14 +526,11 @@ object Dedup {
   /** The connected-component labels of the shared J ≥ 0.5 pair graph,
     * computed ONCE per (session, dir) — d10's output, also consumed by
     * the cluster-size histogram (d28). The CC loop's final generation is
-    * already localCheckpoint-materialized, so the memo reuses those
-    * blocks rather than re-running the iterative joins. */
-  private val ccMemo = Memo.table()
-  // requirePersisted=false: the CC result is localCheckpoint-backed
-  // (RDD blocks, not CacheManager entries), so clearCache() doesn't
-  // invalidate it — only session stop evicts.
+    * already checkpoint-materialized, so the shared frame reuses those
+    * blocks (which clearCache() does not touch) rather than re-running
+    * the iterative joins. */
   private def sharedClusters(spark: SparkSession, dir: String): DataFrame =
-    Memo.memoized(ccMemo, spark, dir, requirePersisted = false)(
+    Memo.shared(spark, dir, Memo.Key.Clusters)(
       connectedComponents(sharedPairs(spark, dir).select("doc_a", "doc_b"),
         Tables.smallFrameParts(spark, dir)))
 
@@ -553,6 +546,7 @@ object Dedup {
     // few partitions so each of the O(log diameter) rounds' stages isn't
     // a full `cores`-task wave over KB-sized partitions. None on a real
     // corpus (full parallelism).
+    val spark = pairFrame.sparkSession
     val shrink: DataFrame => DataFrame = d => parts.fold(d)(d.coalesce)
     val pairs = pairFrame.cache()
     val edges = shrink(pairs.unionByName(
@@ -564,10 +558,11 @@ object Dedup {
     // high-diameter graph (many rounds) grows the plan tree geometrically
     // until planning itself exhausts the heap. Checkpointing truncates
     // lineage to the materialized partitions — memory stays flat per
-    // round at any diameter. (At cluster scale: checkpoint to reliable
-    // storage instead; same call shape.)
-    var labels = shrink(edges.select(col("src").as("doc_id")).distinct()
-      .withColumn("label", col("doc_id"))).localCheckpoint()
+    // round at any diameter. Every generation is registered through
+    // Memo.checkpoint, so release frees the final one too. (At cluster
+    // scale: checkpoint to reliable storage instead; same call shape.)
+    var labels = Memo.checkpoint(spark, shrink(edges.select(col("src").as("doc_id"))
+      .distinct().withColumn("label", col("doc_id"))))
     var changed = 1L
     while (changed > 0) {
       // min over (own label ∪ neighbor labels) in ONE aggregation: the
@@ -593,13 +588,13 @@ object Dedup {
       // ~23, which plain propagation walked one hop per barrier. (Both
       // sides are the same subplan; Spark's ReusedExchange computes the
       // stepped shuffle once.)
-      val next = shrink(stepped.as("x")
+      val next = Memo.checkpoint(spark, shrink(stepped.as("x") // drops lineage
         .join(stepped.select(col("doc_id").as("lid"), col("label").as("ll")).as("y"),
           col("x.label") === col("y.lid"))
         .select(col("x.doc_id"), least(col("x.label"), col("y.ll")).as("label"),
-                (col("x.chg") + (col("y.ll") < col("x.label")).cast("long")).as("chg")))
-        .localCheckpoint() // materializes next, drops lineage
-      changed = next.agg(sum(col("chg"))).head().getLong(0)
+                (col("x.chg") + (col("y.ll") < col("x.label")).cast("long")).as("chg"))))
+      // an empty pair frame sums to null: nothing changed
+      changed = next.agg(coalesce(sum(col("chg")), lit(0L))).head().getLong(0)
       Memo.hardUnpersist(labels) // superseded generation (checkpoint blocks too)
       labels = next.select("doc_id", "label")
     }
@@ -683,7 +678,7 @@ object Dedup {
     * verify joins, so the 100 TB training side is never shuffled —
     * candidate volume is bounded by the eval posting list. */
   def d12(spark: SparkSession, dir: String): DataFrame = {
-    val sh = Memo.tracked(spark, shingled(spark, dir).cache())
+    val sh = shingled(spark, dir).cache()
     // the 64x2 banding of the SAME 128-perm signature d02 aggregates
     // (identical perms, hash and band keys — bandsOf(sig, 64, 2) keys on
     // xxhash64(m_{2j}, m_{2j+1}) exactly as the inline version did):
@@ -874,7 +869,7 @@ object Dedup {
     * Same inverted-index machinery as d03 — no cross join; the integer
     * cross-multiplied threshold is exact at any scale. */
   def d16(spark: SparkSession, dir: String): DataFrame = {
-    val sh = Memo.tracked(spark, shingled(spark, dir).cache())
+    val sh = shingled(spark, dir).cache()
     coPairCounts(postingWithSize(sh))
       .filter(col("inter") * 10 >= least(col("na"), col("nb")) * 9)
       .select(col("doc_a"), col("doc_b"),
@@ -910,7 +905,7 @@ object Dedup {
     * containment). */
   def d17(spark: SparkSession, dir: String): DataFrame = {
     val maxDf = 50
-    val sh = Memo.tracked(spark, shingled(spark, dir).cache())
+    val sh = shingled(spark, dir).cache()
     val posting = postingWithSize(sh)
     val rare = posting.groupBy("g").agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDf)
@@ -1286,7 +1281,7 @@ object Dedup {
     * not SQL-expressible); the spec pins verified == the exact J ≥ 0.8
     * pair count (recall evidence) and precision ∈ (0, 1]. */
   def d29(spark: SparkSession, dir: String): DataFrame = {
-    val sh = Memo.tracked(spark, shingled(spark, dir).cache())
+    val sh = shingled(spark, dir).cache()
     val cand = d02Candidates(spark, dir).cache() // counted AND verified below
     val nCand = cand.agg(count(lit(1)).as("n_candidates"))
     val nVer = d02Verify(sh, cand).agg(count(lit(1)).as("n_verified"))
@@ -1332,7 +1327,7 @@ object Dedup {
     * map-combinable aggregation, 5-row struct-array unpack; threshold
     * compares are exact integer cross multiplications. */
   def d31(spark: SparkSession, dir: String): DataFrame = {
-    val sh = Memo.tracked(spark, shingled(spark, dir).cache())
+    val sh = shingled(spark, dir).cache()
     val pairs = coPairCounts(postingWithSize(sh))
       .withColumn("mn", least(col("na"), col("nb")))
       .filter(col("inter") * 2 >= col("mn"))
@@ -1607,9 +1602,12 @@ object Dedup {
          sum(col("n_members")).as("n_docs"),
          count(when(col("k.q") === col("b.q"), lit(1))).as("keeper_best"),
          sum(regret).as("sreg"), max(regret).as("mreg"))
+      // no clusters (empty corpus): NULL means, as the oracle's x / 0
       .select(col("n_clusters"), col("n_docs"),
-        round(dbl(col("keeper_best")) / col("n_clusters"), 6).as("keeper_best_share"),
-        round(dbl(col("sreg")) / col("n_clusters"), 6).as("avg_regret"),
+        when(col("n_clusters") > 0,
+          round(dbl(col("keeper_best")) / col("n_clusters"), 6)).as("keeper_best_share"),
+        when(col("n_clusters") > 0,
+          round(dbl(col("sreg")) / col("n_clusters"), 6)).as("avg_regret"),
         dbl(col("mreg")).as("max_regret"))
   }
   val d37Sql: String = {
@@ -1683,7 +1681,7 @@ object Dedup {
     * Near-peer-heavy containment means drop-the-smaller is really
     * near-dup dedup; subset-heavy means quote/excerpt removal. */
   def d40(spark: SparkSession, dir: String): DataFrame = {
-    val sh = Memo.tracked(spark, shingled(spark, dir).cache())
+    val sh = shingled(spark, dir).cache()
     coPairCounts(postingWithSize(sh))
       .filter(col("inter") * 10 >= least(col("na"), col("nb")) * 9)
       .agg(count(lit(1)).as("n_pairs"),
@@ -1834,7 +1832,7 @@ object Dedup {
     * Same inverted-index pair stream + two bounded source joins;
     * \|sources\|²-bounded output. */
   def d44(spark: SparkSession, dir: String): DataFrame = {
-    val sh = Memo.tracked(spark, shingled(spark, dir).cache())
+    val sh = shingled(spark, dir).cache()
     val src = Tables.documents(spark, dir).select("doc_id", "source")
     // source and set size are per-doc CONSTANTS: attach them before the
     // posting fan-out (one doc-keyed join of the small per-doc frame) and
@@ -1988,9 +1986,8 @@ object Dedup {
         nSmall.fold(d.repartition(col("src")))(n => d.repartition(n, col("src"))))
       .cache()
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg")).cache()
-    var rank = Memo.tracked(spark,
-      deg.select(col("src").as("doc_id"), lit(1.0d).as("r"))
-        .localCheckpoint())
+    var rank = Memo.checkpoint(spark,
+      deg.select(col("src").as("doc_id"), lit(1.0d).as("r")))
     (1 to 5).foreach { _ =>
       val contrib = edges
         .join(deg, "src")
@@ -2004,15 +2001,15 @@ object Dedup {
           (lit(0.15d) + lit(0.85d) *
             coalesce(dbl(col("s")), lit(0.0d))).as("r"))
         .transform(shrink)
-        .transform(d => Memo.tracked(spark, d.localCheckpoint()))
+        .transform(Memo.checkpoint(spark, _))
       Memo.hardUnpersist(rank) // superseded generation (checkpoint blocks too)
       rank = next
     }
     val scored = rank
       .join(deg.select(col("src").as("doc_id"), col("deg")), "doc_id")
       .select(col("doc_id"), col("deg").as("degree"), round(col("r"), 6).as("rank"))
-      .transform(d => Memo.tracked(spark, d.localCheckpoint()))
-      // ^ lineage cut so edges/deg can be released now; tracked for Lifecycle
+      .transform(Memo.checkpoint(spark, _))
+      // ^ lineage cut so edges/deg can be released now
     edges.unpersist()
     deg.unpersist()
     scored.orderBy(col("rank").desc, col("doc_id"))
@@ -2094,7 +2091,7 @@ object Dedup {
     * keys, so it skips the round()s and the output range-sort. */
   private def d48Evidence(spark: SparkSession, dir: String,
                           maxDf: Option[Long]): DataFrame = {
-    val sh = Memo.tracked(spark, shingled(spark, dir).cache())
+    val sh = shingled(spark, dir).cache()
     val posting = postingWithSize(sh)
     val nDocs = sh.agg(count(lit(1)).as("nd"))
     val wg = posting.groupBy("g").agg(count(lit(1)).as("df"))
@@ -2104,7 +2101,7 @@ object Dedup {
     // cache: wpost feeds the doc-weight rollup AND both pair-join sides
     // — uncached, the idf aggregation + weight join re-ran per consumer
     // (same posture as the cached shingle frame it derives from)
-    val wpost = Memo.tracked(spark, posting.join(wg, "g").cache())
+    val wpost = posting.join(wg, "g").cache()
     // doc WEIGHT totals over the FULL posting list: capping must not
     // shrink the union weight, or a dropped non-shared hot gram could
     // promote a pair. Set sizes ride the posting rows instead (grams are
@@ -2176,7 +2173,7 @@ object Dedup {
     // session (what the bench prices) never has the memo warm. A
     // long-lived session still gets the reuse through every OTHER
     // sharedPairs consumer; d49 keeps the streaming shape.
-    val sh = Memo.tracked(spark, shingled(spark, dir).cache())
+    val sh = shingled(spark, dir).cache()
     val p = jaccardPairCounts(sh, 1, 2)
       .select(col("doc_a"), col("doc_b"), lit(1).as("pl"))
     val w = d48Evidence(spark, dir, maxDf = Some(D48MaxDf))
@@ -2266,13 +2263,12 @@ object Dedup {
     // filter, the pair self-join and every census aggregation run ONCE
     // keyed on (k, …) instead of three separate five-stage plans — same
     // per-width computation (join keys carry k), same 3-row output.
-    val docs = Memo.tracked(spark,
-      Tables.documents(spark, dir).select("doc_id", "text").cache())
-    val sh = Memo.tracked(spark, Seq(2, 3, 4).map { k =>
+    val docs = Tables.documents(spark, dir).select("doc_id", "text").cache()
+    val sh = Seq(2, 3, 4).map { k =>
       docs.select(lit(k).as("k"), col("doc_id"),
           expr(s"word_ngrams(text, $k)").as("grams"))
         .filter(size(col("grams")) >= 1)
-    }.reduce(_.unionByName(_)).cache())
+    }.reduce(_.unionByName(_)).cache()
     val posting = sh.select(col("k"), col("doc_id"),
       size(col("grams")).cast("long").as("n"), explode(col("grams")).as("g"))
     val dfc = posting.groupBy("k", "g").agg(count(lit(1)).as("df"))
@@ -2352,12 +2348,11 @@ object Dedup {
     * not SQL-expressible; the smoke spec pins verified ⊆ exact, the
     * (32×4) no-miss guarantee, and strict ⊆-volume ordering. */
   def d52(spark: SparkSession, dir: String): DataFrame = {
-    val sh = Memo.tracked(spark, shingled(spark, dir).cache())
+    val sh = shingled(spark, dir).cache()
     val sig = sharedSig(spark, dir)
     // keys-only exact side (the sweep never reads the ratio, so d03's
     // output projection + range-sort drop out of this plan)
-    val exact = Memo.tracked(spark,
-      jaccardPairCounts(sh, 4, 5).select("doc_a", "doc_b").cache())
+    val exact = jaccardPairCounts(sh, 4, 5).select("doc_a", "doc_b").cache()
     val nExact = exact.agg(count(lit(1)).as("n_exact"))
     val configs = Seq((0, 16, 8), (1, 32, 4), (2, 64, 2))
     // ONE banded self-join for all three configs: every band struct is
@@ -2375,12 +2370,12 @@ object Dedup {
     val bands = sig.select(col("doc_id"), explode(array(bandCols: _*)).as("bk"))
       .select(col("doc_id"), col("bk.cfg").as("cfg"),
         col("bk.band").as("band"), col("bk.key").as("key"))
-    val cand = Memo.tracked(spark, bands.as("x").join(bands.as("y"),
+    val cand = bands.as("x").join(bands.as("y"),
         col("x.cfg") === col("y.cfg") && col("x.band") === col("y.band") &&
           col("x.key") === col("y.key") && col("x.doc_id") < col("y.doc_id"))
       .select(col("x.cfg").as("cfg"), col("x.doc_id").as("doc_a"),
         col("y.doc_id").as("doc_b"))
-      .distinct().cache())
+      .distinct().cache()
     val nCand = cand.groupBy("cfg").agg(count(lit(1)).as("n_candidates"))
     val nVer = cand.join(exact, Seq("doc_a", "doc_b"))
       .groupBy("cfg").agg(count(lit(1)).as("n_verified"))
@@ -2425,7 +2420,7 @@ object Dedup {
     * Rows-only (minhash is not SQL-expressible); the smoke spec pins
     * mean |error| ≤ 0.1 and central-band dominance. */
   def d53(spark: SparkSession, dir: String): DataFrame = {
-    val sh = Memo.tracked(spark, shingled(spark, dir).cache())
+    val sh = shingled(spark, dir).cache()
     val sig = sharedSig(spark, dir)
     val bands = bandsOf(sig, 64, 2)
     val cand = bands.as("x").join(bands.as("y"),
@@ -2479,7 +2474,7 @@ object Dedup {
     * [[sharedPairs]] instead of a fourth (and uncapped) pair join.
     * Output 4 rows. */
   def d54(spark: SparkSession, dir: String): DataFrame = {
-    val sh = Memo.tracked(spark, shingled(spark, dir).cache())
+    val sh = shingled(spark, dir).cache()
     val posting = postingWithSize(sh)
     // ONE pair join at the loosest cap (df <= 100) instead of three: a
     // shared gram's df decides which caps it counts under, so the three
@@ -2660,13 +2655,13 @@ object Dedup {
     // cache sh (feeds posting twice via the seed build + the n_docs agg)
     // and seed (read by BOTH self-join sides and the bucket count —
     // uncached it re-ran the posting⋈df join + argmin three times)
-    val sh = Memo.tracked(spark, shingled(spark, dir).cache())
+    val sh = shingled(spark, dir).cache()
     val posting = sh.select(col("doc_id"), explode(col("grams")).as("g"))
     val dft = posting.groupBy("g").agg(count(lit(1)).as("df"))
-    val seed = Memo.tracked(spark, posting.join(dft, "g")
+    val seed = posting.join(dft, "g")
       .groupBy("doc_id").agg(min(struct(col("df"), col("g"))).as("m"))
       .select(col("doc_id"), col("m").getField("g").as("g"))
-      .cache())
+      .cache()
     val cand = seed.as("a").join(seed.as("b"),
         col("a.g") === col("b.g") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
@@ -2731,7 +2726,7 @@ object Dedup {
     * (minhash is not SQL-expressible); the smoke spec pins the 1/√k
     * error ordering with slack and d53's ≤0.1 MAE at k=128. */
   def d58(spark: SparkSession, dir: String): DataFrame = {
-    val sh = Memo.tracked(spark, shingled(spark, dir).cache())
+    val sh = shingled(spark, dir).cache()
     val sig = sharedSig(spark, dir)
     val bands = bandsOf(sig, 64, 2)
     val cand = bands.as("x").join(bands.as("y"),
@@ -2794,17 +2789,17 @@ object Dedup {
     val bands = d02Bands(spark, dir)
     // both candidate sets are read TWICE (the census left-join and the
     // extra-volume anti-join) — uncached, each self-join ran twice
-    val lsh = Memo.tracked(spark, bands.as("x").join(bands.as("y"),
+    val lsh = bands.as("x").join(bands.as("y"),
         col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .distinct().cache())
+      .distinct().cache()
     val sig = Tables.documents(spark, dir)
       .filter(trim(col("text")) =!= "")
       .select(col("doc_id"), expr("simhash64(word_tokens(text))").as("simhash"))
       .cache()
-    val sim = Memo.tracked(spark, hammingBandPairs(sig, "simhash", maxHamming = 8)
-      .select(col("doc_a"), col("doc_b")).cache())
+    val sim = hammingBandPairs(sig, "simhash", maxHamming = 8)
+      .select(col("doc_a"), col("doc_b")).cache()
     val census = exact
       .join(lsh.withColumn("in_lsh", lit(1L)), Seq("doc_a", "doc_b"), "left")
       .join(sim.withColumn("in_sim", lit(1L)), Seq("doc_a", "doc_b"), "left")
@@ -2923,10 +2918,10 @@ object Dedup {
     * (ppm via integral division). */
   def d62(spark: SparkSession, dir: String): DataFrame = {
     VectorFunctions.register(spark)
-    val docs = Memo.tracked(spark, Tables.documents(spark, dir)
+    val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"),
         size(expr("word_tokens(text)")).cast("long").as("nt"))
-      .cache())
+      .cache()
     val trainTot = docs.filter(col("doc_id") % 20 =!= 0)
       .agg(count(lit(1)).as("train_docs"), sum(col("nt")).as("train_tokens"))
     Seq(4, 8, 13).map { n =>
@@ -3027,7 +3022,7 @@ object Dedup {
     * one groupBy over pairs (bounded by the pair stream) + one over
     * members. */
   def d64(spark: SparkSession, dir: String): DataFrame = {
-    val sh = Memo.tracked(spark, shingled(spark, dir).cache())
+    val sh = shingled(spark, dir).cache()
     val pc = jaccardPairCounts(sh, 1, 2)
       .withColumn("j_ppm", expr("(cast(inter as decimal(38,0)) * 1000000) div un"))
     val cc = sharedClusters(spark, dir)

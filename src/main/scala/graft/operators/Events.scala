@@ -4321,7 +4321,7 @@ object Events {
       .withColumn("row_n", sum(col("n")).over(Window.partitionBy("event_type")))
       .select(col("event_type").as("i"), col("next_type").as("j"),
         (dbl(col("n")) / dbl(col("row_n"))).as("p"))
-      .transform(d => Memo.tracked(spark, d.localCheckpoint()))
+      .transform(Memo.checkpoint(spark, _))
     val nTypes = Tables.events(spark, dir).select("event_type").distinct()
     val v0 = nTypes.crossJoin(broadcast(
         nTypes.agg(count(lit(1)).as("k"))))

@@ -1,134 +1,109 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
-/** Per-(session, dataset-path) materialized-frame memo — the
-  * common-subexpression reuse a production curation run gets by
-  * construction: expensive shared subplans (the J ≥ 0.5 pair stream,
-  * the corpus-LM scored frame) compute once and every report operator
-  * composing on top of them reads the persisted result.
+/** The operators' one caching discipline — three rules:
   *
-  * Stays correct in long-lived processes: entries whose SparkSession
-  * has stopped are evicted (no pinned sessions / persisted frames
-  * leaking across jobs), a hit whose persistence was dropped by
-  * `spark.catalog.clearCache()` (Bench runs it between queries)
-  * rebuilds instead of silently handing back an unpersisted frame that
-  * every consumer would then recompute from scratch, and a concurrent
-  * double-build resolves atomically (the losing build unpersists, so
-  * the race never pins a second copy of the frame).
+  *  1. Per-query frames use plain `.cache()`. [[release]] ends in
+  *     `spark.catalog.clearCache()`, which frees exactly those frames
+  *     (as does the Verify/Bench harness between queries).
+  *  2. The few cross-operator frames — the J ≥ 0.5 pair stream, the
+  *     MinHash signature, the LM-scored frame, the connected-component
+  *     labels, … — go through [[shared]], one map keyed by
+  *     (session, dir, [[Key]]). [[Key]] is sealed: a new cross-query
+  *     member is an edit to this file.
+  *  3. Lineage truncation goes through [[checkpoint]], which registers
+  *     the checkpoint-backed frame so [[release]] frees its RDD blocks
+  *     (blocks `clearCache` cannot see).
   *
   * LIFECYCLE: a long-lived session (an operator server, not the
-  * one-shot Verify/Bench harness) should call [[release]] between
-  * report batches — it unpersists and forgets every memoized AND
-  * [[tracked]] frame of that session, returning storage to baseline
-  * instead of waiting for LRU eviction pressure. Operators register
-  * their own large ad-hoc `.cache()` frames through [[tracked]] so
-  * release covers them too. */
-private[operators] object Memo {
-  type Table = scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]
-
-  def table(): Table =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** Every memo table that has served a lookup — so [[release]] can
-    * sweep the per-object tables (sharedPairs', scored frames', …)
-    * without each operator module exporting its private memo. IDENTITY
-    * set (two empty TrieMaps compare structurally equal); bounded by
-    * the number of `Memo.table()` call SITES, not by data. */
-  private val allTables = scala.collection.mutable.ArrayBuffer.empty[Table]
-  private def registerTable(t: Table): Unit = allTables.synchronized {
-    if (!allTables.exists(_ eq t)) allTables += t
+  * one-shot Verify/Bench harness) calls [[release]] between report
+  * batches; storage returns to baseline instead of waiting for LRU
+  * eviction pressure. Frames handed out before a release must not be
+  * reused afterwards: checkpoint-backed frames cannot recompute. */
+private[graft] object Memo {
+  /** The sanctioned cross-operator frames. */
+  sealed trait Key
+  object Key {
+    case object Sig extends Key          // Dedup: 128-perm MinHash signature
+    case object Pairs extends Key        // Dedup: J ≥ 0.5 pair stream
+    case object Clusters extends Key     // Dedup: CC labels of Pairs
+    case object TruthCos extends Key     // Similarity: exact top-5 (s01)
+    case object Ivf extends Key          // Similarity: IVF top-5 (s03)
+    case object PqCents extends Key      // Similarity: coarse centroids
+    case object PqBooks extends Key      // Similarity: PQ codebooks
+    case object Scored extends Key       // TextAnalysis: LM-scored docs
+    case object PayloadPairs extends Key // Multimodal: m05 pair stream
   }
-  private def tablesSnapshot(): Seq[Table] =
-    allTables.synchronized(allTables.toSeq)
 
-  /** Ad-hoc persisted frames registered for session-scoped release
-    * (operators' large `.cache()` frames that aren't keyed memo hits). */
-  private val adHoc =
-    scala.collection.concurrent.TrieMap.empty[SparkSession,
-      java.util.concurrent.ConcurrentLinkedQueue[DataFrame]]
+  private val frames =
+    scala.collection.mutable.HashMap.empty[(SparkSession, String, Key), DataFrame]
+  private val checkpoints =
+    scala.collection.mutable.HashMap.empty[SparkSession,
+      scala.collection.mutable.ArrayBuffer[DataFrame]]
 
-  def memoized(memo: Table, spark: SparkSession, dir: String,
-               requirePersisted: Boolean)(build: => DataFrame): DataFrame = {
-    registerTable(memo)
-    memo.keysIterator.foreach { k =>
-      if (k._1.sparkContext.isStopped) memo.remove(k)
-    }
-    val key = (spark, dir)
-    memo.get(key) match {
-      case Some(df) if !requirePersisted ||
-          df.storageLevel != StorageLevel.NONE => df
-      case stale =>
+  /** `key`'s frame for (spark, dir), built once. A hit is reused while
+    * its storage lives — a CacheManager entry, or a checkpoint-backed
+    * RDD that is still persisted — so a frame dropped by `clearCache()`
+    * rebuilds instead of being recomputed by every consumer. Builds run
+    * under the map's lock: concurrent callers get the same frame and
+    * never pin a second copy. */
+  def shared(spark: SparkSession, dir: String, key: Key)(build: => DataFrame): DataFrame =
+    frames.synchronized {
+      frames.filterInPlace { case ((s, _, _), _) => !s.sparkContext.isStopped }
+      frames.get((spark, dir, key)).filter(isLive).getOrElse {
         val df = build
-        // atomic claim: if another thread built concurrently, keep the
-        // winner and HARD-unpersist the loser — plain unpersist() would
-        // leak the checkpoint-backed blocks a sharedSig-style build
-        // pins at the RDD level, and never two pinned copies
-        memo.putIfAbsent(key, df) match {
-          case None => df
-          case Some(w) if stale.isEmpty =>
-            // lost a genuine race to a fresh winner
-            if (w.storageLevel != StorageLevel.NONE) { hardUnpersist(df); w }
-            else if (memo.replace(key, w, df)) df
-            else { hardUnpersist(df); memo.getOrElse(key, df) }
-          case Some(_) =>
-            // the existing entry is the stale one we chose to rebuild —
-            // CAS so a concurrent FRESH winner is never overwritten
-            // (overwriting would pin two copies); whichever frame loses
-            // the CAS is hard-unpersisted
-            stale match {
-              case Some(s) if memo.replace(key, s, df) =>
-                hardUnpersist(s); df
-              case _ =>
-                hardUnpersist(df); memo.getOrElse(key, df)
-            }
-        }
+        frames((spark, dir, key)) = df
+        df
+      }
     }
+
+  /** `df.localCheckpoint()`, registered for [[release]]. Registration
+    * drops generations already freed (e.g. by [[hardUnpersist]] in an
+    * iteration loop), so the registry holds only live blocks. */
+  def checkpoint(spark: SparkSession, df: DataFrame): DataFrame = {
+    val cp = df.localCheckpoint()
+    checkpoints.synchronized {
+      checkpoints.filterInPlace { case (s, _) => !s.sparkContext.isStopped }
+      val live = checkpoints.getOrElseUpdate(spark,
+        scala.collection.mutable.ArrayBuffer.empty[DataFrame])
+      live.filterInPlace(pinsRdds) += cp
+    }
+    cp
   }
 
-  /** Register `df` (already persisted by the caller) for session-scoped
-    * [[release]]. Returns `df` for chaining. */
-  def tracked(spark: SparkSession, df: DataFrame): DataFrame = {
-    adHoc.getOrElseUpdate(spark,
-      new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()).add(df)
-    df
+  private def rdds(df: DataFrame) =
+    df.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd }
+
+  private def pinsRdds(df: DataFrame): Boolean = {
+    val r = rdds(df)
+    r.nonEmpty && r.forall(_.getStorageLevel != StorageLevel.NONE)
   }
+
+  private def isLive(df: DataFrame): Boolean =
+    pinsRdds(df) || df.storageLevel != StorageLevel.NONE
 
   /** Free a frame's storage NOW, whatever pinned it: `unpersist()` only
-    * drops CacheManager entries, but a localCheckpoint-backed frame pins
-    * its blocks at the RDD level (they otherwise wait for GC + the
+    * drops CacheManager entries, but a checkpoint-backed frame pins its
+    * blocks at the RDD level (they otherwise wait for GC + the
     * ContextCleaner), so also unpersist any LogicalRDD leaf. The frame
     * must not be used afterwards — a checkpointed lineage cannot
     * recompute. */
-  private[operators] def hardUnpersist(df: DataFrame): Unit = {
+  def hardUnpersist(df: DataFrame): Unit = {
     df.unpersist()
-    df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false); ()
-      case _ => ()
-    }
+    rdds(df).foreach(_.unpersist(blocking = false))
   }
 
-  /** Unpersist and forget every memoized + tracked frame of `spark`,
-    * and clear the context's cached plans — storage returns to baseline
-    * for a long-lived session (an operator server between report
-    * batches; the one-shot Verify/Bench harness uses clearCache
-    * directly). The clearCache sweep covers the operators' ad-hoc
-    * mid-plan `.cache()` frames (CacheManager-backed); the memo/tracked
-    * sweep covers checkpoint-backed frames, whose blocks clearCache
-    * cannot see. Frames previously handed out must not be reused after
-    * release: checkpoint-backed frames cannot recompute. */
+  /** Return `spark`'s storage to baseline: free every registered
+    * checkpoint, then clear the cache, which frees the per-query and
+    * the persisted shared frames. A shared frame is backed by one of
+    * the two, so its map entry is simply forgotten. */
   def release(spark: SparkSession): Unit = {
-    tablesSnapshot().foreach { t =>
-      t.keysIterator.foreach { k =>
-        if (k._1 eq spark) t.remove(k).foreach(hardUnpersist)
-        else if (k._1.sparkContext.isStopped) t.remove(k)
-      }
-    }
-    adHoc.remove(spark).foreach { q =>
-      q.forEach(hardUnpersist(_))
-    }
+    frames.synchronized(frames.filterInPlace { case ((s, _, _), _) => s ne spark })
+    checkpoints.synchronized(checkpoints.remove(spark))
+      .foreach(_.foreach(hardUnpersist))
     spark.catalog.clearCache()
   }
 }

@@ -189,11 +189,10 @@ object Multimodal {
   /** m05's payload near-dup pair stream over the corpus, materialized
     * ONCE per (session, dir) and shared with the cluster pass (m07) —
     * Dedup.sharedPairs' posture for the byte-SimHash family.
-    * localCheckpoint-backed so Bench's clearCache() doesn't evict it. */
-  private val payloadPairMemo = Memo.table()
+    * Checkpoint-backed so Bench's clearCache() doesn't evict it. */
   private def sharedPayloadPairs(spark: SparkSession, dir: String): DataFrame =
-    Memo.memoized(payloadPairMemo, spark, dir, requirePersisted = false)(
-      payloadNearDup(spark, Tables.documents(spark, dir)).localCheckpoint())
+    Memo.shared(spark, dir, Memo.Key.PayloadPairs)(Memo.checkpoint(spark,
+      payloadNearDup(spark, Tables.documents(spark, dir))))
 
   /** Core of m05 over any frame with (doc_id, text-as-payload) — split
     * out so specs can feed synthetic payloads with known edit distance. */

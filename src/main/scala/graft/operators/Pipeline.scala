@@ -44,12 +44,11 @@ object Pipeline {
     // stage's doc_id set back onto the corpus just to recover these two
     // small dimension columns — 4-5 extra joins per census query
     // (guide §2.4: don't re-derive what can ride along)
-    val scored = Memo.tracked(spark,
-      TextAnalysis.addPredicted(TextAnalysis.addQuality(docs))
-        .filter(col("quality") >= lit(0.5d))
-        .select(col("doc_id"), col("text"), col("lang"), col("source"),
-          col("predicted").as("pred_lang"), col("quality"))
-        .cache())
+    val scored = TextAnalysis.addPredicted(TextAnalysis.addQuality(docs))
+      .filter(col("quality") >= lit(0.5d))
+      .select(col("doc_id"), col("text"), col("lang"), col("source"),
+        col("predicted").as("pred_lang"), col("quality"))
+      .cache()
     // 3: exact normalized-fingerprint dedup, keep-min-id (one shuffle on fp)
     // cache: the dedup survivors feed the pair-join's two posting sides,
     // two size joins AND the final anti-join — uncached, the whole
@@ -60,12 +59,10 @@ object Pipeline {
       .filter(col("doc_id") === col("min_id"))
       .drop("min_id", "fp")
       .cache()
-      .transform(Memo.tracked(spark, _))
     // 4: near-dup removal via shingle inverted index (no cross join)
-    val sh = Memo.tracked(spark,
-      keep.select(col("doc_id"), expr("word_ngrams(text, 3)").as("grams"))
-        .filter(size(col("grams")) >= 1)
-        .cache())
+    val sh = keep.select(col("doc_id"), expr("word_ngrams(text, 3)").as("grams"))
+      .filter(size(col("grams")) >= 1)
+      .cache()
     // set sizes carried through the pair aggregation (min over the
     // per-doc constant) — no joins of the pair stream (Dedup.coPairCounts
     // recipe, guide §2.3/§2.4)
@@ -78,8 +75,7 @@ object Pipeline {
         min(col("a.n")).as("na"), min(col("b.n")).as("nb"))
       .filter(col("inter") * 5 >= (col("na") + col("nb") - col("inter")) * 4)
       .select(col("doc_b").as("doc_id")).distinct()
-    val surv = Memo.tracked(spark,
-      keep.join(dropped, Seq("doc_id"), "left_anti").cache())
+    val surv = keep.join(dropped, Seq("doc_id"), "left_anti").cache()
     // 5: deterministic stratified sample on the predicted language
     val nib = substring(md5(col("text")), 1, 1)
     val sampled = surv
@@ -328,7 +324,7 @@ object Pipeline {
     // delta gate, the corpus hash set, the corpus shingle side — the
     // last via Dedup.shingled, whose identical scan subplan hits this
     // cache by plan-equality), each otherwise re-paying scan + spread
-    val docs = Memo.tracked(spark, Tables.documents(spark, dir).cache())
+    val docs = Tables.documents(spark, dir).cache()
     val isDelta = col("doc_id") % 5 === 0
     val gated = TextAnalysis.addQuality(docs.filter(isDelta))
       .filter(col("quality") >= lit(0.5d))
@@ -1205,17 +1201,17 @@ object Pipeline {
     // cache docs (three subplans: the dup-family rollup, the corpus max,
     // the half census — each otherwise re-pays scan + md5 + spread) and
     // the tiny half census (read once per output side)
-    val docs = Memo.tracked(spark, Tables.documents(spark, dir)
+    val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"), col("n_chars"), md5(col("text")).as("h"))
-      .cache())
+      .cache()
     val keep = docs.groupBy("h").agg(min(col("doc_id")).as("keep_id"))
     val mx = docs.agg(max(col("doc_id")).as("max_id"))
-    val half = Memo.tracked(spark, docs.join(keep, "h").join(broadcast(mx))
+    val half = docs.join(keep, "h").join(broadcast(mx))
       .withColumn("half", least(expr("doc_id * 2 div (max_id + 1)"), lit(1L)))
       .groupBy("source", "half")
       .agg(count(lit(1)).as("docs"), sum(col("n_chars")).as("chars"),
            sum(when(col("doc_id") =!= col("keep_id"), 1L).otherwise(0L)).as("dups"))
-      .cache())
+      .cache()
     val a = half.filter(col("half") === 0)
       .select(col("source"), col("docs").as("docs_a"),
         col("chars").as("chars_a"), col("dups").as("dups_a"))

@@ -251,10 +251,10 @@ object TextAnalysis {
     val maxDf = 50
     // cache: the boilerplate-df count and the kept-posting join BOTH
     // explode this frame — uncached, the winnow kernel ran twice
-    val fps = Memo.tracked(spark, Tables.documents(spark, dir)
+    val fps = Tables.documents(spark, dir)
       .select(col("doc_id"), expr("winnow_fps(text, 8, 4)").as("fps"))
       .filter(size(col("fps")) >= 1)
-      .cache())
+      .cache()
     val posting0 = fps.select(col("doc_id"), explode(col("fps")).as("fp"))
     // boilerplate filter: one map-side-combinable count per fp, then an
     // equi-join (AQE broadcasts the small keep-list at gate scale)
@@ -420,9 +420,8 @@ object TextAnalysis {
     * score (t11, t14's terciles, p03's budget cut) — the tokenize + LM
     * subplan is the most expensive text kernel, and each of those
     * operators previously paid it in full. */
-  private val scoredMemo = Memo.table()
   private[operators] def scoredDocs(spark: SparkSession, dir: String): DataFrame =
-    Memo.memoized(scoredMemo, spark, dir, requirePersisted = true)(
+    Memo.shared(spark, dir, Memo.Key.Scored)(
       scoredFrame(spark, dir)
         // narrow input → one row per doc: persist at a few partitions so
         // consumer stages aren't full task waves (Tables.smallFrameParts)
@@ -1743,8 +1742,7 @@ object TextAnalysis {
     // cache: fdw (bounded by n_docs × 100 top words) feeds BOTH
     // self-join sides and the df rollup — uncached, each consumer
     // re-ran the corpus explode + top-100 join
-    val fdw = graft.operators.Memo.tracked(spark,
-      tok.join(broadcast(top), "word").select("doc_id", "word").distinct().cache())
+    val fdw = tok.join(broadcast(top), "word").select("doc_id", "word").distinct().cache()
     val df = fdw.groupBy("word").agg(count(lit(1)).as("n_docs"))
     val nn = docs.agg(count(lit(1)).as("n"))
     fdw.as("a").join(fdw.as("b"),
@@ -2293,8 +2291,7 @@ object TextAnalysis {
     // cache: ps (≤ 20 hot grams × |sources|) feeds both self-join
     // sides — uncached, each side re-ran the corpus explode TWICE
     // (once for itself, once inside its copy of the hot-20 subplan)
-    val ps = graft.operators.Memo.tracked(spark,
-      posting.join(hot, "g").select("g", "source").distinct().cache())
+    val ps = posting.join(hot, "g").select("g", "source").distinct().cache()
     ps.as("a").join(ps.as("b"),
         col("a.g") === col("b.g") && col("a.source") < col("b.source"))
       .groupBy(col("a.source").as("source_a"), col("b.source").as("source_b"))
@@ -3027,9 +3024,9 @@ object TextAnalysis {
     val lm = scoredDocs(spark, dir).select(col("doc_id"), col("n_tok"), col("avg_logp"))
     // cache: j (4 narrow columns per doc) feeds the global-mean pass AND
     // the confusion rollup — uncached, the quality kernel scan re-ran
-    val j = graft.operators.Memo.tracked(spark, q.join(lm, "doc_id")
+    val j = q.join(lm, "doc_id")
       .transform(d => Tables.smallFrameParts(spark, dir).fold(d)(d.coalesce))
-      .cache())
+      .cache()
     val thr = j.agg((sum(col("avg_logp").cast("decimal(18,6)")).cast("double")
       / count(lit(1))).as("lm_thr"))
     j.crossJoin(broadcast(thr))

@@ -38,15 +38,26 @@ class GraftSpec extends SparkSpec {
     // the user-facing contract: each name in Graft.operators executes
     // against a warehouse dir — not just key-set consistency (which the
     // dispatch test pins) but an actual run. sf0.001 keeps the full
-    // sweep cheap; Verify covers value correctness separately.
+    // sweep cheap; Verify covers value correctness separately. The
+    // session is shared across suites: their leftovers are the
+    // baseline, and growth beyond it after release is a leak.
+    val baseline = spark.sparkContext.getPersistentRDDs.keySet
+    // results stay reachable until after release, as a user's would:
+    // the ContextCleaner frees an unreachable frame's blocks on GC,
+    // which would hide a leak behind GC timing
+    val results = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
     val failures = Graft.operators.flatMap { name =>
-      try { Graft.run(spark, sf, name).count(); None }
+      try { results += Graft.run(spark, sf, name); results.last.count(); None }
       catch { case e: Throwable =>
         Some(s"$name: ${Option(e.getMessage).getOrElse(e.getClass.getName).take(120)}")
       }
     }
     assert(failures.isEmpty,
       s"${failures.size} operators failed via the facade:\n${failures.mkString("\n")}")
-    graft.operators.Lifecycle.release(spark) // don't pin the whole sweep's frames
+    Graft.release(spark) // don't pin the whole sweep's frames
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet.diff(baseline)
+    assert(leaked.isEmpty,
+      s"${leaked.size} RDDs still pinned after release: ${leaked.toSeq.sorted.take(10)}")
+    results.clear()
   }
 }
