@@ -16,18 +16,15 @@ import graft.functions.VectorFunctions
   * }}}
   */
 object Graft {
-  val tableNames: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings")
+  val tableNames: Seq[String] = Tables.loaders.keys.toSeq
 
-  /** Register every warehouse table as a temp view (events gains the
-    * derived `ms`/`ets` columns) and the graft SQL functions. */
+  /** Register every warehouse table as a temp view, each the frame its
+    * `Tables` loader returns (events gains the derived `ms`/`ets`
+    * columns), and the graft SQL functions. */
   def registerViews(spark: SparkSession, dir: String): Unit = {
     VectorFunctions.register(spark)
-    tableNames.foreach {
-      case "events" => Tables.events(spark, dir).createOrReplaceTempView("events")
-      case name =>
-        spark.read.parquet(s"$dir/$name.parquet").createOrReplaceTempView(name)
+    Tables.loaders.foreach { case (name, load) =>
+      load(spark, dir).createOrReplaceTempView(name)
     }
   }
 

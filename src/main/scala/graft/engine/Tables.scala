@@ -1,6 +1,12 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.Locale
+
+import scala.collection.immutable.ListMap
+
+import org.apache.spark.sql.{DataFrame, GraftPlanFactory, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
 import org.apache.spark.sql.functions._
 
 /** Schema-checked loaders for the driver-generated parquet tables.
@@ -121,5 +127,42 @@ object Tables {
     }
     raw.withColumn("ms", ms)
       .withColumn("ets", timestamp_millis(col("ms")))
+  }
+
+  /** What each warehouse table name means: the one name-to-loader map
+    * behind both [[sql]] and `Graft.registerViews`. */
+  val loaders: ListMap[String, (SparkSession, String) => DataFrame] = ListMap(
+    "region" -> (region _), "nation" -> (nation _), "customer" -> (customer _),
+    "supplier" -> (supplier _), "part" -> (part _), "orders" -> (orders _),
+    "lineitem" -> (lineitem _), "events" -> (events _), "documents" -> (documents _),
+    "embeddings" -> (embeddings _))
+
+  /** Bind a SQL text to `dir`'s tables: the session's parser reads it,
+    * and every unqualified table name that no CTE defines becomes its
+    * loader's frame, aliased by the table name so hints
+    * (`/*+ BROADCAST(nation) */`) and qualified columns still resolve.
+    * Registers no view and changes no session state, so temp views of
+    * another directory never leak in. An unknown table name fails with
+    * an error that names it. */
+  def sql(spark: SparkSession, dir: String, text: String): DataFrame = {
+    val parsed = GraftPlanFactory.parsePlan(spark, text)
+    def cteNames(plan: LogicalPlan): Seq[String] = plan.collectWithSubqueries {
+      case w: UnresolvedWith =>
+        w.cteRelations.flatMap(r => r._1.toLowerCase(Locale.ROOT) +: cteNames(r._2))
+    }.flatten
+    val ctes = cteNames(parsed).toSet
+    def bind(plan: LogicalPlan): LogicalPlan = plan.transformUpWithSubqueries {
+      case w: UnresolvedWith =>
+        w.copy(cteRelations = w.cteRelations.map(r =>
+          r.copy(_2 = bind(r._2).asInstanceOf[SubqueryAlias])))
+      case u: UnresolvedRelation
+          if !(u.multipartIdentifier.size == 1 &&
+            ctes(u.multipartIdentifier.head.toLowerCase(Locale.ROOT))) =>
+        val name = u.multipartIdentifier.mkString(".").toLowerCase(Locale.ROOT)
+        val load = loaders.getOrElse(name, throw new IllegalArgumentException(
+          s"unknown table '$name'; known: ${loaders.keys.mkString(", ")}"))
+        SubqueryAlias(name, GraftPlanFactory.analyzed(load(spark, dir)))
+    }
+    GraftPlanFactory.ofRows(spark, bind(parsed))
   }
 }

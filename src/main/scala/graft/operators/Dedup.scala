@@ -15,6 +15,10 @@ import graft.functions.VectorFunctions
   * cross join. Candidate pairs are then verified distributively with exact
   * set arithmetic. Jaccard thresholds compare with integer
   * cross-multiplication (`k*inter >= m*union`), no float boundary issues.
+  *
+  * The keys in `sql` are operators that are their oracle text, bound to
+  * the table loaders by `Tables.sql` (see `Relational`); their DuckDB
+  * compare is a cross-engine check, not a second implementation.
   */
 object Dedup {
   type Q = (SparkSession, String) => DataFrame
@@ -94,12 +98,6 @@ object Dedup {
 
   // ---------------------------------------------------------------- d01
   /** Exact dedup via content hash, keep-min-id per group. */
-  def d01(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .withColumn("h", md5(col("text")))
-      .groupBy("h")
-      .agg(count(lit(1)).as("n_copies"), min(col("doc_id")).as("keep_id"))
-      .orderBy("h")
   val d01Sql: String =
     """SELECT h, COUNT(*) AS n_copies, CAST(MIN(doc_id) AS BIGINT) AS keep_id
       |FROM (SELECT doc_id, md5(text) AS h FROM documents)
@@ -1890,20 +1888,6 @@ object Dedup {
     * the dedup must be corpus-global. One map-combinable min/max pass
     * per fingerprint, integer bands, ≤4 output rows with ONE division
     * each. */
-  def d45(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .groupBy(md5(col("text")).as("h"))
-      .agg(count(lit(1)).as("n"),
-           (max(col("doc_id")) - min(col("doc_id"))).as("span"))
-      .filter(col("n") >= 2)
-      .groupBy(when(col("span") <= 10, "a<=10")
-        .when(col("span") <= 100, "b<=100")
-        .when(col("span") <= 1000, "c<=1000")
-        .otherwise("d>1000").as("span_band"))
-      .agg(count(lit(1)).as("n_families"),
-           sum(col("n")).as("n_docs"),
-           (sum(col("span")).cast("double") / count(lit(1))).as("avg_span"))
-      .orderBy("span_band")
   val d45Sql: String =
     """WITH f AS (
       |  SELECT md5(text) AS h, COUNT(*)::BIGINT AS n,
@@ -3080,7 +3064,6 @@ object Dedup {
     "d48_weighted_jaccard" -> (d48 _),
     "d47_dup_pagerank" -> (d47 _),
     "d46_dup_rate_drift" -> (d46 _),
-    "d45_dup_locality" -> (d45 _),
     "d44_containment_flow" -> (d44 _),
     "d43_boilerplate_shingles" -> (d43 _),
     "d42_dupsize_quality" -> (d42 _),
@@ -3114,7 +3097,6 @@ object Dedup {
     "d13_semdedup" -> (d13 _),
     "d11_decontaminate" -> (d11 _),
     "d12_fuzzy_decontam" -> (d12 _),
-    "d01_exact_dedup" -> (d01 _),
     "d02_minhash_lsh" -> (d02 _),
     "d03_ngram_jaccard" -> (d03 _),
     "d06_jaccard_capped" -> (d06 _),
@@ -3140,7 +3122,6 @@ object Dedup {
     "d48_weighted_jaccard" -> d48Sql,
     "d47_dup_pagerank" -> d47Sql,
     "d46_dup_rate_drift" -> d46Sql,
-    "d45_dup_locality" -> d45Sql,
     "d44_containment_flow" -> d44Sql,
     "d43_boilerplate_shingles" -> d43Sql,
     "d42_dupsize_quality" -> d42Sql,
@@ -3171,7 +3152,6 @@ object Dedup {
     "d14_bloom_decontam" -> d11Sql,
     "d11_decontaminate" -> d11Sql,
     "d12_fuzzy_decontam" -> d12Sql,
-    "d01_exact_dedup" -> d01Sql,
     "d02_minhash_lsh" -> d02Sql,
     "d03_ngram_jaccard" -> d03Sql,
     "d05_embedding_neardup" -> d05Sql,
@@ -3182,5 +3162,13 @@ object Dedup {
     "d08_priority_dedup" -> d08Sql,
     "d09_incremental_dedup" -> d09Sql,
     "d10_dup_clusters" -> d10Sql,
+  )
+
+  /** The operators that are their oracle text: `SparkEntry.queries`
+    * binds each text to the table loaders with `Tables.sql`, and
+    * `SparkEntry.oracleSql` hands the same text to DuckDB. */
+  val sql: Map[String, String] = Map(
+    "d45_dup_locality" -> d45Sql,
+    "d01_exact_dedup" -> d01Sql
   )
 }

@@ -13,6 +13,10 @@ import graft.engine.Qf._
   *
   * Scale notes: every window partitions by `user_id` (bounded state per
   * key); aggregations are map-side-combinable; no driver-side loops.
+  *
+  * The keys in `sql` are operators that are their oracle text, bound to
+  * the table loaders by `Tables.sql` (see `Relational`); their DuckDB
+  * compare is a cross-engine check, not a second implementation.
   */
 object Events {
   type Q = (SparkSession, String) => DataFrame
@@ -770,19 +774,6 @@ object Events {
     * map-side combine; the final H is one fixed IEEE op sequence,
     * round6. Two co-keyed uniform shuffles ((user, type) then user),
     * both map-combinable — never a per-user window. */
-  def e20(spark: SparkSession, dir: String): DataFrame = {
-    Tables.events(spark, dir)
-      .groupBy("user_id", "event_type").agg(count(lit(1)).as("c"))
-      .withColumn("lq", round(log(col("c").cast("double")), 9).cast("decimal(18,9)"))
-      .groupBy("user_id")
-      .agg(sum(col("c")).as("n_events"),
-           count(lit(1)).as("n_types"),
-           sum(col("c").cast("decimal(10,0)") * col("lq")).as("s"))
-      .select(col("user_id"), col("n_events"), col("n_types"),
-        round(log(col("n_events").cast("double")) -
-          col("s").cast("double") / col("n_events").cast("double"), 6).as("entropy"))
-      .orderBy("user_id")
-  }
   val e20Sql: String =
     """WITH c AS (SELECT user_id, event_type, COUNT(*)::BIGINT AS c
       |           FROM events GROUP BY 1, 2),
@@ -1354,22 +1345,6 @@ object Events {
     * map-combinable distinct bounded by users×|types|), |types|-bounded
     * self-join per user, exact-integer marginals via broadcast,
     * ONE division per emitted row. */
-  def e34(spark: SparkSession, dir: String): DataFrame = {
-    val ut = Tables.events(spark, dir)
-      .select(col("user_id"), col("event_type")).distinct().cache()
-    val marg = ut.groupBy("event_type").agg(count(lit(1)).as("n_t"))
-    ut.as("a").join(ut.as("b"),
-        col("a.user_id") === col("b.user_id") &&
-          col("a.event_type") < col("b.event_type"))
-      .groupBy(col("a.event_type").as("type_a"), col("b.event_type").as("type_b"))
-      .agg(count(lit(1)).as("n_both"))
-      .join(broadcast(marg.select(col("event_type").as("type_a"), col("n_t").as("n_a"))), "type_a")
-      .join(broadcast(marg.select(col("event_type").as("type_b"), col("n_t").as("n_b"))), "type_b")
-      .select(col("type_a"), col("type_b"), col("n_both"),
-        (round(dbl(col("n_both")) / dbl(col("n_a") + col("n_b") - col("n_both")), 6)
-          + lit(0.0d)).as("audience_jaccard"))
-      .orderBy("type_a", "type_b")
-  }
   val e34Sql: String =
     """WITH ut AS (SELECT DISTINCT user_id, event_type FROM events),
       |marg AS (SELECT event_type, COUNT(*) AS n_t FROM ut GROUP BY 1),
@@ -1378,7 +1353,7 @@ object Events {
       |  FROM ut a JOIN ut b
       |    ON a.user_id = b.user_id AND a.event_type < b.event_type
       |  GROUP BY 1, 2)
-      |SELECT type_a, type_b, n_both,
+      |SELECT /*+ BROADCAST(ma, mb) */ type_a, type_b, n_both,
       |  ROUND(CAST(n_both AS DOUBLE) / CAST(ma.n_t + mb.n_t - n_both AS DOUBLE), 6) + 0.0
       |    AS audience_jaccard
       |FROM p JOIN marg ma ON p.type_a = ma.event_type
@@ -1611,17 +1586,6 @@ object Events {
     * thresholds, and its drift is invisible in user rollups). Exact
     * integer-cent CASE bands, one map-combinable groupBy, DECIMAL-exact
     * per-band value totals; band-bounded output. */
-  def e41(spark: SparkSession, dir: String): DataFrame = {
-    val cents = (dec(col("value")) * 100).cast("long")
-    val band = when(cents < 1000L, "a<10").when(cents < 5000L, "b<50")
-      .when(cents < 20000L, "c<200").when(cents < 50000L, "d<500")
-      .otherwise("e>=500")
-    Tables.events(spark, dir)
-      .filter(col("event_type") === "purchase")
-      .groupBy(band.as("value_band"))
-      .agg(count(lit(1)).as("n_purchases"), dbl(sum(dec(col("value")))).as("total_value"))
-      .orderBy("value_band")
-  }
   val e41Sql: String =
     """WITH p AS (
       |  SELECT value, CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents
@@ -1792,16 +1756,6 @@ object Events {
     * breadth-of-engagement cut that e30's active-day depth misses. One
     * per-user exact distinct aggregate, one bounded groupBy, ONE
     * division per bucket row. */
-  def e47(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .groupBy("user_id")
-      .agg(countDistinct(col("event_type")).as("n_types"),
-           count(lit(1)).as("n_events"))
-      .groupBy("n_types")
-      .agg(count(lit(1)).as("n_users"), sum(col("n_events")).as("n_events"))
-      .withColumn("events_per_user",
-        round(dbl(col("n_events")) / col("n_users"), 6) + lit(0.0d))
-      .orderBy("n_types")
   val e47Sql: String =
     """WITH per AS (
       |  SELECT user_id, COUNT(DISTINCT event_type) AS n_types, COUNT(*) AS n_events
@@ -2304,26 +2258,6 @@ object Events {
     * joins (map-combinable; the join inputs are |users| and |customers|
     * rows, never raw events), all money stays decimal-exact, output is
     * |segments|-bounded. */
-  def e60(spark: SparkSession, dir: String): DataFrame = {
-    import graft.engine.Qf.dec
-    val ev = Tables.events(spark, dir)
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_events"), sum(dec(col("value"))).as("ev_value"))
-    val ord = Tables.orders(spark, dir)
-      .groupBy(col("o_custkey"))
-      .agg(count(lit(1)).as("n_ord"), sum(dec(col("o_totalprice"))).as("o_rev"))
-    Tables.customer(spark, dir).select(col("c_custkey"), col("c_mktsegment"))
-      .join(ev, col("c_custkey") === col("user_id"), "left")
-      .join(ord, col("c_custkey") === col("o_custkey"), "left")
-      .groupBy("c_mktsegment")
-      .agg(count(lit(1)).as("n_customers"),
-           count(col("user_id")).as("n_event_active"),
-           sum(coalesce(col("n_events"), lit(0L))).as("n_events"),
-           dbl(sum(coalesce(col("ev_value"), dec(lit(0))))).as("event_value"),
-           sum(coalesce(col("n_ord"), lit(0L))).as("n_orders"),
-           dbl(sum(coalesce(col("o_rev"), dec(lit(0))))).as("order_revenue"))
-      .orderBy("c_mktsegment")
-  }
   val e60Sql: String =
     """WITH ev AS (
       |  SELECT user_id, COUNT(*)::BIGINT AS n_events,
@@ -2394,25 +2328,13 @@ object Events {
     * count — all map-combinable exact aggregates, 1 row out. The
     * at-least-once / exactly-once health check a Kafka consumer group is
     * graded by. */
-  def e62(spark: SparkSession, dir: String): DataFrame = {
-    val ids = Tables.events(spark, dir).select(col("event_id"))
-    val dup = ids.groupBy("event_id").agg(count(lit(1)).as("c"))
-      .agg(count(when(col("c") >= 2, lit(1))).as("n_dup_ids"))
-    ids.agg(count(lit(1)).as("n_events"),
-        min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
-      .join(broadcast(dup))
-      .select(col("n_events"), col("min_id"), col("max_id"), col("n_dup_ids"),
-        (col("max_id") - col("min_id") + 1 - col("n_events")).as("n_missing"),
-        round(dbl(col("max_id") - col("min_id") + 1 - col("n_events"))
-          / (col("max_id") - col("min_id") + 1), 6).as("missing_rate"))
-  }
   val e62Sql: String =
     """WITH ids AS (SELECT event_id FROM events),
       |d AS (SELECT COUNT(CASE WHEN c >= 2 THEN 1 END)::BIGINT AS n_dup_ids
       |  FROM (SELECT event_id, COUNT(*) AS c FROM ids GROUP BY 1)),
       |a AS (SELECT COUNT(*)::BIGINT AS n_events, MIN(event_id) AS min_id,
       |    MAX(event_id) AS max_id FROM ids)
-      |SELECT n_events, min_id, max_id, n_dup_ids,
+      |SELECT /*+ BROADCAST(d) */ n_events, min_id, max_id, n_dup_ids,
       |  max_id - min_id + 1 - n_events AS n_missing,
       |  ROUND(CAST(max_id - min_id + 1 - n_events AS DOUBLE)
       |        / (max_id - min_id + 1), 6) AS missing_rate
@@ -2785,22 +2707,6 @@ object Events {
     * active users per segment. The event side collapses to \|users\| rows
     * BEFORE the join; customer side carries only (key, segment);
     * \|segments\|-bounded output, ONE division per row. */
-  def e72(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_events"),
-           count(when(col("event_type") === "purchase", lit(1))).as("n_purchases"))
-    Tables.customer(spark, dir).select(col("c_custkey"), col("c_mktsegment"))
-      .join(ev, col("c_custkey") === col("user_id"))
-      .groupBy("c_mktsegment")
-      .agg(count(lit(1)).as("n_active_users"),
-           count(when(col("n_purchases") > 0, lit(1))).as("n_buyers"),
-           sum(col("n_events")).as("n_events"),
-           sum(col("n_purchases")).as("n_purchases"))
-      .withColumn("conversion_rate",
-        round(dbl(col("n_buyers")) / col("n_active_users"), 6))
-      .orderBy("c_mktsegment")
-  }
   val e72Sql: String =
     """WITH ev AS (
       |  SELECT user_id, COUNT(*)::BIGINT AS n_events,
@@ -5268,7 +5174,6 @@ object Events {
     "e75_activity_zipf" -> (e75 _),
     "e74_first_purchase_depth" -> (e74 _),
     "e73_dow_revenue" -> (e73 _),
-    "e72_segment_conversion" -> (e72 _),
     "e71_arpdau" -> (e71 _),
     "e70_error_recovery" -> (e70 _),
     "e69_stickiness" -> (e69 _),
@@ -5278,9 +5183,7 @@ object Events {
     "e65_depth_conversion" -> (e65 _),
     "e64_entry_conversion" -> (e64 _),
     "e63_lifespan_value_corr" -> (e63 _),
-    "e62_id_continuity" -> (e62 _),
     "e61_purchase_reconciliation" -> (e61 _),
-    "e60_segment_360" -> (e60 _),
     "e59_entry_exit_matrix" -> (e59 _),
     "e58_user_features" -> (e58 _),
     "e57_power_user_share" -> (e57 _),
@@ -5293,20 +5196,17 @@ object Events {
     "e50_activation_lag" -> (e50 _),
     "e49_dau_volatility" -> (e49 _),
     "e48_user_gini" -> (e48 _),
-    "e47_type_diversity" -> (e47 _),
     "e46_peak_hours" -> (e46 _),
     "e45_daily_purchase_rate" -> (e45 _),
     "e44_cohort_value" -> (e44 _),
     "e43_lifespan_bands" -> (e43 _),
     "e42_dow_profile" -> (e42 _),
-    "e41_purchase_size_hist" -> (e41 _),
     "e40_type_mix_trend" -> (e40 _),
     "e39_revisit_gaps" -> (e39 _),
     "e38_retention_triangle" -> (e38 _),
     "e37_first_session_conversion" -> (e37 _),
     "e36_velocity_screen" -> (e36 _),
     "e35_session_size_hist" -> (e35 _),
-    "e34_audience_overlap" -> (e34 _),
     "e33_new_vs_returning" -> (e33 _),
     "e32_load_ratio" -> (e32 _),
     "e31_type_lift" -> (e31 _),
@@ -5320,7 +5220,6 @@ object Events {
     "e23_session_conversion" -> (e23 _),
     "e22_burstiness" -> (e22 _),
     "e21_seasonality" -> (e21 _),
-    "e20_type_entropy" -> (e20 _),
     "e19_conversion_lag" -> (e19 _),
     "e18_gap_bands" -> (e18 _),
     "e17_event_paths" -> (e17 _),
@@ -5387,7 +5286,6 @@ object Events {
     "e75_activity_zipf" -> e75Sql,
     "e74_first_purchase_depth" -> e74Sql,
     "e73_dow_revenue" -> e73Sql,
-    "e72_segment_conversion" -> e72Sql,
     "e71_arpdau" -> e71Sql,
     "e70_error_recovery" -> e70Sql,
     "e69_stickiness" -> e69Sql,
@@ -5397,9 +5295,7 @@ object Events {
     "e65_depth_conversion" -> e65Sql,
     "e64_entry_conversion" -> e64Sql,
     "e63_lifespan_value_corr" -> e63Sql,
-    "e62_id_continuity" -> e62Sql,
     "e61_purchase_reconciliation" -> e61Sql,
-    "e60_segment_360" -> e60Sql,
     "e59_entry_exit_matrix" -> e59Sql,
     "e58_user_features" -> e58Sql,
     "e57_power_user_share" -> e57Sql,
@@ -5412,7 +5308,6 @@ object Events {
     "e50_activation_lag" -> e50Sql,
     "e49_dau_volatility" -> e49Sql,
     "e48_user_gini" -> e48Sql,
-    "e47_type_diversity" -> e47Sql,
     "e46_peak_hours" -> e46Sql,
     "e45_daily_purchase_rate" -> e45Sql,
     "e44_cohort_value" -> e44Sql,
@@ -5438,7 +5333,6 @@ object Events {
     "e17_event_paths" -> e17Sql,
     "e18_gap_bands" -> e18Sql,
     "e19_conversion_lag" -> e19Sql,
-    "e20_type_entropy" -> e20Sql,
     "e21_seasonality" -> e21Sql,
     "e22_burstiness" -> e22Sql,
     "e23_session_conversion" -> e23Sql,
@@ -5451,13 +5345,24 @@ object Events {
     "e31_type_lift" -> e31Sql,
     "e32_load_ratio" -> e32Sql,
     "e33_new_vs_returning" -> e33Sql,
-    "e34_audience_overlap" -> e34Sql,
     "e35_session_size_hist" -> e35Sql,
     "e36_velocity_screen" -> e36Sql,
     "e37_first_session_conversion" -> e37Sql,
     "e38_retention_triangle" -> e38Sql,
     "e39_revisit_gaps" -> e39Sql,
     "e40_type_mix_trend" -> e40Sql,
-    "e41_purchase_size_hist" -> e41Sql,
+  )
+
+  /** The operators that are their oracle text: `SparkEntry.queries`
+    * binds each text to the table loaders with `Tables.sql`, and
+    * `SparkEntry.oracleSql` hands the same text to DuckDB. */
+  val sql: Map[String, String] = Map(
+    "e72_segment_conversion" -> e72Sql,
+    "e62_id_continuity" -> e62Sql,
+    "e60_segment_360" -> e60Sql,
+    "e47_type_diversity" -> e47Sql,
+    "e20_type_entropy" -> e20Sql,
+    "e34_audience_overlap" -> e34Sql,
+    "e41_purchase_size_hist" -> e41Sql
   )
 }

@@ -6,12 +6,21 @@ import org.apache.spark.sql.expressions.Window
 import graft.engine.{Qf, Tables}
 import graft.engine.Qf._
 
-/** Relational core (SURVEY.md §2.1): 20 batch-analytics operators over the
-  * TPC-H-ish tables, built with the declarative DataFrame API so Catalyst
-  * owns pushdown / broadcast / AQE decisions.
+/** Relational core (SURVEY.md §2.1): batch-analytics operators over the
+  * TPC-H-ish tables, each written once.
   *
-  * Every query carries a DuckDB oracle (`oracle` map) computed with the
-  * identical exact-arithmetic strategy (Qf) so result hashes match bit-wise.
+  *  - `sql`: operators that ARE their oracle text. `SparkEntry.queries`
+  *    binds each text to the table loaders (`Tables.sql`) and DuckDB runs
+  *    the same text, so the oracle compare for these keys is a
+  *    cross-engine check, not a second implementation. Broadcast choices
+  *    the scale posture relies on are explicit `/*+ BROADCAST(t) */`
+  *    hints (a comment to DuckDB).
+  *  - `queries`: DataFrame operators, where the oracle text does not run
+  *    in Spark (DuckDB-only functions) or plans differently there. Each
+  *    carries its DuckDB text in `oracle`, computed with the identical
+  *    exact-arithmetic strategy (Qf) so result hashes match bit-wise.
+  *
+  * Catalyst owns pushdown / broadcast / AQE decisions in both forms.
   */
 object Relational {
   type Q = (SparkSession, String) => DataFrame
@@ -24,20 +33,6 @@ object Relational {
 
   // ---------------------------------------------------------------- q01
   /** TPC-H Q1-style pricing summary: multi-aggregate groupBy. */
-  def q01(spark: SparkSession, dir: String): DataFrame = {
-    val l = Tables.lineitem(spark, dir)
-    l.filter(col("l_shipdate") <= lit("2001-09-01").cast("timestamp"))
-      .groupBy(col("l_returnflag"), col("l_linestatus"))
-      .agg(
-        dsum(col("l_quantity")).as("sum_qty"),
-        dsum(col("l_extendedprice")).as("sum_base_price"),
-        dbl(sum(revenueTerm(col("l_extendedprice"), col("l_discount")))).as("sum_disc_price"),
-        dbl(sum(revenueTerm(col("l_extendedprice"), col("l_discount")) * dec(lit(1) + col("l_tax")))).as("sum_charge"),
-        davg(col("l_quantity")).as("avg_qty"),
-        davg(col("l_extendedprice")).as("avg_price"),
-        count(lit(1)).as("count_order"))
-      .orderBy("l_returnflag", "l_linestatus")
-  }
   val q01Sql: String =
     s"""SELECT l_returnflag, l_linestatus,
        |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty,
@@ -54,11 +49,6 @@ object Relational {
 
   // ---------------------------------------------------------------- q02
   /** Predicate + projection pushdown scan over part. */
-  def q02(spark: SparkSession, dir: String): DataFrame =
-    Tables.part(spark, dir)
-      .filter(col("p_size").between(5, 20) && col("p_type").isin("PROMO", "ECONOMY"))
-      .select("p_partkey", "p_name", "p_brand", "p_type", "p_size", "p_retailprice")
-      .orderBy("p_partkey")
   val q02Sql: String =
     """SELECT p_partkey, p_name, p_brand, p_type, p_size, p_retailprice
       |FROM part
@@ -94,16 +84,6 @@ object Relational {
 
   // ---------------------------------------------------------------- q04
   /** EXISTS semi-join + agg (TPC-H Q4 adapted to available columns). */
-  def q04(spark: SparkSession, dir: String): DataFrame = {
-    val o = Tables.orders(spark, dir)
-      .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
-              col("o_orderdate") < lit("1997-01-01").cast("timestamp"))
-    val l = Tables.lineitem(spark, dir)
-    o.join(l, col("l_orderkey") === col("o_orderkey") && col("l_shipdate") > col("o_orderdate"), "left_semi")
-      .groupBy("o_orderpriority")
-      .agg(count(lit(1)).as("order_count"))
-      .orderBy("o_orderpriority")
-  }
   val q04Sql: String =
     """SELECT o_orderpriority, COUNT(*) AS order_count
       |FROM orders
@@ -115,27 +95,8 @@ object Relational {
 
   // ---------------------------------------------------------------- q05
   /** 6-table star join; dims explicitly broadcast. */
-  def q05(spark: SparkSession, dir: String): DataFrame = {
-    val l = Tables.lineitem(spark, dir)
-    val o = Tables.orders(spark, dir)
-      .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
-              col("o_orderdate") < lit("1999-01-01").cast("timestamp"))
-    val c = Tables.customer(spark, dir)
-    val s = broadcast(Tables.supplier(spark, dir))
-    val n = broadcast(Tables.nation(spark, dir))
-    val r = broadcast(Tables.region(spark, dir))
-    l.join(o, col("l_orderkey") === col("o_orderkey"))
-      .join(c, col("o_custkey") === col("c_custkey"))
-      .join(s, col("l_suppkey") === col("s_suppkey") && col("c_nationkey") === col("s_nationkey"))
-      .join(n, col("s_nationkey") === col("n_nationkey"))
-      .join(r, col("n_regionkey") === col("r_regionkey"))
-      .groupBy("r_name", "n_name")
-      .agg(dbl(sum(revenueTerm(col("l_extendedprice"), col("l_discount")))).as("revenue"),
-           count(lit(1)).as("n_items"))
-      .orderBy("r_name", "n_name")
-  }
   val q05Sql: String =
-    s"""SELECT r_name, n_name,
+    s"""SELECT /*+ BROADCAST(supplier, nation, region) */ r_name, n_name,
        |  CAST(SUM($revenueSql) AS DOUBLE) AS revenue,
        |  COUNT(*) AS n_items
        |FROM lineitem
@@ -150,14 +111,6 @@ object Relational {
 
   // ---------------------------------------------------------------- q06
   /** Selective single-table agg (TPC-H Q6). */
-  def q06(spark: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(spark, dir)
-      .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-              col("l_shipdate") < lit("1997-01-01").cast("timestamp") &&
-              col("l_discount") >= lit(0.04d) && col("l_discount") <= lit(0.06d) &&
-              col("l_quantity") < lit(24.0d))
-      .agg(dbl(sum(dec(col("l_extendedprice")) * dec(col("l_discount")))).as("revenue"),
-           count(lit(1)).as("n_items"))
   val q06Sql: String =
     """SELECT
       |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(l_discount AS DECIMAL(12,2))) AS DOUBLE) AS revenue,
@@ -169,14 +122,6 @@ object Relational {
 
   // ---------------------------------------------------------------- q07
   /** rank() window: top-3 customers per market segment by balance. */
-  def q07(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("c_mktsegment").orderBy(col("c_acctbal").desc, col("c_custkey"))
-    Tables.customer(spark, dir)
-      .select(col("c_mktsegment"), col("c_custkey"), col("c_name"), col("c_acctbal"),
-              rank().over(w).cast("long").as("rnk"))
-      .filter(col("rnk") <= 3)
-      .orderBy("c_mktsegment", "rnk", "c_custkey")
-  }
   val q07Sql: String =
     """SELECT c_mktsegment, c_custkey, c_name, c_acctbal, CAST(rnk AS BIGINT) AS rnk
       |FROM (SELECT c_mktsegment, c_custkey, c_name, c_acctbal,
@@ -210,16 +155,6 @@ object Relational {
 
   // ---------------------------------------------------------------- q09
   /** GROUP BY ROLLUP hierarchy aggregation. */
-  def q09(spark: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(spark, dir)
-      .rollup(col("l_returnflag"), col("l_linestatus"))
-      .agg(dsum(col("l_quantity")).as("sum_qty"),
-           dsum(col("l_extendedprice")).as("sum_price"),
-           count(lit(1)).as("n"))
-      .select(coalesce(col("l_returnflag"), lit("ALL")).as("rf"),
-              coalesce(col("l_linestatus"), lit("ALL")).as("ls"),
-              col("sum_qty"), col("sum_price"), col("n"))
-      .orderBy("rf", "ls")
   val q09Sql: String =
     """SELECT COALESCE(l_returnflag, 'ALL') AS rf, COALESCE(l_linestatus, 'ALL') AS ls,
       |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty,
@@ -231,13 +166,6 @@ object Relational {
 
   // ---------------------------------------------------------------- q10
   /** Exact count-distinct per group. */
-  def q10(spark: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(spark, dir)
-      .groupBy("l_returnflag")
-      .agg(countDistinct(col("l_partkey")).as("n_parts"),
-           countDistinct(col("l_suppkey")).as("n_supps"),
-           count(lit(1)).as("n"))
-      .orderBy("l_returnflag")
   val q10Sql: String =
     """SELECT l_returnflag, COUNT(DISTINCT l_partkey) AS n_parts,
       |  COUNT(DISTINCT l_suppkey) AS n_supps, COUNT(*) AS n
@@ -245,13 +173,6 @@ object Relational {
 
   // ---------------------------------------------------------------- q11
   /** NOT EXISTS anti-join with extra predicate. */
-  def q11(spark: SparkSession, dir: String): DataFrame = {
-    val bigOrders = Tables.orders(spark, dir).filter(col("o_totalprice") > lit(300000.0d))
-    Tables.customer(spark, dir)
-      .join(bigOrders, col("o_custkey") === col("c_custkey"), "left_anti")
-      .select("c_custkey", "c_name", "c_mktsegment")
-      .orderBy("c_custkey")
-  }
   val q11Sql: String =
     """SELECT c_custkey, c_name, c_mktsegment
       |FROM customer
@@ -261,15 +182,6 @@ object Relational {
 
   // ---------------------------------------------------------------- q12
   /** INTERSECT / EXCEPT set operators, tagged union of both results. */
-  def q12(spark: SparkSession, dir: String): DataFrame = {
-    val l = Tables.lineitem(spark, dir)
-    val a = l.filter(col("l_returnflag") === "A").select(col("l_partkey").as("k")).distinct()
-    val r = l.filter(col("l_returnflag") === "R").select(col("l_partkey").as("k")).distinct()
-    a.intersect(r).withColumn("tag", lit("both"))
-      .unionByName(a.except(r).withColumn("tag", lit("only_a")))
-      .select("tag", "k")
-      .orderBy("tag", "k")
-  }
   val q12Sql: String =
     """SELECT 'both' AS tag, k FROM (
       |  SELECT DISTINCT l_partkey AS k FROM lineitem WHERE l_returnflag = 'A'
@@ -284,17 +196,6 @@ object Relational {
 
   // ---------------------------------------------------------------- q13
   /** Pivot-style sum(CASE WHEN) matrix by line status. */
-  def q13(spark: SparkSession, dir: String): DataFrame = {
-    def qtyIf(status: String) =
-      dbl(sum(when(col("l_linestatus") === status, dec(col("l_quantity"))).otherwise(lit(0).cast(Qf.D12))))
-    def cntIf(status: String) =
-      sum(when(col("l_linestatus") === status, 1L).otherwise(0L))
-    Tables.lineitem(spark, dir)
-      .groupBy("l_returnflag")
-      .agg(qtyIf("F").as("qty_f"), qtyIf("O").as("qty_o"),
-           cntIf("F").as("n_f"), cntIf("O").as("n_o"))
-      .orderBy("l_returnflag")
-  }
   val q13Sql: String =
     """SELECT l_returnflag,
       |  CAST(SUM(CASE WHEN l_linestatus = 'F' THEN CAST(l_quantity AS DECIMAL(12,2)) ELSE CAST(0 AS DECIMAL(12,2)) END) AS DOUBLE) AS qty_f,
@@ -356,12 +257,6 @@ object Relational {
 
   // ---------------------------------------------------------------- q17
   /** Post-aggregation HAVING filter. */
-  def q17(spark: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(spark, dir)
-      .groupBy("l_partkey")
-      .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("total_qty"))
-      .filter(col("n") >= 5)
-      .orderBy("l_partkey")
   val q17Sql: String =
     """SELECT l_partkey, COUNT(*) AS n,
       |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS total_qty
@@ -371,18 +266,6 @@ object Relational {
   // ---------------------------------------------------------------- q18
   /** Exact median per group via row_number (no interpolation — identical
     * arithmetic on both engines: mean of the one or two middle values). */
-  def q18(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("c_mktsegment").orderBy(col("c_acctbal"), col("c_custkey"))
-    val wc = Window.partitionBy("c_mktsegment")
-    Tables.customer(spark, dir)
-      .select(col("c_mktsegment"), col("c_acctbal"),
-              row_number().over(w).cast("long").as("rn"),
-              count(lit(1)).over(wc).as("cnt"))
-      .filter(col("rn") === floor((col("cnt") + 1) / 2) || col("rn") === floor((col("cnt") + 2) / 2))
-      .groupBy("c_mktsegment")
-      .agg((dbl(sum(dec(col("c_acctbal")))) / count(lit(1))).as("median_bal"))
-      .orderBy("c_mktsegment")
-  }
   val q18Sql: String =
     """SELECT c_mktsegment,
       |  CAST(SUM(CAST(c_acctbal AS DECIMAL(12,2))) AS DOUBLE) / COUNT(*) AS median_bal
@@ -415,19 +298,8 @@ object Relational {
 
   // ---------------------------------------------------------------- q20
   /** Supplier→nation revenue rollup (join + agg, broadcast dims). */
-  def q20(spark: SparkSession, dir: String): DataFrame = {
-    val l = Tables.lineitem(spark, dir)
-    val s = broadcast(Tables.supplier(spark, dir))
-    val n = broadcast(Tables.nation(spark, dir))
-    l.join(s, col("l_suppkey") === col("s_suppkey"))
-      .join(n, col("s_nationkey") === col("n_nationkey"))
-      .groupBy("n_name")
-      .agg(dbl(sum(revenueTerm(col("l_extendedprice"), col("l_discount")))).as("revenue"),
-           count(lit(1)).as("n_items"))
-      .orderBy("n_name")
-  }
   val q20Sql: String =
-    s"""SELECT n_name,
+    s"""SELECT /*+ BROADCAST(supplier, nation) */ n_name,
        |  CAST(SUM($revenueSql) AS DOUBLE) AS revenue,
        |  COUNT(*) AS n_items
        |FROM lineitem
@@ -510,14 +382,6 @@ object Relational {
 
   // ---------------------------------------------------------------- q24
   /** GROUP BY CUBE: all grouping-set combinations of flag x status. */
-  def q24(spark: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(spark, dir)
-      .cube(col("l_returnflag"), col("l_linestatus"))
-      .agg(dsum(col("l_quantity")).as("sum_qty"), count(lit(1)).as("n"))
-      .select(coalesce(col("l_returnflag"), lit("ALL")).as("rf"),
-              coalesce(col("l_linestatus"), lit("ALL")).as("ls"),
-              col("sum_qty"), col("n"))
-      .orderBy("rf", "ls")
   val q24Sql: String =
     """SELECT COALESCE(l_returnflag, 'ALL') AS rf, COALESCE(l_linestatus, 'ALL') AS ls,
       |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty,
@@ -532,16 +396,6 @@ object Relational {
     * window state is bounded and both engines rank identically;
     * percent_rank/cume_dist are single IEEE divisions of identical
     * integers on both sides. */
-  def q25(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("c_mktsegment")
-      .orderBy(col("c_acctbal").desc, col("c_custkey"))
-    Tables.customer(spark, dir)
-      .select(col("c_mktsegment"), col("c_custkey"), col("c_acctbal"))
-      .withColumn("quartile", ntile(4).over(w).cast("long"))
-      .withColumn("pct_rank", percent_rank().over(w))
-      .withColumn("cume", cume_dist().over(w))
-      .orderBy("c_mktsegment", "pct_rank", "c_custkey")
-  }
   val q25Sql: String =
     """SELECT c_mktsegment, c_custkey, c_acctbal,
       |  CAST(NTILE(4) OVER w AS BIGINT) AS quartile,
@@ -562,21 +416,6 @@ object Relational {
     * so Spark reuses one exchange of the fact across all three legs;
     * order keys are uniform (no whale orders) and the supplier name join
     * broadcasts. The heaviest relational plan in the suite by design. */
-  def q26(spark: SparkSession, dir: String): DataFrame = {
-    val l = Tables.lineitem(spark, dir)
-      .select("l_orderkey", "l_suppkey", "l_shipdate")
-    val l2 = l.select(col("l_orderkey").as("o2"), col("l_suppkey").as("s2"))
-    val l3 = l.select(col("l_orderkey").as("o3"), col("l_shipdate").as("d3"))
-    val lastShippers = l
-      .join(l2, col("o2") === col("l_orderkey") && col("s2") =!= col("l_suppkey"), "left_semi")
-      .join(l3, col("o3") === col("l_orderkey") && col("d3") > col("l_shipdate"), "left_anti")
-    lastShippers
-      .join(broadcast(Tables.supplier(spark, dir)), col("l_suppkey") === col("s_suppkey"))
-      .groupBy("s_name")
-      .agg(countDistinct(col("l_orderkey")).as("numwait"))
-      .orderBy(col("numwait").desc, col("s_name"))
-      .limit(10)
-  }
   val q26Sql: String =
     """WITH l AS (SELECT l_orderkey, l_suppkey, l_shipdate FROM lineitem),
       |last AS (
@@ -585,7 +424,7 @@ object Relational {
       |                WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey)
       |    AND NOT EXISTS (SELECT 1 FROM l l3
       |                    WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_shipdate > l1.l_shipdate))
-      |SELECT s_name, COUNT(DISTINCT l_orderkey) AS numwait
+      |SELECT /*+ BROADCAST(supplier) */ s_name, COUNT(DISTINCT l_orderkey) AS numwait
       |FROM last JOIN supplier ON l_suppkey = s_suppkey
       |GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 10""".stripMargin
 
@@ -603,18 +442,6 @@ object Relational {
     * The part join is unhinted: AQE broadcasts it at test scale and
     * falls back to a shuffle join when part outgrows the threshold
     * (at TPC-H ratios part is lineitem/30 — not broadcastable forever). */
-  def q27(spark: SparkSession, dir: String): DataFrame = {
-    val l = Tables.lineitem(spark, dir)
-    val pq = l.groupBy("l_partkey")
-      .agg(sum(dec(col("l_quantity"))).as("sq"), count(lit(1)).as("cnt"))
-    l.join(pq, "l_partkey")
-      .filter(dec(col("l_quantity")) * 5 * col("cnt") < col("sq"))
-      .join(Tables.part(spark, dir), col("p_partkey") === col("l_partkey"))
-      .groupBy("p_brand")
-      .agg(count(lit(1)).as("n_small"),
-           (dsum(col("l_extendedprice")) / lit(7.0d)).as("avg_yearly"))
-      .orderBy("p_brand")
-  }
   val q27Sql: String =
     """WITH pq AS (SELECT l_partkey, SUM(CAST(l_quantity AS DECIMAL(12,2))) AS sq,
       |                   COUNT(*)::BIGINT AS cnt
@@ -641,22 +468,6 @@ object Relational {
     * with ONE cast to double, and the order-count average is an exact
     * bigint sum / count, so the `>` / `<` threshold filters can't
     * flip with partial-aggregation order. */
-  def q28(spark: SparkSession, dir: String): DataFrame = {
-    val c = Tables.customer(spark, dir)
-    val ab = c.filter(col("c_acctbal") > 0.0d)
-      .agg((dbl(sum(dec(col("c_acctbal")))) / count(lit(1))).as("ab"))
-    val oc = Tables.orders(spark, dir)
-      .groupBy("o_custkey").agg(count(lit(1)).as("cnt"))
-    val aoc = oc.agg((dbl(sum(col("cnt"))) / count(lit(1))).as("ac"))
-    c.join(oc, col("c_custkey") === col("o_custkey"), "left")
-      .withColumn("cnt", coalesce(col("cnt"), lit(0L)))
-      .crossJoin(broadcast(ab))
-      .crossJoin(broadcast(aoc))
-      .filter(col("c_acctbal") > col("ab") && dbl(col("cnt")) < col("ac"))
-      .groupBy(col("c_nationkey").cast("bigint").as("c_nationkey"))
-      .agg(count(lit(1)).as("numcust"), dsum(col("c_acctbal")).as("totacctbal"))
-      .orderBy("c_nationkey")
-  }
   val q28Sql: String =
     """WITH ab AS (SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(12,2))) AS DOUBLE)
       |                   / COUNT(*) AS ab
@@ -665,7 +476,7 @@ object Relational {
       |aoc AS (SELECT CAST(SUM(cnt) AS DOUBLE) / COUNT(*) AS ac FROM oc),
       |j AS (SELECT c.c_nationkey, c.c_acctbal, COALESCE(oc.cnt, 0) AS cnt
       |      FROM customer c LEFT JOIN oc ON oc.o_custkey = c.c_custkey)
-      |SELECT CAST(j.c_nationkey AS BIGINT) AS c_nationkey,
+      |SELECT /*+ BROADCAST(ab, aoc) */ CAST(j.c_nationkey AS BIGINT) AS c_nationkey,
       |  COUNT(*)::BIGINT AS numcust,
       |  CAST(SUM(CAST(j.c_acctbal AS DECIMAL(12,2))) AS DOUBLE) AS totacctbal
       |FROM j, ab, aoc
@@ -720,18 +531,6 @@ object Relational {
     * the second on ~20 distinct counts — a few partial rows per task.
     * Output order (custdist, c_count) desc is total: c_count is unique
     * per row, so ties can't reorder. */
-  def q30(spark: SparkSession, dir: String): DataFrame = {
-    val o = Tables.orders(spark, dir)
-      .filter(col("o_orderpriority") =!= "1-URGENT")
-      .select("o_custkey", "o_orderkey")
-    Tables.customer(spark, dir)
-      .join(o, col("c_custkey") === col("o_custkey"), "left")
-      .groupBy("c_custkey")
-      .agg(count(col("o_orderkey")).as("c_count"))
-      .groupBy("c_count")
-      .agg(count(lit(1)).as("custdist"))
-      .orderBy(col("custdist").desc, col("c_count").desc)
-  }
   val q30Sql: String =
     """SELECT c_count, COUNT(*)::BIGINT AS custdist FROM (
       |  SELECT c_custkey, COUNT(o_orderkey)::BIGINT AS c_count
@@ -751,27 +550,8 @@ object Relational {
     * broadcast-joined columns, so it prunes BEFORE the groupBy shuffle;
     * the final aggregate has (2 nations × 2 directions × years) groups —
     * a few partial rows per task regardless of fact size. */
-  def q31(spark: SparkSession, dir: String): DataFrame = {
-    val n1 = Tables.nation(spark, dir)
-      .select(col("n_nationkey").as("n1k"), col("n_name").as("supp_nation"))
-    val n2 = Tables.nation(spark, dir)
-      .select(col("n_nationkey").as("n2k"), col("n_name").as("cust_nation"))
-    Tables.lineitem(spark, dir)
-      .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-              col("l_shipdate") < lit("1998-01-01").cast("timestamp"))
-      .join(Tables.orders(spark, dir), col("l_orderkey") === col("o_orderkey"))
-      .join(Tables.customer(spark, dir), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.supplier(spark, dir)), col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(n1), col("s_nationkey") === col("n1k"))
-      .join(broadcast(n2), col("c_nationkey") === col("n2k"))
-      .filter((col("supp_nation") === "NATION_10" && col("cust_nation") === "NATION_12") ||
-              (col("supp_nation") === "NATION_12" && col("cust_nation") === "NATION_10"))
-      .groupBy(col("supp_nation"), col("cust_nation"), year(col("l_shipdate")).as("l_year"))
-      .agg(dbl(sum(revenueTerm(col("l_extendedprice"), col("l_discount")))).as("revenue"))
-      .orderBy("supp_nation", "cust_nation", "l_year")
-  }
   val q31Sql: String =
-    s"""SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
+    s"""SELECT /*+ BROADCAST(supplier, n1, n2) */ n1.n_name AS supp_nation, n2.n_name AS cust_nation,
        |  CAST(EXTRACT(year FROM l_shipdate) AS INT) AS l_year,
        |  CAST(SUM($revenueSql) AS DOUBLE) AS revenue
        |FROM lineitem
@@ -795,35 +575,8 @@ object Relational {
     * oracle. part/supplier/nation/region all broadcast; the share filter
     * (customer region) prunes on a broadcast column before the year
     * groupBy, which has ~3 groups. */
-  def q32(spark: SparkSession, dir: String): DataFrame = {
-    val p = Tables.part(spark, dir).filter(col("p_type") === "STANDARD")
-      .select("p_partkey")
-    val sn = Tables.supplier(spark, dir)
-      .join(broadcast(Tables.nation(spark, dir)
-        .select(col("n_nationkey").as("snk"), col("n_name").as("supp_nation"))),
-        col("s_nationkey") === col("snk"))
-      .select("s_suppkey", "supp_nation")
-    val custAsia = Tables.customer(spark, dir)
-      .join(broadcast(Tables.nation(spark, dir)
-        .select(col("n_nationkey").as("cnk"), col("n_regionkey"))),
-        col("c_nationkey") === col("cnk"))
-      .join(broadcast(Tables.region(spark, dir).filter(col("r_name") === "ASIA")),
-        col("n_regionkey") === col("r_regionkey"))
-      .select("c_custkey")
-    val rev = revenueTerm(col("l_extendedprice"), col("l_discount"))
-    Tables.lineitem(spark, dir)
-      .join(broadcast(p), col("l_partkey") === col("p_partkey"))
-      .join(Tables.orders(spark, dir), col("l_orderkey") === col("o_orderkey"))
-      .join(custAsia, col("o_custkey") === col("c_custkey"), "left_semi")
-      .join(broadcast(sn), col("l_suppkey") === col("s_suppkey"))
-      .groupBy(year(col("o_orderdate")).as("o_year"))
-      .agg((dbl(sum(when(col("supp_nation") === "NATION_2", rev).otherwise(dec(lit(0))))) /
-            dbl(sum(rev))).as("mkt_share"),
-           count(lit(1)).as("n_lines"))
-      .orderBy("o_year")
-  }
   val q32Sql: String =
-    s"""SELECT CAST(EXTRACT(year FROM o_orderdate) AS INT) AS o_year,
+    s"""SELECT /*+ BROADCAST(part, supplier, nation) */ CAST(EXTRACT(year FROM o_orderdate) AS INT) AS o_year,
        |  CAST(SUM(CASE WHEN n_name = 'NATION_2' THEN $revenueSql
        |           ELSE CAST(0 AS DECIMAL(12,2)) END) AS DOUBLE)
        |    / CAST(SUM($revenueSql) AS DOUBLE) AS mkt_share,
@@ -834,7 +587,7 @@ object Relational {
        |JOIN supplier ON l_suppkey = s_suppkey
        |JOIN nation ON s_nationkey = n_nationkey
        |WHERE p_type = 'STANDARD'
-       |  AND EXISTS (SELECT 1 FROM customer
+       |  AND EXISTS (SELECT /*+ BROADCAST(cn, region) */ 1 FROM customer
        |              JOIN nation cn ON c_nationkey = cn.n_nationkey
        |              JOIN region ON cn.n_regionkey = r_regionkey
        |              WHERE c_custkey = o_custkey AND r_name = 'ASIA')
@@ -851,22 +604,8 @@ object Relational {
     * attaches on uniform custkey; nation broadcasts. Top-20 is
     * TakeOrderedAndProject (per-partition partial top-k, never a global
     * sort), with c_custkey breaking revenue ties deterministically. */
-  def q33(spark: SparkSession, dir: String): DataFrame = {
-    val o = Tables.orders(spark, dir)
-      .filter(col("o_orderdate") >= lit("1997-01-01").cast("timestamp") &&
-              col("o_orderdate") < lit("1997-04-01").cast("timestamp"))
-    Tables.lineitem(spark, dir)
-      .filter(col("l_returnflag") === "R")
-      .join(o, col("l_orderkey") === col("o_orderkey"))
-      .join(Tables.customer(spark, dir), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.nation(spark, dir)), col("c_nationkey") === col("n_nationkey"))
-      .groupBy(col("c_custkey"), col("c_name"), col("c_acctbal"), col("n_name"))
-      .agg(dbl(sum(revenueTerm(col("l_extendedprice"), col("l_discount")))).as("revenue"))
-      .orderBy(col("revenue").desc, col("c_custkey"))
-      .limit(20)
-  }
   val q33Sql: String =
-    s"""SELECT c_custkey, c_name, c_acctbal, n_name,
+    s"""SELECT /*+ BROADCAST(nation) */ c_custkey, c_name, c_acctbal, n_name,
        |  CAST(SUM($revenueSql) AS DOUBLE) AS revenue
        |FROM lineitem
        |JOIN orders ON l_orderkey = o_orderkey
@@ -951,23 +690,8 @@ object Relational {
     * the common `p_size >= 1` conjunct is factored out so it pushes down
     * to the part scan. Catalyst keeps the whole disjunction inside one
     * codegen stage — no union-of-three-plans blow-up. */
-  def q36(spark: SparkSession, dir: String): DataFrame = {
-    val branch =
-      (col("p_brand") === "Brand#13" && col("p_size").between(1, 5) &&
-        col("l_quantity").between(1, 11)) ||
-      (col("p_brand") === "Brand#19" && col("p_size").between(1, 10) &&
-        col("l_quantity").between(10, 20)) ||
-      (col("p_brand") === "Brand#23" && col("p_size").between(1, 15) &&
-        col("l_quantity").between(20, 30))
-    Tables.lineitem(spark, dir)
-      .join(broadcast(Tables.part(spark, dir).select("p_partkey", "p_brand", "p_size")),
-        col("l_partkey") === col("p_partkey"))
-      .filter(branch)
-      .agg(dbl(sum(revenueTerm(col("l_extendedprice"), col("l_discount")))).as("revenue"),
-           count(lit(1)).as("n_lines"))
-  }
   val q36Sql: String =
-    s"""SELECT CAST(SUM($revenueSql) AS DOUBLE) AS revenue, COUNT(*)::BIGINT AS n_lines
+    s"""SELECT /*+ BROADCAST(part) */ CAST(SUM($revenueSql) AS DOUBLE) AS revenue, COUNT(*)::BIGINT AS n_lines
        |FROM lineitem JOIN part ON l_partkey = p_partkey
        |WHERE (p_brand = 'Brand#13' AND p_size BETWEEN 1 AND 5 AND l_quantity BETWEEN 1 AND 11)
        |   OR (p_brand = 'Brand#19' AND p_size BETWEEN 1 AND 10 AND l_quantity BETWEEN 10 AND 20)
@@ -1016,25 +740,6 @@ object Relational {
     * casts with one fixed IEEE op sequence, identical on both engines.
     * One map-combinable groupBy; moment products stay inside DECIMAL(38,8)
     * headroom even at 10^12 rows. */
-  def q38(spark: SparkSession, dir: String): DataFrame = {
-    val x = dec(col("l_quantity"))
-    val y = dec(col("l_extendedprice"))
-    Tables.lineitem(spark, dir)
-      .groupBy("l_returnflag")
-      .agg(count(lit(1)).as("n"),
-           dbl(sum(x)).as("sx"), dbl(sum(y)).as("sy"),
-           dbl(sum(x * y)).as("sxy"),
-           dbl(sum(x * x)).as("sx2"), dbl(sum(y * y)).as("sy2"))
-      .select(col("l_returnflag"), col("n"),
-        // round6 quantization (the repo's cosine rule): the large decimal
-        // moments cast to double with engine-specific last-ulp rounding,
-        // so the raw correlation can drift one ulp — the quantized value
-        // cannot (a corr is O(1), six decimals ≫ one ulp).
-        round((col("n") * col("sxy") - col("sx") * col("sy")) /
-          (sqrt(col("n") * col("sx2") - col("sx") * col("sx")) *
-           sqrt(col("n") * col("sy2") - col("sy") * col("sy"))), 6).as("corr_qty_price"))
-      .orderBy("l_returnflag")
-  }
   val q38Sql: String =
     """WITH m AS (
       |  SELECT l_returnflag, COUNT(*) AS n,
@@ -1054,23 +759,9 @@ object Relational {
     * division of exact operands, round6. The yearly aggregate is tiny
     * (nations × years) so the self-join is broadcast-sized no matter how
     * large the fact; the only real shuffle is the first groupBy. */
-  def q39(spark: SparkSession, dir: String): DataFrame = {
-    val yearly = Tables.lineitem(spark, dir)
-      .join(Tables.orders(spark, dir), col("l_orderkey") === col("o_orderkey"))
-      .join(Tables.customer(spark, dir), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.nation(spark, dir)), col("c_nationkey") === col("n_nationkey"))
-      .groupBy(col("n_name"), year(col("o_orderdate")).cast("long").as("yr"))
-      .agg(sum(revenueTerm(col("l_extendedprice"), col("l_discount"))).as("rev_dec"))
-    val prev = yearly.select(col("n_name"), (col("yr") + 1).as("yr"),
-      col("rev_dec").as("prev_dec"))
-    yearly.join(prev, Seq("n_name", "yr"))
-      .select(col("n_name"), col("yr"), dbl(col("rev_dec")).as("revenue"),
-        round(dbl(col("rev_dec")) / dbl(col("prev_dec")) - 1.0d, 6).as("yoy_growth"))
-      .orderBy("n_name", "yr")
-  }
   val q39Sql: String =
     s"""WITH y AS (
-       |  SELECT n_name, CAST(EXTRACT(year FROM o_orderdate) AS BIGINT) AS yr,
+       |  SELECT /*+ BROADCAST(nation) */ n_name, CAST(EXTRACT(year FROM o_orderdate) AS BIGINT) AS yr,
        |    SUM($revenueSql) AS rev_dec
        |  FROM lineitem
        |  JOIN orders ON l_orderkey = o_orderkey
@@ -1089,18 +780,6 @@ object Relational {
     * uniform custkey; attaching it to orders is a same-key shuffle join
     * (both legs co-keyed); the final matrix is (years × years)/2 groups.
     * Revenue stays DECIMAL until the last cast. */
-  def q40(spark: SparkSession, dir: String): DataFrame = {
-    val o = Tables.orders(spark, dir)
-      .select(col("o_custkey"), col("o_totalprice"),
-        year(col("o_orderdate")).cast("long").as("yr"))
-    val cohort = o.groupBy("o_custkey").agg(min(col("yr")).as("cohort_yr"))
-    o.join(cohort, "o_custkey")
-      .groupBy("cohort_yr", "yr")
-      .agg(countDistinct(col("o_custkey")).as("n_customers"),
-           count(lit(1)).as("n_orders"),
-           dbl(sum(dec(col("o_totalprice")))).as("revenue"))
-      .orderBy("cohort_yr", "yr")
-  }
   val q40Sql: String =
     """WITH o AS (SELECT o_custkey, o_totalprice,
       |             CAST(EXTRACT(year FROM o_orderdate) AS BIGINT) AS yr
@@ -1123,28 +802,6 @@ object Relational {
     * bit-identical before the second median pass. Scale: two window
     * passes partitioned by segment (bounded per-group state) plus a
     * |segments|-row broadcast back onto the table; no global sort. */
-  def q41(spark: SparkSession, dir: String): DataFrame = {
-    val c = Tables.customer(spark, dir)
-    val wc = Window.partitionBy("c_mktsegment")
-    def twoMiddle(df: DataFrame, ord: Column, tie: Column): DataFrame = {
-      val w = Window.partitionBy("c_mktsegment").orderBy(ord, tie)
-      df.withColumn("rn", row_number().over(w).cast("long"))
-        .withColumn("cnt", count(lit(1)).over(wc))
-        .filter(col("rn") === floor((col("cnt") + 1) / 2) ||
-                col("rn") === floor((col("cnt") + 2) / 2))
-    }
-    val med = twoMiddle(c, col("c_acctbal"), col("c_custkey"))
-      .groupBy("c_mktsegment")
-      .agg(((min(col("c_acctbal")) + max(col("c_acctbal"))) / lit(2.0d)).as("median_bal"))
-    val dev = c.join(broadcast(med), "c_mktsegment")
-      .select(col("c_mktsegment"), col("median_bal"), col("c_custkey"),
-              abs(col("c_acctbal") - col("median_bal")).as("dev"))
-    twoMiddle(dev, col("dev"), col("c_custkey"))
-      .groupBy("c_mktsegment")
-      .agg(min(col("median_bal")).as("median_bal"),
-           ((min(col("dev")) + max(col("dev"))) / lit(2.0d)).as("mad"))
-      .orderBy("c_mktsegment")
-  }
   val q41Sql: String =
     """WITH m AS (
       |  SELECT c_mktsegment, (MIN(c_acctbal) + MAX(c_acctbal)) / CAST(2.0 AS DOUBLE) AS median_bal
@@ -1155,7 +812,7 @@ object Relational {
       |  WHERE rn = FLOOR((cnt + 1) / 2) OR rn = FLOOR((cnt + 2) / 2)
       |  GROUP BY c_mktsegment),
       |d AS (
-      |  SELECT c.c_mktsegment, m.median_bal, c.c_custkey,
+      |  SELECT /*+ BROADCAST(m) */ c.c_mktsegment, m.median_bal, c.c_custkey,
       |    ABS(c.c_acctbal - m.median_bal) AS dev
       |  FROM customer c JOIN m ON c.c_mktsegment = m.c_mktsegment)
       |SELECT c_mktsegment, MIN(median_bal) AS median_bal,
@@ -1172,17 +829,6 @@ object Relational {
     * and q24's CUBE: two independent single-dimension breakdowns plus the
     * cross product, in ONE aggregation pass (Expand + one shuffle, not
     * three scans unioned). */
-  def q42(spark: SparkSession, dir: String): DataFrame =
-    Tables.orders(spark, dir)
-      .groupingSets(
-        Seq(Seq(col("o_orderstatus"), col("o_orderpriority")),
-            Seq(col("o_orderstatus")), Seq(col("o_orderpriority"))),
-        col("o_orderstatus"), col("o_orderpriority"))
-      .agg(count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("revenue"))
-      .select(coalesce(col("o_orderstatus"), lit("ALL")).as("status"),
-              coalesce(col("o_orderpriority"), lit("ALL")).as("priority"),
-              col("n_orders"), col("revenue"))
-      .orderBy("status", "priority")
   val q42Sql: String =
     """SELECT COALESCE(o_orderstatus, 'ALL') AS status,
       |  COALESCE(o_orderpriority, 'ALL') AS priority,
@@ -1266,32 +912,6 @@ object Relational {
     * map-combinable conditional aggregation; the bracketing-rank
     * selection means only ≤6 rows per group carry values into the agg
     * combine. No global sort. */
-  def q44(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("c_mktsegment").orderBy(col("c_acctbal"), col("c_custkey"))
-    val wc = Window.partitionBy("c_mktsegment")
-    val ranked = Tables.customer(spark, dir)
-      .select(col("c_mktsegment"), col("c_acctbal"),
-        (row_number().over(w).cast("long") - 1).as("idx"),
-        count(lit(1)).over(wc).as("cnt"))
-    def pos(q: Double): Column = (col("cnt") - 1).cast("double") * lit(q)
-    def lo(q: Double, nm: String): Column =
-      max(when(col("idx") === floor(pos(q)), col("c_acctbal"))).as(s"${nm}_lo")
-    def hi(q: Double, nm: String): Column =
-      max(when(col("idx") === ceil(pos(q)), col("c_acctbal"))).as(s"${nm}_hi")
-    def interp(nm: String, q: Double): Column = {
-      val p = (col("n") - 1).cast("double") * lit(q)
-      col(s"${nm}_lo") + (col(s"${nm}_hi") - col(s"${nm}_lo")) * (p - floor(p))
-    }
-    ranked.groupBy("c_mktsegment")
-      .agg(max(col("cnt")).as("n"),
-           lo(0.25, "q1"), hi(0.25, "q1"), lo(0.5, "q2"), hi(0.5, "q2"),
-           lo(0.75, "q3"), hi(0.75, "q3"))
-      .select(col("c_mktsegment"), col("n"),
-        interp("q1", 0.25).as("p25"), interp("q2", 0.5).as("p50"),
-        interp("q3", 0.75).as("p75"),
-        (interp("q3", 0.75) - interp("q1", 0.25)).as("iqr"))
-      .orderBy("c_mktsegment")
-  }
   val q44Sql: String =
     """WITH r AS (
       |  SELECT c_mktsegment, c_acctbal,
@@ -1383,20 +1003,6 @@ object Relational {
     * into exact integer cents (2·cents·n > 3·Σcents — no float compare,
     * no division) over a custkey-partitioned window; the rollup's one
     * division produces the per-customer share. */
-  def q47(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("o_custkey")
-    Tables.orders(spark, dir)
-      .select(col("o_custkey"), (dec(col("o_totalprice")) * 100).cast("long").as("cents"))
-      .withColumn("s", sum(col("cents")).over(w))
-      .withColumn("n", count(lit(1)).over(w))
-      .withColumn("above", (col("cents") * 2 * col("n") > col("s") * 3).cast("long"))
-      .groupBy("o_custkey")
-      .agg(max(col("n")).as("n_orders"),
-           sum(col("above")).as("n_above"),
-           (sum(col("above")).cast("double") / max(col("n"))).as("above_share"))
-      .filter(col("n_orders") >= 3)
-      .orderBy("o_custkey")
-  }
   val q47Sql: String =
     """WITH c AS (
       |  SELECT o_custkey,
@@ -1454,22 +1060,6 @@ object Relational {
     * operands in both engines, so the (share desc, partkey) total order
     * agrees and TakeOrdered prunes the head map-side — no global
     * window. */
-  def q49(spark: SparkSession, dir: String): DataFrame = {
-    val ps = Tables.lineitem(spark, dir)
-      .groupBy(col("l_partkey"), col("l_suppkey"))
-      .agg(sum(dec(col("l_quantity"))).as("sq"))
-      .cache() // feeds the per-part rollup AND the argmax resolve join
-    val per = ps.groupBy("l_partkey")
-      .agg(count(lit(1)).as("n_suppliers"), sum(col("sq")).as("tq"),
-           max(col("sq")).as("msq"))
-      .filter(col("n_suppliers") >= 2)
-    per.join(ps.withColumnRenamed("sq", "msq"), Seq("l_partkey", "msq"))
-      .groupBy(col("l_partkey").as("p_partkey"))
-      .agg(max(col("n_suppliers")).as("n_suppliers"),
-           min(col("l_suppkey")).as("top_suppkey"),
-           (dbl(max(col("msq"))) / dbl(max(col("tq")))).as("top_share"))
-      .orderBy(col("top_share").desc, col("p_partkey")).limit(20)
-  }
   val q49Sql: String =
     """WITH ps AS (
       |  SELECT l_partkey, l_suppkey, SUM(CAST(l_quantity AS DECIMAL(12,2))) AS sq
@@ -1493,25 +1083,9 @@ object Relational {
     * shares come from a nation-partitioned window over the
     * \|nations\|×\|segments\|-bounded rollup — DECIMAL-exact totals,
     * ONE IEEE division per row. */
-  def q50(spark: SparkSession, dir: String): DataFrame = {
-    val rev = Tables.orders(spark, dir)
-      .select(col("o_custkey"), col("o_totalprice"))
-      .join(Tables.customer(spark, dir).select(col("c_custkey"), col("c_nationkey"), col("c_mktsegment")),
-        col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.nation(spark, dir).select(col("n_nationkey"), col("n_name"))),
-        col("c_nationkey") === col("n_nationkey"))
-      .groupBy(col("n_name"), col("c_mktsegment"))
-      .agg(sum(dec(col("o_totalprice"))).as("rev"))
-    val wN = Window.partitionBy("n_name")
-    rev.withColumn("nation_rev", sum(col("rev")).over(wN))
-      .select(col("n_name"), col("c_mktsegment"),
-        dbl(col("rev")).as("revenue"),
-        round(dbl(col("rev")) / dbl(col("nation_rev")), 6).as("share"))
-      .orderBy("n_name", "c_mktsegment")
-  }
   val q50Sql: String =
     """WITH rev AS (
-      |  SELECT n_name, c_mktsegment,
+      |  SELECT /*+ BROADCAST(nation) */ n_name, c_mktsegment,
       |    SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS rev
       |  FROM orders
       |  JOIN customer ON o_custkey = c_custkey
@@ -1531,14 +1105,6 @@ object Relational {
     * boundary); quantity/revenue aggregate in exact DECIMAL; averages
     * are ONE division per emitted row; output bounded by the discount
     * domain (|bands| ≤ 101). */
-  def q51(spark: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(spark, dir)
-      .withColumn("band", round(col("l_discount") * 100, 0).cast("long"))
-      .groupBy("band")
-      .agg(count(lit(1)).as("n_lines"),
-           davg(col("l_quantity")).as("avg_qty"),
-           dbl(sum(revenueTerm(col("l_extendedprice"), col("l_discount")))).as("revenue"))
-      .orderBy("band")
   val q51Sql: String =
     s"""SELECT CAST(ROUND(l_discount * 100, 0) AS BIGINT) AS band,
        |  COUNT(*) AS n_lines,
@@ -1552,16 +1118,6 @@ object Relational {
     * integer-cent CASE compares — `div`/`//` disagree on negative
     * truncation between engines, CASE edges don't; one map-combinable
     * groupBy, \|segments\|×\|bands\|-bounded output. */
-  def q52(spark: SparkSession, dir: String): DataFrame = {
-    val cents = (dec(col("c_acctbal")) * 100).cast("long")
-    val band = when(cents < 0L, "a<0").when(cents < 250000L, "b<2500")
-      .when(cents < 500000L, "c<5000").when(cents < 750000L, "d<7500")
-      .otherwise("e>=7500")
-    Tables.customer(spark, dir)
-      .groupBy(col("c_mktsegment"), band.as("balance_band"))
-      .agg(count(lit(1)).as("n_customers"), davg(col("c_acctbal")).as("avg_balance"))
-      .orderBy("c_mktsegment", "balance_band")
-  }
   val q52Sql: String =
     """WITH c AS (
       |  SELECT c_mktsegment, c_acctbal,
@@ -1616,20 +1172,6 @@ object Relational {
     * (are big-ticket orders few-line or many-line). Line counts from one
     * orderkey rollup joined back to orders; value bands on exact integer
     * cents; \|line bands\|×\|value bands\|-bounded output. */
-  def q54(spark: SparkSession, dir: String): DataFrame = {
-    val lines = Tables.lineitem(spark, dir)
-      .groupBy(col("l_orderkey")).agg(count(lit(1)).as("n_lines"))
-    val lineBand = when(col("n_lines") <= 2, "a1-2")
-      .when(col("n_lines") <= 4, "b3-4").otherwise("c5-7")
-    val cents = (dec(col("o_totalprice")) * 100).cast("long")
-    val valueBand = when(cents < 5000000L, "a<50k").when(cents < 15000000L, "b<150k")
-      .when(cents < 30000000L, "c<300k").otherwise("d>=300k")
-    Tables.orders(spark, dir)
-      .join(lines, col("o_orderkey") === col("l_orderkey"))
-      .groupBy(lineBand.as("line_band"), valueBand.as("value_band"))
-      .agg(count(lit(1)).as("n_orders"), davg(col("o_totalprice")).as("avg_value"))
-      .orderBy("line_band", "value_band")
-  }
   val q54Sql: String =
     """WITH lines AS (
       |  SELECT l_orderkey, COUNT(*) AS n_lines FROM lineitem GROUP BY 1),
@@ -1652,19 +1194,6 @@ object Relational {
     * is its event-value analogue at decile granularity). Per-customer
     * DECIMAL rollup, deterministic (revenue desc, custkey) TakeOrdered
     * head, 1-row total broadcast, ONE division per emitted row. */
-  def q55(spark: SparkSession, dir: String): DataFrame = {
-    val per = Tables.orders(spark, dir)
-      .groupBy(col("o_custkey"))
-      .agg(sum(dec(col("o_totalprice"))).as("rev"))
-      .cache() // feeds the top-10 head AND the corpus total
-    val tot = per.agg(sum(col("rev")).as("total_rev"))
-    per.orderBy(col("rev").desc, col("o_custkey")).limit(10)
-      .agg(count(lit(1)).as("n_top"), sum(col("rev")).as("top_rev"))
-      .crossJoin(broadcast(tot))
-      .select(col("n_top"), dbl(col("top_rev")).as("top_revenue"),
-        dbl(col("total_rev")).as("total_revenue"),
-        (round(dbl(col("top_rev")) / dbl(col("total_rev")), 6) + lit(0.0d)).as("top_share"))
-  }
   val q55Sql: String =
     """WITH per AS (
       |  SELECT o_custkey, SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS rev
@@ -1673,7 +1202,7 @@ object Relational {
       |  SELECT COUNT(*) AS n_top, SUM(rev) AS top_rev
       |  FROM (SELECT rev FROM per ORDER BY rev DESC, o_custkey LIMIT 10)),
       |tot AS (SELECT SUM(rev) AS total_rev FROM per)
-      |SELECT n_top, CAST(top_rev AS DOUBLE) AS top_revenue,
+      |SELECT /*+ BROADCAST(tot) */ n_top, CAST(top_rev AS DOUBLE) AS top_revenue,
       |  CAST(total_rev AS DOUBLE) AS total_revenue,
       |  ROUND(CAST(top_rev AS DOUBLE) / CAST(total_rev AS DOUBLE), 6) + 0.0 AS top_share
       |FROM top CROSS JOIN tot""".stripMargin
@@ -1686,22 +1215,6 @@ object Relational {
     * (dropping them biases r upward: the non-buying rich are the
     * signal). One uniform custkey shuffle, one global moment rollup,
     * round6-quantized r. */
-  def q56(spark: SparkSession, dir: String): DataFrame = {
-    val oc = Tables.orders(spark, dir)
-      .groupBy(col("o_custkey")).agg(count(lit(1)).as("n_orders"))
-    val x = dec(col("c_acctbal"))
-    val y = coalesce(col("n_orders"), lit(0L)).cast(Qf.D12)
-    Tables.customer(spark, dir)
-      .join(oc, col("c_custkey") === col("o_custkey"), "left")
-      .agg(count(lit(1)).as("n"),
-           dbl(sum(x)).as("sx"), dbl(sum(y)).as("sy"),
-           dbl(sum(x * y)).as("sxy"),
-           dbl(sum(x * x)).as("sx2"), dbl(sum(y * y)).as("sy2"))
-      .select(col("n"),
-        round((col("n") * col("sxy") - col("sx") * col("sy")) /
-          (sqrt(col("n") * col("sx2") - col("sx") * col("sx")) *
-           sqrt(col("n") * col("sy2") - col("sy") * col("sy"))), 6).as("corr_balance_orders"))
-  }
   val q56Sql: String =
     """WITH oc AS (
       |  SELECT o_custkey, COUNT(*) AS n_orders FROM orders GROUP BY 1),
@@ -1832,24 +1345,8 @@ object Relational {
     * lineitem); supplier and nation are broadcast dims; the single
     * shuffle is the (nation, year) groupBy. Year comes from l_shipdate
     * so no orders join is needed. Revenue stays DECIMAL to the end. */
-  def q59(spark: SparkSession, dir: String): DataFrame = {
-    val widgets = Tables.part(spark, dir)
-      .filter(col("p_name").endsWith("widget"))
-      .select(col("p_partkey"))
-    Tables.lineitem(spark, dir)
-      .join(broadcast(widgets), col("l_partkey") === col("p_partkey"))
-      .join(broadcast(Tables.supplier(spark, dir)
-        .select(col("s_suppkey"), col("s_nationkey"))),
-        col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(Tables.nation(spark, dir)),
-        col("s_nationkey") === col("n_nationkey"))
-      .groupBy(col("n_name"), year(col("l_shipdate")).cast("long").as("yr"))
-      .agg(count(lit(1)).as("n_lines"),
-           dbl(sum(revenueTerm(col("l_extendedprice"), col("l_discount")))).as("revenue"))
-      .orderBy("n_name", "yr")
-  }
   val q59Sql: String =
-    s"""SELECT n_name, CAST(EXTRACT(year FROM l_shipdate) AS BIGINT) AS yr,
+    s"""SELECT /*+ BROADCAST(part, supplier, nation) */ n_name, CAST(EXTRACT(year FROM l_shipdate) AS BIGINT) AS yr,
        |  COUNT(*) AS n_lines, CAST(SUM($revenueSql) AS DOUBLE) AS revenue
        |FROM lineitem
        |JOIN part ON l_partkey = p_partkey AND p_name LIKE '%widget'
@@ -1864,37 +1361,15 @@ object Relational {
     * joined on the tiny nation dim. A full outer shape is unnecessary:
     * every nation has both suppliers and customers by construction, and
     * the inner join keeps the oracle simple. DECIMAL until the end. */
-  def q60(spark: SparkSession, dir: String): DataFrame = {
-    val supplied = Tables.lineitem(spark, dir)
-      .join(broadcast(Tables.supplier(spark, dir)
-        .select(col("s_suppkey"), col("s_nationkey"))),
-        col("l_suppkey") === col("s_suppkey"))
-      .groupBy(col("s_nationkey").as("nationkey"))
-      .agg(sum(revenueTerm(col("l_extendedprice"), col("l_discount"))).as("sup_dec"))
-    val bought = Tables.orders(spark, dir)
-      .join(broadcast(Tables.customer(spark, dir)
-        .select(col("c_custkey"), col("c_nationkey"))),
-        col("o_custkey") === col("c_custkey"))
-      .groupBy(col("c_nationkey").as("nationkey"))
-      .agg(sum(dec(col("o_totalprice"))).as("buy_dec"))
-    supplied.join(bought, "nationkey")
-      .join(broadcast(Tables.nation(spark, dir)),
-        col("nationkey") === col("n_nationkey"))
-      .select(col("n_name"),
-        dbl(col("sup_dec")).as("supplied_rev"),
-        dbl(col("buy_dec")).as("bought_rev"),
-        dbl(col("sup_dec") - col("buy_dec")).as("balance"))
-      .orderBy("n_name")
-  }
   val q60Sql: String =
     s"""WITH s AS (
-       |  SELECT s_nationkey AS nationkey, SUM($revenueSql) AS sup_dec
+       |  SELECT /*+ BROADCAST(supplier) */ s_nationkey AS nationkey, SUM($revenueSql) AS sup_dec
        |  FROM lineitem JOIN supplier ON l_suppkey = s_suppkey GROUP BY 1),
        |b AS (
-       |  SELECT c_nationkey AS nationkey,
+       |  SELECT /*+ BROADCAST(customer) */ c_nationkey AS nationkey,
        |    SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS buy_dec
        |  FROM orders JOIN customer ON o_custkey = c_custkey GROUP BY 1)
-       |SELECT n_name, CAST(sup_dec AS DOUBLE) AS supplied_rev,
+       |SELECT /*+ BROADCAST(nation) */ n_name, CAST(sup_dec AS DOUBLE) AS supplied_rev,
        |  CAST(buy_dec AS DOUBLE) AS bought_rev,
        |  CAST(sup_dec - buy_dec AS DOUBLE) AS balance
        |FROM s JOIN b USING (nationkey)
@@ -1906,15 +1381,6 @@ object Relational {
     * price min / max / spread / mean — a single-table dimension agg
     * (bounded 25 brands) with order-independent decimal arithmetic and
     * ONE division for the mean. */
-  def q61(spark: SparkSession, dir: String): DataFrame =
-    Tables.part(spark, dir)
-      .groupBy("p_brand")
-      .agg(count(lit(1)).as("n_parts"),
-           dbl(min(dec(col("p_retailprice")))).as("min_price"),
-           dbl(max(dec(col("p_retailprice")))).as("max_price"),
-           dbl(max(dec(col("p_retailprice"))) - min(dec(col("p_retailprice")))).as("spread"),
-           round(dbl(sum(dec(col("p_retailprice")))) / count(lit(1)), 6).as("mean_price"))
-      .orderBy("p_brand")
   val q61Sql: String =
     """SELECT p_brand, COUNT(*) AS n_parts,
       |  CAST(MIN(CAST(p_retailprice AS DECIMAL(12,2))) AS DOUBLE) AS min_price,
@@ -1931,18 +1397,6 @@ object Relational {
     * aggregate (bounded years×4 groups) + a window over the 4-row year
     * partition (never a single-partition window); the share is ONE
     * division of exact decimal operands, round6. */
-  def q62(spark: SparkSession, dir: String): DataFrame = {
-    val q = Tables.orders(spark, dir)
-      .groupBy(year(col("o_orderdate")).cast("long").as("yr"),
-               quarter(col("o_orderdate")).cast("long").as("qtr"))
-      .agg(count(lit(1)).as("n_orders"), sum(dec(col("o_totalprice"))).as("rev_dec"))
-    val w = Window.partitionBy("yr")
-    q.withColumn("yr_dec", sum(col("rev_dec")).over(w))
-      .select(col("yr"), col("qtr"), col("n_orders"),
-        dbl(col("rev_dec")).as("revenue"),
-        round(dbl(col("rev_dec")) / dbl(col("yr_dec")), 6).as("share_of_year"))
-      .orderBy("yr", "qtr")
-  }
   val q62Sql: String =
     """WITH q AS (
       |  SELECT CAST(EXTRACT(year FROM o_orderdate) AS BIGINT) AS yr,
@@ -1960,20 +1414,6 @@ object Relational {
     * returned ('R') per calendar month — the merchandise quality
     * trendline. One scan, one bounded groupBy (months), conditional
     * decimal sums, ONE division per month row. */
-  def q63(spark: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(spark, dir)
-      .groupBy((year(col("l_shipdate")) * 12 + month(col("l_shipdate")))
-        .cast("long").as("midx"))
-      .agg(count(lit(1)).as("n_lines"),
-           sum(revenueTerm(col("l_extendedprice"), col("l_discount"))).as("rev_dec"),
-           sum(when(col("l_returnflag") === "R",
-             revenueTerm(col("l_extendedprice"), col("l_discount")))
-             .otherwise(dec(lit(0)))).as("ret_dec"))
-      .select(col("midx"), col("n_lines"),
-        dbl(col("rev_dec")).as("revenue"),
-        dbl(col("ret_dec")).as("returned_rev"),
-        round(dbl(col("ret_dec")) / dbl(col("rev_dec")), 6).as("returned_share"))
-      .orderBy("midx")
   val q63Sql: String =
     s"""SELECT CAST(EXTRACT(year FROM l_shipdate) * 12
        |          + EXTRACT(month FROM l_shipdate) AS BIGINT) AS midx,
@@ -2053,36 +1493,6 @@ object Relational {
     * the mass at zero is the point), then q44's bracketing-rank
     * PERCENTILE_CONT machinery per segment. Windows partition by
     * segment; ≤6 bracketing rows per segment reach the final agg. */
-  def q66(spark: SparkSession, dir: String): DataFrame = {
-    val rev = Tables.orders(spark, dir)
-      .groupBy("o_custkey").agg(sum(dec(col("o_totalprice"))).as("r"))
-    val clv = Tables.customer(spark, dir)
-      .join(rev, col("c_custkey") === col("o_custkey"), "left")
-      .select(col("c_mktsegment"), col("c_custkey"),
-        coalesce(dbl(col("r")), lit(0.0d)).as("clv"))
-    val w = Window.partitionBy("c_mktsegment").orderBy(col("clv"), col("c_custkey"))
-    val wc = Window.partitionBy("c_mktsegment")
-    val ranked = clv.select(col("c_mktsegment"), col("clv"),
-      (row_number().over(w).cast("long") - 1).as("idx"),
-      count(lit(1)).over(wc).as("cnt"))
-    def pos(q: Double): Column = (col("cnt") - 1).cast("double") * lit(q)
-    def lo(q: Double, nm: String): Column =
-      max(when(col("idx") === floor(pos(q)), col("clv"))).as(s"${nm}_lo")
-    def hi(q: Double, nm: String): Column =
-      max(when(col("idx") === ceil(pos(q)), col("clv"))).as(s"${nm}_hi")
-    def interp(nm: String, q: Double): Column = {
-      val p = (col("n") - 1).cast("double") * lit(q)
-      col(s"${nm}_lo") + (col(s"${nm}_hi") - col(s"${nm}_lo")) * (p - floor(p))
-    }
-    ranked.groupBy("c_mktsegment")
-      .agg(max(col("cnt")).as("n"),
-           lo(0.25, "q1"), hi(0.25, "q1"), lo(0.5, "q2"), hi(0.5, "q2"),
-           lo(0.75, "q3"), hi(0.75, "q3"))
-      .select(col("c_mktsegment"), col("n"),
-        interp("q1", 0.25).as("p25"), interp("q2", 0.5).as("p50"),
-        interp("q3", 0.75).as("p75"))
-      .orderBy("c_mktsegment")
-  }
   val q66Sql: String =
     """WITH rev AS (
       |  SELECT o_custkey, SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS r
@@ -2166,26 +1576,6 @@ object Relational {
     * counts and the order total attach as broadcasts; lift is computed
     * in exact integer cross-products with ONE IEEE division per
     * emitted row; deterministic TakeOrdered head. */
-  def q68(spark: SparkSession, dir: String): DataFrame = {
-    val lp = Tables.lineitem(spark, dir)
-      .select(col("l_orderkey"), col("l_partkey")).distinct()
-    val pairs = lp.as("a").join(lp.as("b"),
-        col("a.l_orderkey") === col("b.l_orderkey") &&
-          col("a.l_partkey") < col("b.l_partkey"))
-      .groupBy(col("a.l_partkey").as("part_a"), col("b.l_partkey").as("part_b"))
-      .agg(count(lit(1)).as("n_both"))
-    val pc = lp.groupBy(col("l_partkey")).agg(count(lit(1)).as("n_part"))
-    val tot = lp.select(countDistinct(col("l_orderkey")).as("n_orders"))
-    pairs
-      .join(pc.select(col("l_partkey").as("part_a"), col("n_part").as("na")), "part_a")
-      .join(pc.select(col("l_partkey").as("part_b"), col("n_part").as("nb")), "part_b")
-      .join(broadcast(tot))
-      .withColumn("lift",
-        round(dbl(col("n_both") * col("n_orders")) / dbl(col("na") * col("nb")), 6))
-      .select("part_a", "part_b", "n_both", "na", "nb", "lift")
-      .orderBy(col("n_both").desc, col("part_a"), col("part_b"))
-      .limit(20)
-  }
   val q68Sql: String =
     """WITH lp AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
       |pairs AS (
@@ -2195,7 +1585,7 @@ object Relational {
       |  GROUP BY 1, 2),
       |pc AS (SELECT l_partkey, COUNT(*) AS n_part FROM lp GROUP BY 1),
       |tot AS (SELECT COUNT(DISTINCT l_orderkey) AS n_orders FROM lp)
-      |SELECT part_a, part_b, n_both, pa.n_part AS na, pb.n_part AS nb,
+      |SELECT /*+ BROADCAST(tot) */ part_a, part_b, n_both, pa.n_part AS na, pb.n_part AS nb,
       |  ROUND(CAST(n_both * n_orders AS DOUBLE) / CAST(pa.n_part * pb.n_part AS DOUBLE), 6) AS lift
       |FROM pairs
       |JOIN pc pa ON part_a = pa.l_partkey
@@ -2382,26 +1772,9 @@ object Relational {
     * vs quantity per part type — q38's DECIMAL-exact distributed-moment
     * recipe (order-independent under map-side combine) behind a
     * broadcast part-dim join; output is |p_type|-bounded. */
-  def q73(spark: SparkSession, dir: String): DataFrame = {
-    val x = dec(col("l_discount"))
-    val y = dec(col("l_quantity"))
-    Tables.lineitem(spark, dir)
-      .join(broadcast(Tables.part(spark, dir).select("p_partkey", "p_type")),
-        col("l_partkey") === col("p_partkey"))
-      .groupBy("p_type")
-      .agg(count(lit(1)).as("n"),
-           dbl(sum(x)).as("sx"), dbl(sum(y)).as("sy"),
-           dbl(sum(x * y)).as("sxy"),
-           dbl(sum(x * x)).as("sx2"), dbl(sum(y * y)).as("sy2"))
-      .select(col("p_type"), col("n"),
-        round((col("n") * col("sxy") - col("sx") * col("sy")) /
-          (sqrt(col("n") * col("sx2") - col("sx") * col("sx")) *
-           sqrt(col("n") * col("sy2") - col("sy") * col("sy"))), 6).as("corr_disc_qty"))
-      .orderBy("p_type")
-  }
   val q73Sql: String =
     """WITH m AS (
-      |  SELECT p_type, COUNT(*) AS n,
+      |  SELECT /*+ BROADCAST(part) */ p_type, COUNT(*) AS n,
       |    CAST(SUM(CAST(l_discount AS DECIMAL(12,2))) AS DOUBLE) AS sx,
       |    CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sy,
       |    CAST(SUM(CAST(l_discount AS DECIMAL(12,2)) * CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sxy,
@@ -2418,25 +1791,9 @@ object Relational {
     * map-combinable decimal-exact rollup (|nations|-bounded), ONE IEEE
     * division per row, round6. Complements q63 (returns over time) and
     * q33 (per-customer returns) with the supply-side view. */
-  def q74(spark: SparkSession, dir: String): DataFrame = {
-    val rev = revenueTerm(col("l_extendedprice"), col("l_discount"))
-    Tables.lineitem(spark, dir)
-      .join(broadcast(Tables.supplier(spark, dir).select("s_suppkey", "s_nationkey")),
-        col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(Tables.nation(spark, dir).select("n_nationkey", "n_name")),
-        col("s_nationkey") === col("n_nationkey"))
-      .groupBy("n_name")
-      .agg(count(lit(1)).as("n_lines"),
-           dbl(sum(rev)).as("total_revenue"),
-           dbl(sum(when(col("l_returnflag") === "R", rev).otherwise(dec(lit(0)))))
-             .as("returned_revenue"))
-      .select(col("n_name"), col("n_lines"), col("total_revenue"), col("returned_revenue"),
-        round(col("returned_revenue") / col("total_revenue"), 6).as("return_rate"))
-      .orderBy("n_name")
-  }
   val q74Sql: String =
     s"""WITH r AS (
-       |  SELECT n_name, COUNT(*)::BIGINT AS n_lines,
+       |  SELECT /*+ BROADCAST(supplier, nation) */ n_name, COUNT(*)::BIGINT AS n_lines,
        |    CAST(SUM($revenueSql) AS DOUBLE) AS total_revenue,
        |    CAST(SUM(CASE WHEN l_returnflag = 'R' THEN $revenueSql
        |             ELSE CAST(0 AS DECIMAL(12,2)) END) AS DOUBLE) AS returned_revenue
@@ -2455,22 +1812,6 @@ object Relational {
     * frame per key, each collapsing to a single row; at 100 TB this is
     * the profile that decides salting / AQE-skew thresholds BEFORE a
     * job hits the whale key. */
-  def q75(spark: SparkSession, dir: String): DataFrame = {
-    def stats(df: DataFrame, key: String, label: String): DataFrame =
-      df.groupBy(col(key)).agg(count(lit(1)).as("cnt"))
-        .agg(sum(col("cnt")).as("n_rows"), count(lit(1)).as("n_keys"),
-             max(col("cnt")).as("max_per_key"))
-        .select(lit(label).as("key_col"), col("n_rows"), col("n_keys"),
-          col("max_per_key"),
-          round(dbl(col("n_rows")) / col("n_keys"), 6).as("avg_per_key"),
-          round(dbl(col("max_per_key") * col("n_keys")) / col("n_rows"), 6).as("skew"))
-    val l = Tables.lineitem(spark, dir)
-    stats(l, "l_orderkey", "lineitem.l_orderkey")
-      .unionByName(stats(l, "l_partkey", "lineitem.l_partkey"))
-      .unionByName(stats(l, "l_suppkey", "lineitem.l_suppkey"))
-      .unionByName(stats(Tables.orders(spark, dir), "o_custkey", "orders.o_custkey"))
-      .orderBy("key_col")
-  }
   val q75Sql: String = {
     def block(table: String, key: String) =
       s"""SELECT '$table.$key' AS key_col, SUM(cnt)::BIGINT AS n_rows,
@@ -2598,32 +1939,12 @@ object Relational {
     * distinct-key collapse + one left-anti join on the key — the
     * data-quality gate a warehouse load runs before trusting its joins;
     * exact integer counts, ONE division per rate. */
-  def q79(spark: SparkSession, dir: String): DataFrame = {
-    def rel(label: String, fact: DataFrame, fk: String,
-            dim: DataFrame, pk: String): DataFrame =
-      fact.select(col(fk)).filter(col(fk).isNotNull)
-        .join(dim.select(col(pk)).distinct(), col(fk) === col(pk), "left")
-        .agg(count(lit(1)).as("n_rows"),
-             count(when(col(pk).isNull, lit(1))).as("n_orphans"))
-        .select(lit(label).as("relation"), col("n_rows"), col("n_orphans"),
-          round(dbl(col("n_orphans")) / col("n_rows"), 6).as("orphan_rate"))
-    val l = Tables.lineitem(spark, dir); val o = Tables.orders(spark, dir)
-    val c = Tables.customer(spark, dir); val s = Tables.supplier(spark, dir)
-    val p = Tables.part(spark, dir); val n = Tables.nation(spark, dir)
-    rel("customer.c_nationkey->nation", c, "c_nationkey", n, "n_nationkey")
-      .unionByName(rel("events.user_id->customer", Tables.events(spark, dir), "user_id", c, "c_custkey"))
-      .unionByName(rel("lineitem.l_orderkey->orders", l, "l_orderkey", o, "o_orderkey"))
-      .unionByName(rel("lineitem.l_partkey->part", l, "l_partkey", p, "p_partkey"))
-      .unionByName(rel("lineitem.l_suppkey->supplier", l, "l_suppkey", s, "s_suppkey"))
-      .unionByName(rel("orders.o_custkey->customer", o, "o_custkey", c, "c_custkey"))
-      .unionByName(rel("supplier.s_nationkey->nation", s, "s_nationkey", n, "n_nationkey"))
-      .orderBy("relation")
-  }
   val q79Sql: String = {
     def block(label: String, fact: String, fk: String, dim: String, pk: String) =
       s"""SELECT '$label' AS relation, COUNT(*)::BIGINT AS n_rows,
          |  COUNT(CASE WHEN $pk IS NULL THEN 1 END)::BIGINT AS n_orphans,
-         |  ROUND(CAST(COUNT(CASE WHEN $pk IS NULL THEN 1 END) AS DOUBLE) / COUNT(*), 6)
+         |  ROUND(CAST(COUNT(CASE WHEN $pk IS NULL THEN 1 END) AS DOUBLE)
+         |        / NULLIF(COUNT(*), 0), 6)
          |    AS orphan_rate
          |FROM (SELECT $fk FROM $fact WHERE $fk IS NOT NULL) f
          |LEFT JOIN (SELECT DISTINCT $pk FROM $dim) d ON f.$fk = d.$pk""".stripMargin
@@ -2643,14 +1964,6 @@ object Relational {
     * Quantity/price/discount means per l_linenumber — one map-combinable
     * groupBy to a ≤|max linenumber| frame, decimal-exact sums, ONE
     * division per mean, round6. */
-  def q80(spark: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(spark, dir)
-      .groupBy(col("l_linenumber").cast("long").as("position"))
-      .agg(count(lit(1)).as("n_lines"),
-           round(davg(col("l_quantity")), 6).as("avg_qty"),
-           round(davg(col("l_extendedprice")), 6).as("avg_price"),
-           round(davg(col("l_discount")), 6).as("avg_discount"))
-      .orderBy("position")
   val q80Sql: String =
     """SELECT CAST(l_linenumber AS BIGINT) AS position, COUNT(*)::BIGINT AS n_lines,
       |  ROUND(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) / COUNT(*), 6) AS avg_qty,
@@ -2663,18 +1976,8 @@ object Relational {
     * (nation, segment) cell — broadcast nation dim, one map-combinable
     * groupBy, |nations|×|segments|-bounded, decimal-exact balance
     * extrema and a single-division mean. */
-  def q81(spark: SparkSession, dir: String): DataFrame =
-    Tables.customer(spark, dir)
-      .join(broadcast(Tables.nation(spark, dir).select("n_nationkey", "n_name")),
-        col("c_nationkey") === col("n_nationkey"))
-      .groupBy("n_name", "c_mktsegment")
-      .agg(count(lit(1)).as("n_customers"),
-           dbl(min(dec(col("c_acctbal")))).as("min_bal"),
-           dbl(max(dec(col("c_acctbal")))).as("max_bal"),
-           round(davg(col("c_acctbal")), 6).as("avg_bal"))
-      .orderBy("n_name", "c_mktsegment")
   val q81Sql: String =
-    """SELECT n_name, c_mktsegment, COUNT(*)::BIGINT AS n_customers,
+    """SELECT /*+ BROADCAST(nation) */ n_name, c_mktsegment, COUNT(*)::BIGINT AS n_customers,
       |  CAST(MIN(CAST(c_acctbal AS DECIMAL(12,2))) AS DOUBLE) AS min_bal,
       |  CAST(MAX(CAST(c_acctbal AS DECIMAL(12,2))) AS DOUBLE) AS max_bal,
       |  ROUND(CAST(SUM(CAST(c_acctbal AS DECIMAL(12,2))) AS DOUBLE) / COUNT(*), 6) AS avg_bal
@@ -2686,12 +1989,6 @@ object Relational {
     * how much of the catalog is single-sourced (the procurement risk
     * q49's share concentration doesn't show). Distinct (part, supplier)
     * collapse map-side, two bounded groupBys. */
-  def q82(spark: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(spark, dir)
-      .select("l_partkey", "l_suppkey").distinct()
-      .groupBy("l_partkey").agg(count(lit(1)).as("n_suppliers"))
-      .groupBy("n_suppliers").agg(count(lit(1)).as("n_parts"))
-      .orderBy("n_suppliers")
   val q82Sql: String =
     """WITH ps AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
       |pp AS (SELECT l_partkey, COUNT(*)::BIGINT AS n_suppliers FROM ps GROUP BY 1)
@@ -2703,15 +2000,6 @@ object Relational {
     * — drift in the order book's urgency profile. Map-combinable census
     * to a |years|×|priorities| frame; the share window partitions by
     * year over that bounded frame (never the fact). */
-  def q83(spark: SparkSession, dir: String): DataFrame = {
-    val m = Tables.orders(spark, dir)
-      .groupBy(year(col("o_orderdate")).cast("long").as("yr"), col("o_orderpriority"))
-      .agg(count(lit(1)).as("n_orders"))
-    m.withColumn("share",
-        round(dbl(col("n_orders")) /
-          dbl(sum(col("n_orders")).over(Window.partitionBy("yr"))), 6))
-      .orderBy("yr", "o_orderpriority")
-  }
   val q83Sql: String =
     """WITH m AS (
       |  SELECT CAST(year(o_orderdate) AS BIGINT) AS yr, o_orderpriority,
@@ -2727,14 +2015,6 @@ object Relational {
     * band — q51's banding (identical IEEE round both engines) with the
     * return dimension; one map-combinable groupBy, exact counts, ONE
     * division per band. */
-  def q84(spark: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(spark, dir)
-      .groupBy(round(col("l_discount") * 100).cast("long").as("discount_pct"))
-      .agg(count(lit(1)).as("n_lines"),
-           count(when(col("l_returnflag") === "R", lit(1))).as("n_returned"))
-      .select(col("discount_pct"), col("n_lines"), col("n_returned"),
-        round(dbl(col("n_returned")) / col("n_lines"), 6).as("return_rate"))
-      .orderBy("discount_pct")
   val q84Sql: String =
     """SELECT CAST(ROUND(l_discount * 100) AS BIGINT) AS discount_pct,
       |  COUNT(*)::BIGINT AS n_lines,
@@ -2812,27 +2092,12 @@ object Relational {
     * repeat rate at customer granularity). Fact-fact join shuffles on
     * orderkey (AQE-sized), the pair rollup on (cust, part), then a
     * broadcast part-dim join into a \|brands\|-bounded frame. */
-  def q87(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = Tables.lineitem(spark, dir).select("l_orderkey", "l_partkey")
-      .join(Tables.orders(spark, dir).select("o_orderkey", "o_custkey"),
-        col("l_orderkey") === col("o_orderkey"))
-      .groupBy("o_custkey", "l_partkey")
-      .agg(countDistinct(col("l_orderkey")).as("n_orders"))
-    pairs
-      .join(broadcast(Tables.part(spark, dir).select("p_partkey", "p_brand")),
-        col("l_partkey") === col("p_partkey"))
-      .groupBy("p_brand")
-      .agg(count(lit(1)).as("n_pairs"),
-           count(when(col("n_orders") >= 2, lit(1))).as("n_reordered"))
-      .withColumn("reorder_rate", round(dbl(col("n_reordered")) / col("n_pairs"), 6))
-      .orderBy("p_brand")
-  }
   val q87Sql: String =
     """WITH pairs AS (
       |  SELECT o_custkey, l_partkey, COUNT(DISTINCT l_orderkey)::BIGINT AS n_orders
       |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
       |  GROUP BY 1, 2)
-      |SELECT p_brand, COUNT(*)::BIGINT AS n_pairs,
+      |SELECT /*+ BROADCAST(part) */ p_brand, COUNT(*)::BIGINT AS n_pairs,
       |  COUNT(CASE WHEN n_orders >= 2 THEN 1 END)::BIGINT AS n_reordered,
       |  ROUND(CAST(COUNT(CASE WHEN n_orders >= 2 THEN 1 END) AS DOUBLE)
       |        / COUNT(*), 6) AS reorder_rate
@@ -2846,23 +2111,6 @@ object Relational {
     * pre-aggregates per suppkey BEFORE the dim join (the 100 TB side
     * collapses first); supplier side is a broadcast; left join keeps
     * inactive suppliers visible. */
-  def q88(spark: SparkSession, dir: String): DataFrame = {
-    val act = Tables.lineitem(spark, dir)
-      .groupBy(col("l_suppkey"))
-      .agg(count(lit(1)).as("n_lines"),
-           sum(revenueTerm(col("l_extendedprice"), col("l_discount"))).as("rev"))
-    val tier = when(dec(col("s_acctbal")) < 0, "a<0")
-      .when(dec(col("s_acctbal")) < 2500, "b<2500")
-      .when(dec(col("s_acctbal")) < 7500, "c<7500").otherwise("d>=7500")
-    Tables.supplier(spark, dir)
-      .join(act, col("s_suppkey") === col("l_suppkey"), "left")
-      .groupBy(tier.as("balance_tier"))
-      .agg(count(lit(1)).as("n_suppliers"),
-           count(col("n_lines")).as("n_active"),
-           coalesce(sum(col("n_lines")), lit(0L)).as("total_lines"),
-           dbl(coalesce(sum(col("rev")), lit(0).cast(Qf.D12))).as("revenue"))
-      .orderBy("balance_tier")
-  }
   val q88Sql: String =
     s"""WITH act AS (
       |  SELECT l_suppkey, COUNT(*)::BIGINT AS n_lines, SUM($revenueSql) AS rev
@@ -2883,19 +2131,9 @@ object Relational {
     * single-brand baskets vs cross-brand shoppers (q68 finds WHICH
     * brands pair; this counts HOW diverse each basket is). Broadcast
     * part dim into the fact scan, per-order rollup, bounded histogram. */
-  def q89(spark: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(spark, dir).select("l_orderkey", "l_partkey")
-      .join(broadcast(Tables.part(spark, dir).select("p_partkey", "p_brand")),
-        col("l_partkey") === col("p_partkey"))
-      .groupBy("l_orderkey")
-      .agg(countDistinct(col("p_brand")).as("n_brands"), count(lit(1)).as("n_lines"))
-      .groupBy("n_brands")
-      .agg(count(lit(1)).as("n_orders"),
-           (sum(col("n_lines")).cast("double") / count(lit(1))).as("avg_lines"))
-      .orderBy("n_brands")
   val q89Sql: String =
     """WITH o AS (
-      |  SELECT l_orderkey, COUNT(DISTINCT p_brand)::BIGINT AS n_brands,
+      |  SELECT /*+ BROADCAST(part) */ l_orderkey, COUNT(DISTINCT p_brand)::BIGINT AS n_brands,
       |    COUNT(*)::BIGINT AS n_lines
       |  FROM lineitem JOIN part ON l_partkey = p_partkey
       |  GROUP BY 1)
@@ -2909,18 +2147,6 @@ object Relational {
     * Per-customer discounts sum as exact integer percent points; ONE
     * division + round6, then a TakeOrderedAndProject top-20 with a
     * pinned custkey tiebreak (no global window/sort materializes). */
-  def q90(spark: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(spark, dir).select("l_orderkey", "l_discount")
-      .join(Tables.orders(spark, dir).select("o_orderkey", "o_custkey"),
-        col("l_orderkey") === col("o_orderkey"))
-      .groupBy(col("o_custkey"))
-      .agg(count(lit(1)).as("n_lines"),
-           sum(round(col("l_discount") * 100).cast("long")).as("pct_sum"))
-      .filter(col("n_lines") >= 10)
-      .withColumn("avg_discount_pct", round(dbl(col("pct_sum")) / col("n_lines"), 6))
-      .select("o_custkey", "n_lines", "avg_discount_pct")
-      .orderBy(col("avg_discount_pct").desc, col("o_custkey"))
-      .limit(20)
   val q90Sql: String =
     """WITH c AS (
       |  SELECT o_custkey, COUNT(*)::BIGINT AS n_lines,
@@ -2938,24 +2164,6 @@ object Relational {
     * an equi self-join of that bounded frame on (customer, year+1); the
     * rollup is ≤\|years\| rows. The annual counterpart of q71's MoM
     * actives. */
-  def q91(spark: SparkSession, dir: String): DataFrame = {
-    val yc = Tables.orders(spark, dir)
-      .select(year(col("o_orderdate")).cast("long").as("yr"), col("o_custkey"))
-      .distinct()
-    val next = yc.select((col("yr") - 1).as("yr"), col("o_custkey").as("nc"))
-    val maxYr = yc.agg(max(col("yr")).as("max_yr"))
-    yc.join(next, yc("yr") === next("yr") && col("o_custkey") === col("nc"), "left")
-      .join(broadcast(maxYr))
-      .filter(yc("yr") < col("max_yr"))
-      .groupBy(yc("yr").as("yr"))
-      .agg(count(lit(1)).as("n_active"),
-           count(col("nc")).as("n_retained"))
-      .select(col("yr"), col("n_active"), col("n_retained"),
-        (col("n_active") - col("n_retained")).as("n_churned"),
-        round(dbl(col("n_active") - col("n_retained")) / col("n_active"), 6)
-          .as("churn_rate"))
-      .orderBy("yr")
-  }
   val q91Sql: String =
     """WITH yc AS (
       |  SELECT DISTINCT CAST(year(o_orderdate) AS BIGINT) AS yr, o_custkey
@@ -2965,7 +2173,7 @@ object Relational {
       |  SELECT a.yr AS yr, a.o_custkey AS c, b.o_custkey AS nc
       |  FROM yc a LEFT JOIN yc b
       |    ON a.o_custkey = b.o_custkey AND b.yr = a.yr + 1)
-      |SELECT yr, COUNT(*)::BIGINT AS n_active, COUNT(nc)::BIGINT AS n_retained,
+      |SELECT /*+ BROADCAST(m) */ yr, COUNT(*)::BIGINT AS n_active, COUNT(nc)::BIGINT AS n_retained,
       |  (COUNT(*) - COUNT(nc))::BIGINT AS n_churned,
       |  ROUND(CAST(COUNT(*) - COUNT(nc) AS DOUBLE) / COUNT(*), 6) AS churn_rate
       |FROM j, m WHERE yr < max_yr
@@ -2977,18 +2185,6 @@ object Relational {
     * the money actually sits (q73 gives the correlation; this gives the
     * cells). One map-combinable groupBy; both band edges are integer
     * compares. */
-  def q92(spark: SparkSession, dir: String): DataFrame = {
-    val qty = (dec(col("l_quantity")).cast("long"))
-    val qtyBand = when(qty <= 10, "a<=10").when(qty <= 25, "b<=25")
-      .when(qty <= 40, "c<=40").otherwise("d>40")
-    Tables.lineitem(spark, dir)
-      .groupBy(qtyBand.as("qty_band"),
-        round(col("l_discount") * 100).cast("long").as("discount_pct"))
-      .agg(count(lit(1)).as("n_lines"),
-           dbl(sum(revenueTerm(col("l_extendedprice"), col("l_discount"))))
-             .as("revenue"))
-      .orderBy("qty_band", "discount_pct")
-  }
   val q92Sql: String =
     s"""SELECT CASE WHEN CAST(CAST(l_quantity AS DECIMAL(12,2)) AS BIGINT) <= 10 THEN 'a<=10'
        |            WHEN CAST(CAST(l_quantity AS DECIMAL(12,2)) AS BIGINT) <= 25 THEN 'b<=25'
@@ -3004,16 +2200,6 @@ object Relational {
     * order, banded — the relationship-length profile behind q91's churn
     * rates. One map-combinable min/max pass per customer, integer year
     * arithmetic, ≤\|years\| output rows. */
-  def q93(spark: SparkSession, dir: String): DataFrame =
-    Tables.orders(spark, dir)
-      .groupBy(col("o_custkey"))
-      .agg((year(max(col("o_orderdate"))) - year(min(col("o_orderdate"))))
-             .cast("long").as("tenure_years"),
-           count(lit(1)).as("n_orders"))
-      .groupBy("tenure_years")
-      .agg(count(lit(1)).as("n_customers"),
-           (sum(col("n_orders")).cast("double") / count(lit(1))).as("avg_orders"))
-      .orderBy("tenure_years")
   val q93Sql: String =
     """WITH c AS (
       |  SELECT o_custkey,
@@ -3076,17 +2262,6 @@ object Relational {
     * operands. One map-combinable groupBy, ≤\|tax points\| (9) rows —
     * the band key is `round(l_tax·100)` so no float equality decides a
     * group at any scale. */
-  def q95(spark: SparkSession, dir: String): DataFrame = {
-    val rev = revenueTerm(col("l_extendedprice"), col("l_discount"))
-    Tables.lineitem(spark, dir)
-      .groupBy(round(col("l_tax") * 100).cast("long").as("tax_pct"))
-      .agg(count(lit(1)).as("n_lines"),
-           dbl(sum(rev)).as("base_revenue"),
-           dbl(sum(rev * dec(col("l_tax")))).as("tax_amount"))
-      .select(col("tax_pct"), col("n_lines"), col("base_revenue"), col("tax_amount"),
-        round(col("tax_amount") / col("base_revenue"), 6).as("eff_rate"))
-      .orderBy("tax_pct")
-  }
   val q95Sql: String =
     s"""WITH b AS (
        |  SELECT CAST(ROUND(l_tax * 100) AS BIGINT) AS tax_pct,
@@ -3156,29 +2331,9 @@ object Relational {
     * edges are integer CROSS-MULTIPLIED compares (`top·4 ≤ total·3` ⇔
     * share ≤ 75%), so no float share decides a band; ≤5 rows, one
     * division each. */
-  def q97(spark: SparkSession, dir: String): DataFrame = {
-    val cb = Tables.lineitem(spark, dir)
-      .select(col("l_orderkey"), col("l_partkey"))
-      .join(Tables.orders(spark, dir).select("o_orderkey", "o_custkey"),
-        col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(Tables.part(spark, dir).select("p_partkey", "p_brand")),
-        col("l_partkey") === col("p_partkey"))
-      .groupBy("o_custkey", "p_brand").agg(count(lit(1)).as("c"))
-    val u = cb.groupBy("o_custkey")
-      .agg(sum(col("c")).as("total"), max(col("c")).as("top"),
-           count(lit(1)).as("n_brands"))
-    u.groupBy(when(col("top") * 4 <= col("total"), "a<=25%")
-        .when(col("top") * 2 <= col("total"), "b<=50%")
-        .when(col("top") * 4 <= col("total") * 3, "c<=75%")
-        .when(col("top") < col("total"), "d<100%")
-        .otherwise("e=100%").as("loyalty_band"))
-      .agg(count(lit(1)).as("n_customers"),
-           (sum(col("n_brands")).cast("double") / count(lit(1))).as("avg_brands"))
-      .orderBy("loyalty_band")
-  }
   val q97Sql: String =
     """WITH cb AS (
-      |  SELECT o_custkey, p_brand, COUNT(*)::BIGINT AS c
+      |  SELECT /*+ BROADCAST(part) */ o_custkey, p_brand, COUNT(*)::BIGINT AS c
       |  FROM lineitem
       |  JOIN orders ON l_orderkey = o_orderkey
       |  JOIN part ON l_partkey = p_partkey
@@ -3204,27 +2359,6 @@ object Relational {
     * once (its only wide shuffle) and the per-customer return rollup
     * joins the tenure frame co-keyed on the uniform custkey; exact
     * integer counts, ONE division per ≤\|years\| row. */
-  def q98(spark: SparkSession, dir: String): DataFrame = {
-    val tenure = Tables.orders(spark, dir)
-      .groupBy(col("o_custkey").as("custkey"))
-      .agg((year(max(col("o_orderdate"))) - year(min(col("o_orderdate"))))
-        .cast("long").as("tenure_years"))
-    val ret = Tables.lineitem(spark, dir)
-      .select(col("l_orderkey"), col("l_returnflag"))
-      .join(Tables.orders(spark, dir).select("o_orderkey", "o_custkey"),
-        col("l_orderkey") === col("o_orderkey"))
-      .groupBy(col("o_custkey"))
-      .agg(count(lit(1)).as("n_lines"),
-           sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("n_returned"))
-    ret.join(tenure, col("o_custkey") === col("custkey"))
-      .groupBy("tenure_years")
-      .agg(count(lit(1)).as("n_customers"),
-           sum(col("n_lines")).as("n_lines"),
-           sum(col("n_returned")).as("n_returned"))
-      .select(col("tenure_years"), col("n_customers"), col("n_lines"),
-        round(dbl(col("n_returned")) / col("n_lines"), 6).as("return_rate"))
-      .orderBy("tenure_years")
-  }
   val q98Sql: String =
     """WITH t AS (
       |  SELECT o_custkey AS custkey,
@@ -3247,15 +2381,6 @@ object Relational {
     * many of those years actually saw an order — span 5 / active 2 is
     * a lapsing customer). One map-combinable pass per customer
     * (n_orders + exact distinct years), ≤\|years\| output rows. */
-  def q99(spark: SparkSession, dir: String): DataFrame =
-    Tables.orders(spark, dir)
-      .groupBy(col("o_custkey"))
-      .agg(count(lit(1)).as("n_orders"),
-           countDistinct(year(col("o_orderdate"))).as("n_years"))
-      .groupBy("n_years")
-      .agg(count(lit(1)).as("n_customers"),
-           (sum(col("n_orders")).cast("double") / count(lit(1))).as("avg_orders"))
-      .orderBy("n_years")
   val q99Sql: String =
     """WITH c AS (
       |  SELECT o_custkey, COUNT(*)::BIGINT AS n_orders,
@@ -3276,21 +2401,6 @@ object Relational {
     * was tried first and measured degenerate: the synthetic bipartite
     * graph is near-complete — every supplier serves 139–679 customers
     * at every scale — so the banding carried zero information.) */
-  def q100(spark: SparkSession, dir: String): DataFrame = {
-    val byBrand = Tables.part(spark, dir)
-      .groupBy("p_type", "p_brand")
-      .agg(count(lit(1)).as("n_parts"),
-           sum(dec(col("p_retailprice"))).as("spd"))
-    val byType = byBrand.groupBy("p_type")
-      .agg(sum(col("n_parts")).as("tn"), sum(col("spd")).as("tpd"))
-    byBrand.join(broadcast(byType), "p_type")
-      .select(col("p_type"), col("p_brand"), col("n_parts"),
-        round(dbl(col("spd")) / col("n_parts"), 2).as("brand_mean"),
-        round(dbl(col("tpd")) / col("tn"), 2).as("type_mean"),
-        round((dbl(col("spd")) / col("n_parts")) /
-              (dbl(col("tpd")) / col("tn")), 6).as("premium"))
-      .orderBy("p_type", "p_brand")
-  }
   val q100Sql: String =
     """WITH b AS (
       |  SELECT p_type, p_brand, COUNT(*)::BIGINT AS n_parts,
@@ -3298,7 +2408,7 @@ object Relational {
       |  FROM part GROUP BY 1, 2),
       |t AS (SELECT p_type, SUM(n_parts)::BIGINT AS tn, SUM(spd) AS tpd
       |      FROM b GROUP BY 1)
-      |SELECT p_type, p_brand, n_parts,
+      |SELECT /*+ BROADCAST(t) */ p_type, p_brand, n_parts,
       |  ROUND(CAST(spd AS DOUBLE) / n_parts, 2) AS brand_mean,
       |  ROUND(CAST(tpd AS DOUBLE) / tn, 2) AS type_mean,
       |  ROUND((CAST(spd AS DOUBLE) / n_parts) / (CAST(tpd AS DOUBLE) / tn), 6)
@@ -3367,30 +2477,6 @@ object Relational {
     * monthly deviation from trend is the seasonal component, and what
     * remains is the residual. All money stays decimal-exact until the
     * per-row divisions; joins are broadcasts of bounded frames. */
-  def q102(spark: SparkSession, dir: String): DataFrame = {
-    val monthly = Tables.orders(spark, dir)
-      .groupBy(year(col("o_orderdate")).cast("long").as("yr"),
-               month(col("o_orderdate")).cast("long").as("mo"))
-      .agg(sum(dec(col("o_totalprice"))).as("rev"))
-    val trend = monthly.groupBy(col("yr").as("tyr"))
-      .agg((dbl(sum(col("rev"))) / count(lit(1))).as("trend"))
-    val detr = monthly.join(broadcast(trend), col("yr") === col("tyr"))
-      .select(col("yr"), col("mo"), col("rev"), col("trend"),
-        (dbl(col("rev")) - col("trend")).as("dev"))
-    val seas = detr.groupBy(col("mo").as("smo"))
-      .agg((sum(round(col("dev"), 6).cast("decimal(28,6)")).cast("double") /
-        count(lit(1))).as("seasonal"))
-    // no output rounding: every emitted value is either an exact
-    // decimal cast to double or ONE identical IEEE op on such values,
-    // so both engines produce the same bits — round2 here would
-    // reintroduce engine-specific halfway behavior (a .505 trend DID
-    // split the engines at sf0.01)
-    detr.join(broadcast(seas), col("mo") === col("smo"))
-      .select(col("yr"), col("mo"), dbl(col("rev")).as("revenue"),
-        col("trend"), col("seasonal"),
-        (dbl(col("rev")) - col("trend") - col("seasonal")).as("residual"))
-      .orderBy("yr", "mo")
-  }
   val q102Sql: String =
     """WITH m AS (
       |  SELECT CAST(year(o_orderdate) AS BIGINT) AS yr,
@@ -3400,13 +2486,13 @@ object Relational {
       |t AS (SELECT yr AS tyr, CAST(SUM(rev) AS DOUBLE) / COUNT(*) AS trend
       |      FROM m GROUP BY 1),
       |d AS (
-      |  SELECT yr, mo, rev, trend, CAST(rev AS DOUBLE) - trend AS dev
+      |  SELECT /*+ BROADCAST(t) */ yr, mo, rev, trend, CAST(rev AS DOUBLE) - trend AS dev
       |  FROM m JOIN t ON yr = tyr),
       |s AS (SELECT mo AS smo,
       |        CAST(SUM(CAST(ROUND(dev, 6) AS DECIMAL(28,6))) AS DOUBLE)
       |          / COUNT(*) AS seasonal
       |      FROM d GROUP BY 1)
-      |SELECT yr, mo, CAST(rev AS DOUBLE) AS revenue,
+      |SELECT /*+ BROADCAST(s) */ yr, mo, CAST(rev AS DOUBLE) AS revenue,
       |  trend, seasonal,
       |  CAST(rev AS DOUBLE) - trend - seasonal AS residual
       |FROM d JOIN s ON mo = smo ORDER BY yr, mo""".stripMargin
@@ -3424,25 +2510,6 @@ object Relational {
     * Scale: one map-combinable quantity rollup on uniform l_partkey,
     * one part-side join, brand-partitioned cumulative windows (bounded
     * per brand), and a min-per-brand rollup — no global sort. */
-  def q103(spark: SparkSession, dir: String): DataFrame = {
-    val sold = Tables.lineitem(spark, dir)
-      .groupBy(col("l_partkey")).agg(sum(dec(col("l_quantity"))).as("wq"))
-    val parts = Tables.part(spark, dir)
-      .select(col("p_partkey"), col("p_brand"), col("p_retailprice"))
-      .join(sold, col("p_partkey") === col("l_partkey"))
-    val wOrd = Window.partitionBy("p_brand")
-      .orderBy(col("p_retailprice"), col("p_partkey"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wAll = Window.partitionBy("p_brand")
-    parts
-      .withColumn("cumw", sum(col("wq")).over(wOrd))
-      .withColumn("totw", sum(col("wq")).over(wAll))
-      .filter(col("cumw") * 2 >= col("totw"))
-      .groupBy("p_brand")
-      .agg(min(col("p_retailprice")).as("weighted_median_price"),
-        dbl(max(col("totw"))).as("total_qty"))
-      .orderBy("p_brand")
-  }
   val q103Sql: String =
     """WITH sold AS (
       |  SELECT l_partkey, SUM(CAST(l_quantity AS DECIMAL(12,2))) AS wq
@@ -3472,27 +2539,9 @@ object Relational {
     *
     * Scale: broadcast part dim onto the fact scan, |brand|-bounded
     * moment frame, no shuffle beyond the groupBy. */
-  def q104(spark: SparkSession, dir: String): DataFrame = {
-    val x = dec(col("l_discount"))
-    val y = dec(col("l_quantity"))
-    val m = Tables.lineitem(spark, dir)
-      .join(broadcast(Tables.part(spark, dir).select("p_partkey", "p_brand")),
-        col("l_partkey") === col("p_partkey"))
-      .groupBy("p_brand")
-      .agg(count(lit(1)).as("n"),
-           dbl(sum(x)).as("sx"), dbl(sum(y)).as("sy"),
-           dbl(sum(x * y)).as("sxy"), dbl(sum(x * x)).as("sx2"))
-    val varx = col("n") * col("sx2") - col("sx") * col("sx")
-    val slope = (col("n") * col("sxy") - col("sx") * col("sy")) / varx
-    m.select(col("p_brand"), col("n"),
-        round(when(varx > 0, slope), 6).as("slope_qty_per_disc"),
-        round(when(varx > 0,
-          (col("sy") - slope * col("sx")) / col("n")), 6).as("intercept_qty"))
-      .orderBy("p_brand")
-  }
   val q104Sql: String =
     """WITH m AS (
-      |  SELECT p_brand, COUNT(*) AS n,
+      |  SELECT /*+ BROADCAST(part) */ p_brand, COUNT(*) AS n,
       |    CAST(SUM(CAST(l_discount AS DECIMAL(12,2))) AS DOUBLE) AS sx,
       |    CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sy,
       |    CAST(SUM(CAST(l_discount AS DECIMAL(12,2)) * CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sxy,
@@ -3769,23 +2818,6 @@ object Relational {
     * Scale: orders collapses to DISTINCT custkeys (map-combinable),
     * joins customer on the co-keyed custkey shuffle, then a ≤12-key
     * band rollup — no window, no skew hazard. */
-  def q110(spark: SparkSession, dir: String): DataFrame = {
-    val active = Tables.orders(spark, dir).select(col("o_custkey")).distinct()
-    Tables.customer(spark, dir)
-      .join(active, col("c_custkey") === col("o_custkey"), "left")
-      .select(col("c_acctbal"), col("o_custkey").isNotNull.as("act"),
-        floor(col("c_acctbal") / 1000d).cast("long").as("band"))
-      .groupBy("band")
-      .agg(sum(when(col("act"), 1L).otherwise(0L)).as("n_active"),
-        sum(when(!col("act"), 1L).otherwise(0L)).as("n_inactive"),
-        round(dbl(sum(when(!col("act"), 1L).otherwise(0L))) / count(lit(1)), 6)
-          .as("inactive_share"),
-        round(dbl(sum(when(col("act"), dec(col("c_acctbal"))))) /
-          sum(when(col("act"), 1L)), 6).as("avg_bal_active"),
-        round(dbl(sum(when(!col("act"), dec(col("c_acctbal"))))) /
-          sum(when(!col("act"), 1L)), 6).as("avg_bal_inactive"))
-      .orderBy("band")
-  }
   val q110Sql: String =
     """WITH a AS (SELECT DISTINCT o_custkey FROM orders),
       |j AS (
@@ -4016,32 +3048,6 @@ object Relational {
     *
     * Scale: rides q102's month-bounded frame (map-combinable rollup +
     * ≤12-row broadcasts); the strength math is a 1-row aggregate. */
-  def q114(spark: SparkSession, dir: String): DataFrame = {
-    val d = q102(spark, dir)
-      .select(
-        round(col("residual") / lit(1.0e6d), 6).cast("decimal(18,6)").as("r"),
-        round((col("seasonal") + col("residual")) / lit(1.0e6d), 6)
-          .cast("decimal(18,6)").as("y"),
-        round((col("trend") + col("residual")) / lit(1.0e6d), 6)
-          .cast("decimal(18,6)").as("z"))
-      .select(col("r"), col("y"), col("z"),
-        round(dbl(col("r")) * dbl(col("r")), 9).cast("decimal(18,9)").as("rr"),
-        round(dbl(col("y")) * dbl(col("y")), 9).cast("decimal(18,9)").as("yy"),
-        round(dbl(col("z")) * dbl(col("z")), 9).cast("decimal(18,9)").as("zz"))
-    def varOf(s: Column, q: Column, n: Column): Column =
-      (dbl(n) * q - s * s) / (dbl(n) * dbl(n))
-    d.agg(count(lit(1)).as("n"),
-        dbl(sum(col("r"))).as("sr"), dbl(sum(col("rr"))).as("qr"),
-        dbl(sum(col("y"))).as("sy"), dbl(sum(col("yy"))).as("qy"),
-        dbl(sum(col("z"))).as("sz"), dbl(sum(col("zz"))).as("qz"))
-      .select(col("n").as("n_months"),
-        round(greatest(lit(0.0d), lit(1.0d) -
-          varOf(col("sr"), col("qr"), col("n")) /
-          varOf(col("sy"), col("qy"), col("n"))), 6).as("strength_seasonal"),
-        round(greatest(lit(0.0d), lit(1.0d) -
-          varOf(col("sr"), col("qr"), col("n")) /
-          varOf(col("sz"), col("qz"), col("n"))), 6).as("strength_trend"))
-  }
   val q114Sql: String =
     """WITH m AS (
       |  SELECT CAST(year(o_orderdate) AS BIGINT) AS yr,
@@ -4051,14 +3057,14 @@ object Relational {
       |t AS (SELECT yr AS tyr, CAST(SUM(rev) AS DOUBLE) / COUNT(*) AS trend
       |      FROM m GROUP BY 1),
       |d0 AS (
-      |  SELECT yr, mo, rev, trend, CAST(rev AS DOUBLE) - trend AS dev
+      |  SELECT /*+ BROADCAST(t) */ yr, mo, rev, trend, CAST(rev AS DOUBLE) - trend AS dev
       |  FROM m JOIN t ON yr = tyr),
       |s AS (SELECT mo AS smo,
       |        CAST(SUM(CAST(ROUND(dev, 6) AS DECIMAL(28,6))) AS DOUBLE)
       |          / COUNT(*) AS seasonal
       |      FROM d0 GROUP BY 1),
       |c AS (
-      |  SELECT trend, seasonal,
+      |  SELECT /*+ BROADCAST(s) */ trend, seasonal,
       |    CAST(rev AS DOUBLE) - trend - seasonal AS residual
       |  FROM d0 JOIN s ON mo = smo),
       |e AS (
@@ -4228,25 +3234,6 @@ object Relational {
     * Scale: two map-combinable rollups (lineitem → (part, supp) →
     * part); output bounded by \|parts\|. No window, no join until the
     * final broadcast of `part` for the brand label. */
-  def q117(spark: SparkSession, dir: String): DataFrame = {
-    val unit = Tables.lineitem(spark, dir)
-      .groupBy("l_partkey", "l_suppkey")
-      .agg((dbl(sum(dec(col("l_extendedprice")))) /
-        dbl(sum(dec(col("l_quantity"))))).as("unit"))
-    val spread = unit.groupBy(col("l_partkey"))
-      .agg(count(lit(1)).as("n_suppliers"),
-        min(col("unit")).as("unit_min"), max(col("unit")).as("unit_max"))
-      .filter(col("n_suppliers") >= 2)
-    spread.join(broadcast(Tables.part(spark, dir)
-        .select(col("p_partkey"), col("p_brand"))),
-        col("l_partkey") === col("p_partkey"))
-      .select(col("p_partkey"), col("p_brand"), col("n_suppliers"),
-        round(col("unit_min"), 6).as("unit_min"),
-        round(col("unit_max"), 6).as("unit_max"),
-        round((col("unit_max") - col("unit_min")) / col("unit_min"), 6)
-          .as("rel_spread"))
-      .orderBy("p_partkey")
-  }
   val q117Sql: String =
     """WITH unit AS (
       |  SELECT l_partkey, l_suppkey,
@@ -4257,7 +3244,7 @@ object Relational {
       |  SELECT l_partkey, COUNT(*)::BIGINT AS n_suppliers,
       |    MIN(unit) AS unit_min, MAX(unit) AS unit_max
       |  FROM unit GROUP BY 1 HAVING COUNT(*) >= 2)
-      |SELECT p_partkey, p_brand, n_suppliers,
+      |SELECT /*+ BROADCAST(part) */ p_partkey, p_brand, n_suppliers,
       |  ROUND(unit_min, 6) AS unit_min, ROUND(unit_max, 6) AS unit_max,
       |  ROUND((unit_max - unit_min) / unit_min, 6) AS rel_spread
       |FROM spread JOIN part ON l_partkey = p_partkey
@@ -4273,15 +3260,6 @@ object Relational {
     *
     * Scale: ONE map-combinable groupBy over lineitem; output bounded by
     * \|discount pcts\| × \|tax pcts\| (~11 × 9). */
-  def q118(spark: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(spark, dir)
-      .withColumn("disc_pct", round(col("l_discount") * 100, 0).cast("long"))
-      .withColumn("tax_pct", round(col("l_tax") * 100, 0).cast("long"))
-      .groupBy("disc_pct", "tax_pct")
-      .agg(count(lit(1)).as("n_lines"),
-        davg(col("l_quantity")).as("avg_qty"),
-        dbl(sum(revenueTerm(col("l_extendedprice"), col("l_discount")))).as("revenue"))
-      .orderBy("disc_pct", "tax_pct")
   val q118Sql: String =
     s"""SELECT CAST(ROUND(l_discount * 100, 0) AS BIGINT) AS disc_pct,
        |  CAST(ROUND(l_tax * 100, 0) AS BIGINT) AS tax_pct,
@@ -4337,24 +3315,6 @@ object Relational {
     * Scale: one lineitem rollup by orderkey (map-combinable), one join
     * to orders on the SAME key (co-partitioned shuffle join at scale),
     * then a \|years\|-bounded rollup. */
-  def q120(spark: SparkSession, dir: String): DataFrame = {
-    val charge = Tables.lineitem(spark, dir)
-      .groupBy(col("l_orderkey"))
-      .agg(sum(revenueTerm(col("l_extendedprice"), col("l_discount")) *
-        dec(lit(1) + col("l_tax"))).as("charge"))
-    Tables.orders(spark, dir)
-      .join(charge, col("o_orderkey") === col("l_orderkey"))
-      .withColumn("rel", abs(col("o_totalprice") - dbl(col("charge"))) / col("o_totalprice"))
-      .withColumn("yr", year(col("o_orderdate")).cast("long"))
-      .groupBy("yr")
-      .agg(count(lit(1)).as("n_orders"),
-        sum(when(col("rel") <= 0.01, 1L).otherwise(0L)).as("n_within_1pct"),
-        round(max(col("rel")), 6).as("max_rel_gap"))
-      .select(col("yr"), col("n_orders"), col("n_within_1pct"),
-        round(dbl(col("n_within_1pct")) / dbl(col("n_orders")), 6).as("share_within"),
-        col("max_rel_gap"))
-      .orderBy("yr")
-  }
   val q120Sql: String =
     s"""WITH charge AS (
        |  SELECT l_orderkey,
@@ -4379,18 +3339,6 @@ object Relational {
     * extendedprice/quantity, the same double in both engines.
     *
     * Scale: ONE map-combinable groupBy over lineitem; ≤ 5 × 6 cells. */
-  def q121(spark: SparkSession, dir: String): DataFrame = {
-    val unit = col("l_extendedprice") / col("l_quantity")
-    val qb = (floor((col("l_quantity") - 1) / 10) + 1).cast("long")
-    val pb = when(unit < 500, 0L).when(unit < 1000, 1L).when(unit < 1500, 2L)
-      .when(unit < 2000, 3L).when(unit < 2500, 4L).otherwise(5L)
-    Tables.lineitem(spark, dir)
-      .withColumn("qty_decade", qb).withColumn("price_band", pb)
-      .groupBy("qty_decade", "price_band")
-      .agg(count(lit(1)).as("n_lines"),
-        dbl(sum(revenueTerm(col("l_extendedprice"), col("l_discount")))).as("revenue"))
-      .orderBy("qty_decade", "price_band")
-  }
   val q121Sql: String =
     s"""SELECT CAST(FLOOR((l_quantity - 1) / 10) + 1 AS BIGINT) AS qty_decade,
        |  CAST(CASE WHEN l_extendedprice / l_quantity < 500 THEN 0
@@ -4447,21 +3395,6 @@ object Relational {
     * discount-axis return screen. One map-combinable groupBy, ≤6 rows,
     * single divisions.
     */
-  def q123(spark: SparkSession, dir: String): DataFrame = {
-    val unit = col("l_extendedprice") / col("l_quantity")
-    val pb = when(unit < 500, 0L).when(unit < 1000, 1L).when(unit < 1500, 2L)
-      .when(unit < 2000, 3L).when(unit < 2500, 4L).otherwise(5L)
-    Tables.lineitem(spark, dir)
-      .withColumn("price_band", pb)
-      .groupBy("price_band")
-      .agg(count(lit(1)).as("n_lines"),
-        sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("n_returned"),
-        dbl(sum(revenueTerm(col("l_extendedprice"), col("l_discount")))).as("revenue"))
-      .select(col("price_band"), col("n_lines"), col("n_returned"),
-        round(dbl(col("n_returned")) / dbl(col("n_lines")), 6).as("return_rate"),
-        col("revenue"))
-      .orderBy("price_band")
-  }
   val q123Sql: String =
     s"""SELECT CAST(CASE WHEN l_extendedprice / l_quantity < 500 THEN 0
        |       WHEN l_extendedprice / l_quantity < 1000 THEN 1
@@ -4529,18 +3462,6 @@ object Relational {
     * Scale: the 3-way key join (customer⋈orders⋈lineitem) shuffles on
     * natural keys both sides already carry; ONE bounded rollup
     * (5 segments × \|years\|). */
-  def q125(spark: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(spark, dir)
-      .join(Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      .join(Tables.customer(spark, dir).select(col("c_custkey"), col("c_mktsegment")),
-        col("o_custkey") === col("c_custkey"))
-      .withColumn("yr", year(col("l_shipdate")).cast("long"))
-      .groupBy("c_mktsegment", "yr")
-      .agg(count(lit(1)).as("n_lines"),
-        davg(col("l_discount")).as("avg_discount"),
-        dbl(sum(revenueTerm(col("l_extendedprice"), col("l_discount")))).as("revenue"))
-      .orderBy("c_mktsegment", "yr")
   val q125Sql: String =
     s"""SELECT c_mktsegment, CAST(EXTRACT(year FROM l_shipdate) AS BIGINT) AS yr,
        |  COUNT(*) AS n_lines,
@@ -4651,16 +3572,6 @@ object Relational {
     * envelope). Pure part scan, all-integer output.
     *
     * Scale: one map-combinable rollup over part; \|brands\| rows. */
-  def q128(spark: SparkSession, dir: String): DataFrame =
-    Tables.part(spark, dir)
-      .groupBy("p_brand")
-      .agg(count(lit(1)).as("n_parts"),
-        countDistinct(col("p_type")).as("n_types"),
-        countDistinct(col("p_size")).as("n_sizes"),
-        (min(dec(col("p_retailprice"))) * 100).cast("long").as("min_price_cents"),
-        (max(dec(col("p_retailprice"))) * 100).cast("long").as("max_price_cents"))
-      .withColumn("span_cents", col("max_price_cents") - col("min_price_cents"))
-      .orderBy("p_brand")
   val q128Sql: String =
     """SELECT p_brand, COUNT(*)::BIGINT AS n_parts,
       |  COUNT(DISTINCT p_type)::BIGINT AS n_types,
@@ -4672,171 +3583,130 @@ object Relational {
       |FROM part GROUP BY 1 ORDER BY p_brand""".stripMargin
 
   val queries: Map[String, Q] = Map(
-    "q128_brand_catalog_span" -> (q128 _),
     "q127_size_price_curve" -> (q127 _),
     "q126_brand_mom_growth" -> (q126 _),
-    "q125_segment_discount_depth" -> (q125 _),
     "q124_nation_customer_hhi" -> (q124 _),
-    "q123_price_band_returns" -> (q123 _),
     "q122_brand_quarter_share" -> (q122 _),
-    "q121_qty_price_heatmap" -> (q121 _),
-    "q120_order_price_audit" -> (q120 _),
     "q119_year_brand_share" -> (q119 _),
-    "q118_promo_tax_matrix" -> (q118 _),
-    "q117_multi_supplier_parts" -> (q117 _),
     "q116_balance_two_sample" -> (q116 _),
     "q115_rfm_octants" -> (q115 _),
-    "q114_seasonality_strength" -> (q114 _),
     "q113_revenue_autocorr" -> (q113 _),
     "q112_theil_decomposition" -> (q112 _),
     "q111_benford_audit" -> (q111 _),
-    "q110_balance_activity" -> (q110 _),
     "q109_order_cadence" -> (q109 _),
     "q108_approx_quantiles" -> (q108 _),
     "q107_order_backlog" -> (q107 _),
     "q106_price_dispersion" -> (q106 _),
     "q105_return_abuse" -> (q105 _),
-    "q104_discount_elasticity" -> (q104 _),
-    "q103_weighted_median" -> (q103 _),
-    "q102_seasonal_decomposition" -> (q102 _),
     "q101_spend_trend_census" -> (q101 _),
-    "q100_brand_price_premium" -> (q100 _),
-    "q99_active_years" -> (q99 _),
-    "q98_return_by_tenure" -> (q98 _),
-    "q97_brand_loyalty" -> (q97 _),
     "q96_nation_brand_affinity" -> (q96 _),
-    "q95_tax_bands" -> (q95 _),
     "q94_region_trade_matrix" -> (q94 _),
-    "q93_tenure_census" -> (q93 _),
-    "q92_promo_grid" -> (q92 _),
-    "q91_churn_series" -> (q91 _),
-    "q90_discount_favoritism" -> (q90 _),
-    "q89_basket_brand_diversity" -> (q89 _),
-    "q88_supplier_tiers" -> (q88 _),
-    "q87_brand_reorder_rate" -> (q87 _),
     "q86_line_dominance" -> (q86 _),
     "q85_fulfillment_span" -> (q85 _),
-    "q84_discount_return_rate" -> (q84 _),
-    "q83_priority_mix_trend" -> (q83 _),
-    "q82_supplier_redundancy" -> (q82 _),
-    "q81_nation_segment_census" -> (q81 _),
-    "q80_line_position_profile" -> (q80 _),
-    "q79_fk_integrity" -> (q79 _),
     "q78_value_migration" -> (q78 _),
     "q77_seasonality_index" -> (q77 _),
     "q76_brand_rank_shift" -> (q76 _),
-    "q75_key_skew_census" -> (q75 _),
-    "q74_nation_return_rate" -> (q74 _),
-    "q73_discount_qty_corr" -> (q73 _),
     "q72_segment_gini" -> (q72 _),
     "q71_monthly_active" -> (q71 _),
     "q70_pareto_points" -> (q70 _),
     "q69_weekday_profile" -> (q69 _),
-    "q68_basket_pairs" -> (q68 _),
     "q67_supplier_hhi" -> (q67 _),
-    "q66_clv_quartiles" -> (q66 _),
     "q65_orderbook_aging" -> (q65 _),
     "q64_status_priority_matrix" -> (q64 _),
-    "q63_returned_share_series" -> (q63 _),
-    "q62_quarter_mix" -> (q62 _),
-    "q61_brand_price_book" -> (q61 _),
-    "q60_nation_trade_balance" -> (q60 _),
-    "q59_product_line_profit" -> (q59 _),
     "q58_fill_rate" -> (q58 _),
     "q57_latency_percentiles" -> (q57 _),
-    "q56_balance_order_corr" -> (q56 _),
-    "q55_revenue_concentration" -> (q55 _),
-    "q54_order_shape" -> (q54 _),
     "q53_repeat_rate" -> (q53 _),
-    "q52_balance_bands" -> (q52 _),
-    "q51_discount_bands" -> (q51 _),
-    "q50_segment_share" -> (q50 _),
-    "q49_part_concentration" -> (q49 _),
     "q48_ship_latency" -> (q48 _),
-    "q47_above_avg_orders" -> (q47 _),
     "q46_price_histogram" -> (q46 _),
     "q45_order_gaps" -> (q45 _),
-    "q44_iqr_quartiles" -> (q44 _),
     "q43_higher_moments" -> (q43 _),
-    "q41_mad_dispersion" -> (q41 _),
-    "q42_grouping_sets" -> (q42 _),
-    "q40_cohort_ltv" -> (q40 _),
-    "q39_yoy_growth" -> (q39 _),
-    "q38_exact_corr" -> (q38 _),
     "q37_heavy_hitters" -> (q37 _),
-    "q31_volume_shipping" -> (q31 _),
-    "q32_market_share" -> (q32 _),
-    "q33_returned_items" -> (q33 _),
     "q34_promo_effect" -> (q34 _),
     "q35_large_orders" -> (q35 _),
-    "q36_or_predicates" -> (q36 _),
-    "q30_order_distribution" -> (q30 _),
     "q29_top_supplier" -> (q29 _),
-    "q27_small_quantity" -> (q27 _),
-    "q28_dormant_balances" -> (q28 _),
-    "q26_last_shipper" -> (q26 _),
-    "q25_ranking_suite" -> (q25 _),
-    "q01_pricing_summary" -> (q01 _),
-    "q02_filter_project" -> (q02 _),
     "q03_top_revenue" -> (q03 _),
-    "q04_order_priority" -> (q04 _),
-    "q05_region_revenue" -> (q05 _),
-    "q06_forecast_revenue" -> (q06 _),
-    "q07_window_rank" -> (q07 _),
     "q08_running_total" -> (q08 _),
-    "q09_rollup" -> (q09 _),
-    "q10_distinct_agg" -> (q10 _),
-    "q11_anti_join" -> (q11 _),
-    "q12_set_ops" -> (q12 _),
-    "q13_conditional_agg" -> (q13 _),
     "q14_string_ops" -> (q14 _),
     "q15_date_ops" -> (q15 _),
     "q16_scalar_subquery" -> (q16 _),
-    "q17_having" -> (q17 _),
-    "q18_percentile" -> (q18 _),
     "q19_null_handling" -> (q19 _),
-    "q20_nation_revenue" -> (q20 _),
     "q21_approx_stats" -> (q21 _),
     "q22_pivot" -> (q22 _),
     "q23_moving_avg" -> (q23 _),
-    "q24_cube" -> (q24 _),
   )
 
   val oracle: Map[String, String] = Map(
-    "q128_brand_catalog_span" -> q128Sql,
     "q127_size_price_curve" -> q127Sql,
     "q126_brand_mom_growth" -> q126Sql,
-    "q125_segment_discount_depth" -> q125Sql,
     "q124_nation_customer_hhi" -> q124Sql,
-    "q123_price_band_returns" -> q123Sql,
     "q122_brand_quarter_share" -> q122Sql,
-    "q121_qty_price_heatmap" -> q121Sql,
-    "q120_order_price_audit" -> q120Sql,
     "q119_year_brand_share" -> q119Sql,
-    "q118_promo_tax_matrix" -> q118Sql,
-    "q117_multi_supplier_parts" -> q117Sql,
     "q116_balance_two_sample" -> q116Sql,
     "q115_rfm_octants" -> q115Sql,
-    "q114_seasonality_strength" -> q114Sql,
     "q113_revenue_autocorr" -> q113Sql,
     "q112_theil_decomposition" -> q112Sql,
     "q111_benford_audit" -> q111Sql,
-    "q110_balance_activity" -> q110Sql,
     "q109_order_cadence" -> q109Sql,
     "q107_order_backlog" -> q107Sql,
     "q106_price_dispersion" -> q106Sql,
     "q105_return_abuse" -> q105Sql,
+    "q101_spend_trend_census" -> q101Sql,
+    "q96_nation_brand_affinity" -> q96Sql,
+    "q94_region_trade_matrix" -> q94Sql,
+    "q86_line_dominance" -> q86Sql,
+    "q85_fulfillment_span" -> q85Sql,
+    "q78_value_migration" -> q78Sql,
+    "q77_seasonality_index" -> q77Sql,
+    "q76_brand_rank_shift" -> q76Sql,
+    "q72_segment_gini" -> q72Sql,
+    "q71_monthly_active" -> q71Sql,
+    "q70_pareto_points" -> q70Sql,
+    "q69_weekday_profile" -> q69Sql,
+    "q67_supplier_hhi" -> q67Sql,
+    "q65_orderbook_aging" -> q65Sql,
+    "q64_status_priority_matrix" -> q64Sql,
+    "q58_fill_rate" -> q58Sql,
+    "q57_latency_percentiles" -> q57Sql,
+    "q53_repeat_rate" -> q53Sql,
+    "q48_ship_latency" -> q48Sql,
+    "q46_price_histogram" -> q46Sql,
+    "q45_order_gaps" -> q45Sql,
+    "q43_higher_moments" -> q43Sql,
+    "q03_top_revenue" -> q03Sql,
+    "q08_running_total" -> q08Sql,
+    "q14_string_ops" -> q14Sql,
+    "q15_date_ops" -> q15Sql,
+    "q16_scalar_subquery" -> q16Sql,
+    "q19_null_handling" -> q19Sql,
+    "q22_pivot" -> q22Sql,
+    "q23_moving_avg" -> q23Sql,
+    "q29_top_supplier" -> q29Sql,
+    "q34_promo_effect" -> q34Sql,
+    "q35_large_orders" -> q35Sql,
+    "q37_heavy_hitters" -> q37Sql,
+  )
+
+  /** The operators that are their oracle text: `SparkEntry.queries`
+    * binds each text to the table loaders with `Tables.sql`, and
+    * `SparkEntry.oracleSql` hands the same text to DuckDB. */
+  val sql: Map[String, String] = Map(
+    "q128_brand_catalog_span" -> q128Sql,
+    "q125_segment_discount_depth" -> q125Sql,
+    "q123_price_band_returns" -> q123Sql,
+    "q121_qty_price_heatmap" -> q121Sql,
+    "q120_order_price_audit" -> q120Sql,
+    "q118_promo_tax_matrix" -> q118Sql,
+    "q117_multi_supplier_parts" -> q117Sql,
+    "q114_seasonality_strength" -> q114Sql,
+    "q110_balance_activity" -> q110Sql,
     "q104_discount_elasticity" -> q104Sql,
     "q103_weighted_median" -> q103Sql,
     "q102_seasonal_decomposition" -> q102Sql,
-    "q101_spend_trend_census" -> q101Sql,
     "q100_brand_price_premium" -> q100Sql,
     "q99_active_years" -> q99Sql,
     "q98_return_by_tenure" -> q98Sql,
     "q97_brand_loyalty" -> q97Sql,
-    "q96_nation_brand_affinity" -> q96Sql,
     "q95_tax_bands" -> q95Sql,
-    "q94_region_trade_matrix" -> q94Sql,
     "q93_tenure_census" -> q93Sql,
     "q92_promo_grid" -> q92Sql,
     "q91_churn_series" -> q91Sql,
@@ -4844,90 +3714,59 @@ object Relational {
     "q89_basket_brand_diversity" -> q89Sql,
     "q88_supplier_tiers" -> q88Sql,
     "q87_brand_reorder_rate" -> q87Sql,
-    "q86_line_dominance" -> q86Sql,
-    "q85_fulfillment_span" -> q85Sql,
     "q84_discount_return_rate" -> q84Sql,
     "q83_priority_mix_trend" -> q83Sql,
     "q82_supplier_redundancy" -> q82Sql,
     "q81_nation_segment_census" -> q81Sql,
     "q80_line_position_profile" -> q80Sql,
     "q79_fk_integrity" -> q79Sql,
-    "q78_value_migration" -> q78Sql,
-    "q77_seasonality_index" -> q77Sql,
-    "q76_brand_rank_shift" -> q76Sql,
     "q75_key_skew_census" -> q75Sql,
     "q74_nation_return_rate" -> q74Sql,
     "q73_discount_qty_corr" -> q73Sql,
-    "q72_segment_gini" -> q72Sql,
-    "q71_monthly_active" -> q71Sql,
-    "q70_pareto_points" -> q70Sql,
-    "q69_weekday_profile" -> q69Sql,
     "q68_basket_pairs" -> q68Sql,
-    "q67_supplier_hhi" -> q67Sql,
     "q66_clv_quartiles" -> q66Sql,
-    "q65_orderbook_aging" -> q65Sql,
-    "q64_status_priority_matrix" -> q64Sql,
     "q63_returned_share_series" -> q63Sql,
     "q62_quarter_mix" -> q62Sql,
     "q61_brand_price_book" -> q61Sql,
     "q60_nation_trade_balance" -> q60Sql,
     "q59_product_line_profit" -> q59Sql,
-    "q58_fill_rate" -> q58Sql,
-    "q57_latency_percentiles" -> q57Sql,
     "q56_balance_order_corr" -> q56Sql,
     "q55_revenue_concentration" -> q55Sql,
     "q54_order_shape" -> q54Sql,
-    "q53_repeat_rate" -> q53Sql,
     "q52_balance_bands" -> q52Sql,
     "q51_discount_bands" -> q51Sql,
     "q50_segment_share" -> q50Sql,
     "q49_part_concentration" -> q49Sql,
-    "q48_ship_latency" -> q48Sql,
     "q47_above_avg_orders" -> q47Sql,
-    "q46_price_histogram" -> q46Sql,
-    "q45_order_gaps" -> q45Sql,
     "q44_iqr_quartiles" -> q44Sql,
-    "q43_higher_moments" -> q43Sql,
     "q41_mad_dispersion" -> q41Sql,
     "q42_grouping_sets" -> q42Sql,
     "q01_pricing_summary" -> q01Sql,
     "q02_filter_project" -> q02Sql,
-    "q03_top_revenue" -> q03Sql,
     "q04_order_priority" -> q04Sql,
     "q05_region_revenue" -> q05Sql,
     "q06_forecast_revenue" -> q06Sql,
     "q07_window_rank" -> q07Sql,
-    "q08_running_total" -> q08Sql,
     "q09_rollup" -> q09Sql,
     "q10_distinct_agg" -> q10Sql,
     "q11_anti_join" -> q11Sql,
     "q12_set_ops" -> q12Sql,
     "q13_conditional_agg" -> q13Sql,
-    "q14_string_ops" -> q14Sql,
-    "q15_date_ops" -> q15Sql,
-    "q16_scalar_subquery" -> q16Sql,
     "q17_having" -> q17Sql,
     "q18_percentile" -> q18Sql,
-    "q19_null_handling" -> q19Sql,
     "q20_nation_revenue" -> q20Sql,
-    "q22_pivot" -> q22Sql,
-    "q23_moving_avg" -> q23Sql,
     "q24_cube" -> q24Sql,
     "q25_ranking_suite" -> q25Sql,
     "q26_last_shipper" -> q26Sql,
     "q27_small_quantity" -> q27Sql,
     "q28_dormant_balances" -> q28Sql,
-    "q29_top_supplier" -> q29Sql,
     "q30_order_distribution" -> q30Sql,
     "q31_volume_shipping" -> q31Sql,
     "q32_market_share" -> q32Sql,
     "q33_returned_items" -> q33Sql,
-    "q34_promo_effect" -> q34Sql,
-    "q35_large_orders" -> q35Sql,
     "q36_or_predicates" -> q36Sql,
-    "q37_heavy_hitters" -> q37Sql,
     "q38_exact_corr" -> q38Sql,
     "q39_yoy_growth" -> q39Sql,
-    "q40_cohort_ltv" -> q40Sql,
+    "q40_cohort_ltv" -> q40Sql
   )
 }

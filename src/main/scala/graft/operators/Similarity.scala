@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.engine.Tables
@@ -17,6 +17,10 @@ import graft.functions.VectorFunctions
   *
   * All vector math is double, folded sequentially over the array exactly
   * like the DuckDB `list_reduce` oracle (IEEE: 0.0 + x == x).
+  *
+  * The keys in `sql` are operators that are their oracle text, bound to
+  * the table loaders by `Tables.sql` (see `Relational`); their DuckDB
+  * compare is a cross-engine check, not a second implementation.
   */
 object Similarity {
   type Q = (SparkSession, String) => DataFrame
@@ -1020,13 +1024,6 @@ object Similarity {
     * copy-paste corpus defect d05's cosine threshold would also catch
     * but can't prove exact). One map-combinable groupBy on the array
     * key, 1-row summary out. */
-  def s19(spark: SparkSession, dir: String): DataFrame =
-    Tables.embeddings(spark, dir)
-      .groupBy(col("embedding")).agg(count(lit(1)).as("n"))
-      .agg(count(lit(1)).as("n_groups"),
-           count(when(col("n") >= 2, lit(1))).as("n_dup_groups"),
-           sum(when(col("n") >= 2, col("n")).otherwise(lit(0L))).as("n_dup_vectors"),
-           max(col("n")).as("max_group"))
   val s19Sql: String =
     """WITH g AS (SELECT embedding, COUNT(*)::BIGINT AS n FROM embeddings GROUP BY 1)
       |SELECT COUNT(*)::BIGINT AS n_groups,
@@ -1041,16 +1038,6 @@ object Similarity {
     * docs, coverage rate. The census run before any semantic dedup /
     * ANN stage, since an uncovered slice silently skips d05/d13. One
     * left join on the key + a ≤|sources| rollup. */
-  def s20(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir).select(col("doc_id"), col("source"))
-      .join(Tables.embeddings(spark, dir).select(col("vec_id")),
-        col("doc_id") === col("vec_id"), "left")
-      .groupBy("source")
-      .agg(count(lit(1)).as("n_docs"),
-           count(col("vec_id")).as("n_embedded"))
-      .select(col("source"), col("n_docs"), col("n_embedded"),
-        round(dbl(col("n_embedded")) / col("n_docs"), 6).as("coverage"))
-      .orderBy("source")
   val s20Sql: String =
     """SELECT source, COUNT(*)::BIGINT AS n_docs,
       |  COUNT(vec_id)::BIGINT AS n_embedded,
@@ -1062,21 +1049,10 @@ object Similarity {
   /** Class-balance census: vectors per label with corpus share and the
     * max/min imbalance ratio — the table every classifier training run
     * prints first. |labels|-bounded frame, 1-row totals broadcast. */
-  def s21(spark: SparkSession, dir: String): DataFrame = {
-    val l = Tables.embeddings(spark, dir)
-      .groupBy("label").agg(count(lit(1)).as("n_vecs"))
-    val tot = l.agg(sum(col("n_vecs")).as("t"),
-      max(col("n_vecs")).as("mx"), min(col("n_vecs")).as("mn"))
-    l.join(broadcast(tot))
-      .select(col("label").cast("long").as("label"), col("n_vecs"),
-        round(dbl(col("n_vecs")) / col("t"), 6).as("share"),
-        round(dbl(col("mx")) / col("mn"), 6).as("imbalance_ratio"))
-      .orderBy("label")
-  }
   val s21Sql: String =
     """WITH l AS (SELECT label, COUNT(*)::BIGINT AS n_vecs FROM embeddings GROUP BY 1),
       |t AS (SELECT SUM(n_vecs)::BIGINT AS t, MAX(n_vecs) AS mx, MIN(n_vecs) AS mn FROM l)
-      |SELECT CAST(label AS BIGINT) AS label, n_vecs,
+      |SELECT /*+ BROADCAST(t) */ CAST(label AS BIGINT) AS label, n_vecs,
       |  ROUND(CAST(n_vecs AS DOUBLE) / t, 6) AS share,
       |  ROUND(CAST(mx AS DOUBLE) / mn, 6) AS imbalance_ratio
       |FROM l CROSS JOIN t ORDER BY label""".stripMargin
@@ -2413,9 +2389,6 @@ object Similarity {
     "s24_dim_variance" -> (s24 _),
     "s23_centroid_confusion" -> (s23 _),
     "s22_centroid_cohesion" -> (s22 _),
-    "s21_label_balance" -> (s21 _),
-    "s20_embedding_coverage" -> (s20 _),
-    "s19_exact_dup_vectors" -> (s19 _),
     "s18_norm_band_profile" -> (s18 _),
     "s17_dim_stats" -> (s17 _),
     "s16_label_homophily" -> (s16 _),
@@ -2457,9 +2430,6 @@ object Similarity {
     "s24_dim_variance" -> s24Sql,
     "s23_centroid_confusion" -> s23Sql,
     "s22_centroid_cohesion" -> s22Sql,
-    "s21_label_balance" -> s21Sql,
-    "s20_embedding_coverage" -> s20Sql,
-    "s19_exact_dup_vectors" -> s19Sql,
     "s18_norm_band_profile" -> s18Sql,
     "s17_dim_stats" -> s17Sql,
     "s16_label_homophily" -> s16Sql,
@@ -2470,5 +2440,14 @@ object Similarity {
     "s07_mips_topk" -> s07Sql,
     "s01_ann_brute_topk" -> s01Sql,
     "s05_knn_label" -> s05Sql,
+  )
+
+  /** The operators that are their oracle text: `SparkEntry.queries`
+    * binds each text to the table loaders with `Tables.sql`, and
+    * `SparkEntry.oracleSql` hands the same text to DuckDB. */
+  val sql: Map[String, String] = Map(
+    "s21_label_balance" -> s21Sql,
+    "s20_embedding_coverage" -> s20Sql,
+    "s19_exact_dup_vectors" -> s19Sql
   )
 }

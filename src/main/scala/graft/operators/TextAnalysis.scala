@@ -12,6 +12,10 @@ import graft.functions.VectorFunctions
   * tokenization via split+filter, counting via length arithmetic, so the
   * hot path stays inside whole-stage codegen and the identical integer
   * arithmetic runs on the DuckDB oracle side.
+  *
+  * The keys in `sql` are operators that are their oracle text, bound to
+  * the table loaders by `Tables.sql` (see `Relational`); their DuckDB
+  * compare is a cross-engine check, not a second implementation.
   */
 object TextAnalysis {
   type Q = (SparkSession, String) => DataFrame
@@ -131,11 +135,6 @@ object TextAnalysis {
     }.mkString("CASE ", " ", " ELSE 'und' END")
   }
 
-  def t03(spark: SparkSession, dir: String): DataFrame =
-    addPredicted(Tables.documents(spark, dir))
-      .groupBy(col("lang"), col("predicted"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy("lang", "predicted")
   val t03Sql: String =
     s"""WITH s AS (
        |  SELECT lang,
@@ -198,13 +197,6 @@ object TextAnalysis {
     *
     * Scale: a pure scan-parallel filter — predicate and projection push
     * to the parquet scan; the only shuffle is the final tiny sort. */
-  def t06(spark: SparkSession, dir: String): DataFrame = {
-    val nib = substring(md5(col("text")), 1, 1)
-    Tables.documents(spark, dir)
-      .filter(when(col("lang") === "en", nib < "8").otherwise(nib < "4"))
-      .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-      .orderBy("doc_id")
-  }
   val t06Sql: String =
     """SELECT doc_id, lang, source, n_chars
       |FROM documents
@@ -1257,33 +1249,6 @@ object TextAnalysis {
     * snippets. Source-partitioned windows only (bounded state per key);
     * ≤6 rows per source reach the aggregation combine; interpolation
     * arithmetic is identical in both engines. */
-  def t31(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("source").orderBy(col("v"), col("doc_id"))
-    val wc = Window.partitionBy("source")
-    val ranked = Tables.documents(spark, dir)
-      .select(col("source"), col("n_chars").cast("double").as("v"), col("doc_id"))
-      .select(col("source"), col("v"),
-        (row_number().over(w).cast("long") - 1).as("idx"),
-        count(lit(1)).over(wc).as("cnt"))
-    def pos(q: Double): Column = (col("cnt") - 1).cast("double") * lit(q)
-    def lo(q: Double, nm: String): Column =
-      max(when(col("idx") === floor(pos(q)), col("v"))).as(s"${nm}_lo")
-    def hi(q: Double, nm: String): Column =
-      max(when(col("idx") === ceil(pos(q)), col("v"))).as(s"${nm}_hi")
-    def interp(nm: String, q: Double): Column = {
-      val p = (col("n") - 1).cast("double") * lit(q)
-      col(s"${nm}_lo") + (col(s"${nm}_hi") - col(s"${nm}_lo")) * (p - floor(p))
-    }
-    ranked.groupBy("source")
-      .agg(max(col("cnt")).as("n"),
-           lo(0.25, "q1"), hi(0.25, "q1"), lo(0.5, "q2"), hi(0.5, "q2"),
-           lo(0.75, "q3"), hi(0.75, "q3"))
-      .select(col("source"), col("n"),
-        interp("q1", 0.25).as("p25"), interp("q2", 0.5).as("p50"),
-        interp("q3", 0.75).as("p75"))
-      .orderBy("source")
-  }
   val t31Sql: String =
     """WITH r AS (
       |  SELECT source, CAST(n_chars AS DOUBLE) AS v,
@@ -2120,18 +2085,6 @@ object TextAnalysis {
     * routing can be trusted (t03's confusion matrix says WHERE errors
     * go; this says WHEN they happen). One scan, integer band edges,
     * exact counts, ONE division per ≤4-row output. */
-  def t53(spark: SparkSession, dir: String): DataFrame =
-    addPredicted(Tables.documents(spark, dir))
-      .groupBy(when(col("n_chars") < 100, "a<100")
-        .when(col("n_chars") < 300, "b<300")
-        .when(col("n_chars") < 600, "c<600")
-        .otherwise("d>=600").as("length_band"))
-      .agg(count(lit(1)).as("n_docs"),
-           sum(when(col("predicted") === col("lang"), 1L).otherwise(0L))
-             .as("n_correct"))
-      .select(col("length_band"), col("n_docs"), col("n_correct"),
-        round(dbl(col("n_correct")) / col("n_docs"), 6).as("accuracy"))
-      .orderBy("length_band")
   val t53Sql: String =
     s"""WITH s AS (
        |  SELECT lang, n_chars,
@@ -2563,16 +2516,6 @@ object TextAnalysis {
     *
     * Scale: one scan + a lang-partitioned top-k window (WindowGroupLimit
     * prunes to k per partition map-side); output |langs|·k rows. */
-  def t62(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("lang").orderBy(col("h"), col("doc_id"))
-    Tables.documents(spark, dir)
-      .select(col("lang"), col("doc_id"), col("n_chars"), md5(col("text")).as("h"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 3)
-      .select(col("lang"), col("rnk").cast("long").as("rnk"), col("doc_id"),
-        col("n_chars"), col("h"))
-      .orderBy("lang", "rnk")
-  }
   val t62Sql: String =
     """SELECT lang, CAST(rnk AS BIGINT) AS rnk, doc_id, n_chars, h FROM (
       |  SELECT lang, doc_id, n_chars, md5(text) AS h,
@@ -3124,7 +3067,6 @@ object TextAnalysis {
     "t65_rank_correlation" -> (t65 _),
     "t64_ocr_noise" -> (t64 _),
     "t63_anchor_terms" -> (t63 _),
-    "t62_group_sample" -> (t62 _),
     "t61_link_density" -> (t61 _),
     "t60_code_screen" -> (t60 _),
     "t59_readability" -> (t59 _),
@@ -3133,7 +3075,6 @@ object TextAnalysis {
     "t56_template_flow" -> (t56 _),
     "t55_quality_attribution" -> (t55 _),
     "t54_langid_margin" -> (t54 _),
-    "t53_langid_by_length" -> (t53 _),
     "t52_trending_terms" -> (t52 _),
     "t51_vocab_half_divergence" -> (t51 _),
     "t49_ingestion_quality_drift" -> (t49 _),
@@ -3153,7 +3094,6 @@ object TextAnalysis {
     "t35_quality_by_length" -> (t35 _),
     "t33_stopword_coverage" -> (t33 _),
     "t32_numeric_density" -> (t32 _),
-    "t31_length_quartiles" -> (t31 _),
     "t30_dup_ngram_rate" -> (t30 _),
     "t29_gram_coverage" -> (t29 _),
     "t28_word_length_hist" -> (t28 _),
@@ -3178,10 +3118,8 @@ object TextAnalysis {
     "t09_tfidf_keywords" -> (t09 _),
     "t01_token_stats" -> (t01 _),
     "t02_quality_score" -> (t02 _),
-    "t03_langid" -> (t03 _),
     "t04_fingerprint" -> (t04 _),
     "t05_redaction" -> (t05 _),
-    "t06_stratified_sample" -> (t06 _),
     "t07_token_histogram" -> (t07 _),
     "t08_winnow_pairs" -> (t08 _),
   )
@@ -3197,7 +3135,6 @@ object TextAnalysis {
     "t65_rank_correlation" -> t65Sql,
     "t64_ocr_noise" -> t64Sql,
     "t63_anchor_terms" -> t63Sql,
-    "t62_group_sample" -> t62Sql,
     "t61_link_density" -> t61Sql,
     "t60_code_screen" -> t60Sql,
     "t59_readability" -> t59Sql,
@@ -3206,7 +3143,6 @@ object TextAnalysis {
     "t56_template_flow" -> t56Sql,
     "t55_quality_attribution" -> t55Sql,
     "t54_langid_margin" -> t54Sql,
-    "t53_langid_by_length" -> t53Sql,
     "t52_trending_terms" -> t52Sql,
     "t51_vocab_half_divergence" -> t51Sql,
     "t49_ingestion_quality_drift" -> t49Sql,
@@ -3239,7 +3175,6 @@ object TextAnalysis {
     "t35_quality_by_length" -> t35Sql,
     "t33_stopword_coverage" -> t33Sql,
     "t32_numeric_density" -> t32Sql,
-    "t31_length_quartiles" -> t31Sql,
     "t30_dup_ngram_rate" -> t30Sql,
     "t29_gram_coverage" -> t29Sql,
     "t28_word_length_hist" -> t28Sql,
@@ -3251,11 +3186,20 @@ object TextAnalysis {
     "t22_unigram_entropy" -> t22Sql,
     "t21_vocab_coverage" -> t21Sql,
     "t20_bigram_lm" -> t20Sql,
-    "t03_langid" -> t03Sql,
     "t04_fingerprint" -> t04Sql,
     "t05_redaction" -> t05Sql,
-    "t06_stratified_sample" -> t06Sql,
     "t07_token_histogram" -> t07Sql,
     "t08_winnow_pairs" -> t08Sql,
+  )
+
+  /** The operators that are their oracle text: `SparkEntry.queries`
+    * binds each text to the table loaders with `Tables.sql`, and
+    * `SparkEntry.oracleSql` hands the same text to DuckDB. */
+  val sql: Map[String, String] = Map(
+    "t62_group_sample" -> t62Sql,
+    "t53_langid_by_length" -> t53Sql,
+    "t31_length_quartiles" -> t31Sql,
+    "t03_langid" -> t03Sql,
+    "t06_stratified_sample" -> t06Sql
   )
 }

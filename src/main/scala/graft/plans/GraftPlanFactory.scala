@@ -11,4 +11,8 @@ object GraftPlanFactory {
 
   def analyzed(df: DataFrame): LogicalPlan =
     df.asInstanceOf[classic.Dataset[Row]].queryExecution.analyzed
+
+  /** The session's SQL parser, unanalyzed: table names stay unresolved. */
+  def parsePlan(spark: SparkSession, text: String): LogicalPlan =
+    spark.asInstanceOf[classic.SparkSession].sessionState.sqlParser.parsePlan(text)
 }

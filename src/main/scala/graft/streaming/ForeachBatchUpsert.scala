@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.operators.Memo
 
 /** foreachBatch idempotent-upsert sink pattern.
   *
@@ -60,11 +61,16 @@ object ForeachBatchUpsert {
           .select(incoming.columns.toIndexedSeq.map(col): _*)
         dedupeLatest(incoming.unionByName(existing), keyCol, versionCol)
       } else incoming
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    // materialize the merge before overwriting the files it was read from
-    merged.localCheckpoint(true).write
+    // materialize the merge before overwriting the files it was read
+    // from; the snapshot is freed once written, not left for GC
+    val snapshot = merged.localCheckpoint(true)
+    try snapshot.write
       .mode("overwrite")
+      // a writer option, not a session conf: the caller's session is
+      // left as it was
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy("key_bucket")
       .parquet(targetDir)
+    finally Memo.hardUnpersist(snapshot)
   }
 }

@@ -1,0 +1,46 @@
+package graft.engine
+
+import graft.{Graft, SparkSpec}
+
+/** `Tables.sql` binds a text to one directory's loaders, whatever the
+  * session's catalog holds. */
+class TablesSqlSpec extends SparkSpec {
+
+  test("a bound text reads dir's tables, not temp views of another dir") {
+    Graft.registerViews(spark, sf.replace("sf0.001", "sf0.01"))
+    try {
+      val viewRows = spark.sql("SELECT COUNT(*) FROM lineitem").head().getLong(0)
+      val bound = Tables.sql(spark, sf, "SELECT COUNT(*) FROM lineitem").head().getLong(0)
+      assert(bound == spark.read.parquet(s"$sf/lineitem.parquet").count())
+      assert(bound != viewRows)
+    } finally Graft.tableNames.foreach(spark.catalog.dropTempView)
+  }
+
+  test("CTE names shadow table names; events carries its derived columns") {
+    val df = Tables.sql(spark, sf,
+      "WITH lineitem AS (SELECT 1 AS x) SELECT x FROM lineitem")
+    assert(df.collect().map(_.getInt(0)).toSeq == Seq(1))
+    assert(Tables.sql(spark, sf, "SELECT ms, ets FROM events").columns.toSeq ==
+      Seq("ms", "ets"))
+  }
+
+  test("an unknown table name fails with an error that names it") {
+    val e = intercept[IllegalArgumentException](
+      Tables.sql(spark, sf, "SELECT * FROM lineitem JOIN no_such_table ON true"))
+    assert(e.getMessage.contains("'no_such_table'"))
+  }
+
+  test("a BROADCAST hint plans a broadcast join with auto-broadcast off") {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    def plan(hint: String): String = Tables.sql(spark, sf,
+      s"""SELECT $hint c_custkey, n_name
+         |FROM customer JOIN nation ON c_nationkey = n_nationkey""".stripMargin)
+      .queryExecution.executedPlan.toString
+    try {
+      assert(plan("/*+ BROADCAST(nation) */").contains("BroadcastHashJoin"))
+      assert(!plan("").contains("BroadcastHashJoin"))
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+}

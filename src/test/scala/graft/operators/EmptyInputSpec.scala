@@ -2,11 +2,20 @@ package graft.operators
 
 import java.nio.file.Files
 
-import graft.{Graft, SparkSpec}
+import graft.{Graft, SparkEntry, SparkSpec}
 
 /** Zero-row inputs are normal in production (an empty day, language or
   * source): operators must return, not crash. */
 class EmptyInputSpec extends SparkSpec {
+
+  /** Every warehouse table of `sf` with its schema and no rows. */
+  private lazy val empty: String = {
+    val dir = Files.createTempDirectory("graft-empty").toString
+    Graft.tableNames.foreach { t =>
+      spark.read.parquet(s"$sf/$t.parquet").limit(0).write.parquet(s"$dir/$t.parquet")
+    }
+    dir
+  }
 
   test("connectedComponents over an empty pair frame returns no rows") {
     val sc = spark
@@ -18,10 +27,6 @@ class EmptyInputSpec extends SparkSpec {
   }
 
   test("the connected-components operators run on empty tables") {
-    val empty = Files.createTempDirectory("graft-empty").toString
-    Graft.tableNames.foreach { t =>
-      spark.read.parquet(s"$sf/$t.parquet").limit(0).write.parquet(s"$empty/$t.parquet")
-    }
     val ccOperators = Seq("d10_dup_clusters", "d18_minhash_clusters",
       "d28_cluster_sizes", "d37_keeper_regret", "d41_cluster_source_purity",
       "d64_cluster_diameter", "m07_payload_clusters", "p29_cluster_split",
@@ -31,5 +36,18 @@ class EmptyInputSpec extends SparkSpec {
       assert(rows.length <= 1, name) // empty, or one all-totals row
     }
     Graft.release(spark)
+  }
+
+  test("the SQL-backed operators return their declared schema on empty tables") {
+    val failed = SparkEntry.sql.keys.toSeq.sorted.flatMap { name =>
+      val declared = Graft.run(spark, sf, name).schema.map(f => f.name -> f.dataType)
+      try {
+        val df = Graft.run(spark, empty, name)
+        df.collect()
+        val got = df.schema.map(f => f.name -> f.dataType)
+        if (got == declared) None else Some(s"$name: schema $got, declared $declared")
+      } catch { case e: Exception => Some(s"$name: ${e.getMessage.linesIterator.next()}") }
+    }
+    assert(failed.isEmpty, failed.mkString("\n"))
   }
 }

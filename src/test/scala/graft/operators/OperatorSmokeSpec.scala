@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{SparkEntry, SparkSpec}
+import graft.{Graft, SparkEntry, SparkSpec}
 
 /** Spot-checks per operator family at sf0.001 (full oracle equivalence is
   * driven by Verify + the DuckDB gate; these keep `sbt test` meaningful
@@ -523,7 +523,7 @@ class OperatorSmokeSpec extends SparkSpec {
       val s = xs.sorted; val n = s.length
       (s((n - 1) / 2) + s(n / 2)) / 2.0
     }
-    val rows = Relational.q41(spark, sf).collect()
+    val rows = Graft.run(spark, sf, "q41_mad_dispersion").collect()
     assert(rows.length == byseg.size)
     rows.foreach { r =>
       val vals = byseg(r.getString(0)).map(_._2)
@@ -697,7 +697,7 @@ class OperatorSmokeSpec extends SparkSpec {
       assert(ty >= 1 && ty <= nt && hx <= ty)
       assert(r.getAs[Double]("ttr") > 0.0 && r.getAs[Double]("ttr") <= 1.0)
     }
-    Events.e20(spark, sf).collect().foreach { r =>
+    Graft.run(spark, sf, "e20_type_entropy").collect().foreach { r =>
       val h = r.getAs[Double]("entropy")
       val types = r.getAs[Long]("n_types")
       assert(h >= -1e-6 && h <= math.log(types.toDouble) + 1e-6,
@@ -751,7 +751,7 @@ class OperatorSmokeSpec extends SparkSpec {
   }
 
   test("q38 correlation in [-1,1]; e18 bands sum to 1 per type; t16 ordered") {
-    Relational.q38(spark, sf).collect().foreach { r =>
+    Graft.run(spark, sf, "q38_exact_corr").collect().foreach { r =>
       val c = r.getAs[Double]("corr_qty_price")
       assert(c >= -1.0 && c <= 1.0)
     }
@@ -787,7 +787,7 @@ class OperatorSmokeSpec extends SparkSpec {
   }
 
   test("q01 pricing summary: 3x2 flag/status matrix with exact decimal sums") {
-    val rows = Relational.q01(spark, sf).collect()
+    val rows = Graft.run(spark, sf, "q01_pricing_summary").collect()
     assert(rows.length == 6)
     assert(rows.map(_.getAs[String]("l_returnflag")).distinct.sorted.sameElements(Array("A", "N", "R")))
     rows.foreach { r =>
@@ -797,7 +797,7 @@ class OperatorSmokeSpec extends SparkSpec {
   }
 
   test("q07 window rank: exactly top-3 per segment, rank within [1,3]") {
-    val rows = Relational.q07(spark, sf).collect()
+    val rows = Graft.run(spark, sf, "q07_window_rank").collect()
     val bySeg = rows.groupBy(_.getAs[String]("c_mktsegment"))
     assert(bySeg.size == 5)
     bySeg.values.foreach { seg =>
@@ -977,7 +977,7 @@ class OperatorSmokeSpec extends SparkSpec {
 
   test("q27 small-quantity: threshold matches a recomputed per-part average") {
     import org.apache.spark.sql.functions._
-    val rows = Relational.q27(spark, sf).collect()
+    val rows = Graft.run(spark, sf, "q27_small_quantity").collect()
     assert(rows.nonEmpty)
     // recompute the count of qualifying lines independently (double avg,
     // strict inequality far from boundaries in this data)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{Graft, SparkSpec}
 import org.apache.spark.sql.functions._
 
 /** Semantic assertions per relational family — independent of the DuckDB
@@ -40,7 +40,7 @@ class RelationalSpec extends SparkSpec {
   }
 
   test("q09 rollup contains per-pair rows, per-flag margins, and a grand total") {
-    val rows = Relational.q09(spark, sf).collect()
+    val rows = Graft.run(spark, sf, "q09_rollup").collect()
     val grand = rows.filter(r => r.getAs[String]("rf") == "ALL" && r.getAs[String]("ls") == "ALL")
     assert(grand.length == 1)
     val flagMargins = rows.filter(r => r.getAs[String]("rf") != "ALL" && r.getAs[String]("ls") == "ALL")
@@ -50,14 +50,14 @@ class RelationalSpec extends SparkSpec {
   }
 
   test("q24 cube additionally contains per-status margins") {
-    val rows = Relational.q24(spark, sf).collect()
+    val rows = Graft.run(spark, sf, "q24_cube").collect()
     val statusMargins = rows.filter(r => r.getAs[String]("rf") == "ALL" && r.getAs[String]("ls") != "ALL")
     assert(statusMargins.length == 2) // F, O
-    assert(rows.length == Relational.q09(spark, sf).collect().length + 2)
+    assert(rows.length == Graft.run(spark, sf, "q09_rollup").collect().length + 2)
   }
 
   test("q12 set ops partition the 'A' partkeys") {
-    val rows = Relational.q12(spark, sf).collect()
+    val rows = Graft.run(spark, sf, "q12_set_ops").collect()
     val both = rows.filter(_.getAs[String]("tag") == "both").map(_.getAs[Long]("k")).toSet
     val onlyA = rows.filter(_.getAs[String]("tag") == "only_a").map(_.getAs[Long]("k")).toSet
     assert(both.intersect(onlyA).isEmpty)

@@ -44,4 +44,23 @@ class ForeachBatchUpsertSpec extends SparkSpec {
       .as[(Long, Long, String)].collect()
     assert(out.toSeq == Seq((1L, 1L, "y"))) // payload desc — stable across runs
   }
+
+  test("a handler call leaves the session conf and persisted RDDs as it found them") {
+    val dir = Files.createTempDirectory("upsert3").toString
+    val handler = ForeachBatchUpsert.handler(dir, "id", "version", buckets = 2)
+    val modeKey = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(modeKey, "static") // the caller's own choice
+    val baseline = spark.sparkContext.getPersistentRDDs.keySet
+    try {
+      handler(Seq((1L, 1L, "a"), (2L, 1L, "b")).toDF("id", "version", "payload"), 0L)
+      handler(Seq((3L, 1L, "c"), (2L, 2L, "b2")).toDF("id", "version", "payload"), 1L)
+      assert(spark.conf.get(modeKey) == "static")
+      assert((spark.sparkContext.getPersistentRDDs.keySet -- baseline).isEmpty,
+        "the merge snapshot is still persisted after the handler returned")
+      // the overwrite stays dynamic: key 1 survives batch 1
+      val result = spark.read.parquet(dir).select("id", "version", "payload")
+        .as[(Long, Long, String)].collect().sortBy(_._1)
+      assert(result.toSeq == Seq((1L, 1L, "a"), (2L, 2L, "b2"), (3L, 1L, "c")))
+    } finally spark.conf.unset(modeKey)
+  }
 }
