@@ -65,6 +65,30 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   *  - graft extensions (codegen'd vector kernels) pre-registered.
   */
 object Engine {
+  /** Spark's cache of compiled generated classes, set so that a warm
+    * report batch runs on the classes the batch before it compiled:
+    *  - `spark.sql.codegen.cache.maxEntries` (static, default 100). One
+    *    benchmark batch compiles 125-165 classes, so at 100 every warm
+    *    pass evicted, and recompiled with Janino, most of what the pass
+    *    before had compiled: 67-94 classes per warm pass. 1000 holds
+    *    several batches but not the catalogue: one pass over all 505
+    *    keys (sf0.001) compiles 5 885 classes, 10 per operator at the
+    *    median and 74 at most (p02).
+    *  - `spark.sql.codegen.useIdInClassName=false`. AQE numbers codegen
+    *    stages in the order it re-plans them, which varies from run to
+    *    run, and the number is part of the class name, so at 1000 entries
+    *    a warm pass still compiled up to 8 classes of code it already
+    *    had. Cost: generated classes show up in stack traces as
+    *    `GeneratedIterator` without the stage number.
+    * Measured at sf0.01 on 4 cores, five passes per batch
+    * (`plans/r10/codegen_cache.tsv`): warm passes compile 0-2 classes
+    * instead of 67-94, and metaspace (162-163 MB vs 166 MB) and heap
+    * after GC do not grow. The cache is JVM-wide and sized by the first
+    * session that generates code; `SparkSpec` sets the same confs. */
+  val codegenReuse: Map[String, String] = Map(
+    "spark.sql.codegen.cache.maxEntries" -> "1000",
+    "spark.sql.codegen.useIdInClassName" -> "false")
+
   def session(cores: Int, appName: String = "graft"): SparkSession = {
     val spark = SparkSession.builder()
       .appName(appName)
@@ -98,6 +122,7 @@ object Engine {
       // wide aggregations (minhash: 128 min() columns) must stay inside
       // whole-stage codegen; the 100-field default silently drops them out
       .config("spark.sql.codegen.maxFields", "256")
+      .config(codegenReuse)
       // stateful streaming (sessionizer, funnel, reactivation, quota)
       // keeps its per-key state in RocksDB, not on the executor heap:
       // at 100x users the default HDFS-backed in-memory store, not the

@@ -4213,39 +4213,36 @@ object Events {
     * recipe on the type chain).
     *
     * Scale: ONE user-partitioned lag pass builds the |types|²-bounded
-    * count matrix; the 8 iterations are joins on a ≤|types|² frame —
-    * constant work regardless of corpus size. */
+    * (type, next type) count frame, which also yields the per-type event
+    * counts. That frame and everything derived from it runs on one
+    * partition, so the row-normalising window, the observed shares and
+    * the 8 iterations need no shuffle, and the iterations run as one
+    * stage — constant work regardless of corpus size. */
   def e102(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy(col("ms"), col("event_id"))
-    val trans = Tables.events(spark, dir)
-      .withColumn("next_type", lead(col("event_type"), 1).over(w))
-      .filter(col("next_type").isNotNull)
+    // a user's last event keeps a null next_type, so summing n over
+    // next_type gives each type's event count. coalesce(1): every
+    // distribution required below is satisfied by SinglePartition
+    val pairs = Tables.events(spark, dir)
+      .select(col("event_type"), lead(col("event_type"), 1).over(w).as("next_type"))
       .groupBy("event_type", "next_type").agg(count(lit(1)).as("n"))
-    // |types|²-bounded: materialize once so the 8 iterations join a tiny
-    // checkpointed frame instead of re-running the lag pass per round
-    val p = trans
+      .coalesce(1)
+    val p = pairs.filter(col("next_type").isNotNull)
       .withColumn("row_n", sum(col("n")).over(Window.partitionBy("event_type")))
       .select(col("event_type").as("i"), col("next_type").as("j"),
         (dbl(col("n")) / dbl(col("row_n"))).as("p"))
-      .transform(Memo.checkpoint(spark, _))
-    val nTypes = Tables.events(spark, dir).select("event_type").distinct()
-    val v0 = nTypes.crossJoin(broadcast(
-        nTypes.agg(count(lit(1)).as("k"))))
-      .select(col("event_type").as("t"), (lit(1.0d) / dbl(col("k"))).as("v"))
+    // coalesce: as non-nullable as a count
+    val counts = pairs.groupBy("event_type")
+      .agg(coalesce(sum(col("n")), lit(0L)).as("n_events"))
+    val typed = counts.crossJoin(broadcast(
+      counts.agg(count(lit(1)).as("k"), sum(col("n_events")).as("tot"))))
+    val v0 = typed.select(col("event_type").as("t"), (lit(1.0d) / dbl(col("k"))).as("v"))
     val vFinal = (1 to 8).foldLeft(v0) { (v, _) =>
-      v.join(p, col("t") === col("i"))
-        .select(col("j"),
-          round(col("v") * col("p"), 9).cast("decimal(18,9)").as("vp"))
-        .groupBy(col("j").as("t_next"))
-        .agg(dbl(sum(col("vp"))).as("v"))
-        .select(col("t_next").as("t"), col("v"))
+      v.join(p, col("t") === col("i")).groupBy(col("j").as("t"))
+        .agg(dbl(sum(round(col("v") * col("p"), 9).cast("decimal(18,9)"))).as("v"))
     }
-    val counts = Tables.events(spark, dir)
-      .groupBy(col("event_type")).agg(count(lit(1)).as("n_events"))
-    val observed = counts
-      .crossJoin(broadcast(counts.agg(sum(col("n_events")).as("tot"))))
-      .select(col("event_type"), col("n_events"),
-        (dbl(col("n_events")) / dbl(col("tot"))).as("observed_share"))
+    val observed = typed.select(col("event_type"), col("n_events"),
+      (dbl(col("n_events")) / dbl(col("tot"))).as("observed_share"))
     vFinal.join(observed, col("t") === col("event_type"))
       .select(col("event_type"), col("n_events"),
         round(col("observed_share"), 6).as("observed_share"),

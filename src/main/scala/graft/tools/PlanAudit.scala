@@ -215,8 +215,8 @@ object PlanAudit {
     "q111_benford_audit",
     // q112: 1-row global (N, X, mu) broadcast onto the ≤25-nation frame
     "q112_theil_decomposition",
-    // e102: 1-row type-count and event-total broadcasts onto the
-    // |types|-bounded stationary/observed frames
+    // e102: 1-row (type count, event total) broadcast onto the
+    // |types|-bounded per-type count frame (uniform start, observed share)
     "e102_markov_stationary",
     // s43: per-round 1-row norm broadcasts + 1-row n/trace broadcasts
     // onto |dims|-bounded frames

@@ -16,6 +16,9 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     // production session ships with, not the in-memory default
     .config("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    // same compiled-class cache as Engine.session: the cache is JVM-wide
+    // and sized by the first session that generates code
+    .config(graft.engine.Engine.codegenReuse)
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()

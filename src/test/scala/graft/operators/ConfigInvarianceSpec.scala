@@ -3,8 +3,9 @@ package graft.operators
 import graft.{Graft, SparkEntry, SparkSpec}
 
 /** An operator's output must not depend on engine configuration: the
-  * SQL-backed operators give the same rows with one shuffle partition
-  * and AQE off as with seven partitions and AQE on. */
+  * SQL-backed operators, and e102 whose iterations run on a one-partition
+  * frame, give the same rows with one shuffle partition and AQE off as
+  * with seven partitions and AQE on. */
 class ConfigInvarianceSpec extends SparkSpec {
 
   private val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
@@ -14,13 +15,12 @@ class ConfigInvarianceSpec extends SparkSpec {
     Graft.run(spark, sf, name).collect().toSeq.map(_.toString).sorted
   }
 
-  test("SQL-backed operators are invariant to shuffle width and AQE") {
+  /** The operators of `names` whose sorted rows differ between the two
+    * configurations. */
+  private def configDependent(names: Seq[String]): Seq[String] = {
     val saved = keys.map(k => k -> spark.conf.getOption(k))
-    try {
-      val differ = SparkEntry.sql.keys.toSeq.sorted.filter { name =>
-        rowsUnder(Seq("1", "false"), name) != rowsUnder(Seq("7", "true"), name)
-      }
-      assert(differ.isEmpty, s"rows depend on engine config: ${differ.mkString(", ")}")
+    try names.filter { name =>
+      rowsUnder(Seq("1", "false"), name) != rowsUnder(Seq("7", "true"), name)
     } finally {
       saved.foreach {
         case (k, Some(v)) => spark.conf.set(k, v)
@@ -28,5 +28,14 @@ class ConfigInvarianceSpec extends SparkSpec {
       }
       Graft.release(spark)
     }
+  }
+
+  test("SQL-backed operators are invariant to shuffle width and AQE") {
+    val differ = configDependent(SparkEntry.sql.keys.toSeq.sorted)
+    assert(differ.isEmpty, s"rows depend on engine config: ${differ.mkString(", ")}")
+  }
+
+  test("e102's single-partition iterations are invariant to shuffle width and AQE") {
+    assert(configDependent(Seq("e102_markov_stationary")).isEmpty)
   }
 }

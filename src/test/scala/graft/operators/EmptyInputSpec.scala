@@ -38,6 +38,15 @@ class EmptyInputSpec extends SparkSpec {
     Graft.release(spark)
   }
 
+  test("e102 over zero events returns no rows and its declared schema") {
+    val name = "e102_markov_stationary"
+    val declared = Graft.run(spark, sf, name).schema
+    val df = Graft.run(spark, empty, name)
+    assert(df.collect().isEmpty)
+    assert(df.schema == declared)
+    Graft.release(spark)
+  }
+
   test("the SQL-backed operators return their declared schema on empty tables") {
     val failed = SparkEntry.sql.keys.toSeq.sorted.flatMap { name =>
       val declared = Graft.run(spark, sf, name).schema.map(f => f.name -> f.dataType)
