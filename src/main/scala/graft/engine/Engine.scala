@@ -3,55 +3,22 @@ package graft.engine
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-import graft.functions.{DotProduct, VecLshKeys, VecNorm, VecSignBits, WinnowFingerprints, WordNGrams, WordTokens}
+import graft.functions.VectorFunctions
 import graft.plans.CosineTopKStrategy
 
-/** Injects graft's codegen'd expressions into every session built with
-  * these extensions — usable via `spark.sql.extensions=graft.engine.GraftExtensions`
-  * on any cluster (spark-submit) or through [[Engine.session]] locally.
+/** Injects graft's codegen'd expressions (every function in
+  * `VectorFunctions.functions`) and its planner strategy into every
+  * session built with these extensions — usable via
+  * `spark.sql.extensions=graft.engine.GraftExtensions` on any cluster
+  * (spark-submit) or through [[Engine.session]] locally.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => CosineTopKStrategy)
-    ext.injectFunction((
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "vec_dot"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        DotProduct(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("vec_norm"),
-      new ExpressionInfo(classOf[VecNorm].getName, "vec_norm"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        VecNorm(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("word_tokens"),
-      new ExpressionInfo(classOf[WordTokens].getName, "word_tokens"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        WordTokens(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("word_ngrams"),
-      new ExpressionInfo(classOf[WordNGrams].getName, "word_ngrams"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        WordNGrams(exprs.head, exprs(1).eval().asInstanceOf[Int])))
-    ext.injectFunction((
-      FunctionIdentifier("vec_sign_bits"),
-      new ExpressionInfo(classOf[VecSignBits].getName, "vec_sign_bits"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        VecSignBits(exprs.head, exprs(1).eval().asInstanceOf[Int],
-          exprs(2).eval().asInstanceOf[Int])))
-    ext.injectFunction((
-      FunctionIdentifier("vec_lsh_keys"),
-      new ExpressionInfo(classOf[VecLshKeys].getName, "vec_lsh_keys"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        VecLshKeys(exprs.head, exprs(1).eval().asInstanceOf[Int],
-          exprs(2).eval().asInstanceOf[Int], exprs(3).eval().asInstanceOf[Int],
-          exprs(4).eval().asInstanceOf[Int])))
-    ext.injectFunction((
-      FunctionIdentifier("winnow_fps"),
-      new ExpressionInfo(classOf[WinnowFingerprints].getName, "winnow_fps"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        WinnowFingerprints(exprs.head, exprs(1).eval().asInstanceOf[Int],
-          exprs(2).eval().asInstanceOf[Int])))
+    VectorFunctions.functions.foreach { case (name, builder) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(builder.getClass.getName, name), builder))
+    }
   }
 }
 

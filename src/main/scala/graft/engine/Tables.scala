@@ -5,9 +5,12 @@ import java.util.Locale
 import scala.collection.immutable.ListMap
 
 import org.apache.spark.sql.{DataFrame, GraftPlanFactory, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.analysis.{TypeCheckResult, UnresolvedFunction, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, IntegralDivide, RuntimeReplaceable, UnaryExpression, UnixMillis}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
 /** Schema-checked loaders for the driver-generated parquet tables.
   *
@@ -115,7 +118,7 @@ object Tables {
     * NTZ→timestamp cast is an identity reinterpretation.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+    import org.apache.spark.sql.types.LongType
     val raw = load(spark, dir, "events")
     val ms = raw.schema("ts").dataType match {
       case LongType         => expr("ts div 1000000")
@@ -143,7 +146,18 @@ object Tables {
     * (`/*+ BROADCAST(nation) */`) and qualified columns still resolve.
     * Registers no view and changes no session state, so temp views of
     * another directory never leak in. An unknown table name fails with
-    * an error that names it. */
+    * an error that names it.
+    *
+    * Two DuckDB function names bind too, so one text runs in both
+    * engines and in any session, with or without `GraftExtensions`:
+    *   - `epoch_ms(t)`, t a TIMESTAMP or TIMESTAMP_NTZ: epoch
+    *     milliseconds, `unix_millis(CAST(t AS TIMESTAMP))`, the value of
+    *     [[events]]' `ms` (UTC session). DuckDB's other form,
+    *     `epoch_ms(BIGINT)` (ms → timestamp), fails analysis.
+    *   - `divide(a, b)`: integer division, Spark's `a div b`. Both
+    *     engines truncate toward zero (`divide(-7, 2)` = -3). Texts write
+    *     `divide(a, b)`, never DuckDB's `a // b`, which Spark cannot
+    *     parse. */
   def sql(spark: SparkSession, dir: String, text: String): DataFrame = {
     val parsed = GraftPlanFactory.parsePlan(spark, text)
     def cteNames(plan: LogicalPlan): Seq[String] = plan.collectWithSubqueries {
@@ -162,7 +176,32 @@ object Tables {
         val load = loaders.getOrElse(name, throw new IllegalArgumentException(
           s"unknown table '$name'; known: ${loaders.keys.mkString(", ")}"))
         SubqueryAlias(name, GraftPlanFactory.analyzed(load(spark, dir)))
+      case p => p.transformExpressionsUp {
+        case f: UnresolvedFunction if f.nameParts.size == 1 =>
+          (f.nameParts.head.toLowerCase(Locale.ROOT), f.arguments) match {
+            case ("epoch_ms", Seq(t)) => EpochMs(t)
+            case ("divide", Seq(a, b)) => new IntegralDivide(a, b)
+            case _ => f
+          }
+      }
     }
     GraftPlanFactory.ofRows(spark, bind(parsed))
   }
+}
+
+/** DuckDB's `epoch_ms(timestamp)` as [[Tables.sql]] binds it. Type-checked
+  * under its DuckDB name, so a BIGINT argument fails analysis with an
+  * error that names `epoch_ms`; the optimizer replaces it with
+  * `unix_millis(CAST(t AS TIMESTAMP))`. */
+private[engine] case class EpochMs(child: Expression)
+    extends UnaryExpression with RuntimeReplaceable {
+  override lazy val replacement: Expression =
+    UnixMillis(Cast(child, TimestampType, Some(SQLConf.get.sessionLocalTimeZone)))
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case TimestampType | TimestampNTZType => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"epoch_ms takes a TIMESTAMP or TIMESTAMP_NTZ, not ${other.sql}")
+  }
+  override def prettyName: String = "epoch_ms"
+  override protected def withNewChildInternal(c: Expression): EpochMs = copy(child = c)
 }

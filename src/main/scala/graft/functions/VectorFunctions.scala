@@ -22,10 +22,6 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, 
   * result to `aggregate(zip_with(cast, cast, *), 0D, +)`.
   */
 object VectorFunctions {
-  /** Idempotently register the graft kernel functions with a session.
-    * Guarded PER FUNCTION (a single-function guard would silently skip
-    * functions added later; unconditional createOrReplace spams replace
-    * warnings on every operator call). */
   /** Resolve argument `pos` of `fn` as a foldable INT-range integer
     * literal, with an analysis-time error naming the expected shape —
     * `exprs(i).eval().asInstanceOf[Int]` would instead throw a bare
@@ -48,44 +44,54 @@ object VectorFunctions {
     }
   }
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def ensure(name: String)(builder: Seq[Expression] => Expression): Unit =
-      if (!reg.functionExists(FunctionIdentifier(name)))
-        reg.createOrReplaceTempFunction(name, builder, "built-in")
-    ensure("vec_dot")(exprs => DotProduct(exprs.head, exprs(1)))
-    ensure("vec_norm")(exprs => VecNorm(exprs.head))
-    ensure("word_tokens")(exprs => WordTokens(exprs.head))
-    ensure("word_ngrams")(exprs => WordNGrams(exprs.head,
-      intArg("word_ngrams", 1, exprs)))
-    ensure("vec_sign_bits")(exprs => VecSignBits(exprs.head,
-      intArg("vec_sign_bits", 1, exprs), intArg("vec_sign_bits", 2, exprs)))
-    ensure("vec_lsh_keys")(exprs => VecLshKeys(exprs.head,
+  /** Every graft SQL function, by name. Both registration paths read this
+    * one table: [[register]] on a running session, and `GraftExtensions`
+    * for sessions built with `spark.sql.extensions`. */
+  val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "vec_dot" -> (exprs => DotProduct(exprs.head, exprs(1))),
+    "vec_norm" -> (exprs => VecNorm(exprs.head)),
+    "word_tokens" -> (exprs => WordTokens(exprs.head)),
+    "word_ngrams" -> (exprs => WordNGrams(exprs.head,
+      intArg("word_ngrams", 1, exprs))),
+    "vec_sign_bits" -> (exprs => VecSignBits(exprs.head,
+      intArg("vec_sign_bits", 1, exprs), intArg("vec_sign_bits", 2, exprs))),
+    "vec_lsh_keys" -> (exprs => VecLshKeys(exprs.head,
       intArg("vec_lsh_keys", 1, exprs), intArg("vec_lsh_keys", 2, exprs),
-      intArg("vec_lsh_keys", 3, exprs), intArg("vec_lsh_keys", 4, exprs)))
-    ensure("winnow_fps")(exprs => WinnowFingerprints(exprs.head,
-      intArg("winnow_fps", 1, exprs), intArg("winnow_fps", 2, exprs)))
-    ensure("simhash64")(exprs => SimHash64(exprs.head))
-    ensure("char_class_counts")(exprs => CharClassCounts(exprs.head))
+      intArg("vec_lsh_keys", 3, exprs), intArg("vec_lsh_keys", 4, exprs))),
+    "winnow_fps" -> (exprs => WinnowFingerprints(exprs.head,
+      intArg("winnow_fps", 1, exprs), intArg("winnow_fps", 2, exprs))),
+    "simhash64" -> (exprs => SimHash64(exprs.head)),
+    "char_class_counts" -> (exprs => CharClassCounts(exprs.head)),
     // Spark's own runtime-filter machinery, exposed as callable functions:
     // bloom_agg(xxhash64(x), estItems, numBits) builds a serialized bloom
     // filter; bloom_contains(filterBinary, xxhash64(x)) probes it. These are
     // the codegen'd expressions InjectRuntimeFilter plants on shuffle joins —
     // reused here for explicit sketch-prefilter operators (d14).
-    ensure("bloom_agg")(exprs => new BloomFilterAggregate(exprs.head, exprs(1), exprs(2)))
-    ensure("bloom_contains")(exprs => BloomFilterMightContain(exprs.head, exprs(1)))
-    ensure("sq8_encode")(exprs => Sq8Encode(exprs.head))
-    ensure("sq8_cos")(exprs => Sq8Cos(exprs.head, exprs(1)))
+    "bloom_agg" -> (exprs => new BloomFilterAggregate(exprs.head, exprs(1), exprs(2))),
+    "bloom_contains" -> (exprs => BloomFilterMightContain(exprs.head, exprs(1))),
+    "sq8_encode" -> (exprs => Sq8Encode(exprs.head)),
+    "sq8_cos" -> (exprs => Sq8Cos(exprs.head, exprs(1))),
     // KMV distinct sketch (TypedImperativeAggregate; the analyzer wraps
     // AggregateFunctions from the registry, same as bloom_agg above)
-    ensure("kmv_distinct")(exprs => KmvDistinct(exprs.head,
-      intArg("kmv_distinct", 1, exprs)))
+    "kmv_distinct" -> (exprs => KmvDistinct(exprs.head,
+      intArg("kmv_distinct", 1, exprs))),
     // corpus-scale 64-bit-domain variant (rows-only — see its scaladoc)
-    ensure("kmv_distinct64")(exprs => KmvDistinct64(exprs.head,
-      intArg("kmv_distinct64", 1, exprs)))
+    "kmv_distinct64" -> (exprs => KmvDistinct64(exprs.head,
+      intArg("kmv_distinct64", 1, exprs))),
     // deterministic bottom-k priority sampling (oracle-checked via p48)
-    ensure("bottomk_sample")(exprs => BottomKSample(exprs.head, exprs(1),
-      intArg("bottomk_sample", 2, exprs)))
+    "bottomk_sample" -> (exprs => BottomKSample(exprs.head, exprs(1),
+      intArg("bottomk_sample", 2, exprs))))
+
+  /** Idempotently register [[functions]] with a session. Guarded PER
+    * FUNCTION (a single-function guard would silently skip functions
+    * added later; unconditional createOrReplace spams replace warnings on
+    * every operator call). */
+  def register(spark: SparkSession): Unit = {
+    val reg = spark.sessionState.functionRegistry
+    functions.foreach { case (name, builder) =>
+      if (!reg.functionExists(FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name, builder, "built-in")
+    }
   }
 
   private[functions] def elemGetter(et: DataType, arr: String, i: String): String = et match {

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.engine.{Qf, Tables}
+import graft.engine.Tables
 import graft.engine.Qf._
 
 /** Event analytics (SURVEY.md §2.2): the KSE pipeline's query surface in
@@ -14,9 +14,15 @@ import graft.engine.Qf._
   * Scale notes: every window partitions by `user_id` (bounded state per
   * key); aggregations are map-side-combinable; no driver-side loops.
   *
-  * The keys in `sql` are operators that are their oracle text, bound to
-  * the table loaders by `Tables.sql` (see `Relational`); their DuckDB
-  * compare is a cross-engine check, not a second implementation.
+  * The keys in `sql` (most of the family) are operators that are their
+  * oracle text, bound to the table loaders by `Tables.sql` (see
+  * `Relational`); their DuckDB compare is a cross-engine check, not a
+  * second implementation. Their texts read time as `epoch_ms(ts)`, which
+  * `Tables.sql` binds to the same value as the loader's `ms`, and divide
+  * integers with `divide(a, b)`, never DuckDB's `//`. The DataFrame
+  * operators left in `queries` are the ones whose text Spark cannot run
+  * (HUGEINT, `strftime`, `UNNEST`, ASOF joins, ...) or whose bound text
+  * plans differently from the DataFrame form.
   */
 object Events {
   type Q = (SparkSession, String) => DataFrame
@@ -24,9 +30,21 @@ object Events {
   private val GapMs = 30L * 60 * 1000 // 30-minute session gap
 
   // ---------------------------------------------------------------- e01
-  /** Gap-based sessionization (30 min) via lag + cumulative-sum windows.
-    * Core on a prepared (user_id, event_id, ms) frame so the skew-aware
-    * variant (e09) can be equivalence-tested against it on synthetic data. */
+  /** Gap-based sessionization (30 min) via lag + cumulative-sum windows. */
+  val e01Sql: String =
+    s"""WITH e AS (SELECT user_id, event_id, epoch_ms(ts) AS ms FROM events),
+       |l AS (SELECT *, LAG(ms) OVER (PARTITION BY user_id ORDER BY ms, event_id) AS prev_ms FROM e),
+       |f AS (SELECT *, CASE WHEN prev_ms IS NULL OR ms - prev_ms > $GapMs THEN 1 ELSE 0 END AS new_sess FROM l),
+       |s AS (SELECT *, CAST(SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ms, event_id
+       |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS sess_idx FROM f)
+       |SELECT user_id, sess_idx, COUNT(*) AS n_events, MIN(ms) AS start_ms, MAX(ms) AS end_ms,
+       |  MAX(ms) - MIN(ms) AS dur_ms
+       |FROM s GROUP BY user_id, sess_idx ORDER BY user_id, sess_idx""".stripMargin
+
+  // ---------------------------------------------------------------- e09
+  /** e01's sessionization as DataFrame code on a prepared
+    * (user_id, event_id, ms) frame: the reference the skew-aware variant
+    * below is equivalence-tested against on synthetic data. */
   private[operators] def sessionize(events: DataFrame, gapMs: Long = GapMs): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy(col("ms"), col("event_id"))
     val wr = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -44,10 +62,6 @@ object Events {
       .orderBy("user_id", "sess_idx")
   }
 
-  def e01(spark: SparkSession, dir: String): DataFrame =
-    sessionize(Tables.events(spark, dir))
-
-  // ---------------------------------------------------------------- e09
   /** Whale-key-hardened sessionization: split-and-stitch. Identical output
     * to e01 (same oracle), but no window partition ever holds more than
     * one (user, time-block) of events — a user with 10^9 events no longer
@@ -96,15 +110,6 @@ object Events {
 
   def e09(spark: SparkSession, dir: String): DataFrame =
     sessionizeSplit(Tables.events(spark, dir))
-  val e01Sql: String =
-    s"""WITH e AS (SELECT user_id, event_id, epoch_ms(ts) AS ms FROM events),
-       |l AS (SELECT *, LAG(ms) OVER (PARTITION BY user_id ORDER BY ms, event_id) AS prev_ms FROM e),
-       |f AS (SELECT *, CASE WHEN prev_ms IS NULL OR ms - prev_ms > $GapMs THEN 1 ELSE 0 END AS new_sess FROM l),
-       |s AS (SELECT *, CAST(SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ms, event_id
-       |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS sess_idx FROM f)
-       |SELECT user_id, sess_idx, COUNT(*) AS n_events, MIN(ms) AS start_ms, MAX(ms) AS end_ms,
-       |  MAX(ms) - MIN(ms) AS dur_ms
-       |FROM s GROUP BY user_id, sess_idx ORDER BY user_id, sess_idx""".stripMargin
 
   // ---------------------------------------------------------------- e02
   /** 1-hour tumbling window counts / sums / distinct users by type. */
@@ -125,22 +130,6 @@ object Events {
 
   // ---------------------------------------------------------------- e03
   /** Ordered funnel view → click → purchase (strictly increasing time). */
-  def e03(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(spark, dir).select("user_id", "event_type", "ms")
-    val v = e.filter(col("event_type") === "view")
-      .groupBy("user_id").agg(min("ms").as("vms"))
-    val c = e.filter(col("event_type") === "click").join(v, "user_id")
-      .filter(col("ms") > col("vms"))
-      .groupBy("user_id").agg(min("ms").as("cms"))
-    val p = e.filter(col("event_type") === "purchase").join(c, "user_id")
-      .filter(col("ms") > col("cms"))
-      .groupBy("user_id").agg(min("ms").as("pms"))
-    v.agg(count(lit(1)).as("n_users")).withColumn("stage", lit("step1_view"))
-      .unionByName(c.agg(count(lit(1)).as("n_users")).withColumn("stage", lit("step2_click")))
-      .unionByName(p.agg(count(lit(1)).as("n_users")).withColumn("stage", lit("step3_purchase")))
-      .select("stage", "n_users")
-      .orderBy("stage")
-  }
   val e03Sql: String =
     """WITH e AS (SELECT user_id, event_type, epoch_ms(ts) AS ms FROM events),
       |v AS (SELECT user_id, MIN(ms) AS vms FROM e WHERE event_type = 'view' GROUP BY user_id),
@@ -155,18 +144,6 @@ object Events {
 
   // ---------------------------------------------------------------- e04
   /** Day-0 → day-N cohort retention on distinct active days. */
-  def e04(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.events(spark, dir)
-      .select(col("user_id"), floor(col("ms") / lit(86400000.0d)).as("day"))
-      .distinct()
-    val f = d.groupBy("user_id").agg(min("day").as("day0"))
-    d.join(f, "user_id")
-      .withColumn("day_offset", (col("day") - col("day0")).cast("long"))
-      .filter(col("day_offset").isin(0L, 1L, 2L, 3L, 7L, 14L))
-      .groupBy("day_offset")
-      .agg(countDistinct(col("user_id")).as("n_users"))
-      .orderBy("day_offset")
-  }
   val e04Sql: String =
     """WITH d AS (SELECT DISTINCT user_id, CAST(FLOOR(epoch_ms(ts) / 86400000.0) AS BIGINT) AS day FROM events),
       |f AS (SELECT user_id, MIN(day) AS day0 FROM d GROUP BY user_id)
@@ -235,20 +212,6 @@ object Events {
   // ---------------------------------------------------------------- e07
   /** Per-user lifetime stats: activity span, per-type counts, purchase
     * value — the profile table a personalization pipeline materializes. */
-  def e07(spark: SparkSession, dir: String): DataFrame = {
-    def cntIf(t: String) = sum(when(col("event_type") === t, 1L).otherwise(0L))
-    Tables.events(spark, dir)
-      .groupBy("user_id")
-      .agg(count(lit(1)).as("n_events"),
-           min(col("ms")).as("first_ms"),
-           max(col("ms")).as("last_ms"),
-           cntIf("view").as("n_views"),
-           cntIf("click").as("n_clicks"),
-           cntIf("purchase").as("n_purchases"),
-           dbl(sum(when(col("event_type") === "purchase", dec(col("value")))
-             .otherwise(lit(0).cast(Qf.D12)))).as("purchase_value"))
-      .orderBy("user_id")
-  }
   val e07Sql: String =
     """SELECT user_id, COUNT(*) AS n_events,
       |  MIN(epoch_ms(ts)) AS first_ms, MAX(epoch_ms(ts)) AS last_ms,
@@ -384,17 +347,6 @@ object Events {
     * user (bounded per-key state), then a map-side-combinable groupBy of
     * at most |types|^2 groups — the shuffle carries 25 partial rows per
     * task regardless of event volume. */
-  def e12(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy(col("ms"), col("event_id"))
-    Tables.events(spark, dir)
-      .withColumn("next_type", lead(col("event_type"), 1).over(w))
-      .withColumn("gap_ms", lead(col("ms"), 1).over(w) - col("ms"))
-      .filter(col("next_type").isNotNull)
-      .groupBy("event_type", "next_type")
-      .agg(count(lit(1)).as("n"),
-           (dbl(sum(col("gap_ms"))) / count(lit(1))).as("avg_gap_ms"))
-      .orderBy("event_type", "next_type")
-  }
   val e12Sql: String =
     """WITH e AS (SELECT user_id, event_id, event_type, epoch_ms(ts) AS ms FROM events),
       |t AS (
@@ -635,19 +587,6 @@ object Events {
     * groupBy has at most |types|^3 = 125 groups, map-side-combinable —
     * the shuffle carries ≤125 partial rows per task at any event volume.
     * span_ms sums are exact bigint; the mean is one IEEE division. */
-  def e17(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy(col("ms"), col("event_id"))
-    Tables.events(spark, dir)
-      .select(col("user_id"), col("event_id"), col("event_type"), col("ms"))
-      .withColumn("t2", lead(col("event_type"), 1).over(w))
-      .withColumn("t3", lead(col("event_type"), 2).over(w))
-      .withColumn("span_ms", lead(col("ms"), 2).over(w) - col("ms"))
-      .filter(col("t3").isNotNull)
-      .groupBy(col("event_type").as("step1"), col("t2").as("step2"), col("t3").as("step3"))
-      .agg(count(lit(1)).as("n"),
-           (dbl(sum(col("span_ms"))) / count(lit(1))).as("avg_span_ms"))
-      .orderBy(col("n").desc, col("step1"), col("step2"), col("step3"))
-  }
   val e17Sql: String =
     """WITH e AS (SELECT user_id, event_id, event_type, epoch_ms(ts) AS ms FROM events),
       |t AS (
@@ -670,24 +609,6 @@ object Events {
     * One lag window per user (bounded state), a ≤ |types|x4-group
     * map-combinable count, and a per-type total via an equi-join on
     * event_type (no 1-row broadcast needed); pct is one IEEE division. */
-  def e18(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy(col("ms"), col("event_id"))
-    val gaps = Tables.events(spark, dir)
-      .select(col("user_id"), col("event_id"), col("event_type"), col("ms"))
-      .withColumn("gap_ms", col("ms") - lag(col("ms"), 1).over(w))
-      .filter(col("gap_ms").isNotNull)
-      .withColumn("band",
-        when(col("gap_ms") < 1000L, "a_lt_1s")
-          .when(col("gap_ms") < 60000L, "b_lt_1m")
-          .when(col("gap_ms") < 3600000L, "c_lt_1h")
-          .otherwise("d_ge_1h"))
-    val counts = gaps.groupBy("event_type", "band").agg(count(lit(1)).as("n"))
-    val totals = gaps.groupBy("event_type").agg(count(lit(1)).as("t"))
-    counts.join(totals, "event_type")
-      .select(col("event_type"), col("band"), col("n"),
-        (col("n").cast("double") / col("t")).as("pct"))
-      .orderBy("event_type", "band")
-  }
   val e18Sql: String =
     """WITH e AS (SELECT user_id, event_id, event_type, epoch_ms(ts) AS ms FROM events),
       |g AS (
@@ -798,17 +719,6 @@ object Events {
     * Thursday → dow = (day+4) mod 7, 0=Sunday — matching DuckDB's
     * dayofweek), never from timezone-dependent timestamp formatting. One
     * map-combinable groupBy to ≤168 cells, a 7-row totals equi-join. */
-  def e21(spark: SparkSession, dir: String): DataFrame = {
-    val cells = Tables.events(spark, dir)
-      .select(((floor(col("ms") / 86400000L) + 4) % 7).cast("long").as("dow"),
-              floor((col("ms") % 86400000L) / 3600000L).cast("long").as("hod"))
-      .groupBy("dow", "hod").agg(count(lit(1)).as("n"))
-    val totals = cells.groupBy("dow").agg(sum(col("n")).as("t"))
-    cells.join(totals, "dow")
-      .select(col("dow"), col("hod"), col("n"),
-        (col("n").cast("double") / col("t")).as("share_of_dow"))
-      .orderBy("dow", "hod")
-  }
   val e21Sql: String =
     """WITH e AS (SELECT epoch_ms(ts) AS ms FROM events),
       |c AS (SELECT CAST((FLOOR(ms / 86400000) + 4) % 7 AS BIGINT) AS dow,
@@ -882,29 +792,6 @@ object Events {
     * same-key aggregations. Purchase value sums in DECIMAL(12,2); the
     * conversion and mean duration are each ONE IEEE division of exact
     * operands. */
-  def e23(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy(col("ms"), col("event_id"))
-    val wr = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val zero = dec(lit(0.0d))
-    val sess = Tables.events(spark, dir)
-      .select(col("user_id"), col("event_id"), col("ms"), col("event_type"), col("value"))
-      .withColumn("prev_ms", lag(col("ms"), 1).over(w))
-      .withColumn("new_sess",
-        when(col("prev_ms").isNull || col("ms") - col("prev_ms") > GapMs, 1L).otherwise(0L))
-      .withColumn("sess_idx", sum(col("new_sess")).over(wr))
-      .groupBy("user_id", "sess_idx")
-      .agg((max(col("ms")) - min(col("ms"))).as("dur_ms"),
-           max(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("has_purchase"),
-           sum(when(col("event_type") === "purchase",
-             dec(coalesce(col("value"), lit(0.0d)))).otherwise(zero)).as("rev"))
-    sess.groupBy("user_id")
-      .agg(count(lit(1)).as("n_sessions"),
-           sum(col("has_purchase")).as("n_purchase_sessions"),
-           (dbl(sum(col("has_purchase"))) / count(lit(1))).as("conversion"),
-           (dbl(sum(col("dur_ms"))) / count(lit(1))).as("avg_dur_ms"),
-           dbl(sum(col("rev"))).as("purchase_value"))
-      .orderBy("user_id")
-  }
   val e23Sql: String =
     s"""WITH e AS (SELECT user_id, event_id, event_type, value, epoch_ms(ts) AS ms FROM events),
        |l AS (SELECT *, LAG(ms) OVER (PARTITION BY user_id ORDER BY ms, event_id) AS prev_ms FROM e),
@@ -972,24 +859,6 @@ object Events {
     * join carrying the previous stage's anchor timestamp — no windows,
     * no session state; at 100 TB the chain is three uniform-key
     * shuffles, each smaller than the last (the funnel IS the filter). */
-  def e25(spark: SparkSession, dir: String): DataFrame = {
-    val H = 3600000L
-    val e = Tables.events(spark, dir).select(col("user_id"), col("event_type"), col("ms"))
-    val v = e.filter(col("event_type") === "view")
-      .groupBy("user_id").agg(min(col("ms")).as("v_ms"))
-    val c = e.filter(col("event_type") === "click").join(v, "user_id")
-      .filter(col("ms") > col("v_ms") && col("ms") <= col("v_ms") + H)
-      .groupBy("user_id").agg(min(col("ms")).as("c_ms"))
-    val p = e.filter(col("event_type") === "purchase").join(c, "user_id")
-      .filter(col("ms") > col("c_ms") && col("ms") <= col("c_ms") + H)
-      .groupBy("user_id").agg(min(col("ms")).as("p_ms"))
-    def lvl(df: DataFrame, step: Long, name: String) =
-      df.agg(count(lit(1)).as("n_users"))
-        .select(lit(step).as("step"), lit(name).as("stage"), col("n_users"))
-    lvl(v, 1L, "view").unionByName(lvl(c, 2L, "click_1h"))
-      .unionByName(lvl(p, 3L, "purchase_1h"))
-      .orderBy("step")
-  }
   val e25Sql: String =
     """WITH e AS (SELECT user_id, event_type, epoch_ms(ts) AS ms FROM events),
       |v AS (SELECT user_id, MIN(ms) AS v_ms FROM e WHERE event_type = 'view' GROUP BY 1),
@@ -1009,29 +878,6 @@ object Events {
     * total order. Both touches resolve via row_number over bounded
     * per-key partitions (user history / per-purchase candidates); the
     * rollup is decimal-exact so the two engines' sum order can differ. */
-  def e26(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-      .select(col("user_id"), col("event_id"), col("event_type"), col("ms"), col("value"))
-    val purch = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("event_id").as("pid"), col("ms").as("p_ms"), col("value"))
-    val wFirst = Window.partitionBy("user_id").orderBy(col("ms"), col("event_id"))
-    val first = ev
-      .withColumn("rn", row_number().over(wFirst)).filter(col("rn") === 1)
-      .select(col("user_id"), col("event_type").as("touch_type"))
-    val firstModel = purch.join(first, "user_id")
-      .select(lit("first_touch").as("model"), col("touch_type"), col("value"))
-    val wLast = Window.partitionBy("pid").orderBy(col("ms").desc, col("event_id").desc)
-    val lastModel = purch
-      .join(ev.select(col("user_id"), col("event_id"), col("event_type"), col("ms")), Seq("user_id"))
-      .filter(col("ms") < col("p_ms") ||
-              (col("ms") === col("p_ms") && col("event_id") < col("pid")))
-      .withColumn("rn", row_number().over(wLast)).filter(col("rn") === 1)
-      .select(lit("last_touch").as("model"), col("event_type").as("touch_type"), col("value"))
-    firstModel.unionByName(lastModel)
-      .groupBy("model", "touch_type")
-      .agg(count(lit(1)).as("n_purchases"), dsum(col("value")).as("total_value"))
-      .orderBy("model", "touch_type")
-  }
   val e26Sql: String =
     """WITH e AS (SELECT user_id, event_id, event_type, epoch_ms(ts) AS ms, value FROM events),
       |p AS (SELECT user_id, event_id AS pid, ms AS p_ms, value FROM e
@@ -1053,15 +899,8 @@ object Events {
       |FROM (SELECT * FROM fm UNION ALL SELECT * FROM lm)
       |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
-  // ---------------------------------------------------------------- e27
-  /** Session co-occurrence matrix: for each unordered event-type pair,
-    * how many sessions contain both — the signal behind "views and
-    * errors co-occur" style diagnoses. Reuses e01's gap-labeling window
-    * chain (user-partitioned, bounded state); the pair join is a
-    * self-join on (user, session) of the DISTINCT per-session type set,
-    * so its width is bounded by |event types| per session, not events. */
   /** Per-event (user, sess_idx, event_type) rows off e01's gap-labeling
-    * chain — the base of every session-granular view (e27/e31/e35). */
+    * chain — the base of e31's session type sets. */
   private def sessionLabeled(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy(col("ms"), col("event_id"))
     val wr = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1073,8 +912,8 @@ object Events {
       .withColumn("sess_idx", sum(col("new_sess")).over(wr))
       .select(col("user_id"), col("sess_idx"), col("event_type"))
   }
-  /** DISTINCT (user, session, event_type) triples — the frame behind e27
-    * (co-occurrence) and e31 (lift). */
+  /** DISTINCT (user, session, event_type) triples — the frame behind e31
+    * (lift); `sessionTypeSetsCte` is its SQL form. */
   private def sessionTypeSets(spark: SparkSession, dir: String): DataFrame =
     sessionLabeled(spark, dir).distinct()
   /** Shared CTE chain: `s` = per-event rows with sess_idx — the SQL
@@ -1091,15 +930,13 @@ object Events {
     s"""$sessionLabelCte,
        |d AS (SELECT DISTINCT user_id, sess_idx, event_type FROM s)""".stripMargin
 
-  def e27(spark: SparkSession, dir: String): DataFrame = {
-    val labeled = sessionTypeSets(spark, dir)
-    labeled.as("a").join(labeled.as("b"),
-        col("a.user_id") === col("b.user_id") && col("a.sess_idx") === col("b.sess_idx") &&
-          col("a.event_type") < col("b.event_type"))
-      .groupBy(col("a.event_type").as("type_a"), col("b.event_type").as("type_b"))
-      .agg(count(lit(1)).as("n_sessions"))
-      .orderBy("type_a", "type_b")
-  }
+  // ---------------------------------------------------------------- e27
+  /** Session co-occurrence matrix: for each unordered event-type pair,
+    * how many sessions contain both — the signal behind "views and
+    * errors co-occur" style diagnoses. Reuses e01's gap-labeling window
+    * chain (user-partitioned, bounded state); the pair join is a
+    * self-join on (user, session) of the DISTINCT per-session type set,
+    * so its width is bounded by |event types| per session, not events. */
   val e27Sql: String =
     s"""WITH $sessionTypeSetsCte
        |SELECT a.event_type AS type_a, b.event_type AS type_b, COUNT(*) AS n_sessions
@@ -1118,30 +955,6 @@ object Events {
     * the WEEK-level frame (active(w-1) - retained(w)) via a broadcast
     * equi self-join of the |weeks|-bounded rollup shifted one week — no
     * single-partition window, no second pass over events. */
-  def e28(spark: SparkSession, dir: String): DataFrame = {
-    val WeekMs = 7L * 86400000L
-    val uw = Tables.events(spark, dir)
-      .select(col("user_id"), (col("ms") - pmod(col("ms"), lit(WeekMs))).as("wk"))
-      .distinct()
-    val lagW = Window.partitionBy("user_id").orderBy("wk")
-    val cls = uw.withColumn("prev", lag(col("wk"), 1).over(lagW))
-      .withColumn("state",
-        when(col("prev").isNull, "new")
-          .when(col("prev") === col("wk") - WeekMs, "retained")
-          .otherwise("resurrected"))
-    val g = cls.groupBy("wk")
-      .agg(count(lit(1)).as("active"),
-           sum(when(col("state") === "new", 1L).otherwise(0L)).as("n_new"),
-           sum(when(col("state") === "retained", 1L).otherwise(0L)).as("n_retained"),
-           sum(when(col("state") === "resurrected", 1L).otherwise(0L)).as("n_resurrected"))
-    g.join(broadcast(g.select((col("wk") + WeekMs).as("wk"),
-                              col("active").as("prev_active"))),
-           Seq("wk"), "left")
-      .withColumn("n_churned",
-        coalesce(col("prev_active") - col("n_retained"), lit(0L)))
-      .drop("prev_active")
-      .orderBy("wk")
-  }
   val e28Sql: String =
     """WITH uw AS (SELECT DISTINCT user_id,
       |    epoch_ms(ts) - epoch_ms(ts) % 604800000 AS wk FROM events),
@@ -1156,7 +969,7 @@ object Events {
       |    SUM(CASE WHEN state = 'retained' THEN 1 ELSE 0 END)::BIGINT AS n_retained,
       |    SUM(CASE WHEN state = 'resurrected' THEN 1 ELSE 0 END)::BIGINT AS n_resurrected
       |  FROM s GROUP BY 1)
-      |SELECT g.wk, g.active, g.n_new, g.n_retained, g.n_resurrected,
+      |SELECT /*+ BROADCAST(p) */ g.wk, g.active, g.n_new, g.n_retained, g.n_resurrected,
       |  COALESCE(p.active - g.n_retained, 0)::BIGINT AS n_churned
       |FROM g LEFT JOIN g p ON p.wk = g.wk - 604800000
       |ORDER BY g.wk""".stripMargin
@@ -1215,15 +1028,6 @@ object Events {
     * Two map-combinable aggregations (distinct (user, day) → per-user
     * day count → per-count user count); output bounded by the calendar,
     * all integers. */
-  def e30(spark: SparkSession, dir: String): DataFrame = {
-    val DayMs = 86400000L
-    Tables.events(spark, dir)
-      .select(col("user_id"), (col("ms") - pmod(col("ms"), lit(DayMs))).as("day_ms"))
-      .distinct()
-      .groupBy("user_id").agg(count(lit(1)).as("n_days"))
-      .groupBy("n_days").agg(count(lit(1)).as("n_users"))
-      .orderBy("n_days")
-  }
   val e30Sql: String =
     """WITH ud AS (SELECT DISTINCT user_id,
       |    epoch_ms(ts) - epoch_ms(ts) % 86400000 AS day_ms FROM events),
@@ -1280,20 +1084,6 @@ object Events {
     * aggregations (hour counts → day rollup); the ratio is exact-integer
     * cross multiplication (peak·24 / total) with ONE division per day
     * row; output bounded by the calendar. */
-  def e32(spark: SparkSession, dir: String): DataFrame = {
-    val HourMs = 3600000L
-    val DayMs = 86400000L
-    Tables.events(spark, dir)
-      .select((col("ms") - pmod(col("ms"), lit(HourMs))).as("hour_ms"))
-      .groupBy("hour_ms").agg(count(lit(1)).as("n"))
-      .withColumn("day_ms", col("hour_ms") - pmod(col("hour_ms"), lit(DayMs)))
-      .groupBy("day_ms")
-      .agg(max(col("n")).as("peak_hour_n"), sum(col("n")).as("total_n"),
-           count(lit(1)).as("active_hours"))
-      .withColumn("peak_ratio",
-        round(dbl(col("peak_hour_n") * 24) / dbl(col("total_n")), 6))
-      .orderBy("day_ms")
-  }
   val e32Sql: String =
     """WITH h AS (
       |  SELECT epoch_ms(ts) - epoch_ms(ts) % 3600000 AS hour_ms, COUNT(*) AS n
@@ -1366,16 +1156,6 @@ object Events {
     * curve that separates bounce traffic from binge sessions. Reuses the
     * gap-labeling chain; session sizes are one map-combinable groupBy on
     * (user, sess_idx); integer CASE bands; band-bounded output. */
-  def e35(spark: SparkSession, dir: String): DataFrame = {
-    val sizes = sessionLabeled(spark, dir)
-      .groupBy("user_id", "sess_idx").agg(count(lit(1)).as("n"))
-    val band = when(col("n") === 1L, "a=1").when(col("n") <= 5L, "b2-5")
-      .when(col("n") <= 10L, "c6-10").when(col("n") <= 20L, "d11-20")
-      .otherwise("e>20")
-    sizes.groupBy(band.as("size_band"))
-      .agg(count(lit(1)).as("n_sessions"), sum(col("n")).as("n_events"))
-      .orderBy("size_band")
-  }
   val e35Sql: String =
     s"""WITH $sessionLabelCte,
        |sz AS (SELECT user_id, sess_idx, COUNT(*) AS n FROM s GROUP BY 1, 2),
@@ -1394,25 +1174,6 @@ object Events {
     * One per-user aggregation; band edges are exact-integer cross
     * multiplications (events ≥ k·days — no division, no float
     * boundary); ONE division per band row; 4-row-bounded output. */
-  def e36(spark: SparkSession, dir: String): DataFrame = {
-    val DayMs = 86400000L
-    val per = Tables.events(spark, dir)
-      .select(col("user_id"), (col("ms") - pmod(col("ms"), lit(DayMs))).as("day_ms"),
-        when(col("event_type") === "purchase", 1L).otherwise(0L).as("is_p"))
-      .groupBy("user_id")
-      .agg(count(lit(1)).as("n_events"), countDistinct(col("day_ms")).as("n_days"),
-           sum(col("is_p")).as("n_purch"))
-    val band = when(col("n_events") >= col("n_days") * 50, "d>=50/day")
-      .when(col("n_events") >= col("n_days") * 20, "c>=20/day")
-      .when(col("n_events") >= col("n_days") * 10, "b>=10/day")
-      .otherwise("a<10/day")
-    per.groupBy(band.as("velocity_band"))
-      .agg(count(lit(1)).as("n_users"), sum(col("n_events")).as("total_events"),
-           sum(col("n_purch")).as("total_purchases"))
-      .withColumn("purchase_share",
-        round(dbl(col("total_purchases")) / col("total_events"), 6) + lit(0.0d))
-      .orderBy("velocity_band")
-  }
   val e36Sql: String =
     """WITH per AS (
       |  SELECT user_id, COUNT(*) AS n_events,
@@ -1439,23 +1200,14 @@ object Events {
     * Rides the gap-labeling chain (sess_idx = 1 is the first session by
     * construction); two scalar counts crossed as 1-row broadcasts, ONE
     * division. */
-  def e37(spark: SparkSession, dir: String): DataFrame = {
-    val st = sessionTypeSets(spark, dir)
-    val conv = st.filter(col("sess_idx") === 1L && col("event_type") === "purchase")
-      .agg(countDistinct(col("user_id")).as("n_converted"))
-    val tot = st.agg(countDistinct(col("user_id")).as("n_users"))
-    tot.crossJoin(broadcast(conv))
-      .select(col("n_users"), col("n_converted"),
-        (round(dbl(col("n_converted")) / col("n_users"), 6) + lit(0.0d)).as("conversion_rate"))
-  }
   val e37Sql: String =
     s"""WITH $sessionTypeSetsCte,
        |conv AS (
        |  SELECT COUNT(DISTINCT user_id) AS n_converted FROM d
        |  WHERE sess_idx = 1 AND event_type = 'purchase'),
        |tot AS (SELECT COUNT(DISTINCT user_id) AS n_users FROM d)
-       |SELECT n_users, n_converted,
-       |  ROUND(CAST(n_converted AS DOUBLE) / n_users, 6) + 0.0 AS conversion_rate
+       |SELECT /*+ BROADCAST(conv) */ n_users, n_converted,
+       |  ROUND(CAST(n_converted AS DOUBLE) / NULLIF(n_users, 0), 6) + 0.0 AS conversion_rate
        |FROM tot CROSS JOIN conv""".stripMargin
 
   // ---------------------------------------------------------------- e38
@@ -1505,32 +1257,6 @@ object Events {
     * Session bounds are one map-combinable min/max over the gap-labeling
     * chain; the lag is a user-partitioned window over per-session rows
     * (bounded state); integer millisecond compares band the gaps. */
-  def e39(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy(col("ms"), col("event_id"))
-    val wr = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val sess = Tables.events(spark, dir)
-      .select(col("user_id"), col("event_id"), col("ms"))
-      .withColumn("prev_ms", lag(col("ms"), 1).over(w))
-      .withColumn("new_sess",
-        when(col("prev_ms").isNull || col("ms") - col("prev_ms") > GapMs, 1L).otherwise(0L))
-      .withColumn("sess_idx", sum(col("new_sess")).over(wr))
-      .groupBy("user_id", "sess_idx")
-      .agg(min(col("ms")).as("start_ms"), max(col("ms")).as("end_ms"))
-    val wS = Window.partitionBy("user_id").orderBy("sess_idx")
-    val HourMs = 3600000L
-    val gaps = sess
-      .withColumn("prev_end", lag(col("end_ms"), 1).over(wS))
-      .filter(col("prev_end").isNotNull)
-      .withColumn("gap_ms", col("start_ms") - col("prev_end"))
-    val band = when(col("gap_ms") <= 6 * HourMs, "a<=6h")
-      .when(col("gap_ms") <= 24 * HourMs, "b<=24h")
-      .when(col("gap_ms") <= 72 * HourMs, "c<=72h")
-      .when(col("gap_ms") <= 168 * HourMs, "d<=7d")
-      .otherwise("e>7d")
-    gaps.groupBy(band.as("gap_band"))
-      .agg(count(lit(1)).as("n_gaps"))
-      .orderBy("gap_band")
-  }
   val e39Sql: String =
     s"""WITH e AS (SELECT user_id, event_id, epoch_ms(ts) AS ms FROM events),
        |l AS (SELECT *, LAG(ms) OVER (PARTITION BY user_id ORDER BY ms, event_id) AS prev_ms FROM e),
@@ -1559,17 +1285,6 @@ object Events {
     * spikes; this sees composition). One map-combinable (week, type)
     * rollup; shares from a week-partitioned window over the
     * \|weeks\|×\|types\|-bounded frame; ONE division per row. */
-  def e40(spark: SparkSession, dir: String): DataFrame = {
-    val WeekMs = 7L * 86400000L
-    val wt = Tables.events(spark, dir)
-      .select((col("ms") - pmod(col("ms"), lit(WeekMs))).as("wk"), col("event_type"))
-      .groupBy("wk", "event_type").agg(count(lit(1)).as("n"))
-    val wW = Window.partitionBy("wk")
-    wt.withColumn("wk_total", sum(col("n")).over(wW))
-      .select(col("wk"), col("event_type"), col("n"),
-        (round(dbl(col("n")) / dbl(col("wk_total")), 6) + lit(0.0d)).as("share"))
-      .orderBy("wk", "event_type")
-  }
   val e40Sql: String =
     """WITH wt AS (
       |  SELECT epoch_ms(ts) - epoch_ms(ts) % 604800000 AS wk, event_type,
@@ -1605,20 +1320,9 @@ object Events {
     * identical in both engines, no timezone/calendar parsing); one
     * map-combinable groupBy; the share window runs over bounded ≤5-row
     * (dow) partitions. */
-  def e42(spark: SparkSession, dir: String): DataFrame = {
-    val dt = Tables.events(spark, dir)
-      .select(((floor(col("ms") / 86400000L) + 4) % 7).cast("long").as("dow"),
-        col("event_type"))
-      .groupBy("dow", "event_type").agg(count(lit(1)).as("n"))
-    val w = Window.partitionBy("dow")
-    dt.withColumn("dow_total", sum(col("n")).over(w))
-      .select(col("dow"), col("event_type"), col("n"),
-        (round(dbl(col("n")) / dbl(col("dow_total")), 6) + lit(0.0d)).as("share_of_dow"))
-      .orderBy("dow", "event_type")
-  }
   val e42Sql: String =
     """WITH dt AS (
-      |  SELECT (epoch_ms(ts) // 86400000 + 4) % 7 AS dow, event_type,
+      |  SELECT (divide(epoch_ms(ts), 86400000) + 4) % 7 AS dow, event_type,
       |    COUNT(*) AS n
       |  FROM events GROUP BY 1, 2)
       |SELECT dow, event_type, n,
@@ -1633,25 +1337,10 @@ object Events {
     * One per-user min/max/count aggregate (map-combinable on uniform
     * user_id), integer CASE bands, ONE division per band row;
     * band-bounded output. */
-  def e43(spark: SparkSession, dir: String): DataFrame = {
-    val per = Tables.events(spark, dir)
-      .select(col("user_id"), (col("ms") / lit(86400000L)).cast("long").as("day"))
-      .groupBy("user_id")
-      .agg((max(col("day")) - min(col("day")) + 1L).as("span_d"),
-           count(lit(1)).as("n_events"))
-    val band = when(col("span_d") === 1L, "a_1d").when(col("span_d") <= 7L, "b_2-7d")
-      .when(col("span_d") <= 30L, "c_8-30d").when(col("span_d") <= 90L, "d_31-90d")
-      .otherwise("e_90d+")
-    per.groupBy(band.as("span_band"))
-      .agg(count(lit(1)).as("n_users"), sum(col("n_events")).as("n_events"))
-      .withColumn("events_per_user",
-        round(dbl(col("n_events")) / col("n_users"), 6) + lit(0.0d))
-      .orderBy("span_band")
-  }
   val e43Sql: String =
     """WITH per AS (
       |  SELECT user_id,
-      |    MAX(epoch_ms(ts) // 86400000) - MIN(epoch_ms(ts) // 86400000) + 1 AS span_d,
+      |    MAX(divide(epoch_ms(ts), 86400000)) - MIN(divide(epoch_ms(ts), 86400000)) + 1 AS span_d,
       |    COUNT(*) AS n_events
       |  FROM events GROUP BY 1),
       |b AS (SELECT CASE WHEN span_d = 1 THEN 'a_1d' WHEN span_d <= 7 THEN 'b_2-7d'
@@ -1702,17 +1391,8 @@ object Events {
     * dashboard series. One groupBy with an exact distinct (uniform
     * user_id within day groups), ONE division per day row;
     * calendar-bounded output. */
-  def e45(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .groupBy((col("ms") / lit(86400000L)).cast("long").as("day"))
-      .agg(count(lit(1)).as("n_events"),
-           countDistinct(col("user_id")).as("n_active"),
-           sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("n_purchases"))
-      .withColumn("purchases_per_user",
-        round(dbl(col("n_purchases")) / col("n_active"), 6) + lit(0.0d))
-      .orderBy("day")
   val e45Sql: String =
-    """SELECT epoch_ms(ts) // 86400000 AS day, COUNT(*) AS n_events,
+    """SELECT divide(epoch_ms(ts), 86400000) AS day, COUNT(*) AS n_events,
       |  COUNT(DISTINCT user_id) AS n_active,
       |  SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)::BIGINT AS n_purchases,
       |  ROUND(CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS DOUBLE)
@@ -1724,23 +1404,9 @@ object Events {
     * maximum volume, with its share of the type's total — deterministic
     * ties (count DESC, hour ASC) via row_number over a ≤24-row per-type
     * partition (never single-partition). */
-  def e46(spark: SparkSession, dir: String): DataFrame = {
-    val th = Tables.events(spark, dir)
-      .select(col("event_type"),
-        (floor(col("ms") / 3600000L) % 24).cast("long").as("hr"))
-      .groupBy("event_type", "hr").agg(count(lit(1)).as("n"))
-    val w = Window.partitionBy("event_type")
-    th.withColumn("type_total", sum(col("n")).over(w))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("event_type").orderBy(col("n").desc, col("hr"))))
-      .filter(col("rk") === 1)
-      .select(col("event_type"), col("hr").as("peak_hr"), col("n").as("n_at_peak"),
-        (round(dbl(col("n")) / dbl(col("type_total")), 6) + lit(0.0d)).as("share_of_type"))
-      .orderBy("event_type")
-  }
   val e46Sql: String =
     """WITH th AS (
-      |  SELECT event_type, (epoch_ms(ts) // 3600000) % 24 AS hr, COUNT(*) AS n
+      |  SELECT event_type, divide(epoch_ms(ts), 3600000) % 24 AS hr, COUNT(*) AS n
       |  FROM events GROUP BY 1, 2),
       |r AS (SELECT event_type, hr, n,
       |    SUM(n) OVER (PARTITION BY event_type) AS type_total,
@@ -1871,25 +1537,6 @@ object Events {
     *
     * One map-combinable per-user min-pair, a bounded band CASE, and the
     * share denominator as a 1-row broadcast. */
-  def e50(spark: SparkSession, dir: String): DataFrame = {
-    val u = Tables.events(spark, dir)
-      .groupBy("user_id")
-      .agg(min(when(col("event_type") === "signup", col("ms"))).as("smin"),
-           min(when(col("event_type") === "purchase", col("ms"))).as("pmin"))
-      .filter(col("smin").isNotNull && col("pmin").isNotNull)
-    val lagD = expr("(pmin - smin) div 86400000")
-    val band = when(col("pmin") < col("smin"), "f_presignup")
-      .when(lagD === 0, "a_0d").when(lagD <= 3, "b_1_3d")
-      .when(lagD <= 7, "c_4_7d").when(lagD <= 30, "d_8_30d")
-      .otherwise("e_gt30d")
-    val total = u.agg(count(lit(1)).as("n_total"))
-    u.withColumn("lag_band", band)
-      .groupBy("lag_band").agg(count(lit(1)).as("n_users"))
-      .join(broadcast(total))
-      .withColumn("share", round(dbl(col("n_users")) / col("n_total"), 6) + lit(0.0d))
-      .select("lag_band", "n_users", "share")
-      .orderBy("lag_band")
-  }
   val e50Sql: String =
     """WITH u AS (
       |  SELECT user_id,
@@ -1897,14 +1544,14 @@ object Events {
       |    MIN(CASE WHEN event_type = 'purchase' THEN epoch_ms(ts) END) AS pmin
       |  FROM events GROUP BY 1),
       |b AS (SELECT CASE WHEN pmin < smin THEN 'f_presignup'
-      |      WHEN (pmin - smin) // 86400000 = 0 THEN 'a_0d'
-      |      WHEN (pmin - smin) // 86400000 <= 3 THEN 'b_1_3d'
-      |      WHEN (pmin - smin) // 86400000 <= 7 THEN 'c_4_7d'
-      |      WHEN (pmin - smin) // 86400000 <= 30 THEN 'd_8_30d'
+      |      WHEN divide(pmin - smin, 86400000) = 0 THEN 'a_0d'
+      |      WHEN divide(pmin - smin, 86400000) <= 3 THEN 'b_1_3d'
+      |      WHEN divide(pmin - smin, 86400000) <= 7 THEN 'c_4_7d'
+      |      WHEN divide(pmin - smin, 86400000) <= 30 THEN 'd_8_30d'
       |      ELSE 'e_gt30d' END AS lag_band
       |  FROM u WHERE smin IS NOT NULL AND pmin IS NOT NULL),
       |t AS (SELECT COUNT(*)::BIGINT AS n_total FROM b)
-      |SELECT lag_band, COUNT(*) AS n_users,
+      |SELECT /*+ BROADCAST(t) */ lag_band, COUNT(*) AS n_users,
       |  ROUND(CAST(COUNT(*) AS DOUBLE) / CAST(n_total AS DOUBLE), 6) + 0.0 AS share
       |FROM b CROSS JOIN t GROUP BY 1, n_total ORDER BY 1""".stripMargin
 
@@ -1913,17 +1560,8 @@ object Events {
     * error share — the basic service-health trendline over the event
     * stream. One scan, integer epoch-day keys, one map-combinable
     * groupBy onto a ≤\|days\| frame, ONE division per row. */
-  def e51(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .select(expr("ms div 86400000").as("day"),
-        (col("event_type") === "error").cast("long").as("is_err"))
-      .groupBy("day")
-      .agg(count(lit(1)).as("n_events"), sum(col("is_err")).as("n_errors"))
-      .withColumn("err_share",
-        round(dbl(col("n_errors")) / col("n_events"), 6) + lit(0.0d))
-      .orderBy("day")
   val e51Sql: String =
-    """SELECT epoch_ms(ts) // 86400000 AS day, COUNT(*) AS n_events,
+    """SELECT divide(epoch_ms(ts), 86400000) AS day, COUNT(*) AS n_events,
       |  SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)::BIGINT AS n_errors,
       |  ROUND(CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS DOUBLE)
       |        / COUNT(*), 6) + 0.0 AS err_share
@@ -1939,34 +1577,6 @@ object Events {
     * \|hours\| rows — q57's bounded-frame machinery), never a window
     * over raw events; PERCENTILE_CONT interpolation arithmetic is
     * identical in both engines. */
-  def e52(spark: SparkSession, dir: String): DataFrame = {
-    val th = Tables.events(spark, dir)
-      .select(col("event_type"), (col("ms") - col("ms") % 3600000L).as("hour_ms"))
-      .groupBy("event_type", "hour_ms").agg(count(lit(1)).as("cnt"))
-    val w = Window.partitionBy("event_type").orderBy(col("cnt"), col("hour_ms"))
-    val wc = Window.partitionBy("event_type")
-    val ranked = th.select(col("event_type"), col("cnt"),
-      (row_number().over(w).cast("long") - 1).as("idx"),
-      count(lit(1)).over(wc).as("n"))
-    def pos(q: Double): Column = (col("n") - 1).cast("double") * lit(q)
-    def lo(q: Double, nm: String): Column =
-      max(when(col("idx") === floor(pos(q)), col("cnt"))).as(s"${nm}_lo")
-    def hi(q: Double, nm: String): Column =
-      max(when(col("idx") === ceil(pos(q)), col("cnt"))).as(s"${nm}_hi")
-    def interp(nm: String, q: Double): Column = {
-      val p = (col("nn") - 1).cast("double") * lit(q)
-      col(s"${nm}_lo").cast("double") +
-        (col(s"${nm}_hi").cast("double") - col(s"${nm}_lo").cast("double")) * (p - floor(p))
-    }
-    ranked.groupBy("event_type")
-      .agg(max(col("n")).as("nn"),
-           lo(0.5, "q50"), hi(0.5, "q50"), lo(0.95, "q95"), hi(0.95, "q95"),
-           lo(0.99, "q99"), hi(0.99, "q99"))
-      .select(col("event_type"), col("nn").as("n_hours"),
-        interp("q50", 0.5).as("p50"), interp("q95", 0.95).as("p95"),
-        interp("q99", 0.99).as("p99"))
-      .orderBy("event_type")
-  }
   val e52Sql: String =
     """WITH th AS (
       |  SELECT event_type, epoch_ms(ts) - epoch_ms(ts) % 3600000 AS hour_ms,
@@ -2180,21 +1790,6 @@ object Events {
     * exact sum/min/max/conditional count — order-independent), one row
     * per user; at 100 TB this is the classic feature-store
     * materialization pass. */
-  def e58(spark: SparkSession, dir: String): DataFrame = {
-    def n(t: String) = count(when(col("event_type") === t, lit(1))).as(s"n_$t")
-    Tables.events(spark, dir)
-      .groupBy("user_id")
-      .agg(count(lit(1)).as("n_events"),
-           n("click"), n("view"), n("purchase"), n("signup"), n("error"),
-           dsum(col("value")).as("total_value"),
-           countDistinct(expr("ms div 86400000")).as("n_active_days"),
-           min(col("ms")).as("first_ms"), max(col("ms")).as("last_ms"))
-      .withColumn("lifespan_days",
-        expr("(last_ms div 86400000) - (first_ms div 86400000) + 1"))
-      .withColumn("events_per_active_day",
-        round(dbl(col("n_events")) / col("n_active_days"), 6))
-      .orderBy("user_id")
-  }
   val e58Sql: String =
     """SELECT user_id, COUNT(*)::BIGINT AS n_events,
       |  COUNT(CASE WHEN event_type = 'click' THEN 1 END)::BIGINT AS n_click,
@@ -2203,10 +1798,10 @@ object Events {
       |  COUNT(CASE WHEN event_type = 'signup' THEN 1 END)::BIGINT AS n_signup,
       |  COUNT(CASE WHEN event_type = 'error' THEN 1 END)::BIGINT AS n_error,
       |  CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS total_value,
-      |  COUNT(DISTINCT epoch_ms(ts) // 86400000)::BIGINT AS n_active_days,
+      |  COUNT(DISTINCT divide(epoch_ms(ts), 86400000))::BIGINT AS n_active_days,
       |  MIN(epoch_ms(ts)) AS first_ms, MAX(epoch_ms(ts)) AS last_ms,
-      |  (MAX(epoch_ms(ts)) // 86400000) - (MIN(epoch_ms(ts)) // 86400000) + 1 AS lifespan_days,
-      |  ROUND(CAST(COUNT(*) AS DOUBLE) / COUNT(DISTINCT epoch_ms(ts) // 86400000), 6)
+      |  divide(MAX(epoch_ms(ts)), 86400000) - divide(MIN(epoch_ms(ts)), 86400000) + 1 AS lifespan_days,
+      |  ROUND(CAST(COUNT(*) AS DOUBLE) / COUNT(DISTINCT divide(epoch_ms(ts), 86400000)), 6)
       |    AS events_per_active_day
       |FROM events GROUP BY 1 ORDER BY 1""".stripMargin
 
@@ -2421,24 +2016,6 @@ object Events {
     * map-combinable (count, purchase-flag) collapse, then a ≤10-row
     * rollup — the curve that justifies (or kills) engagement-driven
     * ranking. */
-  def e65(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy(col("ms"), col("event_id"))
-    val wr = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    Tables.events(spark, dir)
-      .select(col("user_id"), col("event_id"), col("ms"), col("event_type"))
-      .withColumn("prev_ms", lag(col("ms"), 1).over(w))
-      .withColumn("new_sess",
-        when(col("prev_ms").isNull || col("ms") - col("prev_ms") > GapMs, 1L).otherwise(0L))
-      .withColumn("sess_idx", sum(col("new_sess")).over(wr))
-      .groupBy("user_id", "sess_idx")
-      .agg(count(lit(1)).as("n_events"),
-           max(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("has_purchase"))
-      .groupBy(least(col("n_events"), lit(10L)).as("depth_band"))
-      .agg(count(lit(1)).as("n_sessions"), sum(col("has_purchase")).as("n_converted"))
-      .select(col("depth_band"), col("n_sessions"), col("n_converted"),
-        round(dbl(col("n_converted")) / col("n_sessions"), 6).as("conversion_rate"))
-      .orderBy("depth_band")
-  }
   val e65Sql: String =
     s"""WITH e AS (SELECT user_id, event_id, epoch_ms(ts) AS ms, event_type FROM events),
        |l AS (SELECT *, LAG(ms) OVER (PARTITION BY user_id ORDER BY ms, event_id) AS prev_ms FROM e),
@@ -2459,38 +2036,6 @@ object Events {
     * band) — the monetization profile e55's duration histogram and e65's
     * depth curve don't show. Same bounded per-user session windows as
     * e01; cents accumulate as integers so the band edge can't drift. */
-  /** Per-session revenue frame (user_id, sess_idx, start_ms, n_events,
-    * cents) — e66 bands it; LambdaParitySpec replays the same events
-    * through the STREAMING revenue sessionizer and must reproduce this
-    * frame exactly. */
-  private[graft] def sessionRevenueFrame(events: DataFrame): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy(col("ms"), col("event_id"))
-    val wr = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    events
-      .select(col("user_id"), col("event_id"), col("ms"),
-        when(col("event_type") === "purchase",
-          (dec(col("value")) * 100).cast("long")).as("cents"))
-      .withColumn("prev_ms", lag(col("ms"), 1).over(w))
-      .withColumn("new_sess",
-        when(col("prev_ms").isNull || col("ms") - col("prev_ms") > GapMs, 1L).otherwise(0L))
-      .withColumn("sess_idx", sum(col("new_sess")).over(wr))
-      .groupBy("user_id", "sess_idx")
-      .agg(min(col("ms")).as("start_ms"),
-           count(lit(1)).as("n_events"),
-           coalesce(sum(col("cents")), lit(0L)).as("cents"))
-  }
-
-  def e66(spark: SparkSession, dir: String): DataFrame = {
-    val sess = sessionRevenueFrame(Tables.events(spark, dir))
-    val band = when(col("cents") === 0, "a0").when(col("cents") <= 5000, "b<=50")
-      .when(col("cents") <= 15000, "c<=150").when(col("cents") <= 30000, "d<=300")
-      .otherwise("e>300")
-    sess.groupBy(band.as("revenue_band"))
-      .agg(count(lit(1)).as("n_sessions"),
-           (sum(col("n_events")).cast("double") / count(lit(1))).as("avg_events"),
-           (sum(col("cents")).cast("double") / 100).as("total_revenue"))
-      .orderBy("revenue_band")
-  }
   val e66Sql: String =
     s"""WITH e AS (SELECT user_id, event_id, epoch_ms(ts) AS ms,
        |    CASE WHEN event_type = 'purchase'
@@ -2511,33 +2056,38 @@ object Events {
        |  CAST(SUM(cents) AS DOUBLE) / 100 AS total_revenue
        |FROM sess GROUP BY 1 ORDER BY 1""".stripMargin
 
+  /** Per-session revenue frame (user_id, sess_idx, start_ms, n_events,
+    * cents), the frame e66 bands; LambdaParitySpec replays the same events
+    * through the STREAMING revenue sessionizer and must reproduce this
+    * frame exactly. */
+  private[graft] def sessionRevenueFrame(events: DataFrame): DataFrame = {
+    val w = Window.partitionBy("user_id").orderBy(col("ms"), col("event_id"))
+    val wr = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    events
+      .select(col("user_id"), col("event_id"), col("ms"),
+        when(col("event_type") === "purchase",
+          (dec(col("value")) * 100).cast("long")).as("cents"))
+      .withColumn("prev_ms", lag(col("ms"), 1).over(w))
+      .withColumn("new_sess",
+        when(col("prev_ms").isNull || col("ms") - col("prev_ms") > GapMs, 1L).otherwise(0L))
+      .withColumn("sess_idx", sum(col("new_sess")).over(wr))
+      .groupBy("user_id", "sess_idx")
+      .agg(min(col("ms")).as("start_ms"),
+           count(lit(1)).as("n_events"),
+           coalesce(sum(col("cents")), lit(0L)).as("cents"))
+  }
+
   // ---------------------------------------------------------------- e67
   /** Repurchase latency: gaps between a user's consecutive PURCHASES
     * (e18 bands all inter-event gaps; this is the buy-again cycle),
     * banded on integer hours. The lag window runs over the purchase
     * subset only — state per user is its purchase count, and the
     * filter reaches the scan before any shuffle. */
-  def e67(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy(col("ms"), col("event_id"))
-    val gaps = Tables.events(spark, dir)
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("event_id"), col("ms"))
-      .withColumn("prev_ms", lag(col("ms"), 1).over(w))
-      .filter(col("prev_ms").isNotNull)
-      .withColumn("gap_h", expr("(ms - prev_ms) div 3600000"))
-    val band = when(col("gap_h") <= 24, "a<=1d").when(col("gap_h") <= 168, "b<=7d")
-      .when(col("gap_h") <= 720, "c<=30d").otherwise("d>30d")
-    gaps.groupBy(band.as("gap_band"))
-      .agg(count(lit(1)).as("n_gaps"),
-           (sum(col("gap_h")).cast("double") / count(lit(1))).as("avg_gap_h"),
-           max(col("gap_h")).as("max_gap_h"))
-      .orderBy("gap_band")
-  }
   val e67Sql: String =
     """WITH p AS (SELECT user_id, event_id, epoch_ms(ts) AS ms FROM events
        |  WHERE event_type = 'purchase'),
        |l AS (SELECT *, LAG(ms) OVER (PARTITION BY user_id ORDER BY ms, event_id) AS prev_ms FROM p),
-       |g AS (SELECT (ms - prev_ms) // 3600000 AS gap_h FROM l WHERE prev_ms IS NOT NULL)
+       |g AS (SELECT divide(ms - prev_ms, 3600000) AS gap_h FROM l WHERE prev_ms IS NOT NULL)
        |SELECT CASE WHEN gap_h <= 24 THEN 'a<=1d' WHEN gap_h <= 168 THEN 'b<=7d'
        |            WHEN gap_h <= 720 THEN 'c<=30d' ELSE 'd>30d' END AS gap_band,
        |  COUNT(*)::BIGINT AS n_gaps,
@@ -2551,25 +2101,6 @@ object Events {
     * bands via pure integer arithmetic ((10·early) div total, like
     * q86), so no float share ever decides a band. Per-user window over
     * bounded partitions; buyers only. */
-  def e68(spark: SparkSession, dir: String): DataFrame = {
-    val weekMs = 7L * 24 * 3600 * 1000
-    val u = Tables.events(spark, dir)
-      .select(col("user_id"), col("ms"),
-        when(col("event_type") === "purchase",
-          (dec(col("value")) * 100).cast("long")).as("cents"))
-      .withColumn("first_ms", min(col("ms")).over(Window.partitionBy("user_id")))
-      .groupBy("user_id")
-      .agg(sum(col("cents")).as("tot"),
-           coalesce(sum(when(col("ms") < col("first_ms") + weekMs, col("cents"))),
-             lit(0L)).as("early"))
-      .filter(col("tot").isNotNull && col("tot") > 0)
-    u.withColumn("frontload_band", least(expr("early * 10 div tot"), lit(9L)))
-      .groupBy("frontload_band")
-      .agg(count(lit(1)).as("n_users"),
-           (sum(col("early")).cast("double") / 100).as("early_value"),
-           (sum(col("tot")).cast("double") / 100).as("lifetime_value"))
-      .orderBy("frontload_band")
-  }
   val e68Sql: String =
     """WITH e AS (SELECT user_id, epoch_ms(ts) AS ms,
        |    CASE WHEN event_type = 'purchase'
@@ -2579,7 +2110,7 @@ object Events {
        |u AS (SELECT user_id, SUM(cents) AS tot,
        |    COALESCE(SUM(CASE WHEN ms < first_ms + 604800000 THEN cents END), 0) AS early
        |  FROM w GROUP BY 1)
-       |SELECT LEAST(early * 10 // tot, 9)::BIGINT AS frontload_band,
+       |SELECT LEAST(divide(early * 10, tot), 9)::BIGINT AS frontload_band,
        |  COUNT(*)::BIGINT AS n_users,
        |  CAST(SUM(early) AS DOUBLE) / 100 AS early_value,
        |  CAST(SUM(tot) AS DOUBLE) / 100 AS lifetime_value
@@ -2626,25 +2157,6 @@ object Events {
     * recovery is the next non-error AFTER the error; consecutive errors
     * look through to the first non-error via a reverse-ordered min
     * window over following rows. */
-  def e70(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy(col("ms"), col("event_id"))
-      .rowsBetween(1, Window.unboundedFollowing)
-    val ev = Tables.events(spark, dir)
-      .select(col("user_id"), col("event_id"), col("ms"), col("event_type"))
-      .withColumn("next_ok_ms",
-        min(when(col("event_type") =!= "error", col("ms"))).over(w))
-    val err = ev.filter(col("event_type") === "error")
-      .withColumn("rec_s",
-        when(col("next_ok_ms").isNotNull, expr("(next_ok_ms - ms) div 1000")))
-    val band = when(col("rec_s").isNull, "e_never")
-      .when(col("rec_s") <= 60, "a<=1m").when(col("rec_s") <= 3600, "b<=1h")
-      .when(col("rec_s") <= 86400, "c<=1d").otherwise("d>1d")
-    err.groupBy(band.as("recovery_band"))
-      .agg(count(lit(1)).as("n_errors"),
-           coalesce((sum(col("rec_s")).cast("double") / count(col("rec_s"))), lit(0.0d))
-             .as("avg_recovery_s"))
-      .orderBy("recovery_band")
-  }
   val e70Sql: String =
     """WITH e AS (SELECT user_id, event_id, epoch_ms(ts) AS ms, event_type FROM events),
       |w AS (SELECT *, MIN(CASE WHEN event_type <> 'error' THEN ms END)
@@ -2652,7 +2164,7 @@ object Events {
       |          ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING) AS next_ok_ms
       |  FROM e),
       |err AS (SELECT CASE WHEN next_ok_ms IS NOT NULL
-      |      THEN (next_ok_ms - ms) // 1000 END AS rec_s
+      |      THEN divide(next_ok_ms - ms, 1000) END AS rec_s
       |  FROM w WHERE event_type = 'error')
       |SELECT CASE WHEN rec_s IS NULL THEN 'e_never'
       |            WHEN rec_s <= 60 THEN 'a<=1m' WHEN rec_s <= 3600 THEN 'b<=1h'
@@ -2727,19 +2239,8 @@ object Events {
     * mean) — the staffing/promo calendar view. Map-combinable 7-row
     * rollup; dow uses e42's epoch-day convention ((day+4) mod 7,
     * 0 = Sunday) so the two weekly profiles join cleanly. */
-  def e73(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .filter(col("event_type") === "purchase")
-      .groupBy(expr("(ms div 86400000 + 4) % 7").as("dow"))
-      .agg(count(lit(1)).as("n_purchases"),
-           sum((dec(col("value")) * 100).cast("long")).as("cents"))
-      .select(col("dow"), col("n_purchases"),
-        (col("cents").cast("double") / 100).as("revenue"),
-        round((col("cents").cast("double") / 100) / col("n_purchases"), 6)
-          .as("avg_purchase"))
-      .orderBy("dow")
   val e73Sql: String =
-    """SELECT (epoch_ms(ts) // 86400000 + 4) % 7 AS dow,
+    """SELECT (divide(epoch_ms(ts), 86400000) + 4) % 7 AS dow,
       |  COUNT(*)::BIGINT AS n_purchases,
       |  CAST(SUM(CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)) AS DOUBLE) / 100
       |    AS revenue,
@@ -2755,24 +2256,6 @@ object Events {
     * curve. Session split + in-session row_number ride the same bounded
     * per-user windows as e01; min() picks the first purchase position
     * map-combinably. */
-  def e74(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy(col("ms"), col("event_id"))
-    val wr = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ws = Window.partitionBy("user_id", "sess_idx").orderBy(col("ms"), col("event_id"))
-    Tables.events(spark, dir)
-      .select(col("user_id"), col("event_id"), col("ms"), col("event_type"))
-      .withColumn("prev_ms", lag(col("ms"), 1).over(w))
-      .withColumn("new_sess",
-        when(col("prev_ms").isNull || col("ms") - col("prev_ms") > GapMs, 1L).otherwise(0L))
-      .withColumn("sess_idx", sum(col("new_sess")).over(wr))
-      .withColumn("pos", row_number().over(ws).cast("long"))
-      .filter(col("event_type") === "purchase")
-      .groupBy("user_id", "sess_idx")
-      .agg(min(col("pos")).as("first_buy_pos"))
-      .groupBy(least(col("first_buy_pos"), lit(10L)).as("depth_band"))
-      .agg(count(lit(1)).as("n_sessions"))
-      .orderBy("depth_band")
-  }
   val e74Sql: String =
     s"""WITH e AS (SELECT user_id, event_id, epoch_ms(ts) AS ms, event_type FROM events),
        |l AS (SELECT *, LAG(ms) OVER (PARTITION BY user_id ORDER BY ms, event_id) AS prev_ms FROM e),
@@ -2844,43 +2327,18 @@ object Events {
     * growth-accounting series. One map-combinable min/max pass per
     * user; the horizon is a 1-row broadcast max (q65's as-of shape);
     * 3-row output with exact tenure/recency means. */
-  /** Per-user lifecycle frame (first/last/n_events/end_ms/stage) —
-    * shared by e76's census and e80's per-stage behavior profile so
-    * both views classify users identically. */
-  private[graft] def lifecycleStages(events: DataFrame): DataFrame = {
-    val dayMs = 86400000L
-    val u = events
-      .groupBy(col("user_id"))
-      .agg(min(col("ms")).as("first_ms"), max(col("ms")).as("last_ms"),
-           count(lit(1)).as("n_events"))
-    val horizon = u.agg(max(col("last_ms")).as("end_ms"))
-    u.join(broadcast(horizon))
-      .withColumn("stage",
-        when(col("first_ms") >= col("end_ms") - 30 * dayMs, "a_new")
-          .when(col("last_ms") < col("end_ms") - 30 * dayMs, "c_churned")
-          .otherwise("b_active"))
-  }
-
-  def e76(spark: SparkSession, dir: String): DataFrame =
-    lifecycleStages(Tables.events(spark, dir))
-      .groupBy(col("stage"))
-      .agg(count(lit(1)).as("n_users"),
-           sum(col("n_events")).as("n_events"),
-           (sum(expr("(end_ms - last_ms) div 86400000")).cast("double") /
-             count(lit(1))).as("avg_recency_days"))
-      .orderBy("stage")
   val e76Sql: String =
     """WITH u AS (
       |  SELECT user_id, MIN(epoch_ms(ts)) AS first_ms, MAX(epoch_ms(ts)) AS last_ms,
       |    COUNT(*)::BIGINT AS n_events
       |  FROM events GROUP BY 1),
       |h AS (SELECT MAX(last_ms) AS end_ms FROM u)
-      |SELECT CASE WHEN first_ms >= end_ms - 2592000000 THEN 'a_new'
+      |SELECT /*+ BROADCAST(h) */ CASE WHEN first_ms >= end_ms - 2592000000 THEN 'a_new'
       |            WHEN last_ms < end_ms - 2592000000 THEN 'c_churned'
       |            ELSE 'b_active' END AS stage,
       |  COUNT(*)::BIGINT AS n_users,
       |  SUM(n_events)::BIGINT AS n_events,
-      |  CAST(SUM((end_ms - last_ms) // 86400000) AS DOUBLE) / COUNT(*) AS avg_recency_days
+      |  CAST(SUM(divide(end_ms - last_ms, 86400000)) AS DOUBLE) / COUNT(*) AS avg_recency_days
       |FROM u, h GROUP BY 1 ORDER BY 1""".stripMargin
 
   // ---------------------------------------------------------------- e77
@@ -2891,29 +2349,9 @@ object Events {
     * `day − row_number()` is constant within a run (both windows
     * partition per user — bounded state at any user count), one count
     * per (user, island), one max per user, integer CASE bands. */
-  def e77(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy("day")
-    val days = Tables.events(spark, dir)
-      .select(col("user_id"), expr("ms div 86400000").as("day")).distinct()
-    val streaks = days
-      .withColumn("grp", col("day") - row_number().over(w))
-      .groupBy("user_id", "grp").agg(count(lit(1)).as("len"))
-      .groupBy("user_id").agg(max(col("len")).as("max_streak"),
-        sum(col("len")).as("active_days"))
-    streaks
-      .groupBy(when(col("max_streak") === 1, "a_1")
-        .when(col("max_streak") <= 3, "b_2-3")
-        .when(col("max_streak") <= 6, "c_4-6")
-        .when(col("max_streak") <= 13, "d_7-13")
-        .otherwise("e_14+").as("streak_band"))
-      .agg(count(lit(1)).as("n_users"),
-           (sum(col("active_days")).cast("double") /
-             count(lit(1))).as("avg_active_days"))
-      .orderBy("streak_band")
-  }
   val e77Sql: String =
     """WITH d AS (
-      |  SELECT DISTINCT user_id, epoch_ms(ts) // 86400000 AS day FROM events),
+      |  SELECT DISTINCT user_id, divide(epoch_ms(ts), 86400000) AS day FROM events),
       |i AS (
       |  SELECT user_id, day,
       |    day - ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY day) AS grp
@@ -2938,32 +2376,6 @@ object Events {
     * per corpus horizon). One lag window per user (bounded state), one
     * per-user rollup, integer-ms gap compares, ≤4 bands with a single
     * division each. */
-  /** Per-user reactivation frame (n_react, max_dorm_ms) — shared by e78
-    * and the streaming ReactivationStage parity spec, so batch and
-    * stream are held to one definition of "dormancy". */
-  private[graft] def reactivationFrame(events: DataFrame,
-                                       dormMs: Long = 2L * 86400000L): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy(col("ms"), col("event_id"))
-    events
-      .select(col("user_id"), col("event_id"), col("ms"))
-      .withColumn("gap", col("ms") - lag(col("ms"), 1).over(w))
-      .groupBy("user_id")
-      .agg(sum(when(col("gap") > dormMs, 1L).otherwise(0L)).as("n_react"),
-           max(when(col("gap") > dormMs, col("gap"))).as("max_dorm_ms"))
-  }
-
-  def e78(spark: SparkSession, dir: String): DataFrame = {
-    val u = reactivationFrame(Tables.events(spark, dir))
-    u.groupBy(when(col("n_react") === 0, "a_none")
-        .when(col("n_react") === 1, "b_once")
-        .when(col("n_react") === 2, "c_twice")
-        .otherwise("d_3plus").as("react_band"))
-      .agg(count(lit(1)).as("n_users"),
-           sum(col("n_react")).as("n_reactivations"),
-           (sum(expr("max_dorm_ms div 86400000")).cast("double") /
-             count(col("max_dorm_ms"))).as("avg_max_dormancy_days"))
-      .orderBy("react_band")
-  }
   val e78Sql: String =
     """WITH g AS (
       |  SELECT user_id,
@@ -2981,9 +2393,23 @@ object Events {
       |            ELSE 'd_3plus' END AS react_band,
       |  COUNT(*)::BIGINT AS n_users,
       |  SUM(n_react)::BIGINT AS n_reactivations,
-      |  CAST(SUM(max_dorm_ms // 86400000) AS DOUBLE) / COUNT(max_dorm_ms)
+      |  CAST(SUM(divide(max_dorm_ms, 86400000)) AS DOUBLE) / COUNT(max_dorm_ms)
       |    AS avg_max_dormancy_days
       |FROM u GROUP BY 1 ORDER BY 1""".stripMargin
+
+  /** Per-user reactivation frame (n_react, max_dorm_ms) under e78's
+    * definition of "dormancy"; the streaming ReactivationStage parity
+    * spec holds the stream to it. */
+  private[graft] def reactivationFrame(events: DataFrame,
+                                       dormMs: Long = 2L * 86400000L): DataFrame = {
+    val w = Window.partitionBy("user_id").orderBy(col("ms"), col("event_id"))
+    events
+      .select(col("user_id"), col("event_id"), col("ms"))
+      .withColumn("gap", col("ms") - lag(col("ms"), 1).over(w))
+      .groupBy("user_id")
+      .agg(sum(when(col("gap") > dormMs, 1L).otherwise(0L)).as("n_react"),
+           max(when(col("gap") > dormMs, col("gap"))).as("max_dorm_ms"))
+  }
 
   // ---------------------------------------------------------------- e79
   /** Per-type purchase-value outlier screen: events whose value sits
@@ -3056,23 +2482,13 @@ object Events {
     * shuffle); the census is \|stages\|×\|types\|-bounded and the
     * within-stage share window partitions by stage over that bounded
     * frame only. */
-  def e80(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-    val wStage = Window.partitionBy("stage")
-    ev.select(col("user_id"), col("event_type"))
-      .join(lifecycleStages(ev).select(col("user_id"), col("stage")), "user_id")
-      .groupBy("stage", "event_type").agg(count(lit(1)).as("n_events"))
-      .withColumn("share",
-        round(dbl(col("n_events")) / sum(col("n_events")).over(wStage), 6))
-      .orderBy("stage", "event_type")
-  }
   val e80Sql: String =
     """WITH u AS (
       |  SELECT user_id, MIN(epoch_ms(ts)) AS first_ms, MAX(epoch_ms(ts)) AS last_ms
       |  FROM events GROUP BY 1),
       |h AS (SELECT MAX(last_ms) AS end_ms FROM u),
       |s AS (
-      |  SELECT user_id,
+      |  SELECT /*+ BROADCAST(h) */ user_id,
       |    CASE WHEN first_ms >= end_ms - 2592000000 THEN 'a_new'
       |         WHEN last_ms < end_ms - 2592000000 THEN 'c_churned'
       |         ELSE 'b_active' END AS stage
@@ -3095,29 +2511,10 @@ object Events {
     * edges are integer
     * cross-multiplied; one map-combinable per-user rollup then a
     * ≤4-row census with purchase share per band. */
-  def e81(spark: SparkSession, dir: String): DataFrame = {
-    val isWe = expr("(ms div 86400000 + 4) % 7").isin(0, 6)
-    val u = Tables.events(spark, dir)
-      .select(col("user_id"),
-        when(isWe, 1L).otherwise(0L).as("we"),
-        when(col("event_type") === "purchase", 1L).otherwise(0L).as("pu"))
-      .groupBy("user_id")
-      .agg(count(lit(1)).as("total"), sum(col("we")).as("wkd"),
-           sum(col("pu")).as("purch"))
-    u.groupBy(when(col("wkd") * 10 < col("total"), "a<10%")
-        .when(col("wkd") * 10 < col("total") * 3, "b<30%")
-        .when(col("wkd") * 10 < col("total") * 6, "c<60%")
-        .otherwise("d>=60%").as("weekend_band"))
-      .agg(count(lit(1)).as("n_users"),
-           sum(col("total")).as("n_events"),
-           round(dbl(sum(col("purch"))) / dbl(sum(col("total"))), 6)
-             .as("purchase_share"))
-      .orderBy("weekend_band")
-  }
   val e81Sql: String =
     """WITH u AS (
       |  SELECT user_id, COUNT(*)::BIGINT AS total,
-      |    SUM(CASE WHEN (epoch_ms(ts) // 86400000 + 4) % 7 IN (0, 6)
+      |    SUM(CASE WHEN (divide(epoch_ms(ts), 86400000) + 4) % 7 IN (0, 6)
       |             THEN 1 ELSE 0 END)::BIGINT AS wkd,
       |    SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)::BIGINT AS purch
       |  FROM events GROUP BY 1)
@@ -3196,29 +2593,6 @@ object Events {
     * onboarding window product teams can actually move). One
     * user-partitioned min window (no second scan), one per-user
     * rollup, q38's DECIMAL-exact moments, 1-row output. */
-  def e83(spark: SparkSession, dir: String): DataFrame = {
-    val wU = Window.partitionBy("user_id")
-    val weekMs = 7L * 86400000L
-    val u = Tables.events(spark, dir)
-      .select(col("user_id"), col("ms"), col("event_type"), col("value"))
-      .withColumn("first_ms", min(col("ms")).over(wU))
-      .groupBy("user_id")
-      .agg(sum(when(col("ms") < col("first_ms") + weekMs, 1L).otherwise(0L))
-             .cast("decimal(18,0)").as("x"),
-           coalesce(sum(when(col("event_type") === "purchase",
-             round(col("value") * 100).cast("long"))), lit(0L))
-             .cast("decimal(18,0)").as("y"))
-    u.agg(count(lit(1)).as("n_users"),
-          dbl(sum(col("x"))).as("sx"), dbl(sum(col("y"))).as("sy"),
-          dbl(sum(col("x") * col("y"))).as("sxy"),
-          dbl(sum(col("x") * col("x"))).as("sx2"),
-          dbl(sum(col("y") * col("y"))).as("sy2"))
-      .select(col("n_users"),
-        round((col("n_users") * col("sxy") - col("sx") * col("sy")) /
-          (sqrt(col("n_users") * col("sx2") - col("sx") * col("sx")) *
-           sqrt(col("n_users") * col("sy2") - col("sy") * col("sy"))), 6)
-          .as("corr_week1_ltv"))
-  }
   val e83Sql: String =
     """WITH e AS (
       |  SELECT user_id, epoch_ms(ts) AS ms, event_type, value,
@@ -3360,27 +2734,6 @@ object Events {
     * purchase row carries the user's trailing-7-day integer-cent
     * total; the per-user max is the "burst" and the census is ≤5
     * integer-edged bands. */
-  def e86(spark: SparkSession, dir: String): DataFrame = {
-    val weekMs = 7L * 86400000L
-    val w = Window.partitionBy("user_id").orderBy("ms")
-      .rangeBetween(-weekMs + 1, Window.currentRow)
-    val u = Tables.events(spark, dir)
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("ms"),
-        round(col("value") * 100).cast("long").as("cents"))
-      .withColumn("roll", sum(col("cents")).over(w))
-      .groupBy("user_id")
-      .agg(max(col("roll")).as("burst"), count(lit(1)).as("n_purchases"))
-    u.groupBy(when(col("burst") < 10000L, "a<$100")
-        .when(col("burst") < 50000L, "b<$500")
-        .when(col("burst") < 100000L, "c<$1000")
-        .when(col("burst") < 200000L, "d<$2000")
-        .otherwise("e>=$2000").as("burst_band"))
-      .agg(count(lit(1)).as("n_users"),
-           (sum(col("n_purchases")).cast("double") / count(lit(1)))
-             .as("avg_purchases"))
-      .orderBy("burst_band")
-  }
   val e86Sql: String =
     """WITH p AS (
       |  SELECT user_id, epoch_ms(ts) AS ms,
@@ -3533,40 +2886,6 @@ object Events {
     * so the same per-group caveat as q18's segments (heavy groups spill;
     * at extreme scale the sketch path is a fixed-width dwell histogram).
     * Output is exactly 2 rows. */
-  def e89(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(spark, dir).select("user_id", "event_type", "ms")
-    val v = e.filter(col("event_type") === "view")
-      .groupBy("user_id").agg(min("ms").as("vms"))
-    val c = e.filter(col("event_type") === "click").join(v, "user_id")
-      .filter(col("ms") > col("vms"))
-      .groupBy("user_id").agg(min("ms").as("cms"))
-    val p = e.filter(col("event_type") === "purchase")
-      .join(c.select("user_id", "cms"), "user_id")
-      .filter(col("ms") > col("cms"))
-      .groupBy("user_id").agg(min("ms").as("pms"))
-    val lags = c.join(v, "user_id")
-      .select(lit("a_view_to_click").as("transition"), col("user_id"),
-        (col("cms") - col("vms")).as("lag"))
-      .unionByName(p.join(c, "user_id")
-        .select(lit("b_click_to_purchase").as("transition"), col("user_id"),
-          (col("pms") - col("cms")).as("lag")))
-    val w = Window.partitionBy("transition").orderBy(col("lag"), col("user_id"))
-    val wc = Window.partitionBy("transition")
-    val med = lags
-      .select(col("transition"), col("lag"),
-        row_number().over(w).cast("long").as("rn"),
-        count(lit(1)).over(wc).as("cnt"))
-      .filter(col("rn") === floor((col("cnt") + 1) / 2) ||
-        col("rn") === floor((col("cnt") + 2) / 2))
-      .groupBy("transition")
-      .agg(round(sum(col("lag")).cast("double") / count(lit(1)), 6)
-        .as("median_lag_ms"))
-    lags.groupBy("transition")
-      .agg(count(lit(1)).as("n_users"), max(col("lag")).as("max_lag_ms"))
-      .join(med, "transition")
-      .select("transition", "n_users", "median_lag_ms", "max_lag_ms")
-      .orderBy("transition")
-  }
   val e89Sql: String =
     """WITH e AS (SELECT user_id, event_type, epoch_ms(ts) AS ms FROM events),
       |v AS (SELECT user_id, MIN(ms) AS vms FROM e WHERE event_type = 'view' GROUP BY user_id),
@@ -3587,7 +2906,7 @@ object Events {
       |  FROM l),
       |med AS (
       |  SELECT transition, ROUND(CAST(SUM(lag) AS DOUBLE) / COUNT(*), 6) AS median_lag_ms
-      |  FROM r WHERE rn = (cnt + 1) // 2 OR rn = (cnt + 2) // 2 GROUP BY 1),
+      |  FROM r WHERE rn = divide(cnt + 1, 2) OR rn = divide(cnt + 2, 2) GROUP BY 1),
       |stats AS (
       |  SELECT transition, COUNT(*)::BIGINT AS n_users, MAX(lag) AS max_lag_ms
       |  FROM l GROUP BY 1)
@@ -3605,31 +2924,6 @@ object Events {
     * per-key state), then q18's bracketing-rank median over windows
     * partitioned by the ≤\|types\|² cell key — the same per-group spill
     * caveat as e89 with 25 groups. Output ≤25 rows. */
-  def e90(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy(col("ms"), col("event_id"))
-    val lags = Tables.events(spark, dir)
-      .withColumn("next_type", lead(col("event_type"), 1).over(w))
-      .withColumn("gap_ms", lead(col("ms"), 1).over(w) - col("ms"))
-      .filter(col("next_type").isNotNull)
-      .select(col("event_type"), col("next_type"), col("gap_ms"), col("event_id"))
-    val wm = Window.partitionBy("event_type", "next_type")
-      .orderBy(col("gap_ms"), col("event_id"))
-    val wc = Window.partitionBy("event_type", "next_type")
-    val med = lags
-      .select(col("event_type"), col("next_type"), col("gap_ms"),
-        row_number().over(wm).cast("long").as("rn"),
-        count(lit(1)).over(wc).as("cnt"))
-      .filter(col("rn") === floor((col("cnt") + 1) / 2) ||
-        col("rn") === floor((col("cnt") + 2) / 2))
-      .groupBy("event_type", "next_type")
-      .agg(round(sum(col("gap_ms")).cast("double") / count(lit(1)), 6)
-        .as("median_gap_ms"))
-    lags.groupBy("event_type", "next_type")
-      .agg(count(lit(1)).as("n"), max(col("gap_ms")).as("max_gap_ms"))
-      .join(med, Seq("event_type", "next_type"))
-      .select("event_type", "next_type", "n", "median_gap_ms", "max_gap_ms")
-      .orderBy("event_type", "next_type")
-  }
   val e90Sql: String =
     """WITH e AS (SELECT user_id, event_id, event_type, epoch_ms(ts) AS ms FROM events),
       |l AS (
@@ -3647,7 +2941,7 @@ object Events {
       |med AS (
       |  SELECT event_type, next_type,
       |    ROUND(CAST(SUM(gap_ms) AS DOUBLE) / COUNT(*), 6) AS median_gap_ms
-      |  FROM r WHERE rn = (cnt + 1) // 2 OR rn = (cnt + 2) // 2 GROUP BY 1, 2),
+      |  FROM r WHERE rn = divide(cnt + 1, 2) OR rn = divide(cnt + 2, 2) GROUP BY 1, 2),
       |st AS (
       |  SELECT event_type, next_type, COUNT(*)::BIGINT AS n, MAX(gap_ms) AS max_gap_ms
       |  FROM f GROUP BY 1, 2)
@@ -3676,28 +2970,6 @@ object Events {
     * stores use, so the census measures the disorder those stores will
     * actually see), then a ≤5-row map-combinable rollup joined onto the
     * constant 5-row band domain and a 1-row total broadcast. */
-  def e91(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy("event_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val counted = Tables.events(spark, dir)
-      .withColumn("lateness", max(col("ms")).over(w) - col("ms"))
-      .groupBy(when(col("lateness") === 0L, "a_on_time")
-        .when(col("lateness") < 60000L, "b_lt_1m")
-        .when(col("lateness") < 3600000L, "c_lt_1h")
-        .when(col("lateness") < 86400000L, "d_lt_1d")
-        .otherwise("e_ge_1d").as("lateness_band"))
-      .agg(count(lit(1)).as("n"), max(col("lateness")).as("mx"))
-    import spark.implicits._
-    val domain = Seq("a_on_time", "b_lt_1m", "c_lt_1h", "d_lt_1d", "e_ge_1d")
-      .toDF("lateness_band")
-    domain.join(counted, Seq("lateness_band"), "left")
-      .join(broadcast(counted.agg(sum(col("n")).as("tot"))))
-      .select(col("lateness_band"),
-        coalesce(col("n"), lit(0L)).as("n_events"),
-        round(coalesce(dbl(col("n")), lit(0.0d)) / dbl(col("tot")), 6).as("share"),
-        coalesce(col("mx"), lit(0L)).as("max_lateness_ms"))
-      .orderBy("lateness_band")
-  }
   val e91Sql: String =
     """WITH e AS (SELECT user_id, event_id, epoch_ms(ts) AS ms FROM events),
       |l AS (
@@ -3715,7 +2987,7 @@ object Events {
       |dom AS (SELECT * FROM (VALUES ('a_on_time'), ('b_lt_1m'), ('c_lt_1h'),
       |        ('d_lt_1d'), ('e_ge_1d')) v(lateness_band)),
       |t AS (SELECT SUM(n) AS tot FROM g)
-      |SELECT dom.lateness_band,
+      |SELECT /*+ BROADCAST(t) */ dom.lateness_band,
       |  COALESCE(n, 0)::BIGINT AS n_events,
       |  ROUND(COALESCE(CAST(n AS DOUBLE), 0.0) / CAST(tot AS DOUBLE), 6) AS share,
       |  COALESCE(mx, 0)::BIGINT AS max_lateness_ms
@@ -3786,23 +3058,6 @@ object Events {
     *
     * Scale: one window + one map-combinable 1-row aggregate, unpivoted
     * to 3 rows. */
-  def e93(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy(col("ms"), col("event_id"))
-    val g = Tables.events(spark, dir)
-      .select(col("user_id"), col("event_id"), col("ms"))
-      .withColumn("gap", col("ms") - lag(col("ms"), 1).over(w))
-    val a = g.agg(count(lit(1)).as("n_events"),
-      countDistinct(col("user_id")).as("n_users"),
-      sum(when(col("gap") > 15L * 60000L, 1L).otherwise(0L)).as("c15"),
-      sum(when(col("gap") > 30L * 60000L, 1L).otherwise(0L)).as("c30"),
-      sum(when(col("gap") > 60L * 60000L, 1L).otherwise(0L)).as("c60"))
-    Seq((15L, "c15"), (30L, "c30"), (60L, "c60")).map { case (m, c) =>
-      a.select(lit(m).as("gap_min"),
-        (col("n_users") + col(c)).as("n_sessions"),
-        round(col("n_events").cast("double") / (col("n_users") + col(c)), 6)
-          .as("mean_events_per_session"))
-    }.reduce(_.unionByName(_)).orderBy("gap_min")
-  }
   val e93Sql: String =
     """WITH e AS (SELECT user_id, event_id, epoch_ms(ts) AS ms FROM events),
       |g AS (
@@ -4023,6 +3278,21 @@ object Events {
     * Scale: one user-partitioned lag/cumsum window pass (e01's shape),
     * a (user, run) rollup sharing the same partitioning, and a
     * |types|-bounded final frame. */
+  val e98Sql: String =
+    """WITH e AS (SELECT user_id, event_id, event_type, epoch_ms(ts) AS ms FROM events),
+      |l AS (SELECT *, LAG(event_type) OVER (PARTITION BY user_id ORDER BY ms, event_id)
+      |        AS prev_type FROM e),
+      |f AS (SELECT *, CASE WHEN prev_type IS NULL OR prev_type <> event_type
+      |        THEN 1 ELSE 0 END AS new_run FROM l),
+      |r AS (SELECT *, SUM(new_run) OVER (PARTITION BY user_id ORDER BY ms, event_id
+      |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run_idx FROM f),
+      |runs AS (SELECT user_id, run_idx, event_type, COUNT(*)::BIGINT AS run_len
+      |  FROM r GROUP BY 1, 2, 3)
+      |SELECT event_type, COUNT(*)::BIGINT AS n_runs, SUM(run_len)::BIGINT AS n_events,
+      |  ROUND(CAST(SUM(run_len) AS DOUBLE) / COUNT(*), 6) AS mean_run_len,
+      |  MAX(run_len) AS max_run_len
+      |FROM runs GROUP BY 1 ORDER BY 1""".stripMargin
+
   /** The (user_id, run_idx, event_type, run_len) frame under e98's run
     * definition (RunLengthParitySpec holds the streaming stage to it). */
   private[graft] def typeRunFrame(events: DataFrame): DataFrame = {
@@ -4039,29 +3309,6 @@ object Events {
       .agg(count(lit(1)).as("run_len"))
   }
 
-  def e98(spark: SparkSession, dir: String): DataFrame = {
-    typeRunFrame(Tables.events(spark, dir))
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n_runs"), sum(col("run_len")).as("n_events"),
-        round(dbl(sum(col("run_len"))) / count(lit(1)), 6).as("mean_run_len"),
-        max(col("run_len")).as("max_run_len"))
-      .orderBy("event_type")
-  }
-  val e98Sql: String =
-    """WITH e AS (SELECT user_id, event_id, event_type, epoch_ms(ts) AS ms FROM events),
-      |l AS (SELECT *, LAG(event_type) OVER (PARTITION BY user_id ORDER BY ms, event_id)
-      |        AS prev_type FROM e),
-      |f AS (SELECT *, CASE WHEN prev_type IS NULL OR prev_type <> event_type
-      |        THEN 1 ELSE 0 END AS new_run FROM l),
-      |r AS (SELECT *, SUM(new_run) OVER (PARTITION BY user_id ORDER BY ms, event_id
-      |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run_idx FROM f),
-      |runs AS (SELECT user_id, run_idx, event_type, COUNT(*)::BIGINT AS run_len
-      |  FROM r GROUP BY 1, 2, 3)
-      |SELECT event_type, COUNT(*)::BIGINT AS n_runs, SUM(run_len)::BIGINT AS n_events,
-      |  ROUND(CAST(SUM(run_len) AS DOUBLE) / COUNT(*), 6) AS mean_run_len,
-      |  MAX(run_len) AS max_run_len
-      |FROM runs GROUP BY 1 ORDER BY 1""".stripMargin
-
   // ---------------------------------------------------------------- e99
   /** User rhythm-regularity census: each user's modal-hour share (events
     * in their single busiest hour-of-day / total events, users ≥ 20
@@ -4074,24 +3321,9 @@ object Events {
     * Scale: two map-combinable groupBys — (user, hr) then user (≤24 rows
     * folded via a max over the per-hour counts, never a window) — then a
     * 10-row band rollup. No window, no skew hazard. */
-  def e99(spark: SparkSession, dir: String): DataFrame = {
-    val uh = Tables.events(spark, dir)
-      .select(col("user_id"), (floor(col("ms") / 3600000L) % 24).cast("long").as("hr"))
-      .groupBy("user_id", "hr").agg(count(lit(1)).as("n"))
-    val per = uh.groupBy("user_id")
-      .agg(sum(col("n")).as("total"), max(col("n")).as("modal"))
-      .filter(col("total") >= 20)
-      .withColumn("share", dbl(col("modal")) / col("total"))
-      .withColumn("band", least(floor(col("share") * 10), lit(9L)).cast("long"))
-    per.groupBy("band")
-      .agg(count(lit(1)).as("n_users"),
-        round(dbl(sum(col("total"))) / count(lit(1)), 6).as("avg_events"),
-        round(dbl(sum(round(col("share"), 6).cast("decimal(18,6)"))) / count(lit(1)), 6).as("avg_share"))
-      .orderBy("band")
-  }
   val e99Sql: String =
     """WITH uh AS (
-      |  SELECT user_id, (epoch_ms(ts) // 3600000) % 24 AS hr, COUNT(*)::BIGINT AS n
+      |  SELECT user_id, divide(epoch_ms(ts), 3600000) % 24 AS hr, COUNT(*)::BIGINT AS n
       |  FROM events GROUP BY 1, 2),
       |p AS (
       |  SELECT user_id, SUM(n)::BIGINT AS total, MAX(n)::BIGINT AS modal
@@ -4124,30 +3356,6 @@ object Events {
     * the shuffle), then two map-combinable groupBys — (user, type)
     * folding halves side by side (no self-join of half frames), then
     * user — and a 10-row band rollup. */
-  def e100(spark: SparkSession, dir: String): DataFrame = {
-    val wu = Window.partitionBy("user_id")
-    val wo = Window.partitionBy("user_id").orderBy("ms", "event_id")
-    val per = Tables.events(spark, dir)
-      .select(col("user_id"), col("event_id"), col("event_type"), col("ms"))
-      .withColumn("n", count(lit(1)).over(wu))
-      .filter(col("n") >= 20)
-      .withColumn("h1", when(row_number().over(wo) * 2 <= col("n"), 1L).otherwise(0L))
-      .groupBy("user_id", "event_type")
-      .agg(sum(col("h1")).as("c1"), sum(lit(1L) - col("h1")).as("c2"))
-      .groupBy("user_id")
-      .agg(sum(col("c1") * col("c2")).as("s12"),
-        sum(col("c1") * col("c1")).as("s11"),
-        sum(col("c2") * col("c2")).as("s22"),
-        sum(col("c1") + col("c2")).as("total"))
-      .withColumn("cos", dbl(col("s12")) / sqrt(dbl(col("s11") * col("s22"))))
-      .withColumn("band", least(floor(col("cos") * 10), lit(9L)).cast("long"))
-    per.groupBy("band")
-      .agg(count(lit(1)).as("n_users"),
-        round(dbl(sum(round(col("cos"), 6).cast("decimal(18,6)"))) / count(lit(1)), 6)
-          .as("avg_cos"),
-        round(dbl(sum(col("total"))) / count(lit(1)), 6).as("avg_events"))
-      .orderBy("band")
-  }
   val e100Sql: String =
     """WITH e AS (
       |  SELECT user_id, event_id, event_type, epoch_ms(ts) AS ms,
@@ -4547,40 +3755,6 @@ object Events {
     * Scale: the session index is the house user-partitioned prefix-sum
     * sessionizer; position is a row_number within (user, session) —
     * entity-partitioned windows only; final rollup is ≤ 10 rows. */
-  /** Per-event position within its 30-min-gap session — e107's core
-    * frame, shared with the streaming SessionPositionStage's parity
-    * spec (one definition of "position" for the live tracker and the
-    * batch rollup). Columns: user_id, event_id, ms, event_type, value,
-    * pos. */
-  private[graft] def sessionPositionFrame(events: DataFrame): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy(col("ms"), col("event_id"))
-    val wr = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    events
-      .select(col("user_id"), col("event_id"), col("ms"), col("event_type"), col("value"))
-      .withColumn("prev_ms", lag(col("ms"), 1).over(w))
-      .withColumn("new_sess",
-        when(col("prev_ms").isNull || col("ms") - col("prev_ms") > GapMs, 1L).otherwise(0L))
-      .withColumn("sess_idx", sum(col("new_sess")).over(wr))
-      .withColumn("pos", row_number().over(
-        Window.partitionBy("user_id", "sess_idx").orderBy(col("ms"), col("event_id"))).cast("long"))
-      .drop("prev_ms", "new_sess")
-  }
-
-  def e107(spark: SparkSession, dir: String): DataFrame = {
-    val pos = sessionPositionFrame(Tables.events(spark, dir))
-      .withColumn("pos_band", least(col("pos"), lit(10L)))
-    pos.groupBy("pos_band")
-      .agg(count(lit(1)).as("n_events"),
-        sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("n_purchases"),
-        sum(when(col("event_type") === "purchase",
-          (dec(col("value")) * 100).cast("long")).otherwise(0L)).as("cents"))
-      .select(col("pos_band"), col("n_events"), col("n_purchases"),
-        round(dbl(col("n_purchases")) / dbl(col("n_events")), 6).as("purchase_rate"),
-        round(when(col("n_purchases") > 0,
-          dbl(col("cents")) / dbl(col("n_purchases")) / 100).otherwise(0d), 6)
-          .as("avg_purchase_value"))
-      .orderBy("pos_band")
-  }
   val e107Sql: String =
     """WITH e AS (
       |  SELECT user_id, event_id, epoch_ms(ts) AS ms, event_type, value,
@@ -4607,6 +3781,25 @@ object Events {
       |      / SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) / 100
       |    ELSE 0.0 END, 6) AS avg_purchase_value
       |FROM p GROUP BY 1 ORDER BY 1""".stripMargin
+
+  /** Per-event position within its 30-min-gap session — e107's core
+    * frame, shared with the streaming SessionPositionStage and its parity
+    * spec (one definition of "position" for the live tracker and the
+    * batch rollup). Columns: user_id, event_id, ms, event_type, value,
+    * pos. */
+  private[graft] def sessionPositionFrame(events: DataFrame): DataFrame = {
+    val w = Window.partitionBy("user_id").orderBy(col("ms"), col("event_id"))
+    val wr = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    events
+      .select(col("user_id"), col("event_id"), col("ms"), col("event_type"), col("value"))
+      .withColumn("prev_ms", lag(col("ms"), 1).over(w))
+      .withColumn("new_sess",
+        when(col("prev_ms").isNull || col("ms") - col("prev_ms") > GapMs, 1L).otherwise(0L))
+      .withColumn("sess_idx", sum(col("new_sess")).over(wr))
+      .withColumn("pos", row_number().over(
+        Window.partitionBy("user_id", "sess_idx").orderBy(col("ms"), col("event_id"))).cast("long"))
+      .drop("prev_ms", "new_sess")
+  }
 
   // ---------------------------------------------------------------- e108
   /** The LTV curve: per user-age week (weeks since the user's first
@@ -5136,106 +4329,56 @@ object Events {
     "e110_bounce_by_entry" -> (e110 _),
     "e109_purchase_regularity" -> (e109 _),
     "e108_age_value_curve" -> (e108 _),
-    "e107_session_position_value" -> (e107 _),
     "e106_value_persistence" -> (e106 _),
     "e105_hourly_autocorr" -> (e105 _),
     "e104_exponential_fit" -> (e104 _),
     "e103_kmv_audit" -> (e103 _),
     "e102_markov_stationary" -> (e102 _),
     "e101_hll_audit" -> (e101 _),
-    "e100_behavior_stability" -> (e100 _),
-    "e99_hour_regularity" -> (e99 _),
-    "e98_type_run_lengths" -> (e98 _),
     "e97_error_bursts" -> (e97 _),
     "e96_peak_concurrency" -> (e96 _),
     "e95_prop_band_lift" -> (e95 _),
     "e94_anomaly_agreement" -> (e94 _),
-    "e93_gap_sweep" -> (e93 _),
     "e92_entry_retention" -> (e92 _),
-    "e91_lateness_profile" -> (e91 _),
-    "e90_type_lag_matrix" -> (e90 _),
-    "e89_step_dwell" -> (e89 _),
     "e88_alert_threshold_sweep" -> (e88 _),
     "e87_session_handoff" -> (e87 _),
-    "e86_rolling_value_bands" -> (e86 _),
     "e85_adaptive_anomaly_days" -> (e85 _),
     "e84_volume_ewma" -> (e84 _),
-    "e83_early_engagement_ltv" -> (e83 _),
     "e82_cms_heavy_hitters" -> (e82 _),
-    "e81_weekend_profile" -> (e81 _),
-    "e80_lifecycle_type_mix" -> (e80 _),
     "e79_value_anomaly" -> (e79 _),
-    "e78_reactivation_census" -> (e78 _),
-    "e77_active_streaks" -> (e77 _),
-    "e76_lifecycle_census" -> (e76 _),
     "e75_activity_zipf" -> (e75 _),
-    "e74_first_purchase_depth" -> (e74 _),
-    "e73_dow_revenue" -> (e73 _),
     "e71_arpdau" -> (e71 _),
-    "e70_error_recovery" -> (e70 _),
     "e69_stickiness" -> (e69 _),
-    "e68_value_frontload" -> (e68 _),
-    "e67_repurchase_latency" -> (e67 _),
-    "e66_session_revenue_hist" -> (e66 _),
-    "e65_depth_conversion" -> (e65 _),
     "e64_entry_conversion" -> (e64 _),
     "e63_lifespan_value_corr" -> (e63 _),
     "e61_purchase_reconciliation" -> (e61 _),
     "e59_entry_exit_matrix" -> (e59 _),
-    "e58_user_features" -> (e58 _),
     "e57_power_user_share" -> (e57 _),
     "e56_daily_trend" -> (e56 _),
     "e55_session_duration_hist" -> (e55 _),
     "e54_hour_dow_heatmap" -> (e54 _),
     "e53_entry_event" -> (e53 _),
-    "e52_hourly_load_percentiles" -> (e52 _),
-    "e51_error_rate_series" -> (e51 _),
-    "e50_activation_lag" -> (e50 _),
     "e49_dau_volatility" -> (e49 _),
     "e48_user_gini" -> (e48 _),
-    "e46_peak_hours" -> (e46 _),
-    "e45_daily_purchase_rate" -> (e45 _),
     "e44_cohort_value" -> (e44 _),
-    "e43_lifespan_bands" -> (e43 _),
-    "e42_dow_profile" -> (e42 _),
-    "e40_type_mix_trend" -> (e40 _),
-    "e39_revisit_gaps" -> (e39 _),
     "e38_retention_triangle" -> (e38 _),
-    "e37_first_session_conversion" -> (e37 _),
-    "e36_velocity_screen" -> (e36 _),
-    "e35_session_size_hist" -> (e35 _),
     "e33_new_vs_returning" -> (e33 _),
-    "e32_load_ratio" -> (e32 _),
     "e31_type_lift" -> (e31 _),
-    "e30_engagement_depth" -> (e30 _),
     "e29_rfm_segments" -> (e29 _),
-    "e28_growth_accounting" -> (e28 _),
-    "e27_session_cooccurrence" -> (e27 _),
-    "e26_touch_attribution" -> (e26 _),
-    "e25_funnel_windowed" -> (e25 _),
     "e24_rolling_active_sketch" -> (e24 _),
-    "e23_session_conversion" -> (e23 _),
     "e22_burstiness" -> (e22 _),
-    "e21_seasonality" -> (e21 _),
     "e19_conversion_lag" -> (e19 _),
-    "e18_gap_bands" -> (e18 _),
-    "e17_event_paths" -> (e17 _),
     "e16_value_deciles" -> (e16 _),
     "e15_decay_score" -> (e15 _),
     "e14_rolling_active" -> (e14 _),
     "e13_anomaly_hours" -> (e13 _),
-    "e01_sessionize" -> (e01 _),
     "e02_tumbling_window" -> (e02 _),
-    "e03_funnel" -> (e03 _),
-    "e04_retention" -> (e04 _),
     "e05_top_users" -> (e05 _),
     "e06_json_extract" -> (e06 _),
-    "e07_user_stats" -> (e07 _),
     "e08_asof_join" -> (e08 _),
     "e09_sessionize_scaleout" -> (e09 _),
     "e10_asof_join_scaleout" -> (e10 _),
     "e11_attribution_window" -> (e11 _),
-    "e12_transitions" -> (e12 _),
   )
 
   val oracle: Map[String, String] = Map(
@@ -5249,111 +4392,111 @@ object Events {
     "e110_bounce_by_entry" -> e110Sql,
     "e109_purchase_regularity" -> e109Sql,
     "e108_age_value_curve" -> e108Sql,
-    "e107_session_position_value" -> e107Sql,
     "e106_value_persistence" -> e106Sql,
     "e105_hourly_autocorr" -> e105Sql,
     "e104_exponential_fit" -> e104Sql,
     "e103_kmv_audit" -> e103Sql,
     "e102_markov_stationary" -> e102Sql,
-    "e100_behavior_stability" -> e100Sql,
-    "e99_hour_regularity" -> e99Sql,
-    "e98_type_run_lengths" -> e98Sql,
     "e97_error_bursts" -> e97Sql,
     "e96_peak_concurrency" -> e96Sql,
     "e95_prop_band_lift" -> e95Sql,
     "e94_anomaly_agreement" -> e94Sql,
-    "e93_gap_sweep" -> e93Sql,
     "e92_entry_retention" -> e92Sql,
-    "e91_lateness_profile" -> e91Sql,
-    "e90_type_lag_matrix" -> e90Sql,
-    "e89_step_dwell" -> e89Sql,
     "e88_alert_threshold_sweep" -> e88Sql,
     "e87_session_handoff" -> e87Sql,
-    "e86_rolling_value_bands" -> e86Sql,
     "e85_adaptive_anomaly_days" -> e85Sql,
     "e84_volume_ewma" -> e84Sql,
-    "e83_early_engagement_ltv" -> e83Sql,
     "e82_cms_heavy_hitters" -> e82Sql,
-    "e81_weekend_profile" -> e81Sql,
-    "e80_lifecycle_type_mix" -> e80Sql,
     "e79_value_anomaly" -> e79Sql,
-    "e78_reactivation_census" -> e78Sql,
-    "e77_active_streaks" -> e77Sql,
-    "e76_lifecycle_census" -> e76Sql,
     "e75_activity_zipf" -> e75Sql,
-    "e74_first_purchase_depth" -> e74Sql,
-    "e73_dow_revenue" -> e73Sql,
     "e71_arpdau" -> e71Sql,
-    "e70_error_recovery" -> e70Sql,
     "e69_stickiness" -> e69Sql,
-    "e68_value_frontload" -> e68Sql,
-    "e67_repurchase_latency" -> e67Sql,
-    "e66_session_revenue_hist" -> e66Sql,
-    "e65_depth_conversion" -> e65Sql,
     "e64_entry_conversion" -> e64Sql,
     "e63_lifespan_value_corr" -> e63Sql,
     "e61_purchase_reconciliation" -> e61Sql,
     "e59_entry_exit_matrix" -> e59Sql,
-    "e58_user_features" -> e58Sql,
     "e57_power_user_share" -> e57Sql,
     "e56_daily_trend" -> e56Sql,
     "e55_session_duration_hist" -> e55Sql,
     "e54_hour_dow_heatmap" -> e54Sql,
     "e53_entry_event" -> e53Sql,
-    "e52_hourly_load_percentiles" -> e52Sql,
-    "e51_error_rate_series" -> e51Sql,
-    "e50_activation_lag" -> e50Sql,
     "e49_dau_volatility" -> e49Sql,
     "e48_user_gini" -> e48Sql,
-    "e46_peak_hours" -> e46Sql,
-    "e45_daily_purchase_rate" -> e45Sql,
     "e44_cohort_value" -> e44Sql,
-    "e43_lifespan_bands" -> e43Sql,
-    "e42_dow_profile" -> e42Sql,
     "e16_value_deciles" -> e16Sql,
     "e15_decay_score" -> e15Sql,
     "e14_rolling_active" -> e14Sql,
     "e13_anomaly_hours" -> e13Sql,
-    "e01_sessionize" -> e01Sql,
     "e02_tumbling_window" -> e02Sql,
-    "e03_funnel" -> e03Sql,
-    "e04_retention" -> e04Sql,
     "e05_top_users" -> e05Sql,
     "e06_json_extract" -> e06Sql,
-    "e07_user_stats" -> e07Sql,
     "e08_asof_join" -> e08Sql,
     // the scale-out variants compute the same result — same oracles
     "e09_sessionize_scaleout" -> e01Sql,
     "e10_asof_join_scaleout" -> e08Sql,
     "e11_attribution_window" -> e11Sql,
-    "e12_transitions" -> e12Sql,
-    "e17_event_paths" -> e17Sql,
-    "e18_gap_bands" -> e18Sql,
     "e19_conversion_lag" -> e19Sql,
-    "e21_seasonality" -> e21Sql,
     "e22_burstiness" -> e22Sql,
-    "e23_session_conversion" -> e23Sql,
-    "e25_funnel_windowed" -> e25Sql,
-    "e26_touch_attribution" -> e26Sql,
-    "e27_session_cooccurrence" -> e27Sql,
-    "e28_growth_accounting" -> e28Sql,
     "e29_rfm_segments" -> e29Sql,
-    "e30_engagement_depth" -> e30Sql,
     "e31_type_lift" -> e31Sql,
-    "e32_load_ratio" -> e32Sql,
     "e33_new_vs_returning" -> e33Sql,
-    "e35_session_size_hist" -> e35Sql,
-    "e36_velocity_screen" -> e36Sql,
-    "e37_first_session_conversion" -> e37Sql,
     "e38_retention_triangle" -> e38Sql,
-    "e39_revisit_gaps" -> e39Sql,
-    "e40_type_mix_trend" -> e40Sql,
   )
 
   /** The operators that are their oracle text: `SparkEntry.queries`
     * binds each text to the table loaders with `Tables.sql`, and
     * `SparkEntry.oracleSql` hands the same text to DuckDB. */
   val sql: Map[String, String] = Map(
+    "e107_session_position_value" -> e107Sql,
+    "e100_behavior_stability" -> e100Sql,
+    "e99_hour_regularity" -> e99Sql,
+    "e98_type_run_lengths" -> e98Sql,
+    "e93_gap_sweep" -> e93Sql,
+    "e91_lateness_profile" -> e91Sql,
+    "e90_type_lag_matrix" -> e90Sql,
+    "e89_step_dwell" -> e89Sql,
+    "e86_rolling_value_bands" -> e86Sql,
+    "e83_early_engagement_ltv" -> e83Sql,
+    "e81_weekend_profile" -> e81Sql,
+    "e80_lifecycle_type_mix" -> e80Sql,
+    "e78_reactivation_census" -> e78Sql,
+    "e77_active_streaks" -> e77Sql,
+    "e76_lifecycle_census" -> e76Sql,
+    "e74_first_purchase_depth" -> e74Sql,
+    "e73_dow_revenue" -> e73Sql,
+    "e70_error_recovery" -> e70Sql,
+    "e68_value_frontload" -> e68Sql,
+    "e67_repurchase_latency" -> e67Sql,
+    "e66_session_revenue_hist" -> e66Sql,
+    "e65_depth_conversion" -> e65Sql,
+    "e58_user_features" -> e58Sql,
+    "e52_hourly_load_percentiles" -> e52Sql,
+    "e51_error_rate_series" -> e51Sql,
+    "e50_activation_lag" -> e50Sql,
+    "e46_peak_hours" -> e46Sql,
+    "e45_daily_purchase_rate" -> e45Sql,
+    "e43_lifespan_bands" -> e43Sql,
+    "e42_dow_profile" -> e42Sql,
+    "e40_type_mix_trend" -> e40Sql,
+    "e39_revisit_gaps" -> e39Sql,
+    "e37_first_session_conversion" -> e37Sql,
+    "e36_velocity_screen" -> e36Sql,
+    "e35_session_size_hist" -> e35Sql,
+    "e32_load_ratio" -> e32Sql,
+    "e30_engagement_depth" -> e30Sql,
+    "e28_growth_accounting" -> e28Sql,
+    "e27_session_cooccurrence" -> e27Sql,
+    "e26_touch_attribution" -> e26Sql,
+    "e25_funnel_windowed" -> e25Sql,
+    "e23_session_conversion" -> e23Sql,
+    "e21_seasonality" -> e21Sql,
+    "e18_gap_bands" -> e18Sql,
+    "e17_event_paths" -> e17Sql,
+    "e12_transitions" -> e12Sql,
+    "e07_user_stats" -> e07Sql,
+    "e04_retention" -> e04Sql,
+    "e03_funnel" -> e03Sql,
+    "e01_sessionize" -> e01Sql,
     "e72_segment_conversion" -> e72Sql,
     "e62_id_continuity" -> e62Sql,
     "e60_segment_360" -> e60Sql,

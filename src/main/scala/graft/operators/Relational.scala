@@ -978,20 +978,10 @@ object Relational {
     * cents — integer division avoids the float-boundary bucketing trap
     * entirely (no floor(double) at bucket edges). One map-side-combinable
     * groupBy; bucket count is bounded by the price domain, not N. */
-  def q46(spark: SparkSession, dir: String): DataFrame =
-    Tables.orders(spark, dir)
-      .select(col("o_totalprice"),
-        (dec(col("o_totalprice")) * 100).cast("long").as("cents"))
-      .withColumn("bucket", expr("cents div 5000000"))
-      .groupBy("bucket")
-      .agg(count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("total_price"))
-      .select(col("bucket"), (col("bucket") * 50000).as("bucket_lo"),
-              col("n_orders"), col("total_price"))
-      .orderBy("bucket")
   val q46Sql: String =
     """WITH b AS (
       |  SELECT o_totalprice,
-      |    CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT) // 5000000 AS bucket
+      |    divide(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT), 5000000) AS bucket
       |  FROM orders)
       |SELECT bucket, bucket * 50000 AS bucket_lo, COUNT(*) AS n_orders,
       |  CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS total_price
@@ -2056,21 +2046,6 @@ object Relational {
     * INTEGER arithmetic — revenue scaled to exact 4-decimal units, band
     * = (10·max)/total by integer division — so the band edge can never
     * drift between engines. Two map-combinable rollups, bounded output. */
-  def q86(spark: SparkSession, dir: String): DataFrame = {
-    val rev4 = (revenueTerm(col("l_extendedprice"), col("l_discount")) * 10000)
-      .cast("long")
-    val perOrder = Tables.lineitem(spark, dir)
-      .select(col("l_orderkey"), rev4.as("rev4"))
-      .groupBy("l_orderkey")
-      .agg(max(col("rev4")).as("max4"), sum(col("rev4")).as("tot4"),
-           count(lit(1)).as("n_lines"))
-    perOrder
-      .withColumn("band", least(expr("max4 * 10 div tot4"), lit(9L)).cast("long"))
-      .groupBy("band")
-      .agg(count(lit(1)).as("n_orders"),
-           (sum(col("n_lines")).cast("double") / count(lit(1))).as("avg_lines"))
-      .orderBy("band")
-  }
   val q86Sql: String =
     s"""WITH l AS (
       |  SELECT l_orderkey,
@@ -2080,7 +2055,7 @@ object Relational {
       |  SELECT l_orderkey, MAX(rev4) AS max4, SUM(rev4) AS tot4,
       |    COUNT(*)::BIGINT AS n_lines
       |  FROM l GROUP BY 1)
-      |SELECT LEAST(max4 * 10 // tot4, 9)::BIGINT AS band,
+      |SELECT LEAST(divide(max4 * 10, tot4), 9)::BIGINT AS band,
       |  COUNT(*)::BIGINT AS n_orders,
       |  CAST(SUM(n_lines) AS DOUBLE) / COUNT(*) AS avg_lines
       |FROM o GROUP BY 1 ORDER BY 1""".stripMargin
@@ -3601,7 +3576,6 @@ object Relational {
     "q101_spend_trend_census" -> (q101 _),
     "q96_nation_brand_affinity" -> (q96 _),
     "q94_region_trade_matrix" -> (q94 _),
-    "q86_line_dominance" -> (q86 _),
     "q85_fulfillment_span" -> (q85 _),
     "q78_value_migration" -> (q78 _),
     "q77_seasonality_index" -> (q77 _),
@@ -3617,7 +3591,6 @@ object Relational {
     "q57_latency_percentiles" -> (q57 _),
     "q53_repeat_rate" -> (q53 _),
     "q48_ship_latency" -> (q48 _),
-    "q46_price_histogram" -> (q46 _),
     "q45_order_gaps" -> (q45 _),
     "q43_higher_moments" -> (q43 _),
     "q37_heavy_hitters" -> (q37 _),
@@ -3653,7 +3626,6 @@ object Relational {
     "q101_spend_trend_census" -> q101Sql,
     "q96_nation_brand_affinity" -> q96Sql,
     "q94_region_trade_matrix" -> q94Sql,
-    "q86_line_dominance" -> q86Sql,
     "q85_fulfillment_span" -> q85Sql,
     "q78_value_migration" -> q78Sql,
     "q77_seasonality_index" -> q77Sql,
@@ -3669,7 +3641,6 @@ object Relational {
     "q57_latency_percentiles" -> q57Sql,
     "q53_repeat_rate" -> q53Sql,
     "q48_ship_latency" -> q48Sql,
-    "q46_price_histogram" -> q46Sql,
     "q45_order_gaps" -> q45Sql,
     "q43_higher_moments" -> q43Sql,
     "q03_top_revenue" -> q03Sql,
@@ -3690,6 +3661,8 @@ object Relational {
     * binds each text to the table loaders with `Tables.sql`, and
     * `SparkEntry.oracleSql` hands the same text to DuckDB. */
   val sql: Map[String, String] = Map(
+    "q86_line_dominance" -> q86Sql,
+    "q46_price_histogram" -> q46Sql,
     "q128_brand_catalog_span" -> q128Sql,
     "q125_segment_discount_depth" -> q125Sql,
     "q123_price_band_returns" -> q123Sql,

@@ -1,5 +1,7 @@
 package graft.engine
 
+import org.apache.spark.sql.AnalysisException
+
 import graft.{Graft, SparkSpec}
 
 /** `Tables.sql` binds a text to one directory's loaders, whatever the
@@ -42,5 +44,28 @@ class TablesSqlSpec extends SparkSpec {
       assert(plan("/*+ BROADCAST(nation) */").contains("BroadcastHashJoin"))
       assert(!plan("").contains("BroadcastHashJoin"))
     } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("epoch_ms(ts) equals the loader's ms on every events row") {
+    val r = Tables.sql(spark, sf,
+      "SELECT COUNT(*), COUNT_IF(NOT (epoch_ms(ts) <=> ms)) FROM events").head()
+    assert(r.getLong(0) > 0 && r.getLong(1) == 0)
+  }
+
+  test("divide is integer division truncating toward zero, as in DuckDB") {
+    val r = Tables.sql(spark, sf, "SELECT divide(7, 2), divide(-7, 2)").head()
+    assert(r.getLong(0) == 3 && r.getLong(1) == -3)
+  }
+
+  test("epoch_ms of a BIGINT fails analysis with an error that names epoch_ms") {
+    // DuckDB reads epoch_ms(BIGINT) as ms -> timestamp; a cast would be wrong
+    val e = intercept[AnalysisException](Tables.sql(spark, sf, "SELECT epoch_ms(ms) FROM events"))
+    assert(e.getMessage.contains("epoch_ms"))
+  }
+
+  test("binding the DuckDB names registers no function in the session") {
+    Tables.sql(spark, sf, "SELECT epoch_ms(ts), divide(ms, 1000) FROM events").collect()
+    assert(!spark.catalog.functionExists("epoch_ms"))
+    assert(!spark.catalog.functionExists("divide"))
   }
 }

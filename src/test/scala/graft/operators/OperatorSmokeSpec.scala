@@ -600,7 +600,7 @@ class OperatorSmokeSpec extends SparkSpec {
     val perUser = graft.engine.Tables.events(spark, sf)
       .groupBy("user_id").count().collect().map(_.getAs[Long]("count"))
     val want = perUser.map(n => math.max(0L, n - 2)).sum
-    val rows = Events.e17(spark, sf).collect()
+    val rows = Graft.run(spark, sf, "e17_event_paths").collect()
     assert(rows.map(_.getAs[Long]("n")).sum == want)
     rows.foreach(r => assert(r.getAs[Double]("avg_span_ms") > 0.0))
   }
@@ -755,7 +755,7 @@ class OperatorSmokeSpec extends SparkSpec {
       val c = r.getAs[Double]("corr_qty_price")
       assert(c >= -1.0 && c <= 1.0)
     }
-    val bands = Events.e18(spark, sf).collect()
+    val bands = Graft.run(spark, sf, "e18_gap_bands").collect()
     bands.groupBy(_.getAs[String]("event_type")).values.foreach { bs =>
       assert(math.abs(bs.map(_.getAs[Double]("pct")).sum - 1.0) < 1e-9)
     }
@@ -807,7 +807,7 @@ class OperatorSmokeSpec extends SparkSpec {
   }
 
   test("e01 sessionization: session stats are internally consistent") {
-    val rows = Events.e01(spark, sf).collect()
+    val rows = Graft.run(spark, sf, "e01_sessionize").collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getAs[Long]("end_ms") >= r.getAs[Long]("start_ms"))

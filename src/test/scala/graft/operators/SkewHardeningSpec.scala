@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{Graft, SparkSpec}
 
 /** Equivalence of the whale-key-hardened (split-and-stitch) event
   * operators with their direct single-window counterparts, on synthetic
@@ -86,7 +86,7 @@ class SkewHardeningSpec extends SparkSpec {
 
   test("e09/e10 reproduce e01/e08 on the real events table") {
     assert(Events.e09(spark, sf).collect().map(_.toString)
-      .sameElements(Events.e01(spark, sf).collect().map(_.toString)))
+      .sameElements(Graft.run(spark, sf, "e01_sessionize").collect().map(_.toString)))
     assert(Events.e10(spark, sf).collect().map(_.toString)
       .sameElements(Events.e08(spark, sf).collect().map(_.toString)))
   }

@@ -15,7 +15,7 @@ class FunnelParitySpec extends SparkSpec {
   test("streaming funnel advances over replayed sf0.001 events equal batch e03") {
     implicit val sq = spark.sqlContext
 
-    val batch = graft.operators.Events.e03(spark, sf)
+    val batch = graft.Graft.run(spark, sf, "e03_funnel")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
     val evs = graft.engine.Tables.events(spark, sf)

@@ -19,7 +19,7 @@ class LambdaParitySpec extends SparkSpec {
     implicit val sq = spark.sqlContext
 
     // batch truth: e01's (user, sess) aggregate
-    val batch = graft.operators.Events.e01(spark, sf)
+    val batch = graft.Graft.run(spark, sf, "e01_sessionize")
       .select("user_id", "start_ms", "end_ms", "n_events", "dur_ms")
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
