@@ -2,7 +2,6 @@ package graft.engine
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import graft.functions.VectorFunctions
 import graft.plans.CosineTopKStrategy
 
@@ -15,9 +14,8 @@ import graft.plans.CosineTopKStrategy
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => CosineTopKStrategy)
-    VectorFunctions.functions.foreach { case (name, builder) =>
-      ext.injectFunction((FunctionIdentifier(name),
-        new ExpressionInfo(builder.getClass.getName, name), builder))
+    VectorFunctions.functions.foreach { f =>
+      ext.injectFunction((FunctionIdentifier(f.name), f.info, f.builder))
     }
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, FloatType, LongType}
@@ -44,43 +44,55 @@ object VectorFunctions {
     }
   }
 
-  /** Every graft SQL function, by name. Both registration paths read this
-    * one table: [[register]] on a running session, and `GraftExtensions`
-    * for sessions built with `spark.sql.extensions`. */
-  val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "vec_dot" -> (exprs => DotProduct(exprs.head, exprs(1))),
-    "vec_norm" -> (exprs => VecNorm(exprs.head)),
-    "word_tokens" -> (exprs => WordTokens(exprs.head)),
-    "word_ngrams" -> (exprs => WordNGrams(exprs.head,
+  /** One graft SQL function: its name, the expression class it builds
+    * (what DESCRIBE FUNCTION shows) and the builder the analyzer calls
+    * with the argument expressions. */
+  final case class SqlFunction(name: String, cls: Class[_ <: Expression],
+                               builder: Seq[Expression] => Expression) {
+    def info: ExpressionInfo = new ExpressionInfo(cls.getName, name)
+  }
+
+  /** Every graft SQL function. Both registration paths read this one
+    * table: [[register]] on a running session, and `GraftExtensions` for
+    * sessions built with `spark.sql.extensions`. */
+  val functions: Seq[SqlFunction] = Seq(
+    SqlFunction("vec_dot", classOf[DotProduct], exprs => DotProduct(exprs.head, exprs(1))),
+    SqlFunction("vec_norm", classOf[VecNorm], exprs => VecNorm(exprs.head)),
+    SqlFunction("word_tokens", classOf[WordTokens], exprs => WordTokens(exprs.head)),
+    SqlFunction("word_ngrams", classOf[WordNGrams], exprs => WordNGrams(exprs.head,
       intArg("word_ngrams", 1, exprs))),
-    "vec_sign_bits" -> (exprs => VecSignBits(exprs.head,
+    SqlFunction("vec_sign_bits", classOf[VecSignBits], exprs => VecSignBits(exprs.head,
       intArg("vec_sign_bits", 1, exprs), intArg("vec_sign_bits", 2, exprs))),
-    "vec_lsh_keys" -> (exprs => VecLshKeys(exprs.head,
+    SqlFunction("vec_lsh_keys", classOf[VecLshKeys], exprs => VecLshKeys(exprs.head,
       intArg("vec_lsh_keys", 1, exprs), intArg("vec_lsh_keys", 2, exprs),
       intArg("vec_lsh_keys", 3, exprs), intArg("vec_lsh_keys", 4, exprs))),
-    "winnow_fps" -> (exprs => WinnowFingerprints(exprs.head,
-      intArg("winnow_fps", 1, exprs), intArg("winnow_fps", 2, exprs))),
-    "simhash64" -> (exprs => SimHash64(exprs.head)),
-    "char_class_counts" -> (exprs => CharClassCounts(exprs.head)),
+    SqlFunction("winnow_fps", classOf[WinnowFingerprints], exprs =>
+      WinnowFingerprints(exprs.head,
+        intArg("winnow_fps", 1, exprs), intArg("winnow_fps", 2, exprs))),
+    SqlFunction("simhash64", classOf[SimHash64], exprs => SimHash64(exprs.head)),
+    SqlFunction("char_class_counts", classOf[CharClassCounts], exprs =>
+      CharClassCounts(exprs.head)),
     // Spark's own runtime-filter machinery, exposed as callable functions:
     // bloom_agg(xxhash64(x), estItems, numBits) builds a serialized bloom
     // filter; bloom_contains(filterBinary, xxhash64(x)) probes it. These are
     // the codegen'd expressions InjectRuntimeFilter plants on shuffle joins —
     // reused here for explicit sketch-prefilter operators (d14).
-    "bloom_agg" -> (exprs => new BloomFilterAggregate(exprs.head, exprs(1), exprs(2))),
-    "bloom_contains" -> (exprs => BloomFilterMightContain(exprs.head, exprs(1))),
-    "sq8_encode" -> (exprs => Sq8Encode(exprs.head)),
-    "sq8_cos" -> (exprs => Sq8Cos(exprs.head, exprs(1))),
+    SqlFunction("bloom_agg", classOf[BloomFilterAggregate], exprs =>
+      new BloomFilterAggregate(exprs.head, exprs(1), exprs(2))),
+    SqlFunction("bloom_contains", classOf[BloomFilterMightContain], exprs =>
+      BloomFilterMightContain(exprs.head, exprs(1))),
+    SqlFunction("sq8_encode", classOf[Sq8Encode], exprs => Sq8Encode(exprs.head)),
+    SqlFunction("sq8_cos", classOf[Sq8Cos], exprs => Sq8Cos(exprs.head, exprs(1))),
     // KMV distinct sketch (TypedImperativeAggregate; the analyzer wraps
     // AggregateFunctions from the registry, same as bloom_agg above)
-    "kmv_distinct" -> (exprs => KmvDistinct(exprs.head,
+    SqlFunction("kmv_distinct", classOf[KmvDistinct], exprs => KmvDistinct(exprs.head,
       intArg("kmv_distinct", 1, exprs))),
     // corpus-scale 64-bit-domain variant (rows-only — see its scaladoc)
-    "kmv_distinct64" -> (exprs => KmvDistinct64(exprs.head,
+    SqlFunction("kmv_distinct64", classOf[KmvDistinct64], exprs => KmvDistinct64(exprs.head,
       intArg("kmv_distinct64", 1, exprs))),
     // deterministic bottom-k priority sampling (oracle-checked via p48)
-    "bottomk_sample" -> (exprs => BottomKSample(exprs.head, exprs(1),
-      intArg("bottomk_sample", 2, exprs))))
+    SqlFunction("bottomk_sample", classOf[BottomKSample], exprs =>
+      BottomKSample(exprs.head, exprs(1), intArg("bottomk_sample", 2, exprs))))
 
   /** Idempotently register [[functions]] with a session. Guarded PER
     * FUNCTION (a single-function guard would silently skip functions
@@ -88,9 +100,9 @@ object VectorFunctions {
     * every operator call). */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    functions.foreach { case (name, builder) =>
-      if (!reg.functionExists(FunctionIdentifier(name)))
-        reg.createOrReplaceTempFunction(name, builder, "built-in")
+    functions.foreach { f =>
+      val id = FunctionIdentifier(f.name)
+      if (!reg.functionExists(id)) reg.registerFunction(id, f.info, f.builder)
     }
   }
 

@@ -2031,13 +2031,11 @@ object Events {
        |FROM sess GROUP BY 1 ORDER BY 1""".stripMargin
 
   // ---------------------------------------------------------------- e66
-  /** Session revenue histogram: purchase revenue per 30-min session,
-    * banded on exact integer cents (zero-revenue sessions are their own
-    * band) — the monetization profile e55's duration histogram and e65's
-    * depth curve don't show. Same bounded per-user session windows as
-    * e01; cents accumulate as integers so the band edge can't drift. */
-  val e66Sql: String =
-    s"""WITH e AS (SELECT user_id, event_id, epoch_ms(ts) AS ms,
+  /** e66's sessions, CTEs ending in `sess`: one row per 30-min-gap
+    * session with user_id, sess_idx, start_ms, n_events and integer
+    * purchase cents. */
+  private val e66Sessions: String =
+    s"""e AS (SELECT user_id, event_id, epoch_ms(ts) AS ms,
        |    CASE WHEN event_type = 'purchase'
        |         THEN CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) END AS cents
        |  FROM events),
@@ -2045,9 +2043,21 @@ object Events {
        |f AS (SELECT *, CASE WHEN prev_ms IS NULL OR ms - prev_ms > $GapMs THEN 1 ELSE 0 END AS new_sess FROM l),
        |s AS (SELECT *, CAST(SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ms, event_id
        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS sess_idx FROM f),
-       |sess AS (SELECT user_id, sess_idx, COUNT(*)::BIGINT AS n_events,
+       |sess AS (SELECT user_id, sess_idx, MIN(ms) AS start_ms, COUNT(*)::BIGINT AS n_events,
        |    COALESCE(SUM(cents), 0)::BIGINT AS cents
-       |  FROM s GROUP BY 1, 2)
+       |  FROM s GROUP BY 1, 2)""".stripMargin
+
+  /** The per-session revenue frame e66 bands; LambdaParitySpec holds the
+    * streaming revenue sessionizer to it. */
+  private[graft] val sessionRevenueSql: String = s"WITH $e66Sessions\nSELECT * FROM sess"
+
+  /** Session revenue histogram: purchase revenue per 30-min session,
+    * banded on exact integer cents (zero-revenue sessions are their own
+    * band) — the monetization profile e55's duration histogram and e65's
+    * depth curve don't show. Same bounded per-user session windows as
+    * e01; cents accumulate as integers so the band edge can't drift. */
+  val e66Sql: String =
+    s"""WITH $e66Sessions
        |SELECT CASE WHEN cents = 0 THEN 'a0' WHEN cents <= 5000 THEN 'b<=50'
        |            WHEN cents <= 15000 THEN 'c<=150' WHEN cents <= 30000 THEN 'd<=300'
        |            ELSE 'e>300' END AS revenue_band,
@@ -2055,27 +2065,6 @@ object Events {
        |  CAST(SUM(n_events) AS DOUBLE) / COUNT(*) AS avg_events,
        |  CAST(SUM(cents) AS DOUBLE) / 100 AS total_revenue
        |FROM sess GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** Per-session revenue frame (user_id, sess_idx, start_ms, n_events,
-    * cents), the frame e66 bands; LambdaParitySpec replays the same events
-    * through the STREAMING revenue sessionizer and must reproduce this
-    * frame exactly. */
-  private[graft] def sessionRevenueFrame(events: DataFrame): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy(col("ms"), col("event_id"))
-    val wr = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    events
-      .select(col("user_id"), col("event_id"), col("ms"),
-        when(col("event_type") === "purchase",
-          (dec(col("value")) * 100).cast("long")).as("cents"))
-      .withColumn("prev_ms", lag(col("ms"), 1).over(w))
-      .withColumn("new_sess",
-        when(col("prev_ms").isNull || col("ms") - col("prev_ms") > GapMs, 1L).otherwise(0L))
-      .withColumn("sess_idx", sum(col("new_sess")).over(wr))
-      .groupBy("user_id", "sess_idx")
-      .agg(min(col("ms")).as("start_ms"),
-           count(lit(1)).as("n_events"),
-           coalesce(sum(col("cents")), lit(0L)).as("cents"))
-  }
 
   // ---------------------------------------------------------------- e67
   /** Repurchase latency: gaps between a user's consecutive PURCHASES
@@ -2369,15 +2358,10 @@ object Events {
       |FROM u GROUP BY 1 ORDER BY 1""".stripMargin
 
   // ---------------------------------------------------------------- e78
-  /** Dormancy-reactivation census: users who come back after ≥2 silent
-    * days, banded by how often — the win-back signal e28's weekly
-    * "resurrected" bucket quantizes away (a dormancy shorter than the
-    * week bin is invisible there; the threshold is a constant to tune
-    * per corpus horizon). One lag window per user (bounded state), one
-    * per-user rollup, integer-ms gap compares, ≤4 bands with a single
-    * division each. */
-  val e78Sql: String =
-    """WITH g AS (
+  /** e78's dormancy, CTEs ending in `u`: per user, n_react (gaps of
+    * more than 2 days between consecutive events) and max_dorm_ms. */
+  private val e78Users: String =
+    """g AS (
       |  SELECT user_id,
       |    epoch_ms(ts) - LAG(epoch_ms(ts)) OVER
       |      (PARTITION BY user_id ORDER BY epoch_ms(ts), event_id) AS gap
@@ -2386,7 +2370,22 @@ object Events {
       |  SELECT user_id,
       |    SUM(CASE WHEN gap > 172800000 THEN 1 ELSE 0 END)::BIGINT AS n_react,
       |    MAX(CASE WHEN gap > 172800000 THEN gap END) AS max_dorm_ms
-      |  FROM g GROUP BY 1)
+      |  FROM g GROUP BY 1)""".stripMargin
+
+  /** The per-user reactivation frame (user_id, n_react, max_dorm_ms) e78
+    * bands; ReactivationParitySpec holds the streaming ReactivationStage
+    * to it. */
+  private[graft] val reactivationSql: String = s"WITH $e78Users\nSELECT * FROM u"
+
+  /** Dormancy-reactivation census: users who come back after ≥2 silent
+    * days, banded by how often — the win-back signal e28's weekly
+    * "resurrected" bucket quantizes away (a dormancy shorter than the
+    * week bin is invisible there; the threshold is a constant to tune
+    * per corpus horizon). One lag window per user (bounded state), one
+    * per-user rollup, integer-ms gap compares, ≤4 bands with a single
+    * division each. */
+  val e78Sql: String =
+    s"""WITH $e78Users
       |SELECT CASE WHEN n_react = 0 THEN 'a_none'
       |            WHEN n_react = 1 THEN 'b_once'
       |            WHEN n_react = 2 THEN 'c_twice'
@@ -2396,20 +2395,6 @@ object Events {
       |  CAST(SUM(divide(max_dorm_ms, 86400000)) AS DOUBLE) / COUNT(max_dorm_ms)
       |    AS avg_max_dormancy_days
       |FROM u GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** Per-user reactivation frame (n_react, max_dorm_ms) under e78's
-    * definition of "dormancy"; the streaming ReactivationStage parity
-    * spec holds the stream to it. */
-  private[graft] def reactivationFrame(events: DataFrame,
-                                       dormMs: Long = 2L * 86400000L): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy(col("ms"), col("event_id"))
-    events
-      .select(col("user_id"), col("event_id"), col("ms"))
-      .withColumn("gap", col("ms") - lag(col("ms"), 1).over(w))
-      .groupBy("user_id")
-      .agg(sum(when(col("gap") > dormMs, 1L).otherwise(0L)).as("n_react"),
-           max(when(col("gap") > dormMs, col("gap"))).as("max_dorm_ms"))
-  }
 
   // ---------------------------------------------------------------- e79
   /** Per-type purchase-value outlier screen: events whose value sits
@@ -3268,6 +3253,24 @@ object Events {
       |GROUP BY burst_band, n_users_total ORDER BY burst_band""".stripMargin
 
   // ---------------------------------------------------------------- e98
+  /** e98's runs, CTEs ending in `runs`: one row per run of consecutive
+    * same-type events of a user (ordered by ms, event_id), with
+    * user_id, run_idx, event_type and run_len. */
+  private val e98Runs: String =
+    """e AS (SELECT user_id, event_id, event_type, epoch_ms(ts) AS ms FROM events),
+      |l AS (SELECT *, LAG(event_type) OVER (PARTITION BY user_id ORDER BY ms, event_id)
+      |        AS prev_type FROM e),
+      |f AS (SELECT *, CASE WHEN prev_type IS NULL OR prev_type <> event_type
+      |        THEN 1 ELSE 0 END AS new_run FROM l),
+      |r AS (SELECT *, SUM(new_run) OVER (PARTITION BY user_id ORDER BY ms, event_id
+      |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run_idx FROM f),
+      |runs AS (SELECT user_id, run_idx, event_type, COUNT(*)::BIGINT AS run_len
+      |  FROM r GROUP BY 1, 2, 3)""".stripMargin
+
+  /** The run frame e98 rolls up; RunLengthParitySpec holds the streaming
+    * RunLengthStage to it. */
+  private[graft] val typeRunSql: String = s"WITH $e98Runs\nSELECT * FROM runs"
+
   /** Behavioral run-length profile: consecutive same-type event runs
     * per user (ordered by ms, event_id), rolled up per event type to
     * run count, mean run length (exact-integer division), and max run.
@@ -3279,35 +3282,11 @@ object Events {
     * a (user, run) rollup sharing the same partitioning, and a
     * |types|-bounded final frame. */
   val e98Sql: String =
-    """WITH e AS (SELECT user_id, event_id, event_type, epoch_ms(ts) AS ms FROM events),
-      |l AS (SELECT *, LAG(event_type) OVER (PARTITION BY user_id ORDER BY ms, event_id)
-      |        AS prev_type FROM e),
-      |f AS (SELECT *, CASE WHEN prev_type IS NULL OR prev_type <> event_type
-      |        THEN 1 ELSE 0 END AS new_run FROM l),
-      |r AS (SELECT *, SUM(new_run) OVER (PARTITION BY user_id ORDER BY ms, event_id
-      |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run_idx FROM f),
-      |runs AS (SELECT user_id, run_idx, event_type, COUNT(*)::BIGINT AS run_len
-      |  FROM r GROUP BY 1, 2, 3)
+    s"""WITH $e98Runs
       |SELECT event_type, COUNT(*)::BIGINT AS n_runs, SUM(run_len)::BIGINT AS n_events,
       |  ROUND(CAST(SUM(run_len) AS DOUBLE) / COUNT(*), 6) AS mean_run_len,
       |  MAX(run_len) AS max_run_len
       |FROM runs GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** The (user_id, run_idx, event_type, run_len) frame under e98's run
-    * definition (RunLengthParitySpec holds the streaming stage to it). */
-  private[graft] def typeRunFrame(events: DataFrame): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy(col("ms"), col("event_id"))
-    val wr = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    events
-      .select(col("user_id"), col("event_id"), col("event_type"), col("ms"))
-      .withColumn("prev_type", lag(col("event_type"), 1).over(w))
-      .withColumn("new_run",
-        when(col("prev_type").isNull || col("prev_type") =!= col("event_type"), 1L)
-          .otherwise(0L))
-      .withColumn("run_idx", sum(col("new_run")).over(wr))
-      .groupBy("user_id", "run_idx", "event_type")
-      .agg(count(lit(1)).as("run_len"))
-  }
 
   // ---------------------------------------------------------------- e99
   /** User rhythm-regularity census: each user's modal-hour share (events
@@ -3746,6 +3725,31 @@ object Events {
       |FROM m""".stripMargin
 
   // ---------------------------------------------------------------- e107
+  /** e107's positions, CTEs ending in `n`: every event (user_id,
+    * event_id, ms, event_type, value) with `pos`, its 1-based position
+    * within its 30-min-gap session. */
+  private val e107Positions: String =
+    """e AS (
+      |  SELECT user_id, event_id, epoch_ms(ts) AS ms, event_type, value,
+      |    LAG(epoch_ms(ts)) OVER (PARTITION BY user_id ORDER BY epoch_ms(ts), event_id) AS prev_ms
+      |  FROM events),
+      |s AS (
+      |  SELECT *, SUM(CASE WHEN prev_ms IS NULL OR ms - prev_ms > 1800000
+      |    THEN 1 ELSE 0 END) OVER (
+      |      PARTITION BY user_id ORDER BY ms, event_id
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess_idx
+      |  FROM e),
+      |n AS (
+      |  SELECT user_id, event_id, ms, event_type, value,
+      |    CAST(ROW_NUMBER() OVER (
+      |      PARTITION BY user_id, sess_idx ORDER BY ms, event_id) AS BIGINT) AS pos
+      |  FROM s)""".stripMargin
+
+  /** The position frame e107 bands; SessionPositionParitySpec holds the
+    * streaming SessionPositionStage to it (one definition of "position"
+    * for the live tracker and the batch rollup). */
+  private[graft] val sessionPositionSql: String = s"WITH $e107Positions\nSELECT * FROM n"
+
   /** Value by position-in-session: purchase count, conversion share and
     * DECIMAL-exact average purchase value at each event position within
     * its session (capped at 10; later positions pool into band 10) —
@@ -3756,21 +3760,8 @@ object Events {
     * sessionizer; position is a row_number within (user, session) —
     * entity-partitioned windows only; final rollup is ≤ 10 rows. */
   val e107Sql: String =
-    """WITH e AS (
-      |  SELECT user_id, event_id, epoch_ms(ts) AS ms, event_type, value,
-      |    LAG(epoch_ms(ts)) OVER (PARTITION BY user_id ORDER BY epoch_ms(ts), event_id) AS prev_ms
-      |  FROM events),
-      |s AS (
-      |  SELECT *, SUM(CASE WHEN prev_ms IS NULL OR ms - prev_ms > 1800000
-      |    THEN 1 ELSE 0 END) OVER (
-      |      PARTITION BY user_id ORDER BY ms, event_id
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess_idx
-      |  FROM e),
-      |p AS (
-      |  SELECT event_type, value,
-      |    LEAST(CAST(ROW_NUMBER() OVER (
-      |      PARTITION BY user_id, sess_idx ORDER BY ms, event_id) AS BIGINT), 10) AS pos_band
-      |  FROM s)
+    s"""WITH $e107Positions,
+      |p AS (SELECT event_type, value, LEAST(pos, 10) AS pos_band FROM n)
       |SELECT pos_band, COUNT(*)::BIGINT AS n_events,
       |  SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)::BIGINT AS n_purchases,
       |  ROUND(CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS DOUBLE)
@@ -3781,25 +3772,6 @@ object Events {
       |      / SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) / 100
       |    ELSE 0.0 END, 6) AS avg_purchase_value
       |FROM p GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** Per-event position within its 30-min-gap session — e107's core
-    * frame, shared with the streaming SessionPositionStage and its parity
-    * spec (one definition of "position" for the live tracker and the
-    * batch rollup). Columns: user_id, event_id, ms, event_type, value,
-    * pos. */
-  private[graft] def sessionPositionFrame(events: DataFrame): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy(col("ms"), col("event_id"))
-    val wr = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    events
-      .select(col("user_id"), col("event_id"), col("ms"), col("event_type"), col("value"))
-      .withColumn("prev_ms", lag(col("ms"), 1).over(w))
-      .withColumn("new_sess",
-        when(col("prev_ms").isNull || col("ms") - col("prev_ms") > GapMs, 1L).otherwise(0L))
-      .withColumn("sess_idx", sum(col("new_sess")).over(wr))
-      .withColumn("pos", row_number().over(
-        Window.partitionBy("user_id", "sess_idx").orderBy(col("ms"), col("event_id"))).cast("long"))
-      .drop("prev_ms", "new_sess")
-  }
 
   // ---------------------------------------------------------------- e108
   /** The LTV curve: per user-age week (weeks since the user's first

@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Per-event position-in-session, live — the streaming twin of the
-  * batch e107 frame (Events.sessionPositionFrame): for every event, its
+/** Per-event position-in-session, live — the streaming twin of e107's
+  * position frame (Events.sessionPositionSql): for every event, its
   * 1-based position within the user's current 30-min-gap session. The
   * downstream consumers are the same as e107's batch rollup (does money
   * arrive on click 1?) plus live UX triggers ("third page this visit →

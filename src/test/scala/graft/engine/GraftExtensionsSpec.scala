@@ -3,6 +3,7 @@ package graft.engine
 import graft.SparkSpec
 import graft.functions.VectorFunctions
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 
 /** The cluster deployment path is `spark.sql.extensions=graft.engine.
@@ -79,10 +80,19 @@ class GraftExtensionsSpec extends SparkSpec {
     val ngrams = "size(word_ngrams('a b c', 3L))"
     assert(spark.sql(s"SELECT $ngrams").head().getInt(0) == 1)
     withExtensions { s =>
-      val missing = VectorFunctions.functions.map(_._1)
+      val missing = VectorFunctions.functions.map(_.name)
         .filterNot(name => s.catalog.functionExists(name))
       assert(missing.isEmpty, s"not in the extensions-built session: ${missing.mkString(", ")}")
       assert(s.sql(s"SELECT $ngrams").head().getInt(0) == 1)
     }
+  }
+
+  test("both registration paths record each function's expression class") {
+    VectorFunctions.register(spark)
+    def classes(s: SparkSession): Seq[String] = VectorFunctions.functions.map(f =>
+      s.sessionState.catalog.lookupFunctionInfo(FunctionIdentifier(f.name)).getClassName)
+    val expected = VectorFunctions.functions.map(_.cls.getName)
+    assert(classes(spark) == expected)
+    withExtensions(s => assert(classes(s) == expected))
   }
 }

@@ -9,8 +9,8 @@ import org.apache.spark.sql.streaming.OutputMode
   * over the real sf0.001 events table must reproduce the BATCH
   * sessionizer (e01) exactly — same (user, start, end, n, duration)
   * multiset. This is the property that lets a backfill job and the live
-  * stream share one definition of "session"; any drift between
-  * Events.sessionize and SessionPipeline.sessionize fails here, not in
+  * stream share one definition of "session"; any drift between e01's
+  * SQL text and SessionPipeline.sessionize fails here, not in
   * production reconciliation. */
 class LambdaParitySpec extends SparkSpec {
   import spark.implicits._
@@ -60,9 +60,9 @@ class LambdaParitySpec extends SparkSpec {
     import graft.streaming.SessionPipeline.{EvV, RevSession}
     implicit val sq = spark.sqlContext
 
-    // batch truth: the per-session revenue frame e66 bands
-    val batch = graft.operators.Events
-      .sessionRevenueFrame(graft.engine.Tables.events(spark, sf))
+    // batch truth: the per-session revenue frame e66 bands (the CTEs of
+    // the text e66 runs)
+    val batch = graft.engine.Tables.sql(spark, sf, graft.operators.Events.sessionRevenueSql)
       .select("user_id", "start_ms", "n_events", "cents")
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))

@@ -7,7 +7,8 @@ import org.apache.spark.sql.streaming.OutputMode
 
 /** Lambda parity for dormancy detection: the streaming reactivation
   * alerts, replayed over the real sf0.001 events table and rolled up
-  * per user, must equal the batch e78 reactivation frame exactly —
+  * per user, must equal e78's reactivation frame (the CTEs of the text
+  * e78 runs) exactly —
   * same (user, n_react, max_dorm_ms) multiset on the users that
   * reactivate at all. One definition of "dormancy" for backfill and
   * live stream. */
@@ -17,8 +18,7 @@ class ReactivationParitySpec extends SparkSpec {
   test("streaming reactivation alerts over replayed sf0.001 events equal batch e78's frame") {
     implicit val sq = spark.sqlContext
 
-    val batch = graft.operators.Events
-      .reactivationFrame(graft.engine.Tables.events(spark, sf))
+    val batch = graft.engine.Tables.sql(spark, sf, graft.operators.Events.reactivationSql)
       .filter("n_react > 0")
       .select("user_id", "n_react", "max_dorm_ms")
       .collect()

@@ -7,7 +7,8 @@ import org.apache.spark.sql.streaming.OutputMode
 
 /** Lambda parity for run tracking: the streaming stage, replayed over
   * the real sf0.001 events, must report the same per-(user, type) MAX
-  * run length as the batch e98 run frame — one definition of "run"
+  * run length as e98's run frame (the CTEs of the text e98 runs) — one
+  * definition of "run"
   * for the live alert and the nightly profile. */
 class RunLengthParitySpec extends SparkSpec {
   import spark.implicits._
@@ -15,8 +16,7 @@ class RunLengthParitySpec extends SparkSpec {
   test("streaming runs over replayed sf0.001 events equal batch e98's per-user-type max") {
     implicit val sq = spark.sqlContext
 
-    val batch = graft.operators.Events
-      .typeRunFrame(graft.engine.Tables.events(spark, sf))
+    val batch = graft.engine.Tables.sql(spark, sf, graft.operators.Events.typeRunSql)
       .groupBy("user_id", "event_type").agg(org.apache.spark.sql.functions.max("run_len").as("mx"))
       .collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))

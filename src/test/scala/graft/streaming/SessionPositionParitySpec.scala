@@ -7,7 +7,8 @@ import org.apache.spark.sql.streaming.OutputMode
 
 /** Lambda parity for position-in-session: the streaming stage, replayed
   * over the real sf0.001 events, must assign every event the same
-  * position as the batch e107 frame — one definition of "position" for
+  * position as e107's position frame (the CTEs of the text e107
+  * runs) — one definition of "position" for
   * the live tracker and the nightly rollup. */
 class SessionPositionParitySpec extends SparkSpec {
   import spark.implicits._
@@ -15,8 +16,7 @@ class SessionPositionParitySpec extends SparkSpec {
   test("streaming positions over replayed sf0.001 events equal batch e107's frame") {
     implicit val sq = spark.sqlContext
 
-    val batch = graft.operators.Events
-      .sessionPositionFrame(graft.engine.Tables.events(spark, sf))
+    val batch = graft.engine.Tables.sql(spark, sf, graft.operators.Events.sessionPositionSql)
       .select("user_id", "event_id", "pos").collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
 
