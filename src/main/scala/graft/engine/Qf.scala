@@ -29,9 +29,6 @@ object Qf {
   /** Order-independent average: one IEEE division of exact operands. */
   def davg(c: Column): Column = dbl(sum(dec(c))) / count(lit(1))
 
-  /** ISO day string (matches DuckDB strftime('%Y-%m-%d')). */
-  def dayStr(c: Column): Column = date_format(c, "yyyy-MM-dd")
-
   val D38: DecimalType = DecimalType(38, 0)
 
   /** Exact integer square root: floor(√x) of a non-negative

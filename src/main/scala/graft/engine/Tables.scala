@@ -6,11 +6,11 @@ import scala.collection.immutable.ListMap
 
 import org.apache.spark.sql.{DataFrame, GraftPlanFactory, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{TypeCheckResult, UnresolvedFunction, UnresolvedRelation}
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, IntegralDivide, RuntimeReplaceable, UnaryExpression, UnixMillis}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, DateFormatClass, Expression, IntegralDivide, Literal, RuntimeReplaceable, UnaryExpression, UnixMillis}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DataType, DateType, StringType, TimestampNTZType, TimestampType}
 
 /** Schema-checked loaders for the driver-generated parquet tables.
   *
@@ -148,7 +148,7 @@ object Tables {
     * another directory never leak in. An unknown table name fails with
     * an error that names it.
     *
-    * Two DuckDB function names bind too, so one text runs in both
+    * Three DuckDB function names bind too, so one text runs in both
     * engines and in any session, with or without `GraftExtensions`:
     *   - `epoch_ms(t)`, t a TIMESTAMP or TIMESTAMP_NTZ: epoch
     *     milliseconds, `unix_millis(CAST(t AS TIMESTAMP))`, the value of
@@ -157,7 +157,18 @@ object Tables {
     *   - `divide(a, b)`: integer division, Spark's `a div b`. Both
     *     engines truncate toward zero (`divide(-7, 2)` = -3). Texts write
     *     `divide(a, b)`, never DuckDB's `a // b`, which Spark cannot
-    *     parse. */
+    *     parse.
+    *   - `strftime(t, '<format>')`, t a DATE, TIMESTAMP or TIMESTAMP_NTZ
+    *     and the format a string literal of `%Y`, `%m`, `%d`, `%H` and
+    *     literal text: `date_format(t, <pattern>)` with `%Y` → `yyyy`,
+    *     `%m` → `MM`, `%d` → `dd`, `%H` → `HH` and the text quoted. Any
+    *     other specifier, or a format that is not a literal, fails
+    *     analysis.
+    *
+    * Spark cannot parse DuckDB's HUGEINT; texts write `DECIMAL(38,0)`,
+    * except where `//` divides a HUGEINT-derived value: DuckDB divides a
+    * DECIMAL in floating point, so such a text keeps HUGEINT and its
+    * operator stays DataFrame. */
   def sql(spark: SparkSession, dir: String, text: String): DataFrame = {
     val parsed = GraftPlanFactory.parsePlan(spark, text)
     def cteNames(plan: LogicalPlan): Seq[String] = plan.collectWithSubqueries {
@@ -181,6 +192,7 @@ object Tables {
           (f.nameParts.head.toLowerCase(Locale.ROOT), f.arguments) match {
             case ("epoch_ms", Seq(t)) => EpochMs(t)
             case ("divide", Seq(a, b)) => new IntegralDivide(a, b)
+            case ("strftime", Seq(t, format)) => Strftime(t, format)
             case _ => f
           }
       }
@@ -204,4 +216,48 @@ private[engine] case class EpochMs(child: Expression)
   }
   override def prettyName: String = "epoch_ms"
   override protected def withNewChildInternal(c: Expression): EpochMs = copy(child = c)
+}
+
+/** DuckDB's `strftime(t, '<format>')` as [[Tables.sql]] binds it, for
+  * the specifiers `%Y`, `%m`, `%d` and `%H`. Type-checked under its
+  * DuckDB name, so another specifier or a non-literal format fails
+  * analysis with an error that names `strftime`; the optimizer replaces
+  * it with `date_format(CAST(t AS TIMESTAMP), <pattern>)`. */
+private[engine] case class Strftime(left: Expression, right: Expression)
+    extends BinaryExpression with RuntimeReplaceable {
+  private lazy val pattern: Option[String] = right match {
+    case Literal(f, _: StringType) if f != null => Strftime.pattern(f.toString)
+    case _ => None
+  }
+  override lazy val replacement: Expression = {
+    val tz = Some(SQLConf.get.sessionLocalTimeZone)
+    DateFormatClass(Cast(left, TimestampType, tz), Literal(pattern.get), tz)
+  }
+  override def dataType: DataType = StringType
+  override def checkInputDataTypes(): TypeCheckResult = left.dataType match {
+    case DateType | TimestampType | TimestampNTZType =>
+      if (pattern.isDefined) TypeCheckResult.TypeCheckSuccess
+      else TypeCheckResult.TypeCheckFailure(
+        s"strftime takes a string literal of %Y, %m, %d, %H and text, not ${right.sql}")
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"strftime takes a DATE, TIMESTAMP or TIMESTAMP_NTZ, not ${other.sql}")
+  }
+  override def prettyName: String = "strftime"
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Strftime =
+    copy(left = l, right = r)
+}
+
+private[engine] object Strftime {
+  private val specifiers = Map("%Y" -> "yyyy", "%m" -> "MM", "%d" -> "dd", "%H" -> "HH")
+  private val token = "%.?|[^%]+".r
+
+  /** The `date_format` pattern of a DuckDB format: each specifier
+    * mapped, each run of other text quoted; None on another specifier. */
+  def pattern(format: String): Option[String] = {
+    val parts = token.findAllIn(format).map {
+      case spec if spec.startsWith("%") => specifiers.get(spec)
+      case text => Some("'" + text.replace("'", "''") + "'")
+    }.toSeq
+    if (parts.forall(_.isDefined)) Some(parts.flatten.mkString) else None
+  }
 }

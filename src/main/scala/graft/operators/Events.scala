@@ -19,10 +19,12 @@ import graft.engine.Qf._
   * `Relational`); their DuckDB compare is a cross-engine check, not a
   * second implementation. Their texts read time as `epoch_ms(ts)`, which
   * `Tables.sql` binds to the same value as the loader's `ms`, and divide
-  * integers with `divide(a, b)`, never DuckDB's `//`. The DataFrame
-  * operators left in `queries` are the ones whose text Spark cannot run
-  * (HUGEINT, `strftime`, `UNNEST`, ASOF joins, ...) or whose bound text
-  * plans differently from the DataFrame form.
+  * integers with `divide(a, b)`, never DuckDB's `//`, format time with
+  * `strftime`, and write wide exact integers as DECIMAL(38,0). The
+  * DataFrame operators left in `queries` are the ones whose text Spark
+  * cannot run (`UNNEST`, ASOF joins, a HUGEINT that `//` divides, ...),
+  * whose bound text plans differently from the DataFrame form, or whose
+  * SQL form read slower.
   */
 object Events {
   type Q = (SparkSession, String) => DataFrame
@@ -113,14 +115,6 @@ object Events {
 
   // ---------------------------------------------------------------- e02
   /** 1-hour tumbling window counts / sums / distinct users by type. */
-  def e02(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .groupBy(date_format(date_trunc("hour", col("ets")), "yyyy-MM-dd HH:00").as("hour"),
-               col("event_type"))
-      .agg(count(lit(1)).as("n"),
-           dsum(col("value")).as("total_value"),
-           countDistinct(col("user_id")).as("n_users"))
-      .orderBy("hour", "event_type")
   val e02Sql: String =
     """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:00') AS hour, event_type,
       |  COUNT(*) AS n,
@@ -369,35 +363,12 @@ object Events {
     * `cnt > mean + 3*stddev` is cross-multiplied to
     * `(n*cnt - S)^2 * (n-1) > 9 * n * (n*Q - S^2)` (and `n*cnt > S` for
     * the high side) — no float boundary on the flag. Intermediates are
-    * DECIMAL(38,0) (Spark) / HUGEINT (DuckDB): exact at any count
-    * magnitude, so hourly volumes of 10^9 at cluster scale cannot
+    * DECIMAL(38,0) in both engines: exact at any count magnitude, so hourly volumes of 10^9 at cluster scale cannot
     * overflow the test. The per-type stats are one map-side-combinable
     * aggregation over at most |types| groups broadcast back onto the
     * hour buckets. The reported z-score is IEEE-exact both sides (one
     * cast, one subtract, one divide, one sqrt — all correctly rounded)
     * and rounded to 6dp. */
-  def e13(spark: SparkSession, dir: String): DataFrame = {
-    val d38 = "decimal(38,0)"
-    val h = Tables.events(spark, dir)
-      .withColumn("hour_ms", col("ms") - col("ms") % 3600000L)
-      .groupBy("event_type", "hour_ms")
-      .agg(count(lit(1)).as("cnt"))
-    val st = h.groupBy("event_type")
-      .agg(count(lit(1)).as("n"), sum(col("cnt")).as("s"),
-           sum(col("cnt") * col("cnt")).as("q"))
-      .filter(col("n") >= 2)
-    val nD  = col("n").cast(d38)
-    val dev = nD * col("cnt").cast(d38) - col("s").cast(d38)
-    val varNum = nD * col("q").cast(d38) - col("s").cast(d38) * col("s").cast(d38)
-    h.join(st, "event_type")
-      .filter(col("n") * col("cnt") > col("s") &&
-              dev * dev * (nD - 1) > lit(9).cast(d38) * nD * varNum)
-      .withColumn("mean_cnt", dbl(col("s")) / col("n"))
-      .withColumn("z", round((dbl(col("cnt")) - col("mean_cnt")) /
-        sqrt(dbl(col("n") * col("q") - col("s") * col("s")) / dbl(col("n") * (col("n") - 1))), 6))
-      .select("event_type", "hour_ms", "cnt", "mean_cnt", "z")
-      .orderBy("event_type", "hour_ms")
-  }
   val e13Sql: String =
     """WITH h AS (SELECT event_type, epoch_ms(ts) - epoch_ms(ts) % 3600000 AS hour_ms,
       |                  COUNT(*)::BIGINT AS cnt
@@ -411,8 +382,8 @@ object Events {
       |        / sqrt(CAST(n*q - s*s AS DOUBLE) / CAST(n*(n-1) AS DOUBLE)), 6) AS z
       |FROM h JOIN st USING (event_type)
       |WHERE n*cnt > s
-      |  AND (CAST(n AS HUGEINT)*cnt - s)*(CAST(n AS HUGEINT)*cnt - s)*(n-1)
-      |      > 9*CAST(n AS HUGEINT)*(CAST(n AS HUGEINT)*q - CAST(s AS HUGEINT)*s)
+      |  AND (CAST(n AS DECIMAL(38,0))*cnt - s)*(CAST(n AS DECIMAL(38,0))*cnt - s)*(n-1)
+      |      > 9*CAST(n AS DECIMAL(38,0))*(CAST(n AS DECIMAL(38,0))*q - CAST(s AS DECIMAL(38,0))*s)
       |ORDER BY event_type, hour_ms""".stripMargin
 
   // ---------------------------------------------------------------- e14
@@ -743,25 +714,6 @@ object Events {
     * IEEE expression on both engines after the exact integer numerator,
     * rounded to 6dp. Scale: one window pass partitioned by user_id
     * (bounded state), one uniform-key aggregation. */
-  def e22(spark: SparkSession, dir: String): DataFrame = {
-    val d38 = "decimal(38,0)"
-    val w = Window.partitionBy("user_id").orderBy(col("ms"), col("event_id"))
-    val gaps = Tables.events(spark, dir)
-      .select(col("user_id"), col("ms"), col("event_id"))
-      .withColumn("gap", lead(col("ms"), 1).over(w) - col("ms"))
-      .filter(col("gap").isNotNull)
-    val nD = col("n").cast(d38)
-    gaps.groupBy("user_id")
-      .agg(count(lit(1)).as("n"),
-           sum(col("gap").cast(d38)).as("s"),
-           sum(col("gap").cast(d38) * col("gap").cast(d38)).as("q"))
-      .filter(col("n") >= 2 && col("s") > 0)
-      .select(col("user_id"), col("n").as("n_gaps"),
-        (dbl(col("s")) / col("n")).as("mean_gap_ms"),
-        round(sqrt(dbl(nD * col("q") - col("s") * col("s")) * col("n") /
-          (dbl(col("n") - 1) * dbl(col("s")) * dbl(col("s")))), 6).as("cv"))
-      .orderBy("user_id")
-  }
   val e22Sql: String =
     """WITH g AS (
       |  SELECT user_id,
@@ -770,8 +722,8 @@ object Events {
       |  FROM events),
       |st AS (
       |  SELECT user_id, COUNT(*)::BIGINT AS n,
-      |    SUM(CAST(gap AS HUGEINT)) AS s,
-      |    SUM(CAST(gap AS HUGEINT) * gap) AS q
+      |    SUM(CAST(gap AS DECIMAL(38,0))) AS s,
+      |    SUM(CAST(gap AS DECIMAL(38,0)) * gap) AS q
       |  FROM g WHERE gap IS NOT NULL
       |  GROUP BY user_id HAVING COUNT(*) >= 2 AND SUM(gap) > 0)
       |SELECT user_id, n AS n_gaps,
@@ -1357,27 +1309,13 @@ object Events {
     * is a map-combinable min-agg on user_id; attaching it is a same-key
     * shuffle join (both legs co-keyed on user_id); the triangle groupBy
     * is calendar-bounded. Value stays DECIMAL to the end. */
-  def e44(spark: SparkSession, dir: String): DataFrame = {
-    val WeekMs = 7L * 86400000L
-    val ev = Tables.events(spark, dir)
-      .select(col("user_id"), (col("ms") - pmod(col("ms"), lit(WeekMs))).as("wk"),
-        col("event_type"), col("value"))
-    val first = ev.groupBy("user_id").agg(min(col("wk")).as("cohort_wk"))
-    ev.join(first, "user_id")
-      .groupBy(col("cohort_wk"), ((col("wk") - col("cohort_wk")) / WeekMs).cast("long").as("widx"))
-      .agg(countDistinct(col("user_id")).as("n_active"),
-           sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("n_purchases"),
-           dbl(sum(when(col("event_type") === "purchase", dec(col("value")))
-             .otherwise(dec(lit(0))))).as("purchase_value"))
-      .orderBy("cohort_wk", "widx")
-  }
   val e44Sql: String =
     """WITH ev AS (
       |  SELECT user_id, epoch_ms(ts) - epoch_ms(ts) % 604800000 AS wk,
       |    event_type, value
       |  FROM events),
       |f AS (SELECT user_id, MIN(wk) AS cohort_wk FROM ev GROUP BY 1)
-      |SELECT cohort_wk, (wk - cohort_wk) // 604800000 AS widx,
+      |SELECT cohort_wk, divide(wk - cohort_wk, 604800000) AS widx,
       |  COUNT(DISTINCT ev.user_id) AS n_active,
       |  SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)::BIGINT AS n_purchases,
       |  CAST(SUM(CASE WHEN event_type = 'purchase' THEN CAST(value AS DECIMAL(12,2))
@@ -1501,29 +1439,14 @@ object Events {
     * DECIMAL(38,0)-exact n/Σd/Σd² moments (e13's recipe — long n·Σd²
     * would overflow at 10^8-DAU scale) with ONE IEEE sqrt+division:
     * CV = √(nΣd²−S²)/S (population σ over μ, n-free form). */
-  def e49(spark: SparkSession, dir: String): DataFrame = {
-    val d38 = "decimal(38,0)"
-    val dau = Tables.events(spark, dir)
-      .select(col("user_id"), expr("ms div 86400000").as("day"))
-      .distinct()
-      .groupBy("day").agg(count(lit(1)).as("dau"))
-    val nD = count(lit(1)).cast(d38)
-    val sD = sum(col("dau")).cast(d38)
-    val qD = sum(col("dau") * col("dau")).cast(d38)
-    dau.agg(count(lit(1)).as("n_days"), sum(col("dau")).as("active_user_days"),
-        min(col("dau")).as("min_dau"), max(col("dau")).as("max_dau"),
-        (dbl(sum(col("dau"))) / count(lit(1))).as("avg_dau"),
-        round(sqrt(dbl(nD * qD - sD * sD)) / dbl(sum(col("dau"))), 6).as("cv_dau"))
-      .select("n_days", "active_user_days", "min_dau", "max_dau", "avg_dau", "cv_dau")
-  }
   val e49Sql: String =
-    """WITH d AS (SELECT DISTINCT user_id, epoch_ms(ts) // 86400000 AS day FROM events),
+    """WITH d AS (SELECT DISTINCT user_id, divide(epoch_ms(ts), 86400000) AS day FROM events),
       |dau AS (SELECT day, COUNT(*)::BIGINT AS dau FROM d GROUP BY 1)
       |SELECT COUNT(*)::BIGINT AS n_days, SUM(dau)::BIGINT AS active_user_days,
       |  CAST(MIN(dau) AS BIGINT) AS min_dau, CAST(MAX(dau) AS BIGINT) AS max_dau,
       |  CAST(SUM(dau) AS DOUBLE) / COUNT(*) AS avg_dau,
-      |  ROUND(sqrt(CAST(COUNT(*) * SUM(CAST(dau AS HUGEINT) * dau)
-      |                  - CAST(SUM(dau) AS HUGEINT) * SUM(dau) AS DOUBLE))
+      |  ROUND(sqrt(CAST(COUNT(*) * SUM(CAST(dau AS DECIMAL(38,0)) * dau)
+      |                  - CAST(SUM(dau) AS DECIMAL(38,0)) * SUM(dau) AS DOUBLE))
       |        / CAST(SUM(dau) AS DOUBLE), 6) AS cv_dau
       |FROM dau""".stripMargin
 
@@ -1640,19 +1563,9 @@ object Events {
     * — events, distinct users, total value. Pure integer calendar
     * arithmetic on epoch-ms (e42's dow formula; 0=Sunday), one
     * map-combinable groupBy, output bounded at 7×24 rows at any scale. */
-  def e54(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .select(((floor(col("ms") / 86400000L) + 4) % 7).cast("long").as("dow"),
-        expr("(ms % 86400000) div 3600000").as("hod"),
-        col("user_id"), col("value"))
-      .groupBy("dow", "hod")
-      .agg(count(lit(1)).as("n_events"),
-           countDistinct(col("user_id")).as("n_users"),
-           dsum(col("value")).as("total_value"))
-      .orderBy("dow", "hod")
   val e54Sql: String =
-    """SELECT (epoch_ms(ts) // 86400000 + 4) % 7 AS dow,
-      |  (epoch_ms(ts) % 86400000) // 3600000 AS hod,
+    """SELECT (divide(epoch_ms(ts), 86400000) + 4) % 7 AS dow,
+      |  divide(epoch_ms(ts) % 86400000, 3600000) AS hod,
       |  COUNT(*)::BIGINT AS n_events,
       |  COUNT(DISTINCT user_id)::BIGINT AS n_users,
       |  CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS total_value
@@ -1693,30 +1606,14 @@ object Events {
     * order-independent under map-side combine — then ONE IEEE division
     * forms the slope, round6. The trend-screen behind "is this event
     * type growing or dying". */
-  def e56(spark: SparkSession, dir: String): DataFrame = {
-    val d38 = "decimal(38,0)"
-    val daily = Tables.events(spark, dir)
-      .groupBy(col("event_type"), expr("ms div 86400000").as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val xD = col("day").cast(d38); val yD = col("cnt").cast(d38)
-    daily.groupBy("event_type")
-      .agg(count(lit(1)).as("n_days"), sum(col("cnt")).as("total_events"),
-           sum(xD).as("sx"), sum(yD).as("sy"),
-           sum(xD * yD).as("sxy"), sum(xD * xD).as("sx2"))
-      .select(col("event_type"), col("n_days"), col("total_events"),
-        round(dbl(col("n_days").cast(d38) * col("sxy") - col("sx") * col("sy")) /
-          dbl(col("n_days").cast(d38) * col("sx2") - col("sx") * col("sx")), 6)
-          .as("slope_per_day"))
-      .orderBy("event_type")
-  }
   val e56Sql: String =
     """WITH daily AS (
-      |  SELECT event_type, epoch_ms(ts) // 86400000 AS day, COUNT(*)::BIGINT AS cnt
+      |  SELECT event_type, divide(epoch_ms(ts), 86400000) AS day, COUNT(*)::BIGINT AS cnt
       |  FROM events GROUP BY 1, 2),
       |m AS (
       |  SELECT event_type, COUNT(*)::BIGINT AS n_days, SUM(cnt)::BIGINT AS total_events,
-      |    SUM(CAST(day AS HUGEINT)) AS sx, SUM(CAST(cnt AS HUGEINT)) AS sy,
-      |    SUM(CAST(day AS HUGEINT) * cnt) AS sxy, SUM(CAST(day AS HUGEINT) * day) AS sx2
+      |    SUM(CAST(day AS DECIMAL(38,0))) AS sx, SUM(CAST(cnt AS DECIMAL(38,0))) AS sy,
+      |    SUM(CAST(day AS DECIMAL(38,0)) * cnt) AS sxy, SUM(CAST(day AS DECIMAL(38,0)) * day) AS sx2
       |  FROM daily GROUP BY 1)
       |SELECT event_type, n_days, total_events,
       |  ROUND(CAST(n_days * sxy - sx * sy AS DOUBLE)
@@ -1880,24 +1777,6 @@ object Events {
     * with zero on the other side. Both sides pre-aggregate to ≤|months|
     * frames map-side; the delta is an exact decimal difference. The ops
     * check every Kafka→warehouse pipeline runs nightly. */
-  def e61(spark: SparkSession, dir: String): DataFrame = {
-    import graft.engine.Qf.dec
-    val ev = Tables.events(spark, dir)
-      .filter(col("event_type") === "purchase")
-      .groupBy(date_format(col("ets"), "yyyy-MM").as("month"))
-      .agg(count(lit(1)).as("n_purchases"), sum(dec(col("value"))).as("pv"))
-    val or_ = Tables.orders(spark, dir)
-      .groupBy(date_format(col("o_orderdate"), "yyyy-MM").as("month"))
-      .agg(count(lit(1)).as("n_orders"), sum(dec(col("o_totalprice"))).as("ov"))
-    ev.join(or_, Seq("month"), "full_outer")
-      .select(col("month"),
-        coalesce(col("n_purchases"), lit(0L)).as("n_purchases"),
-        dbl(coalesce(col("pv"), dec(lit(0)))).as("purchase_value"),
-        coalesce(col("n_orders"), lit(0L)).as("n_orders"),
-        dbl(coalesce(col("ov"), dec(lit(0)))).as("order_value"),
-        dbl(coalesce(col("pv"), dec(lit(0))) - coalesce(col("ov"), dec(lit(0)))).as("delta"))
-      .orderBy("month")
-  }
   val e61Sql: String =
     """WITH ev AS (
       |  SELECT strftime(ts, '%Y-%m') AS month, COUNT(*)::BIGINT AS n_purchases,
@@ -1941,36 +1820,18 @@ object Events {
     * collapse map-side to (lifespan_days, value_cents) exact integers,
     * then q38's DECIMAL(38,0) distributed-moment recipe: one groupBy,
     * one 1-row result, ONE IEEE division chain, round6. */
-  def e63(spark: SparkSession, dir: String): DataFrame = {
-    val d38 = "decimal(38,0)"
-    val u = Tables.events(spark, dir)
-      .groupBy("user_id")
-      .agg((expr("max(ms) div 86400000") - expr("min(ms) div 86400000") + 1)
-             .as("lifespan"),
-           sum((dec(col("value")) * 100).cast(d38)).as("cents"))
-    val x = col("lifespan").cast(d38); val y = col("cents")
-    u.agg(count(lit(1)).as("n"),
-         dbl(sum(x)).as("sx"), dbl(sum(y)).as("sy"),
-         dbl(sum(x * y)).as("sxy"),
-         dbl(sum(x * x)).as("sx2"), dbl(sum(y * y)).as("sy2"))
-      .select(col("n"),
-        round((col("n") * col("sxy") - col("sx") * col("sy")) /
-          (sqrt(col("n") * col("sx2") - col("sx") * col("sx")) *
-           sqrt(col("n") * col("sy2") - col("sy") * col("sy"))), 6)
-          .as("corr_lifespan_value"))
-  }
   val e63Sql: String =
     """WITH u AS (
       |  SELECT user_id,
-      |    MAX(epoch_ms(ts)) // 86400000 - MIN(epoch_ms(ts)) // 86400000 + 1 AS lifespan,
-      |    SUM(CAST(CAST(value AS DECIMAL(12,2)) * 100 AS HUGEINT)) AS cents
+      |    divide(MAX(epoch_ms(ts)), 86400000) - divide(MIN(epoch_ms(ts)), 86400000) + 1 AS lifespan,
+      |    SUM(CAST(CAST(value AS DECIMAL(12,2)) * 100 AS DECIMAL(38,0))) AS cents
       |  FROM events GROUP BY 1),
       |m AS (
       |  SELECT COUNT(*) AS n,
-      |    CAST(SUM(CAST(lifespan AS HUGEINT)) AS DOUBLE) AS sx,
+      |    CAST(SUM(CAST(lifespan AS DECIMAL(38,0))) AS DOUBLE) AS sx,
       |    CAST(SUM(cents) AS DOUBLE) AS sy,
-      |    CAST(SUM(CAST(lifespan AS HUGEINT) * cents) AS DOUBLE) AS sxy,
-      |    CAST(SUM(CAST(lifespan AS HUGEINT) * lifespan) AS DOUBLE) AS sx2,
+      |    CAST(SUM(CAST(lifespan AS DECIMAL(38,0)) * cents) AS DOUBLE) AS sxy,
+      |    CAST(SUM(CAST(lifespan AS DECIMAL(38,0)) * lifespan) AS DOUBLE) AS sx2,
       |    CAST(SUM(cents * cents) AS DOUBLE) AS sy2
       |  FROM u)
       |SELECT n,
@@ -2113,21 +1974,9 @@ object Events {
     * (month, day, user) map-side; each month's row needs two distinct
     * counts over that shrunken frame; ≤|months| output rows. Division
     * order is pinned ((aud/days)/mau) identically in both engines. */
-  def e69(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .select(date_format(col("ets"), "yyyy-MM").as("month"),
-        expr("ms div 86400000").as("day"), col("user_id"))
-      .distinct()
-      .groupBy("month")
-      .agg(count(lit(1)).as("active_user_days"),
-           countDistinct(col("day")).as("n_days"),
-           countDistinct(col("user_id")).as("mau"))
-      .withColumn("avg_dau", dbl(col("active_user_days")) / dbl(col("n_days")))
-      .withColumn("stickiness", round(col("avg_dau") / dbl(col("mau")), 6))
-      .orderBy("month")
   val e69Sql: String =
     """WITH d AS (SELECT DISTINCT strftime(ts, '%Y-%m') AS month,
-      |    epoch_ms(ts) // 86400000 AS day, user_id FROM events),
+      |    divide(epoch_ms(ts), 86400000) AS day, user_id FROM events),
       |m AS (SELECT month, COUNT(*)::BIGINT AS active_user_days,
       |    COUNT(DISTINCT day)::BIGINT AS n_days,
       |    COUNT(DISTINCT user_id)::BIGINT AS mau
@@ -2168,32 +2017,13 @@ object Events {
     * Revenue accumulates as exact integer cents per month; the DAU-day
     * denominator is e69's distinct (day, user) collapse; ONE division
     * per ≤\|months\| row. */
-  def e71(spark: SparkSession, dir: String): DataFrame = {
-    val rev = Tables.events(spark, dir)
-      .filter(col("event_type") === "purchase")
-      .groupBy(date_format(col("ets"), "yyyy-MM").as("month"))
-      .agg(count(lit(1)).as("n_purchases"),
-           sum((dec(col("value")) * 100).cast("long")).as("cents"))
-    val aud = Tables.events(spark, dir)
-      .select(date_format(col("ets"), "yyyy-MM").as("month"),
-        expr("ms div 86400000").as("day"), col("user_id"))
-      .distinct()
-      .groupBy("month").agg(count(lit(1)).as("active_user_days"))
-    aud.join(rev, Seq("month"), "left")
-      .select(col("month"), col("active_user_days"),
-        coalesce(col("n_purchases"), lit(0L)).as("n_purchases"),
-        (coalesce(col("cents"), lit(0L)).cast("double") / 100).as("revenue"),
-        round((coalesce(col("cents"), lit(0L)).cast("double") / 100) /
-          col("active_user_days"), 6).as("arpdau"))
-      .orderBy("month")
-  }
   val e71Sql: String =
     """WITH rev AS (
       |  SELECT strftime(ts, '%Y-%m') AS month, COUNT(*)::BIGINT AS n_purchases,
       |    SUM(CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)) AS cents
       |  FROM events WHERE event_type = 'purchase' GROUP BY 1),
       |d AS (SELECT DISTINCT strftime(ts, '%Y-%m') AS month,
-      |    epoch_ms(ts) // 86400000 AS day, user_id FROM events),
+      |    divide(epoch_ms(ts), 86400000) AS day, user_id FROM events),
       |aud AS (SELECT month, COUNT(*)::BIGINT AS active_user_days FROM d GROUP BY 1)
       |SELECT aud.month AS month, active_user_days,
       |  COALESCE(n_purchases, 0)::BIGINT AS n_purchases,
@@ -2407,48 +2237,23 @@ object Events {
     * nothing divides or multiplies per event (overflow-free at any
     * per-type volume the d38 moments themselves survive). The moment
     * frame is tiny so the back-join broadcasts. */
-  def e79(spark: SparkSession, dir: String): DataFrame = {
-    val d38 = "decimal(38,0)"
-    val ev = Tables.events(spark, dir)
-      .select(col("event_type"), round(col("value") * 100).cast("long").as("cents"))
-    val st = ev.groupBy("event_type")
-      .agg(count(lit(1)).as("n"),
-           sum(col("cents").cast(d38)).as("s"),
-           sum(col("cents").cast(d38) * col("cents").cast(d38)).as("q"))
-      .filter(col("n") >= 2)
-      .withColumn("thr", dbl(col("s")) / col("n") +
-        lit(3.0) * sqrt(dbl(col("n") * col("q") - col("s") * col("s")) /
-          dbl(col("n").cast(d38) * (col("n") - 1).cast(d38))))
-    val isOut = dbl(col("cents")) > col("thr")
-    ev.join(broadcast(st), "event_type")
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n_events"),
-           sum(when(isOut, 1L).otherwise(0L)).as("n_outliers"),
-           sum(when(isOut, col("cents")).otherwise(0L)).as("out_cents"),
-           max(col("s")).as("tot_cents"))
-      .select(col("event_type"), col("n_events"), col("n_outliers"),
-        round(dbl(col("n_outliers")) / col("n_events"), 6).as("outlier_rate"),
-        round(dbl(col("out_cents").cast(d38)) / dbl(col("tot_cents")), 6)
-          .as("outlier_value_share"))
-      .orderBy("event_type")
-  }
   val e79Sql: String =
     """WITH ev AS (
       |  SELECT event_type, CAST(ROUND(value * 100) AS BIGINT) AS cents
       |  FROM events),
       |st AS (
       |  SELECT event_type, COUNT(*)::BIGINT AS n,
-      |    SUM(CAST(cents AS HUGEINT)) AS s,
-      |    SUM(CAST(cents AS HUGEINT) * cents) AS q
+      |    SUM(CAST(cents AS DECIMAL(38,0))) AS s,
+      |    SUM(CAST(cents AS DECIMAL(38,0)) * cents) AS q
       |  FROM ev GROUP BY 1 HAVING COUNT(*) >= 2),
       |t AS (
       |  SELECT event_type, n, s,
       |    CAST(s AS DOUBLE) / n +
       |      3.0 * sqrt(CAST(n*q - s*s AS DOUBLE)
-      |                 / CAST(CAST(n AS HUGEINT)*(n-1) AS DOUBLE)) AS thr
+      |                 / CAST(CAST(n AS DECIMAL(38,0))*(n-1) AS DOUBLE)) AS thr
       |  FROM st),
       |j AS (
-      |  SELECT ev.event_type, cents, n, s,
+      |  SELECT /*+ BROADCAST(t) */ ev.event_type, cents, n, s,
       |    CAST(cents AS DOUBLE) > thr AS is_out
       |  FROM ev JOIN t USING (event_type))
       |SELECT event_type, COUNT(*)::BIGINT AS n_events,
@@ -3665,34 +3470,6 @@ object Events {
     * Scale: one user-partitioned min/max (map-combinable), one
     * conditional cents rollup per user, one global moment rollup —
     * no window, 1-row output. */
-  def e106(spark: SparkSession, dir: String): DataFrame = {
-    val perUser = Tables.events(spark, dir)
-      .select(col("user_id"), col("ms"),
-        when(col("event_type") === "purchase",
-          (dec(col("value")) * 100).cast("long")).otherwise(0L).as("cents"))
-      .withColumn("first_ms", min(col("ms")).over(Window.partitionBy("user_id")))
-      .withColumn("last_ms", max(col("ms")).over(Window.partitionBy("user_id")))
-      .groupBy("user_id")
-      .agg(sum(when(col("ms") * 2 <= col("first_ms") + col("last_ms"),
-          col("cents")).otherwise(0L)).as("v1"),
-        sum(when(col("ms") * 2 > col("first_ms") + col("last_ms"),
-          col("cents")).otherwise(0L)).as("v2"))
-    // widen each factor BEFORE the product: lifetime half-cents past
-    // ~3e9 would wrap v*v in LONG silently (DuckDB raises) — decimal
-    // first keeps both engines exact at any whale size
-    val d38 = "decimal(38,0)"
-    perUser
-      .agg(count(lit(1)).as("n_users"),
-        sum(col("v1")).as("sx"), sum(col("v2")).as("sy"),
-        sum(col("v1").cast(d38) * col("v2").cast(d38)).as("sxy"),
-        sum(col("v1").cast(d38) * col("v1").cast(d38)).as("sx2"),
-        sum(col("v2").cast(d38) * col("v2").cast(d38)).as("sy2"))
-      .select(col("n_users"),
-        round((dbl(col("n_users")) * dbl(col("sxy")) - dbl(col("sx")) * dbl(col("sy"))) /
-          (sqrt(dbl(col("n_users")) * dbl(col("sx2")) - dbl(col("sx")) * dbl(col("sx"))) *
-           sqrt(dbl(col("n_users")) * dbl(col("sy2")) - dbl(col("sy")) * dbl(col("sy")))), 6)
-          .as("value_persistence"))
-  }
   val e106Sql: String =
     """WITH e AS (
       |  SELECT user_id, epoch_ms(ts) AS ms,
@@ -3712,8 +3489,8 @@ object Events {
       |m AS (
       |  SELECT COUNT(*)::BIGINT AS n_users,
       |    SUM(v1)::BIGINT AS sx, SUM(v2)::BIGINT AS sy,
-      |    SUM(v1::HUGEINT * v2) AS sxy,
-      |    SUM(v1::HUGEINT * v1) AS sx2, SUM(v2::HUGEINT * v2) AS sy2
+      |    SUM(v1::DECIMAL(38,0) * v2) AS sxy,
+      |    SUM(v1::DECIMAL(38,0) * v1) AS sx2, SUM(v2::DECIMAL(38,0) * v2) AS sy2
       |  FROM u)
       |SELECT n_users,
       |  ROUND((CAST(n_users AS DOUBLE) * CAST(sxy AS DOUBLE)
@@ -3847,35 +3624,6 @@ object Events {
     *
     * Scale: user-partitioned lag window over purchases only (pushed
     * filter), per-user moment rollup, 4-row census. */
-  def e109(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy(col("ms"), col("event_id"))
-    val gaps = Tables.events(spark, dir)
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("ms"), col("event_id"))
-      .withColumn("prev_ms", lag(col("ms"), 1).over(w))
-      .filter(col("prev_ms").isNotNull)
-      .withColumn("gap", (col("ms") - col("prev_ms")).cast("long"))
-    // widen before multiplying: a gap past ~35 days (√Long.Max ms)
-    // would wrap gap*gap in LONG silently while DuckDB raises
-    val perUser = gaps.groupBy("user_id")
-      .agg(count(lit(1)).as("n_gaps"), sum(col("gap")).as("sg"),
-        sum(col("gap").cast("decimal(38,0)") * col("gap").cast("decimal(38,0)"))
-          .as("sg2"))
-      .filter(col("n_gaps") >= 2) // >= 3 purchases
-      .withColumn("mean_gap", dbl(col("sg")) / dbl(col("n_gaps")))
-      .withColumn("cv",
-        sqrt(greatest(dbl(col("n_gaps")) * dbl(col("sg2")) - dbl(col("sg")) * dbl(col("sg")),
-          lit(0d))) / dbl(col("n_gaps")) / (dbl(col("sg")) / dbl(col("n_gaps"))))
-    val band = when(col("cv") < 0.5, "a_clockwork")
-      .when(col("cv") < 1.0, "b_regular")
-      .when(col("cv") < 1.5, "c_loose")
-      .otherwise("d_bursty")
-    perUser.groupBy(band.as("regularity"))
-      .agg(count(lit(1)).as("n_users"),
-        round(dbl(sum(floor(col("mean_gap")))) / count(lit(1)) / 3600000d, 6)
-          .as("avg_mean_gap_hours"))
-      .orderBy("regularity")
-  }
   val e109Sql: String =
     """WITH p AS (
       |  SELECT user_id, epoch_ms(ts) AS ms, event_id,
@@ -3884,7 +3632,7 @@ object Events {
       |g AS (SELECT user_id, CAST(ms - prev_ms AS BIGINT) AS gap FROM p WHERE prev_ms IS NOT NULL),
       |u AS (
       |  SELECT user_id, COUNT(*)::BIGINT AS n_gaps, SUM(gap)::BIGINT AS sg,
-      |    SUM(gap::HUGEINT * gap) AS sg2
+      |    SUM(gap::DECIMAL(38,0) * gap) AS sg2
       |  FROM g GROUP BY 1 HAVING COUNT(*) >= 2),
       |c AS (
       |  SELECT CAST(sg AS DOUBLE) / CAST(n_gaps AS DOUBLE) AS mean_gap,
@@ -4068,31 +3816,6 @@ object Events {
     *
     * Scale: one per-user cents rollup, 1-row moment broadcast, one
     * conditional rollup — 1 row out. */
-  def e113(spark: SparkSession, dir: String): DataFrame = {
-    val d38 = "decimal(38,0)"
-    val u = Tables.events(spark, dir)
-      .groupBy("user_id")
-      .agg(sum(when(col("event_type") === "purchase",
-        (dec(col("value")) * 100).cast("long")).otherwise(0L)).as("c"))
-    val m = u.agg(count(lit(1)).as("n"),
-      sum(col("c").cast(d38)).as("s"),
-      // widen BEFORE multiplying (the oracle casts HUGEINT first): a
-      // whale's c > ~3e9 cents would silently wrap c*c in LONG here
-      // while DuckDB raises — widen-first keeps both engines exact
-      sum(col("c").cast(d38) * col("c").cast(d38)).as("s2"))
-    val mu = dbl(col("s")) / dbl(col("n"))
-    val sigma = sqrt(greatest(
-      (dbl(col("n")) * dbl(col("s2")) - dbl(col("s")) * dbl(col("s"))), lit(0d))) / dbl(col("n"))
-    u.crossJoin(broadcast(m))
-      .withColumn("is_whale", dbl(col("c")) > mu + lit(3d) * sigma)
-      .agg(max(col("n")).as("n_users"),
-        sum(when(col("is_whale"), 1L).otherwise(0L)).as("n_whales"),
-        sum(when(col("is_whale"), col("c")).otherwise(0L)).as("whale_cents"),
-        max(col("s")).as("total"))
-      .select(col("n_users"), col("n_whales"),
-        round(dbl(col("n_whales")) / dbl(col("n_users")), 6).as("whale_user_share"),
-        round(dbl(col("whale_cents")) / dbl(col("total")), 6).as("whale_value_share"))
-  }
   val e113Sql: String =
     """WITH u AS (
       |  SELECT user_id, SUM(CASE WHEN event_type = 'purchase'
@@ -4100,11 +3823,11 @@ object Events {
       |    ELSE 0 END)::BIGINT AS c
       |  FROM events GROUP BY 1),
       |m AS (
-      |  SELECT COUNT(*)::BIGINT AS n, SUM(CAST(c AS HUGEINT)) AS s,
-      |    SUM(CAST(c AS HUGEINT) * c) AS s2
+      |  SELECT COUNT(*)::BIGINT AS n, SUM(CAST(c AS DECIMAL(38,0))) AS s,
+      |    SUM(CAST(c AS DECIMAL(38,0)) * c) AS s2
       |  FROM u),
       |f AS (
-      |  SELECT c, n, s,
+      |  SELECT /*+ BROADCAST(m) */ c, n, s,
       |    CAST(c AS DOUBLE) > CAST(s AS DOUBLE) / CAST(n AS DOUBLE)
       |      + 3 * (sqrt(GREATEST(CAST(n AS DOUBLE) * CAST(s2 AS DOUBLE)
       |          - CAST(s AS DOUBLE) * CAST(s AS DOUBLE), 0.0)) / CAST(n AS DOUBLE))
@@ -4295,13 +4018,10 @@ object Events {
     "e116_weekly_stickiness" -> (e116 _),
     "e115_seasonal_naive_error" -> (e115 _),
     "e114_dow_peak_hour" -> (e114 _),
-    "e113_whale_census" -> (e113 _),
     "e112_first_touch_ltv" -> (e112 _),
     "e111_value_gini" -> (e111 _),
     "e110_bounce_by_entry" -> (e110 _),
-    "e109_purchase_regularity" -> (e109 _),
     "e108_age_value_curve" -> (e108 _),
-    "e106_value_persistence" -> (e106 _),
     "e105_hourly_autocorr" -> (e105 _),
     "e104_exponential_fit" -> (e104 _),
     "e103_kmv_audit" -> (e103 _),
@@ -4317,34 +4037,22 @@ object Events {
     "e85_adaptive_anomaly_days" -> (e85 _),
     "e84_volume_ewma" -> (e84 _),
     "e82_cms_heavy_hitters" -> (e82 _),
-    "e79_value_anomaly" -> (e79 _),
     "e75_activity_zipf" -> (e75 _),
-    "e71_arpdau" -> (e71 _),
-    "e69_stickiness" -> (e69 _),
     "e64_entry_conversion" -> (e64 _),
-    "e63_lifespan_value_corr" -> (e63 _),
-    "e61_purchase_reconciliation" -> (e61 _),
     "e59_entry_exit_matrix" -> (e59 _),
     "e57_power_user_share" -> (e57 _),
-    "e56_daily_trend" -> (e56 _),
     "e55_session_duration_hist" -> (e55 _),
-    "e54_hour_dow_heatmap" -> (e54 _),
     "e53_entry_event" -> (e53 _),
-    "e49_dau_volatility" -> (e49 _),
     "e48_user_gini" -> (e48 _),
-    "e44_cohort_value" -> (e44 _),
     "e38_retention_triangle" -> (e38 _),
     "e33_new_vs_returning" -> (e33 _),
     "e31_type_lift" -> (e31 _),
     "e29_rfm_segments" -> (e29 _),
     "e24_rolling_active_sketch" -> (e24 _),
-    "e22_burstiness" -> (e22 _),
     "e19_conversion_lag" -> (e19 _),
     "e16_value_deciles" -> (e16 _),
     "e15_decay_score" -> (e15 _),
     "e14_rolling_active" -> (e14 _),
-    "e13_anomaly_hours" -> (e13 _),
-    "e02_tumbling_window" -> (e02 _),
     "e05_top_users" -> (e05 _),
     "e06_json_extract" -> (e06 _),
     "e08_asof_join" -> (e08 _),
@@ -4358,13 +4066,10 @@ object Events {
     "e116_weekly_stickiness" -> e116Sql,
     "e115_seasonal_naive_error" -> e115Sql,
     "e114_dow_peak_hour" -> e114Sql,
-    "e113_whale_census" -> e113Sql,
     "e112_first_touch_ltv" -> e112Sql,
     "e111_value_gini" -> e111Sql,
     "e110_bounce_by_entry" -> e110Sql,
-    "e109_purchase_regularity" -> e109Sql,
     "e108_age_value_curve" -> e108Sql,
-    "e106_value_persistence" -> e106Sql,
     "e105_hourly_autocorr" -> e105Sql,
     "e104_exponential_fit" -> e104Sql,
     "e103_kmv_audit" -> e103Sql,
@@ -4379,27 +4084,16 @@ object Events {
     "e85_adaptive_anomaly_days" -> e85Sql,
     "e84_volume_ewma" -> e84Sql,
     "e82_cms_heavy_hitters" -> e82Sql,
-    "e79_value_anomaly" -> e79Sql,
     "e75_activity_zipf" -> e75Sql,
-    "e71_arpdau" -> e71Sql,
-    "e69_stickiness" -> e69Sql,
     "e64_entry_conversion" -> e64Sql,
-    "e63_lifespan_value_corr" -> e63Sql,
-    "e61_purchase_reconciliation" -> e61Sql,
     "e59_entry_exit_matrix" -> e59Sql,
     "e57_power_user_share" -> e57Sql,
-    "e56_daily_trend" -> e56Sql,
     "e55_session_duration_hist" -> e55Sql,
-    "e54_hour_dow_heatmap" -> e54Sql,
     "e53_entry_event" -> e53Sql,
-    "e49_dau_volatility" -> e49Sql,
     "e48_user_gini" -> e48Sql,
-    "e44_cohort_value" -> e44Sql,
     "e16_value_deciles" -> e16Sql,
     "e15_decay_score" -> e15Sql,
     "e14_rolling_active" -> e14Sql,
-    "e13_anomaly_hours" -> e13Sql,
-    "e02_tumbling_window" -> e02Sql,
     "e05_top_users" -> e05Sql,
     "e06_json_extract" -> e06Sql,
     "e08_asof_join" -> e08Sql,
@@ -4408,7 +4102,6 @@ object Events {
     "e10_asof_join_scaleout" -> e08Sql,
     "e11_attribution_window" -> e11Sql,
     "e19_conversion_lag" -> e19Sql,
-    "e22_burstiness" -> e22Sql,
     "e29_rfm_segments" -> e29Sql,
     "e31_type_lift" -> e31Sql,
     "e33_new_vs_returning" -> e33Sql,
@@ -4419,6 +4112,21 @@ object Events {
     * binds each text to the table loaders with `Tables.sql`, and
     * `SparkEntry.oracleSql` hands the same text to DuckDB. */
   val sql: Map[String, String] = Map(
+    "e54_hour_dow_heatmap" -> e54Sql,
+    "e22_burstiness" -> e22Sql,
+    "e113_whale_census" -> e113Sql,
+    "e44_cohort_value" -> e44Sql,
+    "e109_purchase_regularity" -> e109Sql,
+    "e106_value_persistence" -> e106Sql,
+    "e79_value_anomaly" -> e79Sql,
+    "e63_lifespan_value_corr" -> e63Sql,
+    "e56_daily_trend" -> e56Sql,
+    "e49_dau_volatility" -> e49Sql,
+    "e13_anomaly_hours" -> e13Sql,
+    "e71_arpdau" -> e71Sql,
+    "e69_stickiness" -> e69Sql,
+    "e61_purchase_reconciliation" -> e61Sql,
+    "e02_tumbling_window" -> e02Sql,
     "e107_session_position_value" -> e107Sql,
     "e100_behavior_stability" -> e100Sql,
     "e99_hour_regularity" -> e99Sql,

@@ -1468,46 +1468,24 @@ object TextAnalysis {
     * e13's exact recipe: per-source integer moments (n, Σx, Σx²) in one
     * map-combinable pass, broadcast back (\|sources\| rows), and the z>3
     * test as the cross-multiplied integer compare
-    * (n·x − S)²·(n−1) > 9·n·(nΣx² − S²) in DECIMAL(38,0)/HUGEINT — no
+    * (n·x − S)²·(n−1) > 9·n·(nΣx² − S²) in DECIMAL(38,0) — no
     * float σ, no per-row division, exact at any corpus size. */
-  def t38(spark: SparkSession, dir: String): DataFrame = {
-    val d38 = "decimal(38,0)"
-    val docs = Tables.documents(spark, dir)
-      .select(col("source"), length(col("text")).cast("long").as("x"))
-    val st = docs.groupBy("source")
-      .agg(count(lit(1)).as("n"), sum(col("x")).as("s"),
-           sum(col("x") * col("x")).as("q"))
-      .filter(col("n") >= 2)
-    val nD = col("n").cast(d38)
-    val dev = nD * col("x").cast(d38) - col("s").cast(d38)
-    val varNum = nD * col("q").cast(d38) - col("s").cast(d38) * col("s").cast(d38)
-    val out = dev * dev * (nD - 1) > lit(9).cast(d38) * nD * varNum
-    docs.join(broadcast(st), "source")
-      .groupBy("source")
-      .agg(max(col("n")).as("n_docs"),
-           (dbl(max(col("s"))) / max(col("n"))).as("mean_chars"),
-           sum(when(out && dev > 0, 1L).otherwise(0L)).as("n_hi"),
-           sum(when(out && dev < 0, 1L).otherwise(0L)).as("n_lo"))
-      .withColumn("out_share",
-        round(dbl(col("n_hi") + col("n_lo")) / col("n_docs"), 6) + lit(0.0d))
-      .orderBy("source")
-  }
   val t38Sql: String =
     """WITH d AS (SELECT source, CAST(LENGTH(text) AS BIGINT) AS x FROM documents),
       |st AS (SELECT source, COUNT(*)::BIGINT AS n, SUM(x)::BIGINT AS s,
       |         SUM(x*x)::BIGINT AS q
       |       FROM d GROUP BY 1 HAVING COUNT(*) >= 2),
-      |f AS (SELECT d.source, x, n, s, q,
-      |    CAST(n AS HUGEINT)*x - s AS dev,
-      |    CAST(n AS HUGEINT)*q - CAST(s AS HUGEINT)*s AS varnum
+      |f AS (SELECT /*+ BROADCAST(st) */ d.source, x, n, s, q,
+      |    CAST(n AS DECIMAL(38,0))*x - s AS dev,
+      |    CAST(n AS DECIMAL(38,0))*q - CAST(s AS DECIMAL(38,0))*s AS varnum
       |  FROM d JOIN st ON d.source = st.source)
       |SELECT source, MAX(n) AS n_docs,
       |  CAST(MAX(s) AS DOUBLE) / MAX(n) AS mean_chars,
-      |  SUM(CASE WHEN dev*dev*(n-1) > 9*CAST(n AS HUGEINT)*varnum AND dev > 0
+      |  SUM(CASE WHEN dev*dev*(n-1) > 9*CAST(n AS DECIMAL(38,0))*varnum AND dev > 0
       |      THEN 1 ELSE 0 END)::BIGINT AS n_hi,
-      |  SUM(CASE WHEN dev*dev*(n-1) > 9*CAST(n AS HUGEINT)*varnum AND dev < 0
+      |  SUM(CASE WHEN dev*dev*(n-1) > 9*CAST(n AS DECIMAL(38,0))*varnum AND dev < 0
       |      THEN 1 ELSE 0 END)::BIGINT AS n_lo,
-      |  ROUND(CAST(SUM(CASE WHEN dev*dev*(n-1) > 9*CAST(n AS HUGEINT)*varnum
+      |  ROUND(CAST(SUM(CASE WHEN dev*dev*(n-1) > 9*CAST(n AS DECIMAL(38,0))*varnum
       |      THEN 1 ELSE 0 END) AS DOUBLE) / MAX(n), 6) + 0.0 AS out_share
       |FROM f GROUP BY 1 ORDER BY 1""".stripMargin
 
@@ -3088,7 +3066,6 @@ object TextAnalysis {
     "t41_hapax_profile" -> (t41 _),
     "t40_casing_profile" -> (t40 _),
     "t39_quality_quartiles" -> (t39 _),
-    "t38_length_outliers" -> (t38 _),
     "t37_zipf_slope" -> (t37 _),
     "t36_bigram_entropy" -> (t36 _),
     "t35_quality_by_length" -> (t35 _),
@@ -3156,7 +3133,6 @@ object TextAnalysis {
     "t41_hapax_profile" -> t41Sql,
     "t40_casing_profile" -> t40Sql,
     "t39_quality_quartiles" -> t39Sql,
-    "t38_length_outliers" -> t38Sql,
     "t18_gram_novelty" -> t18Sql,
     "t17_lexical_diversity" -> t17Sql,
     "t16_zipf_head" -> t16Sql,
@@ -3196,6 +3172,7 @@ object TextAnalysis {
     * binds each text to the table loaders with `Tables.sql`, and
     * `SparkEntry.oracleSql` hands the same text to DuckDB. */
   val sql: Map[String, String] = Map(
+    "t38_length_outliers" -> t38Sql,
     "t62_group_sample" -> t62Sql,
     "t53_langid_by_length" -> t53Sql,
     "t31_length_quartiles" -> t31Sql,

@@ -63,9 +63,34 @@ class TablesSqlSpec extends SparkSpec {
     assert(e.getMessage.contains("epoch_ms"))
   }
 
+  test("strftime formats a DATE and a TIMESTAMP as DuckDB does") {
+    val formats = Seq("%Y-%m", "%Y-%m-%d", "%Y-%m-%d %H:00")
+    def row(t: String): Seq[String] = {
+      val r = Tables.sql(spark, sf,
+        formats.map(f => s"strftime($t, '$f')").mkString("SELECT ", ", ", "")).head()
+      formats.indices.map(r.getString)
+    }
+    // DuckDB 1.0.0's strings for the same calls
+    assert(row("DATE '2024-03-07'") == Seq("2024-03", "2024-03-07", "2024-03-07 00:00"))
+    assert(row("TIMESTAMP '2024-03-07 09:45:12'") ==
+      Seq("2024-03", "2024-03-07", "2024-03-07 09:00"))
+  }
+
+  test("strftime with another specifier or a non-literal format fails naming strftime") {
+    for (text <- Seq("SELECT strftime(ts, '%j') FROM events",
+        "SELECT strftime(ts, event_type) FROM events")) {
+      val e = intercept[AnalysisException](Tables.sql(spark, sf, text))
+      // a type-check failure of the bound function, not an unknown routine
+      assert(e.getCondition.startsWith("DATATYPE_MISMATCH"), e.getMessage)
+      assert(e.getMessage.contains("strftime"), text)
+    }
+  }
+
   test("binding the DuckDB names registers no function in the session") {
-    Tables.sql(spark, sf, "SELECT epoch_ms(ts), divide(ms, 1000) FROM events").collect()
+    Tables.sql(spark, sf,
+      "SELECT epoch_ms(ts), divide(ms, 1000), strftime(ts, '%Y-%m') FROM events").collect()
     assert(!spark.catalog.functionExists("epoch_ms"))
     assert(!spark.catalog.functionExists("divide"))
+    assert(!spark.catalog.functionExists("strftime"))
   }
 }

@@ -534,7 +534,7 @@ class OperatorSmokeSpec extends SparkSpec {
   }
 
   test("e22 CV recomputes naively for every reported user") {
-    val out = Events.e22(spark, sf).collect()
+    val out = Graft.run(spark, sf, "e22_burstiness").collect()
     assert(out.nonEmpty)
     val events = graft.engine.Tables.events(spark, sf)
       .select("user_id", "ms", "event_id").collect()
@@ -989,7 +989,7 @@ class OperatorSmokeSpec extends SparkSpec {
   }
 
   test("e13 anomalies all sit above 3 sample standard deviations") {
-    val rows = Events.e13(spark, sf).collect()
+    val rows = Graft.run(spark, sf, "e13_anomaly_hours").collect()
     rows.foreach { r =>
       assert(r.getAs[Double]("z") > 3.0)
       assert(r.getAs[Long]("cnt").toDouble > r.getAs[Double]("mean_cnt"))

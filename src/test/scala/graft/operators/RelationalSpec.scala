@@ -33,7 +33,7 @@ class RelationalSpec extends SparkSpec {
   }
 
   test("q03 returns at most 10 orders, revenue non-increasing") {
-    val rows = Relational.q03(spark, sf).collect()
+    val rows = Graft.run(spark, sf, "q03_top_revenue").collect()
     assert(rows.length <= 10 && rows.nonEmpty)
     val revs = rows.map(_.getAs[Double]("revenue"))
     assert(revs.zip(revs.tail).forall { case (a, b) => a >= b })
