@@ -27,7 +27,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   *    32-thread test box), NOT the 200 default — on a real cluster this
   *    is overridden to ~2-3x total cores;
   *  - UTC session timezone for deterministic date semantics;
-  *  - graft extensions (codegen'd vector kernels) pre-registered.
+  *  - graft extensions (codegen'd vector kernels) pre-registered;
+  *  - stream state in RocksDB, checkpointed without starting processes
+  *    ([[Engine.streamingState]]).
   */
 object Engine {
   /** Spark's cache of compiled generated classes, set so that a warm
@@ -54,6 +56,47 @@ object Engine {
     "spark.sql.codegen.cache.maxEntries" -> "1000",
     "spark.sql.codegen.useIdInClassName" -> "false")
 
+  /** How stateful streams keep and checkpoint their state. `SparkSpec`
+    * sets the same confs, so every stream spec runs this posture.
+    *  - Per-key state (sessionizer, funnel, reactivation, quota, dedup,
+    *    windows) lives in RocksDB, not on the executor heap: at 100x users
+    *    the default HDFS-backed in-memory store, not the stage logic, is
+    *    the ceiling. RocksDB moves it to local disk, and changelog
+    *    checkpointing commits only the rows a trigger changed.
+    *  - `spark.sql.streaming.checkpointFileManagerClass` is
+    *    `FileSystemBasedCheckpointFileManager`. The offset and commit
+    *    logs, RocksDB's changelog files and the state-file checksums are
+    *    all written through it. Spark's default, FileContext-based,
+    *    manager renames through `AbstractFileSystem.renameInternal`, which
+    *    looks up the link status of source and destination; on a local
+    *    path without the native Hadoop library each lookup runs a
+    *    `readlink` process. The atomic create is unchanged on local
+    *    paths: the FileContext rename without overwrite also checks the
+    *    destination first and then renames, and both managers throw
+    *    `FileAlreadyExistsException` when it exists.
+    *  - `spark.hadoop.fs.file.impl` is [[NioLocalFileSystem]], which sets
+    *    permissions with java.nio; `RawLocalFileSystem` runs `chmod` on
+    *    every create and mkdir. It applies to every local read and write
+    *    of the session, checkpoints or not, and keeps the `.crc`
+    *    sidecars. It takes effect only when the session creates the
+    *    SparkContext, before anything in the JVM opened a local
+    *    `FileSystem` (Hadoop caches one per scheme).
+    * The last two are for the local session only: a cluster's
+    * checkpoints, on HDFS or an object store, keep Spark's default
+    * manager (`GraftExtensions` sets no conf). Measured on perfbench's
+    * traced `kse_stream`, 4 cores (`plans/r13/kse_checkpoint_io.tsv`): the
+    * run starts 39 processes instead of 4 888 (3 824 `readlink`, 1 025
+    * `chmod`), and `streaming.state_commit_frac` falls from 0.52 to 0.06. */
+  val streamingState: Map[String, String] = Map(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager",
+    "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName)
+
+  /** A `local[cores]` session with graft's posture, including
+    * [[codegenReuse]] and [[streamingState]]. */
   def session(cores: Int, appName: String = "graft"): SparkSession = {
     val spark = SparkSession.builder()
       .appName(appName)
@@ -88,16 +131,7 @@ object Engine {
       // whole-stage codegen; the 100-field default silently drops them out
       .config("spark.sql.codegen.maxFields", "256")
       .config(codegenReuse)
-      // stateful streaming (sessionizer, funnel, reactivation, quota)
-      // keeps its per-key state in RocksDB, not on the executor heap:
-      // at 100x users the default HDFS-backed in-memory store, not the
-      // stage logic, is the ceiling — RocksDB moves it to local disk
-      // with incremental checkpointing (parity suites run under this
-      // same provider, so behavior is pinned, not assumed)
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
+      .config(streamingState)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

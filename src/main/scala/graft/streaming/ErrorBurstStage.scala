@@ -39,7 +39,6 @@ object ErrorBurstStage {
   /** NoTimeout parity/replay twin of [[detect]] — state is never
     * evicted (grows with the key space); test/parity use only. */
   def detectUnbounded(events: Dataset[Ev], windowMs: Long = WindowMs): Dataset[Burst] = {
-    implicit val evEnc = Encoders.product[Ev]
     implicit val stEnc = Encoders.product[BurstState]
     implicit val outEnc = Encoders.product[Burst]
     events

@@ -20,7 +20,6 @@ object FunnelStage {
   final case class Advance(userId: Long, stage: String, tsMs: Long)
 
   def track(events: Dataset[Ev]): Dataset[Advance] = {
-    implicit val evEnc = Encoders.product[Ev]
     implicit val stEnc = Encoders.product[FunnelState]
     implicit val outEnc = Encoders.product[Advance]
     events

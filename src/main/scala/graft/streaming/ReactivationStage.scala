@@ -27,7 +27,6 @@ object ReactivationStage {
   val DormMs: Long = 2L * 86400000L
 
   def detect(events: Dataset[Ev], dormMs: Long = DormMs): Dataset[Reactivation] = {
-    implicit val evEnc = Encoders.product[Ev]
     implicit val stEnc = Encoders.scalaLong
     implicit val outEnc = Encoders.product[Reactivation]
     events

@@ -35,7 +35,6 @@ object RunLengthStage {
   /** NoTimeout parity/replay twin of [[detect]] — state is never
     * evicted (grows with the key space); test/parity use only. */
   def detectUnbounded(events: Dataset[Ev]): Dataset[Run] = {
-    implicit val evEnc = Encoders.product[Ev]
     implicit val stEnc = Encoders.product[RunState]
     implicit val outEnc = Encoders.product[Run]
     events

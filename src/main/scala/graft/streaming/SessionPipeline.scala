@@ -20,7 +20,6 @@ object SessionPipeline {
   /** Emits CLOSED sessions. Events within GapMs extend the open session;
     * a larger gap (or timeout) closes it. */
   def sessionize(events: Dataset[Ev]): Dataset[Session] = {
-    implicit val evEnc = Encoders.product[Ev]
     implicit val stEnc = Encoders.product[OpenSession]
     implicit val outEnc = Encoders.product[Session]
     events
@@ -61,7 +60,6 @@ object SessionPipeline {
     * the two to the same multiset). State stays one open session per
     * user; revenue adds one long to it. */
   def sessionizeRevenue(events: Dataset[EvV]): Dataset[RevSession] = {
-    implicit val evEnc = Encoders.product[EvV]
     implicit val stEnc = Encoders.product[OpenRev]
     implicit val outEnc = Encoders.product[RevSession]
     events

@@ -33,7 +33,6 @@ object SessionPositionStage {
   /** NoTimeout form for watermark-free exact replay/parity; production
     * deployments should use [[trackWithTimeout]] (see class doc). */
   def track(events: Dataset[Ev], gapMs: Long = GapMs): Dataset[Pos] = {
-    implicit val evEnc = Encoders.product[Ev]
     implicit val stEnc = Encoders.product[PosState]
     implicit val outEnc = Encoders.product[Pos]
     events

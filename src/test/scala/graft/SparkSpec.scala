@@ -11,11 +11,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     .master("local[4]")
     .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "4")
-    // same state-store posture as Engine.session: every stateful
-    // streaming parity suite exercises the RocksDB provider the
-    // production session ships with, not the in-memory default
-    .config("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    // same streaming posture as Engine.session: every stateful stream
+    // spec runs the RocksDB provider with changelog checkpointing and
+    // writes its checkpoints as the production session does
+    .config(graft.engine.Engine.streamingState)
     // same compiled-class cache as Engine.session: the cache is JVM-wide
     // and sized by the first session that generates code
     .config(graft.engine.Engine.codegenReuse)
