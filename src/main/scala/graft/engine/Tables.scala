@@ -6,11 +6,12 @@ import scala.collection.immutable.ListMap
 
 import org.apache.spark.sql.{DataFrame, GraftPlanFactory, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{TypeCheckResult, UnresolvedFunction, UnresolvedRelation}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, DateFormatClass, Expression, IntegralDivide, Literal, RuntimeReplaceable, UnaryExpression, UnixMillis}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, CreateArray, DateFormatClass, ExplodeBase, Expression, GreaterThan, If, InheritAnalysisRules, IntegralDivide, Literal, RuntimeReplaceable, Sequence, UnaryExpression, UnixMillis}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, DateType, StringType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DateType, IntegerType, LongType, NullType, ShortType, StringType, TimestampNTZType, TimestampType}
 
 /** Schema-checked loaders for the driver-generated parquet tables.
   *
@@ -148,7 +149,7 @@ object Tables {
     * another directory never leak in. An unknown table name fails with
     * an error that names it.
     *
-    * Three DuckDB function names bind too, so one text runs in both
+    * Six DuckDB function names bind too, so one text runs in both
     * engines and in any session, with or without `GraftExtensions`:
     *   - `epoch_ms(t)`, t a TIMESTAMP or TIMESTAMP_NTZ: epoch
     *     milliseconds, `unix_millis(CAST(t AS TIMESTAMP))`, the value of
@@ -164,6 +165,23 @@ object Tables {
     *     `%m` → `MM`, `%d` → `dd`, `%H` → `HH` and the text quoted. Any
     *     other specifier, or a format that is not a literal, fails
     *     analysis.
+    *   - `unnest(list)` in a SELECT list: Spark's `explode`, one row per
+    *     element and none for an empty or NULL list. DuckDB's
+    *     `FROM (SELECT UNNEST(…))` cross-joined to a frame plans a
+    *     BroadcastNestedLoopJoin in Spark; texts unnest in the SELECT
+    *     list of the query that uses the elements.
+    *   - `list_value(a, …)`: Spark's `array(a, …)`. Texts write it for
+    *     DuckDB's `[a, …]`, which Spark cannot parse.
+    *   - `generate_series(a, b)`, a and b integral: the BIGINT list
+    *     a, a + 1, …, b, empty when a > b (Spark's `sequence(3, 1)`
+    *     counts down). Texts write it for DuckDB's exclusive
+    *     `range(a, b)`. A non-integral argument fails analysis.
+    *
+    * A DuckDB form that Spark rejects while parsing cannot be bound, so
+    * texts write the spelling both engines share: `CAST(b - a AS BIGINT)`
+    * over DATEs for `date_diff('day', a, b)`, `STRING` for `VARCHAR`,
+    * `min_by`/`max_by` for `arg_min`/`arg_max`, `list_value(…)` for
+    * `[…]` (README, "Adding an operator").
     *
     * Spark cannot parse DuckDB's HUGEINT; texts write `DECIMAL(38,0)`,
     * except where `//` divides a HUGEINT-derived value: DuckDB divides a
@@ -193,6 +211,9 @@ object Tables {
             case ("epoch_ms", Seq(t)) => EpochMs(t)
             case ("divide", Seq(a, b)) => new IntegralDivide(a, b)
             case ("strftime", Seq(t, format)) => Strftime(t, format)
+            case ("unnest", Seq(list)) => Unnest(list)
+            case ("list_value", items) => new ListValue(items)
+            case ("generate_series", Seq(a, b)) => GenerateSeries(a, b)
             case _ => f
           }
       }
@@ -260,4 +281,50 @@ private[engine] object Strftime {
     }.toSeq
     if (parts.forall(_.isDefined)) Some(parts.flatten.mkString) else None
   }
+}
+
+/** DuckDB's select-list `unnest(list)` as [[Tables.sql]] binds it: the
+  * generator behind Spark's `explode`, named `unnest`. */
+private[engine] case class Unnest(child: Expression) extends ExplodeBase {
+  override val position: Boolean = false
+  override def prettyName: String = "unnest"
+  override protected def withNewChildInternal(c: Expression): Unnest = copy(child = c)
+}
+
+/** DuckDB's `list_value(a, …)` as [[Tables.sql]] binds it: `array(a, …)`,
+  * analyzed as that array and shown under the DuckDB name. */
+private[engine] case class ListValue(parameters: Seq[Expression], replacement: Expression)
+    extends RuntimeReplaceable with InheritAnalysisRules {
+  def this(parameters: Seq[Expression]) = this(parameters, CreateArray(parameters))
+  override def prettyName: String = "list_value"
+  override protected def withNewChildInternal(c: Expression): ListValue =
+    copy(replacement = c)
+}
+
+/** DuckDB's `generate_series(a, b)` as [[Tables.sql]] binds it: the
+  * inclusive BIGINT list from a to b, empty when a > b and NULL when
+  * either bound is. Type-checked under its DuckDB name, so a
+  * non-integral argument fails analysis with an error that names
+  * `generate_series`; the optimizer replaces it with
+  * `IF(a > b, array(), sequence(a, b))` over BIGINT bounds. */
+private[engine] case class GenerateSeries(left: Expression, right: Expression)
+    extends BinaryExpression with RuntimeReplaceable {
+  override lazy val replacement: Expression = {
+    val (a, b) = (Cast(left, LongType), Cast(right, LongType))
+    If(GreaterThan(a, b), Literal(new GenericArrayData(Array.empty[Any]), dataType),
+      Sequence(a, b, None, Some(SQLConf.get.sessionLocalTimeZone)))
+  }
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def checkInputDataTypes(): TypeCheckResult =
+    Seq(left, right).map(_.dataType).find {
+      case ByteType | ShortType | IntegerType | LongType | NullType => false
+      case _ => true
+    } match {
+      case None => TypeCheckResult.TypeCheckSuccess
+      case Some(other) => TypeCheckResult.TypeCheckFailure(
+        s"generate_series takes integral bounds, not ${other.sql}")
+    }
+  override def prettyName: String = "generate_series"
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): GenerateSeries =
+    copy(left = l, right = r)
 }

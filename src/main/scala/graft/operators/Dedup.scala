@@ -1285,7 +1285,8 @@ object Dedup {
     val nVer = d02Verify(sh, cand).agg(count(lit(1)).as("n_verified"))
     nCand.crossJoin(broadcast(nVer))
       .select(col("n_candidates"), col("n_verified"),
-        (round(dbl(col("n_verified")) / col("n_candidates"), 6) + lit(0.0d)).as("precision"))
+        (round(dbl(col("n_verified")) / nullifzero(col("n_candidates")), 6) + lit(0.0d))
+          .as("precision"))
   }
 
   // ---------------------------------------------------------------- d30
@@ -2883,7 +2884,7 @@ object Dedup {
         .as("r"))
       .select(col("r.k").as("k"), col("r.n_exact").as("n_exact"),
         round(col("r.est"), 3).as("est_distinct"),
-        round(abs(col("r.est") - dbl(col("r.n_exact"))) / dbl(col("r.n_exact")), 6)
+        round(abs(col("r.est") - dbl(col("r.n_exact"))) / nullifzero(dbl(col("r.n_exact"))), 6)
           .as("rel_err"))
       .orderBy("k")
   }
@@ -2920,8 +2921,8 @@ object Dedup {
         .crossJoin(broadcast(trainTot))
         .selectExpr(s"cast($n as bigint) as gram_n",
           "flagged_docs", "flagged_tokens",
-          "(cast(flagged_docs as decimal(38,0)) * 1000000) div train_docs as flagged_doc_ppm",
-          "(cast(flagged_tokens as decimal(38,0)) * 1000000) div train_tokens as flagged_token_ppm")
+          "(cast(flagged_docs as decimal(38,0)) * 1000000) div nullif(train_docs, 0) as flagged_doc_ppm",
+          "(cast(flagged_tokens as decimal(38,0)) * 1000000) div nullif(train_tokens, 0) as flagged_token_ppm")
     }.reduce(_.unionByName(_)).orderBy("gram_n")
   }
   val d62Sql: String = {

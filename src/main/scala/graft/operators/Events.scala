@@ -20,11 +20,12 @@ import graft.engine.Qf._
   * second implementation. Their texts read time as `epoch_ms(ts)`, which
   * `Tables.sql` binds to the same value as the loader's `ms`, and divide
   * integers with `divide(a, b)`, never DuckDB's `//`, format time with
-  * `strftime`, and write wide exact integers as DECIMAL(38,0). The
-  * DataFrame operators left in `queries` are the ones whose text Spark
-  * cannot run (`UNNEST`, ASOF joins, a HUGEINT that `//` divides, ...),
-  * whose bound text plans differently from the DataFrame form, or whose
-  * SQL form read slower.
+  * `strftime`, write wide exact integers as DECIMAL(38,0), and unnest
+  * constant lists (`list_value`, `generate_series`) in a SELECT list.
+  * The DataFrame operators left in `queries` are the ones whose text
+  * Spark cannot run (ASOF joins, `->>`, list indexing, a HUGEINT that
+  * `//` divides, ...), whose bound text plans differently from the
+  * DataFrame form, or whose SQL form read slower.
   */
 object Events {
   type Q = (SparkSession, String) => DataFrame
@@ -933,27 +934,6 @@ object Events {
     * decimal compares (no float boundaries), rolled up per segment.
     * The corpus max day joins as a 1-row broadcast; output is bounded
     * by 27 segments at any scale. */
-  def e29(spark: SparkSession, dir: String): DataFrame = {
-    val DayMs = 86400000L
-    val p = Tables.events(spark, dir)
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id"), (col("ms") - pmod(col("ms"), lit(DayMs))).as("day_ms"),
-              col("value"))
-    val per = p.groupBy("user_id")
-      .agg(max(col("day_ms")).as("last_day"), count(lit(1)).as("freq"),
-           sum(dec(col("value"))).as("mon"))
-    val mx = p.agg(max(col("day_ms")).as("max_day"))
-    per.crossJoin(broadcast(mx))
-      // day-aligned ms difference is an exact multiple of DayMs; compares
-      // below are integer-vs-integer in both engines
-      .withColumn("rec_days", ((col("max_day") - col("last_day")) / lit(DayMs)).cast("long"))
-      .withColumn("r", when(col("rec_days") <= 7, "3").when(col("rec_days") <= 30, "2").otherwise("1"))
-      .withColumn("f", when(col("freq") >= 20, "3").when(col("freq") >= 5, "2").otherwise("1"))
-      .withColumn("m", when(col("mon") >= 500, "3").when(col("mon") >= 100, "2").otherwise("1"))
-      .groupBy(concat(col("r"), col("f"), col("m")).as("segment"))
-      .agg(count(lit(1)).as("n_users"), dbl(sum(col("mon"))).as("total_value"))
-      .orderBy("segment")
-  }
   val e29Sql: String =
     """WITH p AS (
       |  SELECT user_id, epoch_ms(ts) - epoch_ms(ts) % 86400000 AS day_ms, value
@@ -964,12 +944,12 @@ object Events {
       |  FROM p GROUP BY 1),
       |mx AS (SELECT MAX(day_ms) AS max_day FROM p),
       |b AS (
-      |  SELECT (max_day - last_day) // 86400000 AS rec_days, freq, mon FROM per CROSS JOIN mx),
+      |  SELECT /*+ BROADCAST(mx) */ divide(max_day - last_day, 86400000) AS rec_days, freq, mon FROM per CROSS JOIN mx),
       |seg AS (
       |  SELECT
-      |    (CASE WHEN rec_days <= 7 THEN 3 WHEN rec_days <= 30 THEN 2 ELSE 1 END)::VARCHAR ||
-      |    (CASE WHEN freq >= 20 THEN 3 WHEN freq >= 5 THEN 2 ELSE 1 END)::VARCHAR ||
-      |    (CASE WHEN mon >= 500 THEN 3 WHEN mon >= 100 THEN 2 ELSE 1 END)::VARCHAR AS segment,
+      |    (CASE WHEN rec_days <= 7 THEN 3 WHEN rec_days <= 30 THEN 2 ELSE 1 END)::STRING ||
+      |    (CASE WHEN freq >= 20 THEN 3 WHEN freq >= 5 THEN 2 ELSE 1 END)::STRING ||
+      |    (CASE WHEN mon >= 500 THEN 3 WHEN mon >= 100 THEN 2 ELSE 1 END)::STRING AS segment,
       |    mon FROM b)
       |SELECT segment, COUNT(*) AS n_users, CAST(SUM(mon) AS DOUBLE) AS total_value
       |FROM seg GROUP BY 1 ORDER BY 1""".stripMargin
@@ -2419,32 +2399,6 @@ object Events {
     * \|days\|-bounded daily frame. Gap-aware: weights key on CALENDAR
     * day distance, and contributions landing on unobserved days drop
     * with the inner join. */
-  def e84(spark: SparkSession, dir: String): DataFrame = {
-    // 0.3 * 0.7^k, k = 0..13, written exactly (decimal, never pow)
-    val ws = Seq(
-      "0.3", "0.21", "0.147", "0.1029", "0.07203", "0.050421",
-      "0.0352947", "0.02470629", "0.017294403", "0.0121060821",
-      "0.00847425747", "0.005931980229", "0.0041523861603",
-      "0.00290667031221")
-    val wExpr = ws.zipWithIndex
-      .foldLeft(lit(null).cast("decimal(20,15)")) { case (acc, (w, k)) =>
-        when(col("k") === k, lit(new java.math.BigDecimal(w)).cast("decimal(20,15)"))
-          .otherwise(acc)
-      }
-    val daily = Tables.events(spark, dir)
-      .groupBy(expr("ms div 86400000").as("day"))
-      .agg(count(lit(1)).as("n_events"))
-    val contrib = daily
-      .select(col("day").as("src_day"), col("n_events").as("x"),
-        explode(sequence(lit(0), lit(13))).as("k"))
-      .select((col("src_day") + col("k")).as("day"),
-        (wExpr * col("x").cast("decimal(18,0)")).as("term"))
-      .groupBy("day").agg(sum(col("term")).as("s"))
-    daily.join(contrib, "day")
-      .select(col("day"), col("n_events"),
-        round(dbl(col("s")), 6).as("ewma"))
-      .orderBy("day")
-  }
   val e84Sql: String = {
     val ws = Seq(
       "0.3", "0.21", "0.147", "0.1029", "0.07203", "0.050421",
@@ -2455,12 +2409,12 @@ object Events {
       .map { case (w, k) => s"WHEN k = $k THEN CAST($w AS DECIMAL(20,15))" }
       .mkString(" ")
     s"""WITH daily AS (
-       |  SELECT epoch_ms(ts) // 86400000 AS day, COUNT(*)::BIGINT AS n_events
+       |  SELECT divide(epoch_ms(ts), 86400000) AS day, COUNT(*)::BIGINT AS n_events
        |  FROM events GROUP BY 1),
        |c AS (
        |  SELECT day + k AS day,
        |    (CASE $cases END) * CAST(n_events AS DECIMAL(18,0)) AS term
-       |  FROM daily CROSS JOIN (SELECT UNNEST(range(0, 14)) AS k)),
+       |  FROM (SELECT day, n_events, UNNEST(generate_series(0, 13)) AS k FROM daily)),
        |s AS (SELECT day, SUM(term) AS s FROM c GROUP BY 1)
        |SELECT daily.day, n_events, ROUND(CAST(s AS DOUBLE), 6) AS ewma
        |FROM daily JOIN s USING (day) ORDER BY day""".stripMargin
@@ -2475,32 +2429,10 @@ object Events {
     * exact-decimal EWMA via a bounded equi shift-join (day = day+1);
     * residual moments are round9-quantized exact sums; the 3σ cut is
     * ONE IEEE threshold from a 1-row broadcast (e79's recipe). */
-  def e85(spark: SparkSession, dir: String): DataFrame = {
-    val base = e84(spark, dir) // day, n_events, ewma
-    val resid = base.as("t")
-      .join(broadcast(base.select((col("day") + 1).as("nday"), col("ewma").as("prev_ewma"))),
-        col("day") === col("nday"))
-      .select(col("day"), col("n_events"), col("prev_ewma"),
-        round(dbl(col("n_events")) - col("prev_ewma"), 9)
-          .cast("decimal(18,9)").as("r"))
-    val st = resid.agg(count(lit(1)).as("n"),
-        dbl(sum(col("r"))).as("s"),
-        dbl(sum(col("r") * col("r"))).as("q"))
-      .filter(col("n") >= 2)
-      .select(col("n"), (col("s") / col("n")).as("mu"),
-        sqrt((col("q") - col("s") * col("s") / col("n")) / (col("n") - 1))
-          .as("sd"))
-    resid.join(broadcast(st))
-      .filter(abs(dbl(col("r")) - col("mu")) > lit(3.0) * col("sd"))
-      .select(col("day"), col("n_events"),
-        round(col("prev_ewma"), 6).as("baseline"),
-        round((dbl(col("r")) - col("mu")) / col("sd"), 6).as("z"))
-      .orderBy("day")
-  }
   val e85Sql: String = {
     s"""WITH e AS (${e84Sql.replace("ORDER BY day", "")}),
        |r AS (
-       |  SELECT t.day, t.n_events, p.ewma AS prev_ewma,
+       |  SELECT /*+ BROADCAST(p) */ t.day, t.n_events, p.ewma AS prev_ewma,
        |    CAST(ROUND(CAST(t.n_events AS DOUBLE) - p.ewma, 9) AS DECIMAL(18,9)) AS r
        |  FROM e t JOIN e p ON t.day = p.day + 1),
        |st AS (
@@ -2509,7 +2441,7 @@ object Events {
        |  FROM r HAVING COUNT(*) >= 2),
        |th AS (
        |  SELECT n, s / n AS mu, sqrt((q - s * s / n) / (n - 1)) AS sd FROM st)
-       |SELECT day, n_events, ROUND(prev_ewma, 6) AS baseline,
+       |SELECT /*+ BROADCAST(th) */ day, n_events, ROUND(prev_ewma, 6) AS baseline,
        |  ROUND((CAST(r AS DOUBLE) - mu) / sd, 6) AS z
        |FROM r CROSS JOIN th
        |WHERE abs(CAST(r AS DOUBLE) - mu) > 3.0 * sd
@@ -2885,7 +2817,7 @@ object Events {
     * constant-sized. 1-row output, exact integer flag arithmetic. */
   def e94(spark: SparkSession, dir: String): DataFrame = {
     val d38 = "decimal(38,0)"
-    val v = e84(spark, dir).select(col("day"), col("n_events")).cache()
+    val v = Tables.sql(spark, dir, e84Sql).select(col("day"), col("n_events")).cache()
     val st = v.agg(count(lit(1)).as("n"), sum(col("n_events")).as("s"),
       sum(col("n_events") * col("n_events")).as("q"))
     val nD = col("n").cast(d38)
@@ -2894,7 +2826,7 @@ object Events {
     val sFlag = v.join(broadcast(st))
       .filter(col("n") >= 2 && dev * dev * (nD - 1) > lit(9).cast(d38) * nD * varNum)
       .select(col("day"))
-    val aFlag = e85(spark, dir).select(col("day"))
+    val aFlag = Tables.sql(spark, dir, e85Sql).select(col("day"))
     val both = sFlag.join(aFlag, "day")
     v.agg(count(lit(1)).as("n_days"))
       .join(broadcast(sFlag.agg(count(lit(1)).as("flagged_static"))))
@@ -2910,9 +2842,9 @@ object Events {
        |sflag AS (
        |  SELECT day FROM v CROSS JOIN st
        |  WHERE n >= 2 AND
-       |    (CAST(n AS HUGEINT) * n_events - s) * (CAST(n AS HUGEINT) * n_events - s)
+       |    (CAST(n AS DECIMAL(38,0)) * n_events - s) * (CAST(n AS DECIMAL(38,0)) * n_events - s)
        |      * (n - 1)
-       |    > 9 * CAST(n AS HUGEINT) * (CAST(n AS HUGEINT) * q - CAST(s AS HUGEINT) * s)),
+       |    > 9 * CAST(n AS DECIMAL(38,0)) * (CAST(n AS DECIMAL(38,0)) * q - CAST(s AS DECIMAL(38,0)) * s)),
        |aflag AS (SELECT day FROM ($e85Sql))
        |SELECT (SELECT COUNT(*) FROM v)::BIGINT AS n_days,
        |  (SELECT COUNT(*) FROM sflag)::BIGINT AS flagged_static,
@@ -2977,21 +2909,6 @@ object Events {
     * minutes — the quantity being measured); concurrency shuffles once
     * on the minute key and the day rollup rides a day-partitioned
     * window over the |minutes|-bounded frame. */
-  def e96(spark: SparkSession, dir: String): DataFrame = {
-    val wd = Window.partitionBy("day")
-    sessionize(Tables.events(spark, dir))
-      .select(explode(expr("sequence(start_ms div 60000, end_ms div 60000)"))
-        .as("minute"))
-      .groupBy("minute").agg(count(lit(1)).as("conc"))
-      .withColumn("day", expr("minute div 1440"))
-      .withColumn("peak_concurrency", max(col("conc")).over(wd))
-      .withColumn("active_minutes", count(lit(1)).over(wd))
-      .filter(col("conc") === col("peak_concurrency"))
-      .groupBy("day", "peak_concurrency", "active_minutes")
-      .agg(min(col("minute")).as("peak_minute"))
-      .select("day", "peak_concurrency", "peak_minute", "active_minutes")
-      .orderBy("day")
-  }
   val e96Sql: String =
     s"""WITH e AS (SELECT user_id, event_id, epoch_ms(ts) AS ms FROM events),
        |l AS (SELECT *, LAG(ms) OVER (PARTITION BY user_id ORDER BY ms, event_id) AS prev_ms FROM e),
@@ -3000,10 +2917,10 @@ object Events {
        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS sess_idx FROM f),
        |sess AS (SELECT user_id, sess_idx, MIN(ms) AS start_ms, MAX(ms) AS end_ms
        |  FROM s GROUP BY 1, 2),
-       |mins AS (SELECT UNNEST(generate_series(start_ms // 60000, end_ms // 60000)) AS minute
+       |mins AS (SELECT UNNEST(generate_series(divide(start_ms, 60000), divide(end_ms, 60000))) AS minute
        |  FROM sess),
        |c AS (SELECT minute, COUNT(*)::BIGINT AS conc FROM mins GROUP BY 1),
-       |d AS (SELECT minute, conc, minute // 1440 AS day FROM c),
+       |d AS (SELECT minute, conc, divide(minute, 1440) AS day FROM c),
        |r AS (SELECT *, MAX(conc) OVER (PARTITION BY day) AS peak_concurrency,
        |        COUNT(*) OVER (PARTITION BY day)::BIGINT AS active_minutes FROM d)
        |SELECT day, peak_concurrency, MIN(minute) AS peak_minute, active_minutes
@@ -3347,29 +3264,6 @@ object Events {
     * Scale: one (user, type)-partitioned lag pass (user-bounded,
     * skew-free — never partitioned by type alone), then a
     * |types|×4-key map-combinable rollup via a literal-array explode. */
-  def e104(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("user_id", "event_type")
-      .orderBy(col("ms"), col("event_id"))
-    val gaps = Tables.events(spark, dir)
-      .withColumn("gap", col("ms") - lag(col("ms"), 1).over(w))
-      .filter(col("gap").isNotNull)
-      .select(col("event_type"), col("gap"))
-    gaps
-      .select(col("event_type"), col("gap"),
-        explode(lit(Array(60000L, 300000L, 1800000L, 7200000L))).as("t_ms"))
-      .groupBy("event_type", "t_ms")
-      .agg(count(lit(1)).as("n_gaps"),
-        sum(col("gap")).as("gap_sum"),
-        sum(when(col("gap") <= col("t_ms"), 1L).otherwise(0L)).as("n_le"))
-      .select(col("event_type"), col("t_ms"), col("n_gaps"),
-        round(dbl(col("n_le")) / col("n_gaps"), 6).as("emp_cdf"),
-        round(lit(1.0d) - exp(-dbl(col("t_ms")) /
-          (dbl(col("gap_sum")) / col("n_gaps"))), 6).as("exp_cdf"),
-        round(dbl(col("n_le")) / col("n_gaps") -
-          (lit(1.0d) - exp(-dbl(col("t_ms")) /
-            (dbl(col("gap_sum")) / col("n_gaps")))), 6).as("burst_excess"))
-      .orderBy("event_type", "t_ms")
-  }
   val e104Sql: String =
     """WITH e AS (SELECT user_id, event_id, event_type, epoch_ms(ts) AS ms FROM events),
       |g AS (
@@ -3378,8 +3272,8 @@ object Events {
       |  FROM e),
       |f AS (
       |  SELECT event_type, gap, CAST(t_ms AS BIGINT) AS t_ms
-      |  FROM g CROSS JOIN (SELECT UNNEST([60000, 300000, 1800000, 7200000]) AS t_ms)
-      |  WHERE gap IS NOT NULL),
+      |  FROM (SELECT event_type, gap, UNNEST(list_value(60000, 300000, 1800000, 7200000)) AS t_ms
+      |    FROM g WHERE gap IS NOT NULL)),
       |a AS (
       |  SELECT event_type, t_ms, COUNT(*)::BIGINT AS n_gaps,
       |    CAST(SUM(gap) AS BIGINT) AS gap_sum,
@@ -3409,36 +3303,13 @@ object Events {
     * equi-join on the shifted hour key over the bounded series frame
     * fanned ×3 by a literal lag array (q113's month recipe on the
     * hour domain). */
-  def e105(spark: SparkSession, dir: String): DataFrame = {
-    val d38 = "decimal(38,0)"
-    val series = Tables.events(spark, dir)
-      .select(expr("ms div 3600000").as("hr"))
-      .groupBy("hr").agg(count(lit(1)).as("x"))
-    val lagged = series
-      .select(col("hr"), col("x"), explode(lit(Array(1L, 24L, 168L))).as("lag"))
-      .select((col("hr") + col("lag")).as("thr"), col("lag"), col("x"))
-    val pairs = lagged.join(
-        series.select(col("hr").as("thr"), col("x").as("y")), Seq("thr"))
-    pairs.groupBy("lag")
-      .agg(count(lit(1)).as("n_pairs"),
-        sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-        sum((col("x") * col("y")).cast(d38)).as("sxy"),
-        sum((col("x") * col("x")).cast(d38)).as("sxx"),
-        sum((col("y") * col("y")).cast(d38)).as("syy"))
-      .select(col("lag"), col("n_pairs"),
-        round((dbl(col("n_pairs")) * dbl(col("sxy")) - dbl(col("sx")) * dbl(col("sy"))) /
-          sqrt((dbl(col("n_pairs")) * dbl(col("sxx")) - dbl(col("sx")) * dbl(col("sx"))) *
-               (dbl(col("n_pairs")) * dbl(col("syy")) - dbl(col("sy")) * dbl(col("sy")))), 6)
-          .as("autocorr"))
-      .orderBy("lag")
-  }
   val e105Sql: String =
     """WITH s AS (
-      |  SELECT epoch_ms(ts) // 3600000 AS hr, COUNT(*)::BIGINT AS x
+      |  SELECT divide(epoch_ms(ts), 3600000) AS hr, COUNT(*)::BIGINT AS x
       |  FROM events GROUP BY 1),
       |l AS (
       |  SELECT hr + lag AS thr, CAST(lag AS BIGINT) AS lag, x
-      |  FROM s CROSS JOIN (SELECT UNNEST([1, 24, 168]) AS lag)),
+      |  FROM (SELECT hr, x, UNNEST(list_value(1, 24, 168)) AS lag FROM s)),
       |p AS (SELECT lag, l.x AS x, s.x AS y FROM l JOIN s ON l.thr = s.hr),
       |m AS (
       |  SELECT lag, COUNT(*)::BIGINT AS n_pairs,
@@ -4022,20 +3893,15 @@ object Events {
     "e111_value_gini" -> (e111 _),
     "e110_bounce_by_entry" -> (e110 _),
     "e108_age_value_curve" -> (e108 _),
-    "e105_hourly_autocorr" -> (e105 _),
-    "e104_exponential_fit" -> (e104 _),
     "e103_kmv_audit" -> (e103 _),
     "e102_markov_stationary" -> (e102 _),
     "e101_hll_audit" -> (e101 _),
     "e97_error_bursts" -> (e97 _),
-    "e96_peak_concurrency" -> (e96 _),
     "e95_prop_band_lift" -> (e95 _),
     "e94_anomaly_agreement" -> (e94 _),
     "e92_entry_retention" -> (e92 _),
     "e88_alert_threshold_sweep" -> (e88 _),
     "e87_session_handoff" -> (e87 _),
-    "e85_adaptive_anomaly_days" -> (e85 _),
-    "e84_volume_ewma" -> (e84 _),
     "e82_cms_heavy_hitters" -> (e82 _),
     "e75_activity_zipf" -> (e75 _),
     "e64_entry_conversion" -> (e64 _),
@@ -4047,7 +3913,6 @@ object Events {
     "e38_retention_triangle" -> (e38 _),
     "e33_new_vs_returning" -> (e33 _),
     "e31_type_lift" -> (e31 _),
-    "e29_rfm_segments" -> (e29 _),
     "e24_rolling_active_sketch" -> (e24 _),
     "e19_conversion_lag" -> (e19 _),
     "e16_value_deciles" -> (e16 _),
@@ -4070,19 +3935,14 @@ object Events {
     "e111_value_gini" -> e111Sql,
     "e110_bounce_by_entry" -> e110Sql,
     "e108_age_value_curve" -> e108Sql,
-    "e105_hourly_autocorr" -> e105Sql,
-    "e104_exponential_fit" -> e104Sql,
     "e103_kmv_audit" -> e103Sql,
     "e102_markov_stationary" -> e102Sql,
     "e97_error_bursts" -> e97Sql,
-    "e96_peak_concurrency" -> e96Sql,
     "e95_prop_band_lift" -> e95Sql,
     "e94_anomaly_agreement" -> e94Sql,
     "e92_entry_retention" -> e92Sql,
     "e88_alert_threshold_sweep" -> e88Sql,
     "e87_session_handoff" -> e87Sql,
-    "e85_adaptive_anomaly_days" -> e85Sql,
-    "e84_volume_ewma" -> e84Sql,
     "e82_cms_heavy_hitters" -> e82Sql,
     "e75_activity_zipf" -> e75Sql,
     "e64_entry_conversion" -> e64Sql,
@@ -4102,7 +3962,6 @@ object Events {
     "e10_asof_join_scaleout" -> e08Sql,
     "e11_attribution_window" -> e11Sql,
     "e19_conversion_lag" -> e19Sql,
-    "e29_rfm_segments" -> e29Sql,
     "e31_type_lift" -> e31Sql,
     "e33_new_vs_returning" -> e33Sql,
     "e38_retention_triangle" -> e38Sql,
@@ -4112,6 +3971,12 @@ object Events {
     * binds each text to the table loaders with `Tables.sql`, and
     * `SparkEntry.oracleSql` hands the same text to DuckDB. */
   val sql: Map[String, String] = Map(
+    "e105_hourly_autocorr" -> e105Sql,
+    "e104_exponential_fit" -> e104Sql,
+    "e96_peak_concurrency" -> e96Sql,
+    "e85_adaptive_anomaly_days" -> e85Sql,
+    "e84_volume_ewma" -> e84Sql,
+    "e29_rfm_segments" -> e29Sql,
     "e54_hour_dow_heatmap" -> e54Sql,
     "e22_burstiness" -> e22Sql,
     "e113_whale_census" -> e113Sql,

@@ -977,7 +977,7 @@ object Pipeline {
       .agg(count(lit(1)).as("n_pairs"),
            count(when(col("sa") =!= col("sb"), lit(1))).as("n_cross_shard"))
       .select(col("n_pairs"), col("n_cross_shard"),
-        round(dbl(col("n_cross_shard")) / col("n_pairs"), 6).as("leakage_rate"))
+        round(dbl(col("n_cross_shard")) / nullifzero(col("n_pairs")), 6).as("leakage_rate"))
   }
   val p20Sql: String = {
     val pairSql = Dedup.jaccardPairsSql(1, 2).replace("ORDER BY doc_a, doc_b", "")
@@ -1114,10 +1114,10 @@ object Pipeline {
            countDistinct(col("lang")).as("n_langs"),
            countDistinct(col("source")).as("n_sources"),
            countDistinct(md5(col("text"))).as("n_unique_texts"),
-           (sum(col("quality").cast("decimal(10,6)")).cast("double") / count(lit(1)))
+           (sum(col("quality").cast("decimal(10,6)")).cast("double") / nullifzero(count(lit(1))))
              .as("avg_quality"))
       .withColumn("dup_rate",
-        round(lit(1.0d) - dbl(col("n_unique_texts")) / col("n_docs"), 6))
+        round(lit(1.0d) - dbl(col("n_unique_texts")) / nullifzero(col("n_docs")), 6))
   }
   val p24Sql: String = {
     import TextAnalysis.{qualitySqlExpr, stopSqlIn, wordsSql}
@@ -1605,14 +1605,14 @@ object Pipeline {
     val q = TextAnalysis.addQuality(docs)
       .agg(count(lit(1)).as("nq"),
         sum(round(col("quality"), 9).cast("decimal(18,9)")).as("sq"))
-      .select(round(col("sq").cast("double") / col("nq"), 6).as("mean_quality"))
+      .select(round(col("sq").cast("double") / nullifzero(col("nq")), 6).as("mean_quality"))
     val g8 = docs.select(expr("word_tokens(text)").as("w"))
       .select(col("w"), size(col("w")).as("len")).filter(col("len") >= 8)
       .select(explode(expr("transform(sequence(0, len - 8), i -> " +
         "array_join(slice(w, i + 1, 8), ' '))")).as("g"))
     val red8 = g8.agg(count(lit(1)).as("tot"))
       .join(broadcast(g8.distinct().agg(count(lit(1)).as("dst"))))
-      .select(round(lit(1.0d) - col("dst").cast("double") / col("tot"), 6)
+      .select(round(lit(1.0d) - col("dst").cast("double") / nullifzero(col("tot")), 6)
         .as("redundancy_8gram"))
     nd.join(broadcast(dup)).join(broadcast(pairs))
       .join(broadcast(q)).join(broadcast(red8))

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.engine.{Qf, Tables}
+import graft.engine.Tables
 import graft.engine.Qf._
 
 /** Relational core (SURVEY.md §2.1): batch-analytics operators over the
@@ -15,9 +15,11 @@ import graft.engine.Qf._
   *    cross-engine check, not a second implementation. Broadcast choices
   *    the scale posture relies on are explicit `/*+ BROADCAST(t) */`
   *    hints (a comment to DuckDB).
-  *  - `queries`: DataFrame operators, where the oracle text does not run
-  *    in Spark (DuckDB-only functions) or plans differently there. Each
-  *    carries its DuckDB text in `oracle`, computed with the identical
+  *  - `queries`: DataFrame operators. q21 and q108 are sketches with no
+  *    oracle text; each other key keeps its DuckDB text in `oracle`
+  *    because the bound text plans differently, reads slower, or returns
+  *    other values or types (`plans/r14/sql_dialect_parity.tsv` names
+  *    each key's reason). The texts compute with the identical
   *    exact-arithmetic strategy (Qf) so result hashes match bit-wise.
   *
   * Catalyst owns pushdown / broadcast / AQE decisions in both forms.
@@ -184,15 +186,6 @@ object Relational {
 
   // ---------------------------------------------------------------- q14
   /** String functions: upper/substring/regexp_extract/concat/length. */
-  def q14(spark: SparkSession, dir: String): DataFrame =
-    Tables.customer(spark, dir)
-      .select(col("c_custkey"),
-              upper(col("c_name")).as("name_u"),
-              substring(col("c_name"), 10, 9).as("id_part"),
-              regexp_extract(col("c_name"), "[0-9]+", 0).cast("long").as("id_num"),
-              concat(col("c_mktsegment"), lit("/"), col("c_name")).as("tagged"),
-              length(col("c_name")).cast("long").as("name_len"))
-      .orderBy("c_custkey")
   val q14Sql: String =
     """SELECT c_custkey, UPPER(c_name) AS name_u, SUBSTRING(c_name, 10, 9) AS id_part,
       |  CAST(regexp_extract(c_name, '[0-9]+', 0) AS BIGINT) AS id_num,
@@ -249,16 +242,6 @@ object Relational {
 
   // ---------------------------------------------------------------- q19
   /** coalesce / nullif / null-safe comparisons. */
-  def q19(spark: SparkSession, dir: String): DataFrame = {
-    val zero = lit(0.0d)
-    val nonzeroDisc = when(col("l_discount") === zero, lit(null).cast("double")).otherwise(col("l_discount"))
-    Tables.lineitem(spark, dir)
-      .groupBy("l_returnflag")
-      .agg(count(nonzeroDisc).as("n_disc"),
-           sum(when(col("l_discount") <=> zero, 1L).otherwise(0L)).as("n_zero"),
-           dbl(sum(dec(coalesce(nonzeroDisc, lit(0.05d))))).as("disc_adj"))
-      .orderBy("l_returnflag")
-  }
   val q19Sql: String =
     """SELECT l_returnflag,
       |  COUNT(NULLIF(l_discount, CAST(0 AS DOUBLE))) AS n_disc,
@@ -862,29 +845,12 @@ object Relational {
     * multiset is order-deterministic even under equal orderdates because
     * differences of consecutive SORTED dates don't depend on the
     * tie-break; the window partitions by custkey so state is bounded. */
-  def q45(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("o_custkey").orderBy(col("o_orderdate"), col("o_orderkey"))
-    val gaps = Tables.orders(spark, dir)
-      .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"))
-      .withColumn("prev_d", lag(col("o_orderdate"), 1).over(w))
-      .filter(col("prev_d").isNotNull)
-      .select(col("o_custkey"),
-        datediff(col("o_orderdate"), col("prev_d")).cast("long").as("gap"))
-    gaps.groupBy("o_custkey")
-      .agg((count(lit(1)) + 1).as("n_orders"),
-           (dbl(sum(col("gap"))) / count(lit(1))).as("avg_gap_days"),
-           max(col("gap")).as("max_gap_days"),
-           min(col("gap")).as("min_gap_days"))
-      .filter(col("n_orders") >= 5)
-      .orderBy("o_custkey")
-  }
   val q45Sql: String =
     """WITH g AS (
       |  SELECT o_custkey,
-      |    DATE_DIFF('day',
+      |    CAST(CAST(o_orderdate AS DATE) -
       |      CAST(LAG(o_orderdate) OVER (PARTITION BY o_custkey
-      |             ORDER BY o_orderdate, o_orderkey) AS DATE),
-      |      CAST(o_orderdate AS DATE)) AS gap
+      |             ORDER BY o_orderdate, o_orderkey) AS DATE) AS BIGINT) AS gap
       |  FROM orders)
       |SELECT o_custkey, COUNT(*) + 1 AS n_orders,
       |  CAST(SUM(gap) AS DOUBLE) / COUNT(*) AS avg_gap_days,
@@ -935,24 +901,10 @@ object Relational {
     * line's ship date, banded by integer compares, per order priority.
     * The fact-fact join shuffles on orderkey (AQE-sized); the band
     * rollup is map-combinable and bounded by |priorities| x |bands|. */
-  def q48(spark: SparkSession, dir: String): DataFrame = {
-    val j = Tables.lineitem(spark, dir)
-      .select(col("l_orderkey"), col("l_shipdate"))
-      .join(Tables.orders(spark, dir)
-        .select(col("o_orderkey"), col("o_orderdate"), col("o_orderpriority")),
-        col("l_orderkey") === col("o_orderkey"))
-      .withColumn("lat", datediff(col("l_shipdate"), col("o_orderdate")).cast("long"))
-    val band = when(col("lat") <= 30, "a<=30d").when(col("lat") <= 60, "b<=60d")
-      .when(col("lat") <= 90, "c<=90d").otherwise("d>90d")
-    j.groupBy(col("o_orderpriority"), band.as("latency_band"))
-      .agg(count(lit(1)).as("n_lines"),
-           (sum(col("lat")).cast("double") / count(lit(1))).as("avg_latency_days"))
-      .orderBy("o_orderpriority", "latency_band")
-  }
   val q48Sql: String =
     """WITH j AS (
       |  SELECT o_orderpriority,
-      |    DATE_DIFF('day', CAST(o_orderdate AS DATE), CAST(l_shipdate AS DATE)) AS lat
+      |    CAST(CAST(l_shipdate AS DATE) - CAST(o_orderdate AS DATE) AS BIGINT) AS lat
       |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey)
       |SELECT o_orderpriority,
       |  CASE WHEN lat <= 30 THEN 'a<=30d' WHEN lat <= 60 THEN 'b<=60d'
@@ -1153,41 +1105,10 @@ object Relational {
     * independent of fact size; the q44/t14 trade). Bracketing ranks are
     * conditional mins against the cumulative counts; interpolation
     * arithmetic is identical in both engines. */
-  def q57(spark: SparkSession, dir: String): DataFrame = {
-    val counts = Tables.lineitem(spark, dir)
-      .select(col("l_orderkey"), col("l_shipdate"))
-      .join(Tables.orders(spark, dir)
-        .select(col("o_orderkey"), col("o_orderdate"), col("o_orderpriority")),
-        col("l_orderkey") === col("o_orderkey"))
-      .withColumn("lat", datediff(col("l_shipdate"), col("o_orderdate")).cast("long"))
-      .groupBy(col("o_orderpriority"), col("lat"))
-      .agg(count(lit(1)).as("c"))
-    val wCum = Window.partitionBy("o_orderpriority").orderBy("lat")
-    val cum = counts.withColumn("cum", sum(col("c")).over(wCum))
-    val n = counts.groupBy("o_orderpriority").agg(sum(col("c")).as("n"))
-    def pct(q: Double, nm: String): Seq[Column] = {
-      val pos = (col("n") - 1).cast("double") * lit(q)
-      Seq(min(when(col("cum") >= floor(pos) + 1, col("lat"))).as(s"${nm}_lo"),
-          min(when(col("cum") >= ceil(pos) + 1, col("lat"))).as(s"${nm}_hi"))
-    }
-    def interp(nm: String, q: Double): Column = {
-      val pos = (col("n") - 1).cast("double") * lit(q)
-      dbl(col(s"${nm}_lo")) +
-        (dbl(col(s"${nm}_hi")) - dbl(col(s"${nm}_lo"))) * (pos - floor(pos))
-    }
-    val aggs = pct(0.25, "q1") ++ pct(0.5, "q2") ++ pct(0.75, "q3")
-    cum.join(broadcast(n), "o_orderpriority")
-      .groupBy(col("o_orderpriority"), col("n"))
-      .agg(aggs.head, aggs.tail: _*)
-      .select(col("o_orderpriority"), col("n"),
-        interp("q1", 0.25).as("p25"), interp("q2", 0.5).as("p50"),
-        interp("q3", 0.75).as("p75"))
-      .orderBy("o_orderpriority")
-  }
   val q57Sql: String =
     """WITH j AS (
       |  SELECT o_orderpriority,
-      |    DATE_DIFF('day', CAST(o_orderdate AS DATE), CAST(l_shipdate AS DATE)) AS lat
+      |    CAST(CAST(l_shipdate AS DATE) - CAST(o_orderdate AS DATE) AS BIGINT) AS lat
       |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
       |counts AS (
       |  SELECT o_orderpriority, lat, COUNT(*) AS c FROM j GROUP BY 1, 2),
@@ -1196,7 +1117,7 @@ object Relational {
       |  FROM counts),
       |nn AS (SELECT o_orderpriority, CAST(SUM(c) AS BIGINT) AS n FROM counts GROUP BY 1),
       |a AS (
-      |  SELECT cum.o_orderpriority AS o_orderpriority, MAX(n) AS n,
+      |  SELECT /*+ BROADCAST(nn) */ cum.o_orderpriority AS o_orderpriority, MAX(n) AS n,
       |    MIN(CASE WHEN cum >= FLOOR(CAST(n - 1 AS DOUBLE) * 0.25) + 1 THEN lat END) AS q1_lo,
       |    MIN(CASE WHEN cum >= CEIL(CAST(n - 1 AS DOUBLE) * 0.25) + 1 THEN lat END) AS q1_hi,
       |    MIN(CASE WHEN cum >= FLOOR(CAST(n - 1 AS DOUBLE) * 0.5) + 1 THEN lat END) AS q2_lo,
@@ -1220,26 +1141,10 @@ object Relational {
     * line-level; an order is only as done as its slowest line). One
     * orderkey rollup to the max line latency, integer-day compare, ONE
     * division per priority row. */
-  def q58(spark: SparkSession, dir: String): DataFrame = {
-    val per = Tables.lineitem(spark, dir)
-      .select(col("l_orderkey"), col("l_shipdate"))
-      .join(Tables.orders(spark, dir)
-        .select(col("o_orderkey"), col("o_orderdate"), col("o_orderpriority")),
-        col("l_orderkey") === col("o_orderkey"))
-      .withColumn("lat", datediff(col("l_shipdate"), col("o_orderdate")).cast("long"))
-      .groupBy(col("o_orderkey"), col("o_orderpriority"))
-      .agg(max(col("lat")).as("max_lat"))
-    per.groupBy("o_orderpriority")
-      .agg(count(lit(1)).as("n_orders"),
-           sum(when(col("max_lat") <= 90L, 1L).otherwise(0L)).as("n_filled_90d"))
-      .withColumn("fill_rate",
-        round(dbl(col("n_filled_90d")) / col("n_orders"), 6) + lit(0.0d))
-      .orderBy("o_orderpriority")
-  }
   val q58Sql: String =
     """WITH per AS (
       |  SELECT o_orderkey, o_orderpriority,
-      |    MAX(DATE_DIFF('day', CAST(o_orderdate AS DATE), CAST(l_shipdate AS DATE))) AS max_lat
+      |    MAX(CAST(CAST(l_shipdate AS DATE) - CAST(o_orderdate AS DATE) AS BIGINT)) AS max_lat
       |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
       |  GROUP BY 1, 2)
       |SELECT o_orderpriority, COUNT(*) AS n_orders,
@@ -1372,23 +1277,10 @@ object Relational {
     * a broadcast scalar, age banding is an integer day compare (CASE
     * edges, no float), and the rollup is one map-combinable groupBy onto
     * a \|priorities\|×\|bands\|-bounded output. */
-  def q65(spark: SparkSession, dir: String): DataFrame = {
-    val asOf = Tables.orders(spark, dir).agg(max(col("o_orderdate")).as("as_of"))
-    val band = when(col("age_d") <= 30, "a<=30d").when(col("age_d") <= 90, "b<=90d")
-      .when(col("age_d") <= 365, "c<=1y").otherwise("d>1y")
-    Tables.orders(spark, dir)
-      .filter(col("o_orderstatus") === "O")
-      .join(broadcast(asOf))
-      .withColumn("age_d", datediff(col("as_of"), col("o_orderdate")))
-      .withColumn("age_band", band)
-      .groupBy("o_orderpriority", "age_band")
-      .agg(count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("open_value"))
-      .orderBy("o_orderpriority", "age_band")
-  }
   val q65Sql: String =
     """WITH snap AS (SELECT MAX(o_orderdate) AS as_of FROM orders),
-      |b AS (SELECT o_orderpriority, o_totalprice,
-      |    date_diff('day', CAST(o_orderdate AS DATE), CAST(as_of AS DATE)) AS age_d
+      |b AS (SELECT /*+ BROADCAST(snap) */ o_orderpriority, o_totalprice,
+      |    CAST(CAST(as_of AS DATE) - CAST(o_orderdate AS DATE) AS BIGINT) AS age_d
       |  FROM orders CROSS JOIN snap WHERE o_orderstatus = 'O')
       |SELECT o_orderpriority,
       |  CASE WHEN age_d <= 30 THEN 'a<=30d' WHEN age_d <= 90 THEN 'b<=90d'
@@ -1729,29 +1621,10 @@ object Relational {
     * the fact); the quarter-over-quarter link is a broadcast equi
     * self-join on (brand, quarter-index). First-quarter shifts are NULL
     * in both engines. */
-  def q76(spark: SparkSession, dir: String): DataFrame = {
-    val rev = Tables.lineitem(spark, dir)
-      .join(broadcast(Tables.part(spark, dir).select("p_partkey", "p_brand")),
-        col("l_partkey") === col("p_partkey"))
-      .groupBy(col("p_brand"),
-        (year(col("l_shipdate")) * 4 + quarter(col("l_shipdate"))).as("qkey"),
-        concat(year(col("l_shipdate")).cast("string"), lit("-Q"),
-          quarter(col("l_shipdate")).cast("string")).as("quarter"))
-      .agg(sum(revenueTerm(col("l_extendedprice"), col("l_discount"))).as("rev"))
-    val w = Window.partitionBy("qkey").orderBy(col("rev").desc, col("p_brand"))
-    val ranked = rev.withColumn("rnk", row_number().over(w).cast("long"))
-    ranked.join(
-        broadcast(ranked.select(col("p_brand").as("pb"), col("qkey").as("pq"),
-          col("rnk").as("prev_rnk"))),
-        col("p_brand") === col("pb") && col("qkey") === col("pq") + 1, "left")
-      .select(col("quarter"), col("p_brand"), dbl(col("rev")).as("revenue"),
-        col("rnk"), col("prev_rnk"), (col("prev_rnk") - col("rnk")).as("shift"))
-      .orderBy("quarter", "rnk")
-  }
   val q76Sql: String =
     s"""WITH rev AS (
-       |  SELECT p_brand, year(l_shipdate) * 4 + quarter(l_shipdate) AS qkey,
-       |    CAST(year(l_shipdate) AS VARCHAR) || '-Q' || CAST(quarter(l_shipdate) AS VARCHAR) AS quarter,
+       |  SELECT /*+ BROADCAST(part) */ p_brand, year(l_shipdate) * 4 + quarter(l_shipdate) AS qkey,
+       |    CAST(year(l_shipdate) AS STRING) || '-Q' || CAST(quarter(l_shipdate) AS STRING) AS quarter,
        |    SUM($revenueSql) AS rev
        |  FROM lineitem JOIN part ON l_partkey = p_partkey
        |  GROUP BY 1, 2, 3),
@@ -1759,7 +1632,7 @@ object Relational {
        |  SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY qkey
        |    ORDER BY rev DESC, p_brand) AS BIGINT) AS rnk
        |  FROM rev)
-       |SELECT a.quarter, a.p_brand, CAST(a.rev AS DOUBLE) AS revenue,
+       |SELECT /*+ BROADCAST(b) */ a.quarter, a.p_brand, CAST(a.rev AS DOUBLE) AS revenue,
        |  a.rnk, b.rnk AS prev_rnk, b.rnk - a.rnk AS shift
        |FROM ranked a LEFT JOIN ranked b
        |  ON a.p_brand = b.p_brand AND a.qkey = b.qkey + 1
@@ -1770,23 +1643,13 @@ object Relational {
     * against the uniform 1/12 share (index 1.0 = no seasonality). One
     * map-combinable groupBy to a 12-row frame, decimal-exact revenue,
     * 1-row total broadcast, ONE division per row. */
-  def q77(spark: SparkSession, dir: String): DataFrame = {
-    val m = Tables.orders(spark, dir)
-      .groupBy(month(col("o_orderdate")).cast("long").as("moy"))
-      .agg(count(lit(1)).as("n_orders"), sum(dec(col("o_totalprice"))).as("rev"))
-    val tot = m.agg(sum(col("rev")).as("trev"))
-    m.join(broadcast(tot))
-      .select(col("moy"), col("n_orders"), dbl(col("rev")).as("revenue"),
-        round(dbl(col("rev") * 12) / dbl(col("trev")), 6).as("seasonality_index"))
-      .orderBy("moy")
-  }
   val q77Sql: String =
     """WITH m AS (
-      |  SELECT month(o_orderdate) AS moy, COUNT(*)::BIGINT AS n_orders,
+      |  SELECT CAST(month(o_orderdate) AS BIGINT) AS moy, COUNT(*)::BIGINT AS n_orders,
       |    SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS rev
       |  FROM orders GROUP BY 1),
       |t AS (SELECT SUM(rev) AS trev FROM m)
-      |SELECT moy, n_orders, CAST(rev AS DOUBLE) AS revenue,
+      |SELECT /*+ BROADCAST(t) */ moy, n_orders, CAST(rev AS DOUBLE) AS revenue,
       |  ROUND(CAST(rev * 12 AS DOUBLE) / CAST(trev AS DOUBLE), 6) AS seasonality_index
       |FROM m CROSS JOIN t ORDER BY moy""".stripMargin
 
@@ -1797,22 +1660,6 @@ object Relational {
     * from map-combinable min/max(struct(year, revenue)) argmin/argmax
     * (year is unique per customer-year), bands are exact decimal
     * compares, output bounded at |bands|². */
-  def q78(spark: SparkSession, dir: String): DataFrame = {
-    def band(c: Column): Column =
-      when(c < 100000, "a<100k").when(c < 250000, "b<250k")
-        .when(c < 500000, "c<500k").otherwise("d>=500k")
-    val cy = Tables.orders(spark, dir)
-      .groupBy(col("o_custkey"), year(col("o_orderdate")).as("yr"))
-      .agg(sum(dec(col("o_totalprice"))).as("rev"))
-    cy.groupBy("o_custkey")
-      .agg(min(struct(col("yr"), col("rev"))).as("f"),
-           max(struct(col("yr"), col("rev"))).as("l"))
-      .filter(col("f.yr") < col("l.yr"))
-      .select(band(col("f.rev")).as("band_first"), band(col("l.rev")).as("band_last"))
-      .groupBy("band_first", "band_last")
-      .agg(count(lit(1)).as("n_customers"))
-      .orderBy("band_first", "band_last")
-  }
   val q78Sql: String = {
     def band(e: String) =
       s"""CASE WHEN $e < 100000 THEN 'a<100k' WHEN $e < 250000 THEN 'b<250k'
@@ -1822,7 +1669,7 @@ object Relational {
        |    SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS rev
        |  FROM orders GROUP BY 1, 2),
        |fl AS (
-       |  SELECT o_custkey, arg_min(rev, yr) AS frev, arg_max(rev, yr) AS lrev
+       |  SELECT o_custkey, min_by(rev, yr) AS frev, max_by(rev, yr) AS lrev
        |  FROM cy GROUP BY 1 HAVING MIN(yr) < MAX(yr))
        |SELECT ${band("frev")} AS band_first,
        |  ${band("lrev")} AS band_last,
@@ -1927,21 +1774,11 @@ object Relational {
     * fulfillment is (q48 measures order→ship lag; this measures the
     * intra-order spread). One map-combinable min/max rollup per order,
     * then a bounded span-day histogram; integer day arithmetic only. */
-  def q85(spark: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(spark, dir)
-      .groupBy("l_orderkey")
-      .agg(datediff(max(col("l_shipdate")), min(col("l_shipdate")))
-             .cast("long").as("span_days"),
-           count(lit(1)).as("n_lines"))
-      .groupBy("span_days")
-      .agg(count(lit(1)).as("n_orders"),
-           (sum(col("n_lines")).cast("double") / count(lit(1))).as("avg_lines"))
-      .orderBy("span_days")
   val q85Sql: String =
     """WITH o AS (
       |  SELECT l_orderkey,
-      |    DATE_DIFF('day', CAST(MIN(l_shipdate) AS DATE),
-      |              CAST(MAX(l_shipdate) AS DATE)) AS span_days,
+      |    CAST(CAST(MAX(l_shipdate) AS DATE) - CAST(MIN(l_shipdate) AS DATE) AS BIGINT)
+      |      AS span_days,
       |    COUNT(*)::BIGINT AS n_lines
       |  FROM lineitem GROUP BY 1)
       |SELECT span_days, COUNT(*)::BIGINT AS n_orders,
@@ -2166,32 +2003,9 @@ object Relational {
     * broadcast joins on that bounded frame, the grand total is a 1-row
     * broadcast (q68's shape), and lift is cross-multiplied to ONE
     * division per cell. */
-  def q96(spark: SparkSession, dir: String): DataFrame = {
-    val cell = Tables.lineitem(spark, dir)
-      .select(col("l_orderkey"), col("l_partkey"))
-      .join(Tables.orders(spark, dir).select("o_orderkey", "o_custkey"),
-        col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(Tables.customer(spark, dir).select("c_custkey", "c_nationkey")
-        .join(broadcast(Tables.nation(spark, dir).select("n_nationkey", "n_name")),
-          col("c_nationkey") === col("n_nationkey"))
-        .select("c_custkey", "n_name")), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.part(spark, dir).select("p_partkey", "p_brand")),
-        col("l_partkey") === col("p_partkey"))
-      .groupBy("n_name", "p_brand").agg(count(lit(1)).as("c"))
-    val byNation = cell.groupBy("n_name").agg(sum(col("c")).as("cn"))
-    val byBrand = cell.groupBy("p_brand").agg(sum(col("c")).as("cb"))
-    val total = cell.agg(sum(col("c")).as("t"))
-    cell
-      .join(broadcast(byNation), "n_name")
-      .join(broadcast(byBrand), "p_brand")
-      .join(broadcast(total))
-      .select(col("n_name"), col("p_brand"), col("c").as("n_lines"),
-        round(dbl(col("c") * col("t")) / dbl(col("cn") * col("cb")), 6).as("lift"))
-      .orderBy("n_name", "p_brand")
-  }
   val q96Sql: String =
     """WITH cell AS (
-      |  SELECT n_name, p_brand, COUNT(*)::BIGINT AS c
+      |  SELECT /*+ BROADCAST(customer, nation, part) */ n_name, p_brand, COUNT(*)::BIGINT AS c
       |  FROM lineitem
       |  JOIN orders ON l_orderkey = o_orderkey
       |  JOIN customer ON o_custkey = c_custkey
@@ -2201,7 +2015,7 @@ object Relational {
       |n AS (SELECT n_name, SUM(c)::BIGINT AS cn FROM cell GROUP BY 1),
       |b AS (SELECT p_brand, SUM(c)::BIGINT AS cb FROM cell GROUP BY 1),
       |t AS (SELECT SUM(c)::BIGINT AS t FROM cell)
-      |SELECT n_name, p_brand, c AS n_lines,
+      |SELECT /*+ BROADCAST(n, b, t) */ n_name, p_brand, c AS n_lines,
       |  ROUND(CAST(c * t AS DOUBLE) / CAST(cn * cb AS DOUBLE), 6) AS lift
       |FROM cell JOIN n USING (n_name) JOIN b USING (p_brand) CROSS JOIN t
       |ORDER BY n_name, p_brand""".stripMargin
@@ -2307,33 +2121,11 @@ object Relational {
     * the denominator is positive whenever dates differ), so no float
     * division decides a class. One map-combinable moment pass, ≤3
     * output rows. */
-  def q101(spark: SparkSession, dir: String): DataFrame = {
-    val d38 = "decimal(38,0)"
-    val x = datediff(col("o_orderdate"), lit("1970-01-01")).cast("long").cast(d38)
-    val y = (dec(col("o_totalprice")) * 100).cast(d38)
-    val u = Tables.orders(spark, dir)
-      .select(col("o_custkey"), x.as("x"), y.as("y"))
-      .groupBy("o_custkey")
-      .agg(count(lit(1)).as("n"),
-           sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-           sum(col("x") * col("y")).as("sxy"),
-           sum(col("x") * col("x")).as("sx2"))
-      .filter(col("n") >= 2)
-      .withColumn("num", col("n").cast(d38) * col("sxy") - col("sx") * col("sy"))
-      .withColumn("den", col("n").cast(d38) * col("sx2") - col("sx") * col("sx"))
-      .filter(col("den") > 0) // all orders same day → slope undefined
-    u.groupBy(when(col("num") > 0, "a_rising")
-        .when(col("num") < 0, "c_falling")
-        .otherwise("b_flat").as("trend"))
-      .agg(count(lit(1)).as("n_customers"),
-           (sum(col("n")).cast("double") / count(lit(1))).as("avg_orders"))
-      .orderBy("trend")
-  }
   val q101Sql: String =
     """WITH o AS (
       |  SELECT o_custkey,
-      |    CAST(datediff('day', DATE '1970-01-01', o_orderdate) AS HUGEINT) AS x,
-      |    CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS HUGEINT) AS y
+      |    CAST(CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS DECIMAL(38,0)) AS x,
+      |    CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS DECIMAL(38,0)) AS y
       |  FROM orders),
       |u AS (
       |  SELECT o_custkey, COUNT(*)::BIGINT AS n,
@@ -2341,8 +2133,8 @@ object Relational {
       |  FROM o GROUP BY 1 HAVING COUNT(*) >= 2),
       |c AS (
       |  SELECT n,
-      |    CAST(n AS HUGEINT) * sxy - sx * sy AS num,
-      |    CAST(n AS HUGEINT) * sx2 - sx * sx AS den
+      |    CAST(n AS DECIMAL(38,0)) * sxy - sx * sy AS num,
+      |    CAST(n AS DECIMAL(38,0)) * sx2 - sx * sx AS den
       |  FROM u)
       |SELECT CASE WHEN num > 0 THEN 'a_rising'
       |            WHEN num < 0 THEN 'c_falling'
@@ -2448,31 +2240,6 @@ object Relational {
     * Scale: orders⋈lineitem shuffles once on the order key, customer
     * joins on its own key (AQE picks BHJ while it fits), the |nation|-
     * bounded baseline frame broadcasts. Output is the flagged tail. */
-  def q105(spark: SparkSession, dir: String): DataFrame = {
-    val lines = Tables.lineitem(spark, dir)
-      .join(Tables.orders(spark, dir), col("l_orderkey") === col("o_orderkey"))
-      .join(Tables.customer(spark, dir), col("o_custkey") === col("c_custkey"))
-      .select(col("c_custkey"), col("c_nationkey"),
-        when(col("l_returnflag") === "R", 1L).otherwise(0L).as("ret"))
-    val perCust = lines.groupBy("c_custkey", "c_nationkey")
-      .agg(count(lit(1)).as("n_lines"), sum(col("ret")).as("n_returned"))
-    val perNation = perCust.groupBy("c_nationkey")
-      .agg(sum(col("n_lines")).as("nat_lines"),
-           sum(col("n_returned")).as("nat_returned"))
-    val rate = dbl(col("n_returned")) / col("n_lines")
-    val base = dbl(col("nat_returned")) / col("nat_lines")
-    perCust.filter(col("n_lines") >= 5)
-      .join(broadcast(perNation), "c_nationkey")
-      .join(broadcast(Tables.nation(spark, dir)
-        .select(col("n_nationkey").as("c_nationkey"), col("n_name"))), "c_nationkey")
-      .withColumn("return_rate", round(rate, 6))
-      .withColumn("nation_rate", round(base, 6))
-      .filter(col("nat_returned") > 0 && rate >= base * 1.5d)
-      .select(col("c_custkey"), col("n_name"), col("n_lines"), col("n_returned"),
-        col("return_rate"), col("nation_rate"),
-        round(rate / base, 6).as("lift"))
-      .orderBy("c_custkey")
-  }
   val q105Sql: String =
     """WITH pc AS (
       |  SELECT c_custkey, c_nationkey, COUNT(*)::BIGINT AS n_lines,
@@ -2485,7 +2252,7 @@ object Relational {
       |  SELECT c_nationkey, SUM(n_lines)::BIGINT AS nat_lines,
       |    SUM(n_returned)::BIGINT AS nat_returned
       |  FROM pc GROUP BY 1)
-      |SELECT c_custkey, n_name, n_lines, n_returned,
+      |SELECT /*+ BROADCAST(pn, nation) */ c_custkey, n_name, n_lines, n_returned,
       |  ROUND(CAST(n_returned AS DOUBLE) / n_lines, 6) AS return_rate,
       |  ROUND(CAST(nat_returned AS DOUBLE) / nat_lines, 6) AS nation_rate,
       |  ROUND((CAST(n_returned AS DOUBLE) / n_lines)
@@ -2622,35 +2389,10 @@ object Relational {
     * Scale: the window partitions by o_custkey (no global sort); the
     * per-customer frame is |customers|-bounded; the segment rollup
     * joins customer on the already-shuffled custkey. */
-  def q109(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    val gaps = Tables.orders(spark, dir)
-      .select(col("o_custkey"), col("o_orderdate"), col("o_orderkey"))
-      .withColumn("gap", datediff(col("o_orderdate"), lag("o_orderdate", 1).over(w)).cast("long"))
-      .filter(col("gap").isNotNull)
-    val per = gaps.groupBy("o_custkey")
-      .agg(count(lit(1)).as("n"), sum(col("gap")).as("s"), sum(col("gap") * col("gap")).as("ss"))
-      .filter(col("n") >= 2)
-      .select(col("o_custkey"), col("n"),
-        (dbl(col("s")) / col("n")).as("mean_gap"),
-        sqrt(dbl(col("n") * col("ss") - col("s") * col("s")) / dbl(col("n") * col("n"))).as("sd_gap"))
-      .withColumn("cv", when(col("mean_gap") > 0, col("sd_gap") / col("mean_gap")).otherwise(lit(0d)))
-    per.join(Tables.customer(spark, dir).select(col("c_custkey"), col("c_mktsegment")),
-        col("o_custkey") === col("c_custkey"))
-      .groupBy(col("c_mktsegment"))
-      .agg(count(lit(1)).as("n_customers"),
-        (dbl(sum(round(col("mean_gap"), 6).cast("decimal(18,6)"))) / count(lit(1))).as("avg_mean_gap"),
-        (dbl(sum(round(col("cv"), 6).cast("decimal(18,6)"))) / count(lit(1))).as("avg_cv"),
-        round(max(col("mean_gap")), 6).as("max_mean_gap"))
-      .select(col("c_mktsegment"), col("n_customers"),
-        round(col("avg_mean_gap"), 6).as("avg_mean_gap"),
-        round(col("avg_cv"), 6).as("avg_cv"), col("max_mean_gap"))
-      .orderBy("c_mktsegment")
-  }
   val q109Sql: String =
     """WITH g AS (
       |  SELECT o_custkey,
-      |    CAST(date_diff('day', lag(o_orderdate) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey), o_orderdate) AS BIGINT) AS gap
+      |    CAST(CAST(o_orderdate AS DATE) - CAST(lag(o_orderdate) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS DATE) AS BIGINT) AS gap
       |  FROM orders),
       |p AS (
       |  SELECT o_custkey, COUNT(*)::BIGINT AS n, SUM(gap)::BIGINT AS s, SUM(gap * gap)::BIGINT AS ss
@@ -2739,7 +2481,7 @@ object Relational {
   val q111Sql: String = {
     val lits = (1 to 9).map(d => f"WHEN $d THEN ${q111Benford(d)}%.17g").mkString(" ")
     s"""WITH o AS (
-       |  SELECT CAST(regexp_extract(CAST(CAST(o_totalprice AS DECIMAL(12,2)) AS VARCHAR),
+       |  SELECT CAST(regexp_extract(CAST(CAST(o_totalprice AS DECIMAL(12,2)) AS STRING),
        |    '[1-9]') AS BIGINT) AS digit FROM orders),
        |c AS (SELECT digit, COUNT(*)::BIGINT AS n FROM o GROUP BY 1),
        |t AS (SELECT COUNT(*)::BIGINT AS n_total FROM orders),
@@ -2842,37 +2584,6 @@ object Relational {
     * series; the lag join is an equi-join on the shifted month key over
     * that bounded frame fanned out ×3 by a literal lag array — constant
     * post-rollup work at any corpus size. */
-  def q113(spark: SparkSession, dir: String): DataFrame = {
-    val series = Tables.orders(spark, dir)
-      .select((year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
-          .cast("long").as("mkey"),
-        dec(col("o_totalprice")).as("rev"))
-      .groupBy("mkey")
-      .agg(round(dbl(sum(col("rev"))) / lit(1000000.0d), 6)
-        .cast("decimal(18,6)").as("xm"))
-    val lagged = series
-      .select(col("mkey"), col("xm"),
-        explode(lit(Array(1L, 2L, 3L))).as("lag"))
-      .select((col("mkey") + col("lag")).as("tkey"), col("lag"),
-        col("xm").as("x"))
-    val pairs = lagged.join(
-        series.select(col("mkey").as("tkey"), col("xm").as("y")), Seq("tkey"))
-      .select(col("lag"), col("x"), col("y"),
-        round(dbl(col("x")) * dbl(col("y")), 9).cast("decimal(18,9)").as("xy"),
-        round(dbl(col("x")) * dbl(col("x")), 9).cast("decimal(18,9)").as("xx"),
-        round(dbl(col("y")) * dbl(col("y")), 9).cast("decimal(18,9)").as("yy"))
-    pairs.groupBy("lag")
-      .agg(count(lit(1)).as("n_pairs"),
-        dbl(sum(col("x"))).as("sx"), dbl(sum(col("y"))).as("sy"),
-        dbl(sum(col("xy"))).as("sxy"), dbl(sum(col("xx"))).as("sxx"),
-        dbl(sum(col("yy"))).as("syy"))
-      .select(col("lag"), col("n_pairs"),
-        round((dbl(col("n_pairs")) * col("sxy") - col("sx") * col("sy")) /
-          sqrt((dbl(col("n_pairs")) * col("sxx") - col("sx") * col("sx")) *
-               (dbl(col("n_pairs")) * col("syy") - col("sy") * col("sy"))), 6)
-          .as("autocorr"))
-      .orderBy("lag")
-  }
   val q113Sql: String =
     """WITH s AS (
       |  SELECT (CAST(year(o_orderdate) AS BIGINT) * 12 + month(o_orderdate)) AS mkey,
@@ -2881,7 +2592,7 @@ object Relational {
       |  FROM orders GROUP BY 1),
       |l AS (
       |  SELECT mkey + lag AS tkey, CAST(lag AS BIGINT) AS lag, xm AS x
-      |  FROM s CROSS JOIN (SELECT UNNEST([1, 2, 3]) AS lag)),
+      |  FROM (SELECT mkey, xm, UNNEST(list_value(1, 2, 3)) AS lag FROM s)),
       |p AS (
       |  SELECT lag, x, s.xm AS y,
       |    CAST(ROUND(CAST(x AS DOUBLE) * CAST(s.xm AS DOUBLE), 9) AS DECIMAL(18,9)) AS xy,
@@ -2975,39 +2686,6 @@ object Relational {
     *
     * Scale: one custkey groupBy (map-combinable) + a 1-row broadcast;
     * the 8-key rollup is trivially map-combinable. */
-  def q115(spark: SparkSession, dir: String): DataFrame = {
-    val per = Tables.orders(spark, dir)
-      .groupBy(col("o_custkey"))
-      .agg(max(col("o_orderdate")).as("last_dt"),
-        count(lit(1)).as("freq"),
-        sum(dec(col("o_totalprice"))).as("spend"))
-    val glob = per.agg(max(col("last_dt")).as("max_dt"),
-      sum(col("freq")).as("sum_f"), count(lit(1)).as("n"),
-      sum(col("spend")).as("sum_m"))
-    val scored = per.crossJoin(broadcast(glob))
-      .select(
-        datediff(col("max_dt"), col("last_dt")).cast("long").as("rec"),
-        col("freq"), col("spend"),
-        (dbl(col("sum_f")) / dbl(col("n"))).as("mean_f"),
-        (dbl(col("sum_m")) / dbl(col("n"))).as("mean_m"))
-    val withMeanR = scored.crossJoin(broadcast(
-        scored.agg(sum(col("rec")).as("sum_r"), count(lit(1)).as("n2"))))
-      .select(col("rec"), col("freq"), col("spend"),
-        col("mean_f"), col("mean_m"),
-        (dbl(col("sum_r")) / dbl(col("n2"))).as("mean_r"))
-    withMeanR
-      .select(
-        (dbl(col("rec")) < col("mean_r")).as("recent"),
-        (dbl(col("freq")) > col("mean_f")).as("frequent"),
-        (dbl(col("spend")) > col("mean_m")).as("big_spender"),
-        col("rec"), col("freq"), col("spend"))
-      .groupBy("recent", "frequent", "big_spender")
-      .agg(count(lit(1)).as("n_customers"),
-        round(dbl(sum(col("rec"))) / count(lit(1)), 6).as("avg_recency_days"),
-        round(dbl(sum(col("freq"))) / count(lit(1)), 6).as("avg_orders"),
-        round(dbl(sum(col("spend"))) / count(lit(1)), 6).as("avg_spend"))
-      .orderBy("recent", "frequent", "big_spender")
-  }
   val q115Sql: String =
     """WITH per AS (
       |  SELECT o_custkey, MAX(o_orderdate) AS last_dt, COUNT(*)::BIGINT AS freq,
@@ -3019,12 +2697,12 @@ object Relational {
       |    CAST(SUM(spend) AS DOUBLE) / COUNT(*) AS mean_m
       |  FROM per),
       |s AS (
-      |  SELECT CAST(datediff('day', last_dt, max_dt) AS BIGINT) AS rec,
+      |  SELECT /*+ BROADCAST(g) */ CAST(CAST(max_dt AS DATE) - CAST(last_dt AS DATE) AS BIGINT) AS rec,
       |    freq, spend, mean_f, mean_m
       |  FROM per CROSS JOIN g),
       |r AS (SELECT CAST(SUM(rec) AS DOUBLE) / COUNT(*) AS mean_r FROM s),
       |f AS (
-      |  SELECT (CAST(rec AS DOUBLE) < mean_r) AS recent,
+      |  SELECT /*+ BROADCAST(r) */ (CAST(rec AS DOUBLE) < mean_r) AS recent,
       |    (CAST(freq AS DOUBLE) > mean_f) AS frequent,
       |    (CAST(spend AS DOUBLE) > mean_m) AS big_spender,
       |    rec, freq, spend
@@ -3069,7 +2747,7 @@ object Relational {
       .orderBy("t")
   }
   val q116Sql: String =
-    """WITH g AS (SELECT UNNEST(range(0, 21)) AS i),
+    """WITH g AS (SELECT UNNEST(generate_series(0, 20)) AS i),
       |grid AS (SELECT CAST(-1000 + 550 * i AS BIGINT) AS t FROM g),
       |c AS (
       |  SELECT t,
@@ -3143,27 +2821,14 @@ object Relational {
     * Scale: lineitem ⋈ broadcast(part) then ONE map-combinable rollup;
     * year totals are a second tiny rollup of the first's output joined
     * back by year (broadcast — \|years\| rows). */
-  def q119(spark: SparkSession, dir: String): DataFrame = {
-    val cell = Tables.lineitem(spark, dir)
-      .join(broadcast(Tables.part(spark, dir).select(col("p_partkey"), col("p_brand"))),
-        col("l_partkey") === col("p_partkey"))
-      .withColumn("yr", year(col("l_shipdate")).cast("long"))
-      .groupBy("yr", "p_brand")
-      .agg(sum(revenueTerm(col("l_extendedprice"), col("l_discount"))).as("rev"))
-    val yrTot = cell.groupBy("yr").agg(sum(col("rev")).as("yr_rev"))
-    cell.join(broadcast(yrTot), "yr")
-      .select(col("yr"), col("p_brand"), dbl(col("rev")).as("revenue"),
-        round(dbl(col("rev")) / dbl(col("yr_rev")), 6).as("share"))
-      .orderBy("yr", "p_brand")
-  }
   val q119Sql: String =
     s"""WITH cell AS (
-       |  SELECT CAST(EXTRACT(year FROM l_shipdate) AS BIGINT) AS yr, p_brand,
+       |  SELECT /*+ BROADCAST(part) */ CAST(EXTRACT(year FROM l_shipdate) AS BIGINT) AS yr, p_brand,
        |    SUM($revenueSql) AS rev
        |  FROM lineitem JOIN part ON l_partkey = p_partkey
        |  GROUP BY 1, 2),
        |yt AS (SELECT yr, SUM(rev) AS yr_rev FROM cell GROUP BY 1)
-       |SELECT cell.yr, p_brand, CAST(rev AS DOUBLE) AS revenue,
+       |SELECT /*+ BROADCAST(yt) */ cell.yr, p_brand, CAST(rev AS DOUBLE) AS revenue,
        |  ROUND(CAST(rev AS DOUBLE) / CAST(yr_rev AS DOUBLE), 6) AS share
        |FROM cell JOIN yt ON cell.yr = yt.yr
        |ORDER BY cell.yr, p_brand""".stripMargin
@@ -3225,28 +2890,14 @@ object Relational {
     *
     * Scale: lineitem ⋈ broadcast(part), one map-combinable rollup to
     * \|brands\| × 4 cells, brand totals joined back by broadcast. */
-  def q122(spark: SparkSession, dir: String): DataFrame = {
-    val cell = Tables.lineitem(spark, dir)
-      .join(broadcast(Tables.part(spark, dir).select(col("p_partkey"), col("p_brand"))),
-        col("l_partkey") === col("p_partkey"))
-      .withColumn("qtr", quarter(col("l_shipdate")).cast("long"))
-      .groupBy("p_brand", "qtr")
-      .agg(sum(revenueTerm(col("l_extendedprice"), col("l_discount"))).as("rev"))
-    val brandTot = cell.groupBy("p_brand").agg(sum(col("rev")).as("b_rev"))
-    cell.join(broadcast(brandTot), "p_brand")
-      .select(col("p_brand"), col("qtr"), dbl(col("rev")).as("revenue"),
-        round(dbl(col("rev")) / dbl(col("b_rev")), 6).as("share"),
-        round(dbl(col("rev")) / dbl(col("b_rev")) * 4, 6).as("season_index"))
-      .orderBy("p_brand", "qtr")
-  }
   val q122Sql: String =
     s"""WITH cell AS (
-       |  SELECT p_brand, CAST(EXTRACT(quarter FROM l_shipdate) AS BIGINT) AS qtr,
+       |  SELECT /*+ BROADCAST(part) */ p_brand, CAST(EXTRACT(quarter FROM l_shipdate) AS BIGINT) AS qtr,
        |    SUM($revenueSql) AS rev
        |  FROM lineitem JOIN part ON l_partkey = p_partkey
        |  GROUP BY 1, 2),
        |bt AS (SELECT p_brand, SUM(rev) AS b_rev FROM cell GROUP BY 1)
-       |SELECT cell.p_brand, qtr, CAST(rev AS DOUBLE) AS revenue,
+       |SELECT /*+ BROADCAST(bt) */ cell.p_brand, qtr, CAST(rev AS DOUBLE) AS revenue,
        |  ROUND(CAST(rev AS DOUBLE) / CAST(b_rev AS DOUBLE), 6) AS share,
        |  ROUND(CAST(rev AS DOUBLE) / CAST(b_rev AS DOUBLE) * 4, 6) AS season_index
        |FROM cell JOIN bt ON cell.p_brand = bt.p_brand
@@ -3435,40 +3086,21 @@ object Relational {
   val queries: Map[String, Q] = Map(
     "q127_size_price_curve" -> (q127 _),
     "q124_nation_customer_hhi" -> (q124 _),
-    "q122_brand_quarter_share" -> (q122 _),
-    "q119_year_brand_share" -> (q119 _),
     "q116_balance_two_sample" -> (q116 _),
-    "q115_rfm_octants" -> (q115 _),
-    "q113_revenue_autocorr" -> (q113 _),
     "q112_theil_decomposition" -> (q112 _),
     "q111_benford_audit" -> (q111 _),
-    "q109_order_cadence" -> (q109 _),
     "q108_approx_quantiles" -> (q108 _),
     "q106_price_dispersion" -> (q106 _),
-    "q105_return_abuse" -> (q105 _),
-    "q101_spend_trend_census" -> (q101 _),
-    "q96_nation_brand_affinity" -> (q96 _),
     "q94_region_trade_matrix" -> (q94 _),
-    "q85_fulfillment_span" -> (q85 _),
-    "q78_value_migration" -> (q78 _),
-    "q77_seasonality_index" -> (q77 _),
-    "q76_brand_rank_shift" -> (q76 _),
     "q72_segment_gini" -> (q72 _),
     "q70_pareto_points" -> (q70 _),
     "q69_weekday_profile" -> (q69 _),
     "q67_supplier_hhi" -> (q67 _),
-    "q65_orderbook_aging" -> (q65 _),
     "q64_status_priority_matrix" -> (q64 _),
-    "q58_fill_rate" -> (q58 _),
-    "q57_latency_percentiles" -> (q57 _),
     "q53_repeat_rate" -> (q53 _),
-    "q48_ship_latency" -> (q48 _),
-    "q45_order_gaps" -> (q45 _),
     "q37_heavy_hitters" -> (q37 _),
     "q29_top_supplier" -> (q29 _),
-    "q14_string_ops" -> (q14 _),
     "q16_scalar_subquery" -> (q16 _),
-    "q19_null_handling" -> (q19 _),
     "q21_approx_stats" -> (q21 _),
     "q22_pivot" -> (q22 _),
     "q23_moving_avg" -> (q23 _),
@@ -3477,37 +3109,18 @@ object Relational {
   val oracle: Map[String, String] = Map(
     "q127_size_price_curve" -> q127Sql,
     "q124_nation_customer_hhi" -> q124Sql,
-    "q122_brand_quarter_share" -> q122Sql,
-    "q119_year_brand_share" -> q119Sql,
     "q116_balance_two_sample" -> q116Sql,
-    "q115_rfm_octants" -> q115Sql,
-    "q113_revenue_autocorr" -> q113Sql,
     "q112_theil_decomposition" -> q112Sql,
     "q111_benford_audit" -> q111Sql,
-    "q109_order_cadence" -> q109Sql,
     "q106_price_dispersion" -> q106Sql,
-    "q105_return_abuse" -> q105Sql,
-    "q101_spend_trend_census" -> q101Sql,
-    "q96_nation_brand_affinity" -> q96Sql,
     "q94_region_trade_matrix" -> q94Sql,
-    "q85_fulfillment_span" -> q85Sql,
-    "q78_value_migration" -> q78Sql,
-    "q77_seasonality_index" -> q77Sql,
-    "q76_brand_rank_shift" -> q76Sql,
     "q72_segment_gini" -> q72Sql,
     "q70_pareto_points" -> q70Sql,
     "q69_weekday_profile" -> q69Sql,
     "q67_supplier_hhi" -> q67Sql,
-    "q65_orderbook_aging" -> q65Sql,
     "q64_status_priority_matrix" -> q64Sql,
-    "q58_fill_rate" -> q58Sql,
-    "q57_latency_percentiles" -> q57Sql,
     "q53_repeat_rate" -> q53Sql,
-    "q48_ship_latency" -> q48Sql,
-    "q45_order_gaps" -> q45Sql,
-    "q14_string_ops" -> q14Sql,
     "q16_scalar_subquery" -> q16Sql,
-    "q19_null_handling" -> q19Sql,
     "q22_pivot" -> q22Sql,
     "q23_moving_avg" -> q23Sql,
     "q29_top_supplier" -> q29Sql,
@@ -3518,6 +3131,25 @@ object Relational {
     * binds each text to the table loaders with `Tables.sql`, and
     * `SparkEntry.oracleSql` hands the same text to DuckDB. */
   val sql: Map[String, String] = Map(
+    "q119_year_brand_share" -> q119Sql,
+    "q105_return_abuse" -> q105Sql,
+    "q19_null_handling" -> q19Sql,
+    "q122_brand_quarter_share" -> q122Sql,
+    "q115_rfm_octants" -> q115Sql,
+    "q113_revenue_autocorr" -> q113Sql,
+    "q109_order_cadence" -> q109Sql,
+    "q101_spend_trend_census" -> q101Sql,
+    "q96_nation_brand_affinity" -> q96Sql,
+    "q85_fulfillment_span" -> q85Sql,
+    "q78_value_migration" -> q78Sql,
+    "q77_seasonality_index" -> q77Sql,
+    "q76_brand_rank_shift" -> q76Sql,
+    "q65_orderbook_aging" -> q65Sql,
+    "q58_fill_rate" -> q58Sql,
+    "q57_latency_percentiles" -> q57Sql,
+    "q48_ship_latency" -> q48Sql,
+    "q45_order_gaps" -> q45Sql,
+    "q14_string_ops" -> q14Sql,
     "q126_brand_mom_growth" -> q126Sql,
     "q15_date_ops" -> q15Sql,
     "q43_higher_moments" -> q43Sql,

@@ -674,7 +674,7 @@ object Similarity {
       val nq = truth.select(countDistinct(col("q_id")).as("n_queries"))
       nq.crossJoin(hits).select(
         lit(method).as("method"), lit(k.toLong).as("k"), col("n_queries"),
-        round(col("n_hits").cast("double") / (col("n_queries") * 5), 6).as("recall_at_5"))
+        round(col("n_hits").cast("double") / nullifzero(col("n_queries") * 5), 6).as("recall_at_5"))
     }
     row("exact_topk", truth, 5)
       .unionByName(row("lsh", s02(spark, dir), 3))
@@ -867,7 +867,7 @@ object Similarity {
       truth.select(countDistinct(col("q_id")).as("n_queries"))
         .crossJoin(hits)
         .select(lit(nProbes.toLong).as("n_probes"), col("n_queries"), col("n_hits"),
-          round(col("n_hits").cast("double") / (col("n_queries") * 5), 6).as("recall_at_5"))
+          round(col("n_hits").cast("double") / nullifzero(col("n_queries") * 5), 6).as("recall_at_5"))
     }
     point(1).unionByName(point(2)).unionByName(point(4)).orderBy("n_probes")
   }
@@ -1220,23 +1220,6 @@ object Similarity {
     * bounded count rollup carries majority share (ONE division) and
     * label entropy via e20's round9-DECIMAL quantized ln terms (exact
     * partial sums at any scale). */
-  def s25(spark: SparkSession, dir: String): DataFrame =
-    Tables.embeddings(spark, dir).select(col("vec_id"), col("label"))
-      .join(Tables.documents(spark, dir).select(col("doc_id"), col("lang")),
-        col("vec_id") === col("doc_id"))
-      .groupBy("lang", "label").agg(count(lit(1)).as("c"))
-      .withColumn("lq", round(log(col("c").cast("double")), 9).cast("decimal(18,9)"))
-      .groupBy("lang")
-      .agg(sum(col("c")).as("n_vecs"),
-           count(lit(1)).as("n_labels"),
-           max(col("c")).as("c_max"),
-           sum(col("c").cast("decimal(10,0)") * col("lq")).as("s"))
-      .select(col("lang"), col("n_vecs"), col("n_labels"),
-        round(dbl(col("c_max")) / dbl(col("n_vecs")), 6).as("majority_share"),
-        round(log(col("n_vecs").cast("double")) -
-          col("s").cast("double") / col("n_vecs").cast("double"), 6)
-          .as("label_entropy"))
-      .orderBy("lang")
   val s25Sql: String =
     """WITH c AS (
       |  SELECT lang, label, COUNT(*)::BIGINT AS c
@@ -1312,7 +1295,7 @@ object Similarity {
       .agg(count(lit(1)).as("n_edges"),
            count(col("rq")).as("n_mutual"))
       .select(col("n_edges"), col("n_mutual"),
-        round(dbl(col("n_mutual")) / col("n_edges"), 6).as("mutual_share"))
+        round(dbl(col("n_mutual")) / nullifzero(col("n_edges")), 6).as("mutual_share"))
   }
   val s27Sql: String = knnCte +
     """,
@@ -1392,7 +1375,7 @@ object Similarity {
     truth.select(countDistinct(col("q_id")).as("n_queries"))
       .crossJoin(hits)
       .select(lit("sq8").as("method"), lit(5L).as("k"), col("n_queries"),
-        round(col("n_hits").cast("double") / (col("n_queries") * 5), 6)
+        round(col("n_hits").cast("double") / nullifzero(col("n_queries") * 5), 6)
           .as("recall_at_5"))
   }
 
@@ -1658,7 +1641,7 @@ object Similarity {
         .agg(count(lit(1)).as("n_hits"))
         .join(broadcast(nTruth))
         .select(lit(d).as("n_dims"), col("n_hits"), col("n_truth"),
-          round(dbl(col("n_hits")) / col("n_truth"), 6).as("recall_at_5"))
+          round(dbl(col("n_hits")) / nullifzero(col("n_truth")), 6).as("recall_at_5"))
     }
     rows.reduce(_.unionByName(_)).orderBy("n_dims")
   }
@@ -2357,7 +2340,7 @@ object Similarity {
         .selectExpr(s"cast($p as bigint) as n_probes",
           "cand_raw - n_vecs as candidate_pairs",
           "truth_pairs", "recalled",
-          "(cast(recalled as decimal(38,0)) * 1000000) div truth_pairs as recall_ppm")
+          "(cast(recalled as decimal(38,0)) * 1000000) div nullif(truth_pairs, 0) as recall_ppm")
     }.reduce(_.unionByName(_)).orderBy("n_probes")
   }
 
@@ -2385,7 +2368,6 @@ object Similarity {
     "s28_dedup_centroid_shift" -> (s28 _),
     "s27_mutual_knn" -> (s27 _),
     "s26_embedding_drift" -> (s26 _),
-    "s25_lang_label_confound" -> (s25 _),
     "s24_dim_variance" -> (s24 _),
     "s23_centroid_confusion" -> (s23 _),
     "s22_centroid_cohesion" -> (s22 _),
@@ -2426,7 +2408,6 @@ object Similarity {
     "s28_dedup_centroid_shift" -> s28Sql,
     "s27_mutual_knn" -> s27Sql,
     "s26_embedding_drift" -> s26Sql,
-    "s25_lang_label_confound" -> s25Sql,
     "s24_dim_variance" -> s24Sql,
     "s23_centroid_confusion" -> s23Sql,
     "s22_centroid_cohesion" -> s22Sql,
@@ -2446,6 +2427,7 @@ object Similarity {
     * binds each text to the table loaders with `Tables.sql`, and
     * `SparkEntry.oracleSql` hands the same text to DuckDB. */
   val sql: Map[String, String] = Map(
+    "s25_lang_label_confound" -> s25Sql,
     "s21_label_balance" -> s21Sql,
     "s20_embedding_coverage" -> s20Sql,
     "s19_exact_dup_vectors" -> s19Sql

@@ -2276,7 +2276,7 @@ object TextAnalysis {
         .select(lit(n).cast("int").as("n"), col("total_grams"),
           col("distinct_grams"),
           round(lit(1.0d) - col("distinct_grams").cast("double")
-            / col("total_grams"), 6).as("redundancy"))
+            / nullifzero(col("total_grams")), 6).as("redundancy"))
     }
     rows.reduce(_.unionByName(_)).orderBy("n")
   }

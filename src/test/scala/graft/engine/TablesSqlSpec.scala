@@ -86,11 +86,44 @@ class TablesSqlSpec extends SparkSpec {
     }
   }
 
+  test("list_value and generate_series build the lists DuckDB builds") {
+    val r = Tables.sql(spark, sf,
+      """SELECT list_value(1, 2, 3), generate_series(1, 4), generate_series(3, 1),
+        |  generate_series(-2, -2), generate_series(NULL, 2)""".stripMargin).head()
+    // DuckDB 1.0.0: [1, 2, 3] INTEGER[], [1, 2, 3, 4] BIGINT[], [], [-2], NULL
+    assert(r.getSeq[Int](0) == Seq(1, 2, 3))
+    assert(r.getSeq[Long](1) == Seq(1L, 2L, 3L, 4L))
+    assert(r.getSeq[Long](2).isEmpty)
+    assert(r.getSeq[Long](3) == Seq(-2L))
+    assert(r.isNullAt(4))
+  }
+
+  test("unnest yields a row per element, and none for an empty or NULL list") {
+    def rows(text: String): Seq[Seq[Any]] =
+      Tables.sql(spark, sf, text).collect().map(_.toSeq).toSeq
+    // DuckDB 1.0.0's rows for the same texts
+    assert(rows("SELECT unnest(list_value(5, 6)) AS x") == Seq(Seq(5), Seq(6)))
+    assert(rows(
+      """SELECT k, unnest(generate_series(0, k)) AS i
+        |FROM (SELECT unnest(generate_series(0, 2)) AS k) ORDER BY 1, 2""".stripMargin) ==
+      Seq(Seq(0L, 0L), Seq(1L, 0L), Seq(1L, 1L), Seq(2L, 0L), Seq(2L, 1L), Seq(2L, 2L)))
+    assert(rows("SELECT unnest(generate_series(3, 1)) AS x").isEmpty)
+    assert(rows("SELECT unnest(CAST(NULL AS ARRAY<INT>)) AS x").isEmpty)
+  }
+
+  test("generate_series of a non-integral bound fails analysis naming generate_series") {
+    for (text <- Seq("SELECT generate_series(1.5, 3)", "SELECT generate_series(ts, ts) FROM events")) {
+      val e = intercept[AnalysisException](Tables.sql(spark, sf, text))
+      assert(e.getCondition.startsWith("DATATYPE_MISMATCH"), e.getMessage)
+      assert(e.getMessage.contains("generate_series"), text)
+    }
+  }
+
   test("binding the DuckDB names registers no function in the session") {
     Tables.sql(spark, sf,
-      "SELECT epoch_ms(ts), divide(ms, 1000), strftime(ts, '%Y-%m') FROM events").collect()
-    assert(!spark.catalog.functionExists("epoch_ms"))
-    assert(!spark.catalog.functionExists("divide"))
-    assert(!spark.catalog.functionExists("strftime"))
+      """SELECT epoch_ms(ts), divide(ms, 1000), strftime(ts, '%Y-%m'),
+        |  list_value(ms), unnest(generate_series(0, 1)) FROM events""".stripMargin).collect()
+    for (name <- Seq("epoch_ms", "divide", "strftime", "unnest", "list_value", "generate_series"))
+      assert(!spark.catalog.functionExists(name), name)
   }
 }

@@ -38,6 +38,22 @@ class EmptyInputSpec extends SparkSpec {
     Graft.release(spark)
   }
 
+  test("operators that divide by a count of rows run on empty tables") {
+    // each divides by a row count that is 0 here; under ANSI a division
+    // by zero fails the query, so the divisor is NULL when empty
+    val dividing = Seq("d29_lsh_candidate_report", "d61_distinct_shingle_sketch",
+      "d62_decontam_gram_sweep", "p20_cross_shard_dups", "p24_dataset_card",
+      "p32_corpus_scorecard", "s09_ann_recall", "s14_recall_curve", "s27_mutual_knn",
+      "s29_sq8_recall", "s37_dim_truncation_recall", "s48_probe_sweep",
+      "t57_gram_redundancy")
+    val failed = dividing.flatMap { name =>
+      try { Graft.run(spark, empty, name).collect(); None }
+      catch { case e: Exception => Some(s"$name: ${e.getMessage.linesIterator.next()}") }
+      finally Graft.release(spark)
+    }
+    assert(failed.isEmpty, failed.mkString("\n"))
+  }
+
   test("e102 over zero events returns no rows and its declared schema") {
     val name = "e102_markov_stationary"
     val declared = Graft.run(spark, sf, name).schema
